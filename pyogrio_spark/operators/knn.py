@@ -77,7 +77,13 @@ def knn_join(
     haversine the guarantee is min(latitude bound, longitude bound at
     the worst latitude of the window) — near the poles the longitude
     bound collapses and polar probes simply re-probe to the full grid,
-    trading rounds for exactness."""
+    trading rounds for exactness.
+
+    Side effect: for the duration of the call this sets
+    ``spark.sql.adaptive.coalescePartitions.enabled`` to false on the
+    whole session (restored on return). Queries run concurrently on the
+    same session plan with coalescing off meanwhile, and a query that
+    sets the key itself during the call has it overwritten on return."""
     if metric not in ("planar", "haversine"):
         raise ValueError(f"metric must be planar|haversine, got {metric!r}")
     n = 1 << res

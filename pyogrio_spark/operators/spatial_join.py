@@ -15,9 +15,10 @@ its mask filter has the same intersects semantics,
    salting (``salt``) split hot coastline/metro cells.
 3. **Refine**: rows in ``full_cover`` cells pass with no geometry test
    (at planetary scale interior cells dominate — most of the join does
-   zero geometry work). Boundary-cell rows get the exact vectorized
-   PIP refine, grouped per polygon inside each Arrow batch so a
-   polygon is prepared once per batch (prepared-STRtree pattern).
+   zero geometry work). Boundary-cell rows get the exact even-odd ray
+   cast as one Spark SQL predicate over the edges the cover clipped to
+   that cell (``index.cover.contains_expr``). The whole join is one
+   broadcast-join-plus-filter plan with no Python stage.
 
 Output: one row per (doc, zone) pair; doc payload (span sequences)
 passes through untouched.
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyogrio_spark.geometry.predicates import PreparedPolygon
-from pyogrio_spark.index.cover import cover_polygon
+from pyogrio_spark.index.cover import EDGES_TYPE, REFINE_COLUMNS, contains_expr, cover_polygon_edges
 
 DEFAULT_RES = 7
 
@@ -59,13 +60,20 @@ def _cover_rows(zones_iter, res: int, zone_key: str, geom_col: str):
     rows = []
     for _, z in zones_iter:
         wkb = bytes(z[geom_col])
-        cells, full = cover_polygon(wkb, res)
+        cells, full, edges = cover_polygon_edges(wkb, res)
         is_rect, bbox = _is_rectangle(wkb)
-        for c, f in zip(cells.tolist(), full.tolist()):
-            rows.append((int(c), z[zone_key], bool(f), wkb, is_rect, *bbox))
+        for c, f, e in zip(cells.tolist(), full.tolist(), edges):
+            rows.append((int(c), z[zone_key], bool(f), wkb, is_rect, *bbox, e))
     return pd.DataFrame(
         rows,
-        columns=["cell_id", zone_key, "full_cover", geom_col, "is_rect", "zxmin", "zymin", "zxmax", "zymax"],
+        columns=["cell_id", zone_key, "full_cover", geom_col, "is_rect", "zxmin", "zymin", "zxmax", "zymax", "edges"],
+    )
+
+
+def _cover_schema(zone_key: str, ztype: str, geom_col: str) -> str:
+    return (
+        f"cell_id bigint, {zone_key} {ztype}, full_cover boolean, {geom_col} binary, "
+        f"is_rect boolean, zxmin double, zymin double, zxmax double, zymax double, edges {EDGES_TYPE}"
     )
 
 
@@ -76,7 +84,10 @@ def zones_cell_cover(
     zone_key: str = "fid",
     geom_col: str = "geometry_wkb",
 ) -> DataFrame:
-    """Explode polygons into (cell_id, zone_key, full_cover, geometry_wkb).
+    """Explode polygons into one row per covering cell: (cell_id,
+    zone_key, full_cover, geometry_wkb, is_rect, zone bbox, edges), where
+    ``edges`` holds a boundary cell's clipped zone edges (empty for
+    full-cover cells).
 
     Driver-side for dimension-sized zone tables (admin boundaries,
     1e2-1e5 polygons — the common case); use
@@ -84,13 +95,7 @@ def zones_cell_cover(
     """
     pdf = _cover_rows(zones.iterrows(), res, zone_key, geom_col)
     ztype = "bigint" if pd.api.types.is_integer_dtype(zones[zone_key]) else "string"
-    return spark.createDataFrame(
-        pdf,
-        schema=(
-            f"cell_id bigint, {zone_key} {ztype}, full_cover boolean, {geom_col} binary, "
-            "is_rect boolean, zxmin double, zymin double, zxmax double, zymax double"
-        ),
-    )
+    return spark.createDataFrame(pdf, schema=_cover_schema(zone_key, ztype, geom_col))
 
 
 def zones_cell_cover_distributed(
@@ -101,16 +106,12 @@ def zones_cell_cover_distributed(
 ) -> DataFrame:
     """Same cover computed on executors via mapInPandas — the scale path."""
     ztype = zones_df.schema[zone_key].dataType.simpleString()
-    out_schema = (
-        f"cell_id bigint, {zone_key} {ztype}, full_cover boolean, {geom_col} binary, "
-        "is_rect boolean, zxmin double, zymin double, zxmax double, zymax double"
-    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _cover_rows(pdf.iterrows(), res, zone_key, geom_col)
 
-    return zones_df.select(zone_key, geom_col).mapInPandas(gen, schema=out_schema)
+    return zones_df.select(zone_key, geom_col).mapInPandas(gen, schema=_cover_schema(zone_key, ztype, geom_col))
 
 
 def plan_salt_factors(
@@ -150,10 +151,15 @@ def point_in_polygon_join(
     is exploded ×salt and doc rows spread by doc hash, so one hot cell
     lands on ``salt`` reducers instead of one.
 
-    ``include_boundary=True`` switches both refine paths (rect JVM
-    interval and generic PIP) to GEOS ``intersects`` boundary semantics:
-    a point exactly ON a zone edge joins. Default keeps the engine's
-    half-open ray-cast convention (documented divergence).
+    Plan: docs ⋈ cover on ``cell_id``, filtered on ``full_cover OR
+    contains``, where ``contains`` is the exact ray cast over the
+    boundary cell's clipped edges (``index.cover.contains_expr``) — no
+    Python stage. ``include_boundary=True`` switches it to GEOS
+    ``intersects`` boundary semantics: a point exactly ON a zone edge
+    joins. Default keeps the engine's half-open ray-cast convention
+    (documented divergence); an axis-aligned rectangle zone is then the
+    half-open box [xmin, xmax) x [ymin, ymax), and the closed box with
+    ``include_boundary``.
     """
     if keep_doc_cols is None:
         keep_doc_cols = [c for c in docs.columns if c != geom_col]
@@ -161,11 +167,9 @@ def point_in_polygon_join(
         if req not in docs.columns:
             raise ValueError(f"docs must carry '{req}' (persist bounds + cell first)")
 
-    zgeom = "_zone_geom"
-    cover = cover.withColumnRenamed(geom_col, zgeom)
-    ztype = cover.schema[zone_key].dataType.simpleString()
-    sel = list(dict.fromkeys(keep_doc_cols + ["xmin", "ymin"]))
-    docs_sel = docs.select(*sel, "cell_id") if "cell_id" not in sel else docs.select(*sel)
+    # the refine reads the clipped edges and bbox, never the zone geometry
+    cover = cover.select("cell_id", zone_key, *REFINE_COLUMNS)
+    docs_sel = docs.select(*dict.fromkeys(keep_doc_cols + ["xmin", "ymin", "cell_id"]))
 
     if broadcast_cover:
         joined = docs_sel.join(F.broadcast(cover), on="cell_id", how="inner")
@@ -200,45 +204,4 @@ def point_in_polygon_join(
     else:
         joined = docs_sel.join(cover, on="cell_id", how="inner")
 
-    out_cols = keep_doc_cols + [zone_key]
-    full = joined.filter(F.col("full_cover")).select(*out_cols)
-
-    # rectangle zones: the exact refine IS the interval predicate — stays
-    # in whole-stage codegen. Bounds semantics mirror the refine: the
-    # even-odd ray cast on an axis-aligned ring is the half-open box
-    # [zxmin, zxmax) x [zymin, zymax); boundary-inclusive is the closed box.
-    x_hi = F.col("xmin") <= F.col("zxmax") if include_boundary else F.col("xmin") < F.col("zxmax")
-    y_hi = F.col("ymin") <= F.col("zymax") if include_boundary else F.col("ymin") < F.col("zymax")
-    rect_pass = joined.filter(
-        ~F.col("full_cover")
-        & F.col("is_rect")
-        & (F.col("xmin") >= F.col("zxmin"))
-        & x_hi
-        & (F.col("ymin") >= F.col("zymin"))
-        & y_hi
-    ).select(*out_cols)
-
-    boundary = joined.filter(~F.col("full_cover") & ~F.col("is_rect")).select(*out_cols, "xmin", "ymin", zgeom)
-
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in docs.schema.fields if f.name in keep_doc_cols]
-        + [f"`{zone_key}` {ztype}"]
-    )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prep_cache: dict[bytes, PreparedPolygon] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            lon = pdf["xmin"].to_numpy(dtype=np.float64)
-            lat = pdf["ymin"].to_numpy(dtype=np.float64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for zwkb, idx in pdf.groupby(zgeom, sort=False).indices.items():
-                prep = prep_cache.get(zwkb)
-                if prep is None:
-                    prep = prep_cache[zwkb] = PreparedPolygon(bytes(zwkb))
-                keep[idx] = prep.contains_points(lon[idx], lat[idx], include_boundary=include_boundary)
-            yield pdf.loc[keep, out_cols]
-
-    refined = boundary.mapInPandas(refine, schema=out_schema)
-    return full.unionByName(rect_pass).unionByName(refined)
+    return joined.filter(contains_expr("xmin", "ymin", include_boundary)).select(*keep_doc_cols, zone_key)

@@ -3,22 +3,22 @@
 Raster side: a tile grid (tile_x, tile_y, value) with tile centers at
 known coordinates. Vector side: zone polygons covered into grid cells
 with full/partial flags. Tiles whose center lands in a full-cover cell
-contribute with *no* geometry test; only boundary-cell tiles get the
-exact center-in-polygon refine (the standard zonal rule: a pixel
-belongs to the zone containing its center). Aggregation is the
-built-in partial+final hash agg.
+contribute with *no* geometry test; boundary-cell tiles get the exact
+center-in-polygon test (the standard zonal rule: a pixel belongs to the
+zone containing its center) as a Spark SQL predicate over the cell's
+clipped zone edges (``index.cover.contains_expr``), so neither operator
+has a Python stage. Aggregation is the built-in partial+final hash agg.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyogrio_spark.geometry.predicates import PreparedPolygon
+from pyogrio_spark.index.cover import REFINE_COLUMNS, contains_expr
 from pyogrio_spark.index.grid import LAT0, LON0, SPAN_LAT, SPAN_LON, _RES_SHIFT
 
 DEFAULT_RES = 7
@@ -40,6 +40,14 @@ def tiles_with_centers(tiles: DataFrame, tile_deg: float, res: int = DEFAULT_RES
     )
 
 
+def _zone_members(tiles: DataFrame, cover: DataFrame, zone_key: str, cols: list[str]) -> DataFrame:
+    """(tile, zone) pairs whose tile center lies in the zone: broadcast
+    equi-join on cell_id, then the cover's refine predicate on (cx, cy)."""
+    cover = cover.select("cell_id", zone_key, *REFINE_COLUMNS)
+    joined = tiles.join(F.broadcast(cover), on="cell_id", how="inner")
+    return joined.filter(contains_expr("cx", "cy")).select(*cols)
+
+
 def zonal_stats(
     tiles: DataFrame,
     cover: DataFrame,
@@ -49,47 +57,10 @@ def zonal_stats(
 ) -> DataFrame:
     """-> one row per zone with the requested statistics over tiles whose
     center falls inside the zone polygon. ``tiles`` from
-    ``tiles_with_centers``; ``cover`` from ``zones_cell_cover``."""
-    zgeom = "_zone_geom"
-    cover = cover.withColumnRenamed("geometry_wkb", zgeom)
-    joined = tiles.join(F.broadcast(cover), on="cell_id", how="inner")
-    full = joined.filter(F.col("full_cover")).select(zone_key, value_col)
-    has_rect = "is_rect" in cover.columns
-    if has_rect:
-        # rectangle zones refine JVM-side (ray-cast-equivalent half-open box)
-        rect_pass = joined.filter(
-            ~F.col("full_cover")
-            & F.col("is_rect")
-            & (F.col("cx") >= F.col("zxmin"))
-            & (F.col("cx") < F.col("zxmax"))
-            & (F.col("cy") >= F.col("zymin"))
-            & (F.col("cy") < F.col("zymax"))
-        ).select(zone_key, value_col)
-        full = full.unionByName(rect_pass)
-        joined = joined.filter(~F.col("is_rect"))
-    boundary = joined.filter(~F.col("full_cover")).select(zone_key, value_col, "cx", "cy", zgeom)
-
-    ztype = cover.schema[zone_key].dataType.simpleString()
-    vtype = tiles.schema[value_col].dataType.simpleString()
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prep_cache: dict[bytes, PreparedPolygon] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            cx = pdf["cx"].to_numpy(dtype=np.float64)
-            cy = pdf["cy"].to_numpy(dtype=np.float64)
-            for zwkb, idx in pdf.groupby(zgeom, sort=False).indices.items():
-                prep = prep_cache.get(zwkb)
-                if prep is None:
-                    prep = prep_cache[zwkb] = PreparedPolygon(bytes(zwkb))
-                keep[idx] = prep.contains_points(cx[idx], cy[idx])
-            yield pdf.loc[keep, [zone_key, value_col]]
-
-    refined = boundary.mapInPandas(refine, schema=f"`{zone_key}` {ztype}, `{value_col}` {vtype}")
-    members = full.unionByName(refined)
-
+    ``tiles_with_centers``; ``cover`` from ``zones_cell_cover``. One
+    broadcast join, one JVM-side filter (full-cover cells pass, boundary
+    cells take the exact edge predicate), one hash aggregate."""
+    members = _zone_members(tiles, cover, zone_key, [zone_key, value_col])
     agg_map = {
         "count": F.count(value_col).alias("tile_count"),
         "sum": F.sum(value_col).alias("value_sum"),
@@ -112,50 +83,13 @@ def rasterize_zones(
     zone are absent, i.e. nodata). Overlapping zones resolve by
     ``tie``: 'min'/'max' zone id — deterministic, engine-independent.
 
-    Same plan shape as zonal_stats: full-cover cells and rect zones
-    assign JVM-side; only boundary cells of irregular polygons touch
-    the pandas refine. -> (tile_x, tile_y, zone_key).
+    Same plan shape as zonal_stats: the broadcast join and the
+    full-cover / edge-predicate filter run JVM-side, then one
+    groupBy(tile). -> (tile_x, tile_y, zone_key).
     """
-    zgeom = "_zone_geom"
-    cover = cover.withColumnRenamed("geometry_wkb", zgeom)
-    joined = tiles.join(F.broadcast(cover), on="cell_id", how="inner")
-
-    full = joined.filter(F.col("full_cover")).select("tile_x", "tile_y", zone_key)
-    if "is_rect" in cover.columns:
-        rect_pass = joined.filter(
-            ~F.col("full_cover")
-            & F.col("is_rect")
-            & (F.col("cx") >= F.col("zxmin"))
-            & (F.col("cx") < F.col("zxmax"))
-            & (F.col("cy") >= F.col("zymin"))
-            & (F.col("cy") < F.col("zymax"))
-        ).select("tile_x", "tile_y", zone_key)
-        full = full.unionByName(rect_pass)
-        joined = joined.filter(~F.col("is_rect"))
-    boundary = joined.filter(~F.col("full_cover")).select("tile_x", "tile_y", zone_key, "cx", "cy", zgeom)
-
-    ztype = cover.schema[zone_key].dataType.simpleString()
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prep_cache: dict[bytes, PreparedPolygon] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            cx = pdf["cx"].to_numpy(dtype=np.float64)
-            cy = pdf["cy"].to_numpy(dtype=np.float64)
-            for zwkb, idx in pdf.groupby(zgeom, sort=False).indices.items():
-                prep = prep_cache.get(zwkb)
-                if prep is None:
-                    prep = prep_cache[zwkb] = PreparedPolygon(bytes(zwkb))
-                keep[idx] = prep.contains_points(cx[idx], cy[idx])
-            yield pdf.loc[keep, ["tile_x", "tile_y", zone_key]]
-
-    refined = boundary.mapInPandas(refine, schema=f"tile_x int, tile_y int, `{zone_key}` {ztype}")
-    members = full.unionByName(refined)
+    members = _zone_members(tiles, cover, zone_key, ["tile_x", "tile_y", zone_key])
     agg = F.min(zone_key) if tie == "min" else F.max(zone_key)
     return members.groupBy("tile_x", "tile_y").agg(agg.alias(zone_key))
-
 
 
 def areal_interpolate(

@@ -289,9 +289,9 @@ def q_geo_pip_join_bucketed(spark, sf):
 
 def _diamond_zones_pd() -> pd.DataFrame:
     """100 diamond (rotated-square) zones in 10x10 slots of 36x18 deg —
-    NON-rectangular polygons, so the PIP join's generic pandas ray-cast
-    refine runs (the rect zones above short-circuit to the JVM interval
-    predicate). Centers carry a 7e-6 offset off the 1e-5 coordinate
+    NON-rectangular polygons, so boundary cells run the PIP join's edge
+    ray-cast predicate on slanted edges (the rect zones above only have
+    axis-aligned ones). Centers carry a 7e-6 offset off the 1e-5 coordinate
     lattice so no synthesized point lands on a diamond edge."""
     rows = []
     for z in range(100):
@@ -315,9 +315,9 @@ DIAMONDS_SQL = """(
 
 
 def q_geo_pip_join_poly(spark, sf):
-    """PIP join against NON-rectangular zones: exercises the generic
-    per-polygon prepared ray-cast refine (mapInPandas) that the rect
-    zones of geo_pip_join bypass via the JVM interval fast path. Oracle:
+    """PIP join against NON-rectangular zones: exercises the edge ray-cast
+    refine on slanted edges, where the rect zones of geo_pip_join only
+    have axis-aligned ones. Oracle:
     the diamond interior is the linear inequality |dx|/a + |dy|/b < 1."""
     cover = zones_cell_cover(spark, _diamond_zones_pd(), res=GEO_RES, zone_key="zone_id")
     return point_in_polygon_join(_docs_geo(spark, sf), cover, zone_key="zone_id", keep_doc_cols=["doc_id"])
@@ -331,8 +331,8 @@ ON abs(d.lon - z.cx) / z.a + abs(d.lat - z.cy) / z.b < 1
 
 def _edge_zone_params():
     """Integer-edged zones for the boundary-inclusive PIP query: 8 rects
-    (JVM interval path) + 3 diamonds with 45-degree edges through integer
-    lattice points (generic refine path). Floored doc coordinates are
+    (axis-aligned edges) + 3 diamonds with 45-degree edges through integer
+    lattice points (slanted edges). Floored doc coordinates are
     integer-valued doubles, so points land EXACTLY on these edges and
     every on-edge comparison is float-exact in both engines."""
     rects = []
@@ -401,8 +401,7 @@ RECT_H_EXPR = "(1 + doc_id % 5) / 1e1"
 
 def q_geo_zonal_poly(spark, sf):
     """Zonal stats against NON-rect zones: boundary tiles go through the
-    generic center-in-polygon pandas refine (rect zones short-circuit to
-    the JVM box predicate). Oracle: diamond-interior linear inequality
+    center-in-polygon edge predicate on slanted edges. Oracle: diamond-interior linear inequality
     over tile centers."""
     tiles = spark.range(180 * 90).select(
         (F.col("id") % 180 - 90).cast("int").alias("tile_x"),

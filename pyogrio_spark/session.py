@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "pyogrio_spark",
@@ -20,7 +22,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local mode: one shuffle partition per core keeps every stage
@@ -56,6 +58,11 @@ def get_spark(
             "spark.executor.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_EXECUTOR_JAVA_OPTS", "-XX:+UseParallelGC"),
         )
+        # Python workers import the package from its source root, so a
+        # mapInPandas stage works without the caller setting PYTHONPATH
+        # (Spark merges this with the workers' own PYTHONPATH). Not
+        # addPyFile: zip imports slow down every Python worker start.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -77,8 +77,8 @@ def streaming_zone_counts(
 
     The whole enrichment is the batch ``point_in_polygon_join``
     composition — broadcast stream-static equi-join on cell_id,
-    codegen rect/full-cover decisions, Arrow-batched refine only for
-    irregular boundary cells — which is stateless, so it runs
+    full-cover cells pass, boundary cells take the JVM-side edge
+    ray-cast predicate, no Python stage — which is stateless, so it runs
     unchanged under Structured Streaming; the only streaming state is
     the windowed count, bounded by the watermark. Batch parity: on a
     static frame the result equals batch PIP join + groupBy (how the

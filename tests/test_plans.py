@@ -55,6 +55,34 @@ def test_pip_join_broadcasts_cover_side(spark, docs_parquet):
     assert "SortMergeJoin" not in plan  # the docs side must never shuffle
 
 
+def test_pip_and_zonal_refine_have_no_python(spark, docs_parquet):
+    """The exact refine is a JVM predicate over the cover's clipped edges:
+    the PIP join and both zonal operators plan as a broadcast join plus a
+    filter, with no Python stage."""
+    from pyspark.sql import functions as F
+
+    from pyogrio_spark.operators.zonal import rasterize_zones, tiles_with_centers, zonal_stats
+
+    cover = zones_cell_cover(spark, make_zones(50))
+    tiles = tiles_with_centers(
+        spark.range(64 * 32).select(
+            (F.col("id") % 64 - 32).cast("int").alias("tile_x"),
+            (F.col("id") / 64 - 16).cast("int").alias("tile_y"),
+            F.col("id").cast("double").alias("value"),
+        ),
+        tile_deg=5.0,
+    )
+    for out in (
+        point_in_polygon_join(spark.read.parquet(docs_parquet), cover, keep_doc_cols=["doc_id"]),
+        point_in_polygon_join(spark.read.parquet(docs_parquet), cover, include_boundary=True),
+        zonal_stats(tiles, cover),
+        rasterize_zones(tiles, cover),
+    ):
+        plan = plan_of(out)
+        assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+        assert "BroadcastHashJoin" in plan and "Union" not in plan
+
+
 def test_partitioned_layout_prunes_partitions(spark, tmp_path):
     """The Iceberg-partitioning stand-in: lay the table out partitioned by
     the coarse parent cell; a cell-range predicate then prunes whole

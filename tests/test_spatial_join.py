@@ -1,3 +1,4 @@
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -64,11 +65,24 @@ def test_pip_join_shuffle_salted_same_result(spark, docs_df, docs_pd, zones_pd):
 
 def test_distributed_cover_matches_driver_cover(spark, zones_pd):
     zones_df = spark.createDataFrame(zones_pd, schema=ZONES_SPARK_SCHEMA)
-    a = zones_cell_cover(spark, zones_pd).select("cell_id", "fid", "full_cover")
-    b = zones_cell_cover_distributed(zones_df).select("cell_id", "fid", "full_cover")
-    la = sorted(map(tuple, a.collect()))
-    lb = sorted(map(tuple, b.collect()))
+    cols = ["cell_id", "fid", "full_cover", "edges"]
+    a = zones_cell_cover(spark, zones_pd).select(*cols)
+    b = zones_cell_cover_distributed(zones_df).select(*cols)
+
+    def rows(df):
+        return sorted((r.cell_id, r.fid, r.full_cover, tuple(map(tuple, r.edges))) for r in df.collect())
+
+    la, lb = rows(a), rows(b)
     assert la == lb
+    assert all(bool(e) != f for _, _, f, e in la)  # edges on boundary rows only
+
+
+def test_pip_join_default_keep_doc_cols(spark, docs_df, docs_pd, zones_pd):
+    # docs carry xmin/ymin, so the default keeps them as payload too
+    out = point_in_polygon_join(docs_df, zones_cell_cover(spark, zones_pd))
+    assert out.columns == [c for c in docs_df.columns if c != "geometry_wkb"] + ["fid"]
+    want = list(oracle_pip_join(docs_pd, zones_pd)[["doc_id", "fid"]].itertuples(index=False, name=None))
+    assert pairs(out) == sorted(want)
 
 
 def test_spans_survive_pip_join(spark, docs_df, zones_pd):
@@ -232,3 +246,161 @@ def test_aqe_skew_join_splits_hot_cell_natively(spark):
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
         ):
             spark.conf.unset(k)
+
+
+# ---- the JVM-side refine against PreparedPolygon.contains_points ----------
+
+_W, _H = 360.0 / 128, 180.0 / 128  # res-7 cell size
+
+
+def _gx(k):  # the k-th res-7 cell line in x
+    return -180.0 + k * _W
+
+
+def _gy(k):
+    return -90.0 + k * _H
+
+
+_PREDICATE_ZONES = {
+    # axis-aligned rectangles: one with every edge on a cell line, one off the grid
+    0: [[[(0.0, 0.0), (2 * _W, 0.0), (2 * _W, 2 * _H), (0.0, 2 * _H), (0.0, 0.0)]]],
+    1: [[[(10.5, 10.25), (20.75, 10.25), (20.75, 15.5), (10.5, 15.5), (10.5, 10.25)]]],
+    # diamond with 45-degree edges through integer points
+    2: [[[(-44.0, 20.0), (-40.0, 24.0), (-36.0, 20.0), (-40.0, 16.0), (-44.0, 20.0)]]],
+    # pentagon with a rectangular hole (horizontal edges on both rings)
+    3: [[
+        [(-100.0, -40.0), (-80.0, -40.0), (-80.0, -25.0), (-90.0, -20.0), (-100.0, -25.0), (-100.0, -40.0)],
+        [(-95.0, -35.0), (-85.0, -35.0), (-85.0, -30.0), (-95.0, -30.0), (-95.0, -35.0)],
+    ]],
+    # two-part multipolygon, one apex on the y = 0 cell line
+    4: [
+        [[(60.0, -10.0), (70.0, -10.0), (65.0, 0.0), (60.0, -10.0)]],
+        [[(72.0, -10.0), (82.0, -10.0), (77.0, -2.0), (72.0, -10.0)]],
+    ],
+    # L-shape whose vertices and axis-aligned edges all lie on cell lines
+    5: [[[(_gx(74), _gy(84)), (_gx(76), _gy(84)), (_gx(76), _gy(85)), (_gx(75), _gy(85)),
+          (_gx(75), _gy(87)), (_gx(74), _gy(87)), (_gx(74), _gy(84))]]],
+    # triangle with a slanted edge through cell corners
+    6: [[[(-3 * _W, -3 * _H), (0.0, 0.0), (-3 * _W, 0.0), (-3 * _W, -3 * _H)]]],
+    # notch whose vertical edge sits a hair left of the x = 0 cell line
+    7: [[[(-1.0, 30.0), (1.0, 30.0), (1.0, 31.0), (-1e-200, 31.0), (-1e-200, 30.5), (-1.0, 30.5), (-1.0, 30.0)]]],
+}
+
+# cell_of puts these in the cell right of x = 0, past the notch edge that
+# their ray crosses: only the clipping margin keeps that edge in the cell
+_MARGIN_POINTS = [(-1e-100, 30.75), (-1e-100, 30.25), (-1e-200, 30.75)]
+
+
+def _predicate_zones():
+    from pyogrio_spark.geometry import wkb as W
+
+    rows = []
+    for fid, parts in _PREDICATE_ZONES.items():
+        polys = [[np.array(r, dtype=np.float64) for r in rings] for rings in parts]
+        wkb = W.encode_polygon(polys[0]) if len(polys) == 1 else W.encode_multipolygon(polys)
+        rows.append((fid, wkb))
+    return pd.DataFrame(rows, columns=["fid", "geometry_wkb"])
+
+
+def _hard_points(zones):
+    """Vertices, points along every edge, cell-line lattice points and
+    seeded random points around every zone."""
+    from pyogrio_spark.geometry.predicates import PreparedPolygon
+
+    rng = np.random.default_rng(3)
+    pts = []
+    for wkb in zones.geometry_wkb:
+        prep = PreparedPolygon(wkb)
+        for ring in prep.rings:
+            a, b = ring[:-1], ring[1:]
+            pts.append(ring)
+            for t in (0.25, 0.5, 0.75):
+                pts.append(a + t * (b - a))
+            # along each horizontal edge's line, inside and beyond it
+            for (x0, y0), (x1, y1) in zip(a, b):
+                if y0 == y1:
+                    xs = np.linspace(min(x0, x1) - 1.0, max(x0, x1) + 1.0, 9)
+                    pts.append(np.column_stack([xs, np.full_like(xs, y0)]))
+        xmin, ymin, xmax, ymax = prep.bbox
+        gx = -180.0 + _W * np.arange(np.floor((xmin + 180.0) / _W) - 1, np.ceil((xmax + 180.0) / _W) + 2)
+        gy = -90.0 + _H * np.arange(np.floor((ymin + 90.0) / _H) - 1, np.ceil((ymax + 90.0) / _H) + 2)
+        # on the cell lines, and one ulp to either side of them
+        for xs, ys in ((gx, gy), (gx, gy + _H / 2), (gx + _W / 2, gy),
+                       (np.nextafter(gx, -np.inf), gy + _H / 2), (np.nextafter(gx, np.inf), gy + _H / 2),
+                       (gx + _W / 2, np.nextafter(gy, -np.inf)), (gx + _W / 2, np.nextafter(gy, np.inf))):
+            mx, my = np.meshgrid(xs, ys)
+            pts.append(np.column_stack([mx.ravel(), my.ravel()]))
+        pts.append(rng.uniform([xmin - _W, ymin - _H], [xmax + _W, ymax + _H], size=(300, 2)))
+    pts.append(np.array(_MARGIN_POINTS))
+    return np.unique(np.concatenate(pts), axis=0)
+
+
+def _docs_in_every_touching_cell(pts):
+    """One doc row per (point, cell whose closed box holds it), plus the
+    point's own ``cell_of`` cell (``primary``; it can differ from the box
+    by an ulp of rounding). A point on a cell line is thus also joined
+    through the cell on the other side, which checks each cover row's
+    clipped edges (and their margin) for it."""
+    from pyogrio_spark.index.grid import cell_of, xy_to_cell
+
+    rows = []
+    for i, (x, y) in enumerate(pts):
+        own = int(cell_of(x, y, 7))
+        gx, gy = (x + 180.0) / _W, (y + 90.0) / _H
+        xs = {int(np.floor(gx))} | ({int(gx) - 1} if gx == np.floor(gx) else set())
+        ys = {int(np.floor(gy))} | ({int(gy) - 1} if gy == np.floor(gy) else set())
+        cells = {int(xy_to_cell(cx, cy, 7)) for cx in xs for cy in ys if 0 <= cx < 128 and 0 <= cy < 128}
+        rows += [(f"p{i}:{c}", float(x), float(y), c, c == own) for c in sorted(cells | {own})]
+    return pd.DataFrame(rows, columns=["doc_id", "xmin", "ymin", "cell_id", "primary"])
+
+
+def _expected_pairs(zones, docs_pd, include_boundary):
+    """contains_points per zone; a non-primary row can only meet the
+    zones whose cover has its cell (the cover is built for ``cell_of``)."""
+    from pyogrio_spark.geometry.predicates import PreparedPolygon
+    from pyogrio_spark.index.cover import cover_polygon
+
+    x, y = docs_pd.xmin.to_numpy(), docs_pd.ymin.to_numpy()
+    want = []
+    for fid, wkb in zip(zones.fid, zones.geometry_wkb):
+        hit = PreparedPolygon(wkb).contains_points(x, y, include_boundary=include_boundary)
+        hit &= docs_pd.primary.to_numpy() | docs_pd.cell_id.isin(cover_polygon(wkb, 7)[0]).to_numpy()
+        want += [(d, fid) for d in docs_pd.doc_id[hit]]
+    return sorted(want)
+
+
+@pytest.fixture(scope="module")
+def predicate_case(spark):
+    zones = _predicate_zones()
+    docs_pd = _docs_in_every_touching_cell(_hard_points(zones))
+    docs = spark.createDataFrame(docs_pd, schema="doc_id string, xmin double, ymin double, cell_id bigint, primary boolean")
+    return zones, docs_pd, docs.cache(), zones_cell_cover(spark, zones).cache()
+
+
+@pytest.mark.parametrize("include_boundary", [False, True])
+def test_jvm_refine_matches_contains_points(predicate_case, include_boundary):
+    zones, docs_pd, docs, cover = predicate_case
+    got = pairs(point_in_polygon_join(docs, cover, keep_doc_cols=["doc_id"], include_boundary=include_boundary))
+    assert got == _expected_pairs(zones, docs_pd, include_boundary)
+    assert len(got) > 1000
+
+
+def test_jvm_refine_boundary_semantics(predicate_case):
+    """Half-open ray cast by default, closed with include_boundary: a
+    rectangle zone is [xmin, xmax) x [ymin, ymax), resp. the closed box."""
+    zones, _, docs, cover = predicate_case
+    default = set(pairs(point_in_polygon_join(docs, cover, keep_doc_cols=["doc_id"])))
+    closed = set(pairs(point_in_polygon_join(docs, cover, keep_doc_cols=["doc_id"], include_boundary=True)))
+    assert default < closed
+
+    spark = docs.sparkSession
+    probe = [(10.5, 12.0, True), (20.75, 12.0, False), (15.0, 10.25, True), (15.0, 15.5, False),
+             (10.5, 10.25, True), (20.75, 15.5, False), (10.5, 15.5, False), (15.0, 12.0, True)]
+    rect = _docs_in_every_touching_cell(np.array([(px, py) for px, py, _ in probe]))
+    rect_docs = spark.createDataFrame(rect, schema="doc_id string, xmin double, ymin double, cell_id bigint, primary boolean")
+    for include_boundary in (False, True):
+        out = point_in_polygon_join(rect_docs, cover, keep_doc_cols=["doc_id"], include_boundary=include_boundary)
+        inside = {d for d, fid in pairs(out) if fid == 1}
+        for d in rect.doc_id:
+            _, _, half_open = probe[int(d[1:].split(":")[0])]
+            assert (d in inside) == (half_open or include_boundary), (d, include_boundary)
