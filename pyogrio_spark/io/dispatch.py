@@ -302,7 +302,12 @@ def convert_dataset(
     GPKG pk ranges, FGB R-tree leaves, GeoJSONSeq lines) into
     distributed single-file sinks (FGB / shapefile part-encode +
     driver byte-stitch, GeoJSONSeq part files) — the multi-GB
-    conversion never materializes the dataset on the driver. Formats
+    conversion never materializes the dataset on the driver. A
+    FlatGeobuf, shapefile or GeoPackage source into a shapefile or
+    unindexed FlatGeobuf sink is ONE Spark job with one task per scan
+    chunk and no shuffle: each task decodes its chunk, applies the
+    exact bbox/mask refine (without ``sql=``), the ``where`` filter and
+    the projection, and encodes its part file. Formats
     without a distributed half (GeoJSON FeatureCollection, GPKG
     single-writer SQLite sink) fall back to the driver-side codec with
     a toPandas boundary, same as the reference's single-process write.

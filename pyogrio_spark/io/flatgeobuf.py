@@ -773,6 +773,21 @@ def flatgeobuf_info(path: str) -> dict:
     }
 
 
+def _decode_frames(buf: bytes, off: int, spec, layer_code: int) -> tuple[list, list[dict]]:
+    """Size-prefixed feature frames from ``off`` to the end of ``buf`` ->
+    (WKB per feature, property dict per feature)."""
+    geoms, prop_rows = [], []
+    while off + 4 <= len(buf):
+        (fsize,) = struct.unpack_from("<I", buf, off)
+        feat = Table.root(buf, off + 4)
+        off += 4 + fsize
+        gt = feat._indirect(0)
+        geoms.append(None if gt is None else W.encode_geom(_parse_geometry(Table(buf, gt), layer_code)))
+        ps, pn = feat.vector(1)
+        prop_rows.append(_decode_properties(buf[ps : ps + pn], spec) if pn else {})
+    return geoms, prop_rows
+
+
 def read_flatgeobuf_pdf(path: str) -> tuple[pd.DataFrame, dict]:
     """Parse a FlatGeobuf file into (pandas frame with fid/attrs/
     geometry_wkb, info dict mirroring read_info)."""
@@ -796,24 +811,8 @@ def read_flatgeobuf_pdf(path: str) -> tuple[pd.DataFrame, dict]:
     if index_node_size > 0 and features_count > 0:
         off += packed_rtree_size(features_count, index_node_size)
 
-    fids, geoms, prop_rows = [], [], []
-    fid = 0
-    while off + 4 <= len(data):
-        (fsize,) = struct.unpack_from("<I", data, off)
-        feat = Table.root(data, off + 4)
-        off += 4 + fsize
-        gt = feat._indirect(0)
-        if gt is None:
-            geoms.append(None)
-        else:
-            g = _parse_geometry(Table(data, gt), layer_code)
-            geoms.append(W.encode_geom(g))
-        ps, pn = feat.vector(1)
-        prop_rows.append(_decode_properties(data[ps : ps + pn], spec) if pn else {})
-        fids.append(fid)
-        fid += 1
-
-    pdf = pd.DataFrame({"fid": np.array(fids, dtype=np.int64)})
+    geoms, prop_rows = _decode_frames(data, off, spec, layer_code)
+    pdf = pd.DataFrame({"fid": np.arange(len(geoms), dtype=np.int64)})
     for name, ctype in spec:
         vals = [r.get(name) for r in prop_rows]
         if ctype in (COL_LONG, COL_INT, COL_SHORT, COL_BYTE, COL_UBYTE, COL_USHORT,
@@ -874,34 +873,37 @@ def read_flatgeobuf(spark, path: str, **read_table_kwargs):
 
     pdf, info = read_flatgeobuf_pdf(path)
     spec = info["column_spec"]
-    out = pd.DataFrame({"fid": pdf["fid"].to_numpy(dtype=np.int64)})
-    for name, ct in spec:
-        t = _spark_type(ct)
-        vals = list(pdf[name])
-        if t == "bigint":
-            out[name] = pd.array(
-                [None if v is None or (np.isscalar(v) and pd.isna(v)) else int(v) for v in vals],
-                dtype="Int64",
-            )
-        elif t == "double":
-            out[name] = pd.array(
-                [np.nan if v is None else v for v in vals], dtype="float64"
-            )
-        elif t == "boolean":
-            out[name] = pd.array(
-                [None if v is None or (np.isscalar(v) and pd.isna(v)) else bool(v) for v in vals],
-                dtype="boolean",
-            )
-        else:  # string / binary pass through as objects
-            out[name] = vals
-    out["geometry_wkb"] = list(pdf["geometry_wkb"])
-    schema = ", ".join(
+    out = _spark_frame(pdf["fid"].to_numpy(dtype=np.int64), {name: list(pdf[name]) for name, _ in spec},
+                       list(pdf["geometry_wkb"]), spec)
+    df = spark.createDataFrame(out, schema=_spark_schema(spec))
+    return read_table(spark, df, **read_table_kwargs)
+
+
+def _spark_schema(spec) -> str:
+    return ", ".join(
         ["`fid` bigint"]
         + [f"`{name}` {_spark_type(ct)}" for name, ct in spec]
         + ["`geometry_wkb` binary"]
     )
-    df = spark.createDataFrame(out, schema=schema)
-    return read_table(spark, df, **read_table_kwargs)
+
+
+def _spark_frame(fids, cols: dict[str, list], geoms: list, spec) -> pd.DataFrame:
+    """Decoded columns typed for ``_spark_schema``: nullable Int64 and
+    boolean, float64 with NaN for nulls, objects for string/binary."""
+    out = pd.DataFrame({"fid": fids})
+    for name, ct in spec:
+        t = _spark_type(ct)
+        vals = cols[name]
+        if t == "bigint":
+            out[name] = pd.array(vals, dtype="Int64")
+        elif t == "double":
+            out[name] = pd.array([np.nan if v is None else v for v in vals], dtype="float64")
+        elif t == "boolean":
+            out[name] = pd.array(vals, dtype="boolean")
+        else:
+            out[name] = vals
+    out["geometry_wkb"] = geoms
+    return out
 
 
 def list_layers(path: str) -> list[list[str]]:
@@ -963,37 +965,23 @@ def read_flatgeobuf_distributed(
     """Distributed FlatGeobuf scan: per-feature byte offsets come from
     the packed R-tree's leaf nodes (or a header-only seek-walk for
     index-less files) on the driver; executors byte-range-read and
-    decode ONLY their own contiguous chunk of feature frames inside
-    mapInPandas — the same plan shape as the distributed shapefile and
-    GeoPackage scans. The path must be executor-visible."""
-    from pyspark.sql import functions as F
-
-    from pyogrio_spark.io.reader import read_table
+    decode ONLY their own contiguous chunk of feature frames, one task
+    per chunk and no shuffle (``reader.scan_chunks``, shared with the
+    distributed shapefile and GeoPackage scans). Without ``sql=``, the
+    exact bbox/mask refine runs in the same Python pass as the decode.
+    The path must be executor-visible."""
+    from pyogrio_spark.io.reader import scan_chunks, storage_prune_box
 
     spec, layer_code, _feat0, offsets, file_size, leaf_boxes = _fgb_layout(path)
     n = len(offsets)
-    if n == 0:
-        # valid zero-feature file: same empty frame (and schema) the
-        # single-node reader returns — distributed=True must only change
-        # the plan, never the result (round-3 ADVICE)
-        empty_schema = ", ".join(
-            ["`fid` bigint"]
-            + [f"`{name}` {_spark_type(ct)}" for name, ct in spec]
-            + ["`geometry_wkb` binary"]
-        )
-        return read_table(spark, spark.createDataFrame([], schema=empty_schema), **read_table_kwargs)
     # bbox pushdown to the STORAGE layer: when the file carries the
     # packed R-tree, prune whole byte ranges on the driver using the
-    # leaf bboxes (a superset of the exact answer — read_table's bbox
-    # refine still runs on what is read). Hilbert order clusters
-    # spatial neighbors, so the surviving features form few contiguous
-    # runs and the scan reads only those ranges — the reference's
-    # reason for the index (bounds-assisted reads, core.py:184-187).
-    bbox = read_table_kwargs.get("bbox")
-    if bbox is None and read_table_kwargs.get("mask") is not None:
-        # a mask filter prunes by its envelope too (superset; the exact
-        # mask refine still runs in read_table on what is read)
-        bbox = W.bounds(bytes(read_table_kwargs["mask"]))
+    # leaf bboxes (a superset of the exact answer — the exact refine
+    # still runs on what is read). Hilbert order clusters spatial
+    # neighbors, so the surviving features form few contiguous runs and
+    # the scan reads only those ranges — the reference's reason for the
+    # index (bounds-assisted reads, core.py:184-187).
+    bbox = storage_prune_box(read_table_kwargs)
     if bbox is not None and leaf_boxes is not None:
         qx0, qy0, qx1, qy1 = bbox
         keep = (
@@ -1003,71 +991,25 @@ def read_flatgeobuf_distributed(
             & (leaf_boxes[:, 3] >= qy0)
         )
         idx = np.flatnonzero(keep)
-        if len(idx) == 0:
-            idx = np.array([], dtype=np.int64)
         runs = np.split(idx, np.flatnonzero(np.diff(idx) > 1) + 1) if len(idx) else []
     else:
         runs = [np.arange(n, dtype=np.int64)]
-    chunks = []
-    ci = 0
+    chunks = []  # (byte_lo, byte_hi, fid_lo)
     for run in runs:
-        if len(run) == 0:
-            continue
         for lo_i in range(0, len(run), int(chunk_features)):
             seg = run[lo_i : lo_i + int(chunk_features)]
             lo, hi = int(seg[0]), int(seg[-1]) + 1
-            end = int(offsets[hi]) if hi < n else file_size
-            chunks.append((ci, int(offsets[lo]), end, lo))
-            ci += 1
-    if not chunks:
-        # bbox pruned everything: empty frame with the right schema
-        chunks = [(0, int(offsets[0]), int(offsets[0]), 0)]
-    chunk_df = spark.createDataFrame(
-        chunks, schema="chunk_id int, byte_lo long, byte_hi long, fid_lo long"
-    ).repartition(len(chunks), F.col("chunk_id"))
+            chunks.append((int(offsets[lo]), int(offsets[hi]) if hi < n else file_size, lo))
+    # no chunks (zero-feature file, or bbox pruned everything): the scan
+    # returns the empty frame with the file's schema
 
-    schema = ", ".join(
-        ["`fid` bigint"]
-        + [f"`{name}` {_spark_type(ct)}" for name, ct in spec]
-        + ["`geometry_wkb` binary"]
-    )
+    def decode(chunk):
+        byte_lo, byte_hi, fid_lo = chunk
+        with open(path, "rb") as f:
+            f.seek(byte_lo)
+            buf = f.read(byte_hi - byte_lo)
+        geoms, prop_rows = _decode_frames(buf, 0, spec, layer_code)
+        fids = np.arange(fid_lo, fid_lo + len(geoms), dtype=np.int64)
+        return _spark_frame(fids, {name: [r.get(name) for r in prop_rows] for name, _ in spec}, geoms, spec)
 
-    def scan(pdfs):
-        for cpdf in pdfs:
-            for row in cpdf.itertuples(index=False):
-                with open(path, "rb") as f:
-                    f.seek(row.byte_lo)
-                    buf = f.read(row.byte_hi - row.byte_lo)
-                geoms, prop_rows = [], []
-                off = 0
-                while off + 4 <= len(buf):
-                    (fsize,) = struct.unpack_from("<I", buf, off)
-                    feat = Table.root(buf, off + 4)
-                    off += 4 + fsize
-                    gt = feat._indirect(0)
-                    geoms.append(
-                        None if gt is None else W.encode_geom(_parse_geometry(Table(buf, gt), layer_code))
-                    )
-                    ps, pn = feat.vector(1)
-                    prop_rows.append(_decode_properties(buf[ps : ps + pn], spec) if pn else {})
-                out = pd.DataFrame(
-                    {"fid": np.arange(row.fid_lo, row.fid_lo + len(geoms), dtype=np.int64)}
-                )
-                for name, ct in spec:
-                    vals = [r.get(name) for r in prop_rows]
-                    t = _spark_type(ct)
-                    if t == "bigint":
-                        out[name] = pd.array(vals, dtype="Int64")
-                    elif t == "double":
-                        out[name] = pd.array(
-                            [np.nan if v is None else v for v in vals], dtype="float64"
-                        )
-                    elif t == "boolean":
-                        out[name] = pd.array(vals, dtype="boolean")
-                    else:
-                        out[name] = vals
-                out["geometry_wkb"] = geoms
-                yield out
-
-    df = chunk_df.mapInPandas(scan, schema=schema)
-    return read_table(spark, df, **read_table_kwargs)
+    return scan_chunks(spark, path, chunks, decode, _spark_schema(spec), **read_table_kwargs)

@@ -583,10 +583,11 @@ def read_geopackage_distributed(
 ):
     """Distributed GPKG scan: the driver reads only the registry tables
     and the layer's primary-key range; executors each open the SQLite
-    file read-only and range-scan their own pk window inside
-    mapInPandas — SQLite's rowid B-tree makes each range seek O(log n),
-    so no task touches pages outside its chunk. Same shape as
-    ``read_shapefile_distributed``; this is the multi-GB plan the
+    file read-only and range-scan their own pk window — SQLite's rowid
+    B-tree makes each range seek O(log n), so no task touches pages
+    outside its chunk. Same plan as ``read_shapefile_distributed``
+    (``reader.scan_chunks``: one task per chunk, no shuffle, exact
+    bbox/mask refine in the scan); this is the multi-GB plan the
     single-node ``read_geopackage`` (fixture-scale interchange)
     deliberately skips. The path must be executor-visible.
 
@@ -595,9 +596,7 @@ def read_geopackage_distributed(
     float, REAL/DOUBLE as double; the pandas reader's null-typing parity
     conventions (nullable ints -> float64) apply to the single-node
     interchange path only."""
-    from pyspark.sql import functions as F  # noqa: F811 (local, matches module import)
-
-    from pyogrio_spark.io.reader import read_table
+    from pyogrio_spark.io.reader import scan_chunks, storage_prune_box
 
     con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
     try:
@@ -616,15 +615,11 @@ def read_geopackage_distributed(
         lo_hi = con.execute(f'SELECT min("{pk}"), max("{pk}") FROM "{layer}"').fetchone()
         # bbox pushdown to the STORAGE layer: when the file carries the
         # gpkg_rtree_index extension, prune whole pk ranges on the
-        # driver from the R-tree (superset of the exact answer —
-        # read_table's bbox refine still runs on what is read). Same
-        # plan shape as the FlatGeobuf leaf-bbox pruning.
+        # driver from the R-tree (superset of the exact answer — the
+        # exact refine still runs on what is read). Same plan shape as
+        # the FlatGeobuf leaf-bbox pruning.
         cand_ids = None
-        bbox = read_table_kwargs.get("bbox")
-        if bbox is None and read_table_kwargs.get("mask") is not None:
-            # a mask filter prunes by its envelope too (superset; the
-            # exact mask refine still runs in read_table)
-            bbox = W.bounds(bytes(read_table_kwargs["mask"]))
+        bbox = storage_prune_box(read_table_kwargs)
         rt = f"rtree_{layer}_{gcol}"
         if bbox is not None and con.execute(
             "SELECT 1 FROM sqlite_master WHERE type='table' AND name = ?", (rt,)
@@ -644,29 +639,24 @@ def read_geopackage_distributed(
         raise ValueError(f"{path}:{layer} is empty")
     lo, hi = int(lo_hi[0]), int(lo_hi[1])
 
+    # chunks are half-open pk windows (pk_lo, pk_hi, first fid = pk_lo);
+    # none when the bbox pruned everything
     if cand_ids is not None:
         runs = (
             np.split(cand_ids, np.flatnonzero(np.diff(cand_ids) > 1) + 1)
             if len(cand_ids)
             else []
         )
-        chunks = []
-        ci = 0
-        for run in runs:
-            for seg_lo in range(0, len(run), int(chunk_rows)):
-                seg = run[seg_lo : seg_lo + int(chunk_rows)]
-                chunks.append((ci, int(seg[0]), int(seg[-1])))
-                ci += 1
-        if not chunks:  # bbox pruned everything: empty range
-            chunks = [(0, lo, lo - 1)]
+        chunks = [
+            (int(seg[0]), int(seg[-1]) + 1, int(seg[0]))
+            for run in runs
+            for seg in (run[i : i + int(chunk_rows)] for i in range(0, len(run), int(chunk_rows)))
+        ]
     else:
         chunks = [
-            (ci, start, min(start + int(chunk_rows) - 1, hi))
-            for ci, start in enumerate(range(lo, hi + 1, int(chunk_rows)))
+            (start, min(start + int(chunk_rows), hi + 1), start)
+            for start in range(lo, hi + 1, int(chunk_rows))
         ]
-    chunk_df = spark.createDataFrame(
-        chunks, schema="chunk_id int, pk_lo long, pk_hi long"
-    ).repartition(len(chunks), F.col("chunk_id"))
 
     def _spark_type(c: str) -> str:
         d = decl.get(c, "")
@@ -687,33 +677,29 @@ def read_geopackage_distributed(
     )
     sel = ", ".join([f'"{pk}"'] + [f'"{c}"' for c in attrs] + [f'"{gcol}"'])
 
-    def scan(pdfs):
-        for cpdf in pdfs:
-            for row in cpdf.itertuples(index=False):
-                c = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-                try:
-                    rows = c.execute(
-                        f'SELECT {sel} FROM "{layer}" WHERE "{pk}" BETWEEN ? AND ? ORDER BY "{pk}"',
-                        (int(row.pk_lo), int(row.pk_hi)),
-                    ).fetchall()
-                finally:
-                    c.close()
-                out = pd.DataFrame(
-                    {"fid": pd.array([r[0] for r in rows], dtype="Int64")}
+    def decode(chunk):
+        pk_lo, pk_hi, _ = chunk
+        c = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
+        try:
+            rows = c.execute(
+                f'SELECT {sel} FROM "{layer}" WHERE "{pk}" >= ? AND "{pk}" < ? ORDER BY "{pk}"',
+                (pk_lo, pk_hi),
+            ).fetchall()
+        finally:
+            c.close()
+        out = pd.DataFrame({"fid": pd.array([r[0] for r in rows], dtype="Int64")})
+        for i, cname in enumerate(attrs, start=1):
+            vals = [r[i] for r in rows]
+            t = _spark_type(cname)
+            if t == "bigint":
+                out[cname] = pd.array(vals, dtype="Int64")
+            elif t in ("float", "double"):
+                out[cname] = pd.array(
+                    [np.nan if v is None else v for v in vals], dtype="float64"
                 )
-                for i, cname in enumerate(attrs, start=1):
-                    vals = [r[i] for r in rows]
-                    t = _spark_type(cname)
-                    if t == "bigint":
-                        out[cname] = pd.array(vals, dtype="Int64")
-                    elif t in ("float", "double"):
-                        out[cname] = pd.array(
-                            [np.nan if v is None else v for v in vals], dtype="float64"
-                        )
-                    else:
-                        out[cname] = vals
-                out["geometry_wkb"] = [gpkg_blob_to_wkb(r[-1]) for r in rows]
-                yield out
+            else:
+                out[cname] = vals
+        out["geometry_wkb"] = [gpkg_blob_to_wkb(r[-1]) for r in rows]
+        return out
 
-    df = chunk_df.mapInPandas(scan, schema=schema)
-    return read_table(spark, df, **read_table_kwargs)
+    return scan_chunks(spark, path, chunks, decode, schema, unit="pk", **read_table_kwargs)

@@ -263,41 +263,37 @@ _RAW_SCHEMA = (
 
 def read_osm_raw(spark, path: str):
     """All entities as one DataFrame (kind 0=node 1=way 2=relation) —
-    one distributed decode pass; layers project/filter from it."""
-    idx = [
-        (i, off, size)
-        for i, (btype, off, size) in enumerate(blob_index(path))
+    one distributed decode pass, one task per OSMData blob; layers
+    project/filter from it."""
+    from pyogrio_spark.io.reader import scan_chunks
+
+    chunks = [  # (byte_lo, byte_hi, no fid: entity ids live inside the blob)
+        (off, off + size, None)
+        for btype, off, size in blob_index(path)
         if btype == "OSMData"
     ]
-    if not idx:
+    if not chunks:
         raise ValueError(f"{path}: no OSMData blobs")
-    from pyspark.sql import functions as F
 
-    blobs = spark.createDataFrame(
-        idx, schema="blob_id int, off long, size long"
-    ).repartition(len(idx), F.col("blob_id"))
+    def decode(chunk):
+        off, end, _ = chunk
+        with open(path, "rb") as f:
+            f.seek(off)
+            raw = f.read(end - off)
+        nodes, ways, rels = _decode_block(_inflate(raw))
+        rows = []
+        for nid, lon, lat, tags in nodes:
+            rows.append((0, nid, lon, lat, None, None, None, None, tags))
+        for wid, refs, tags in ways:
+            rows.append((1, wid, None, None, refs, None, None, None, tags))
+        for rid, mtypes, mrefs, mroles, tags in rels:
+            rows.append((2, rid, None, None, None, mtypes, mrefs, mroles, tags))
+        return pd.DataFrame(
+            rows,
+            columns=["kind", "id", "lon", "lat", "refs", "mtypes", "mrefs", "mroles", "tags"],
+        )
 
-    def decode(pdfs):
-        for bpdf in pdfs:
-            for row in bpdf.itertuples(index=False):
-                with open(path, "rb") as f:
-                    f.seek(row.off)
-                    raw = f.read(row.size)
-                nodes, ways, rels = _decode_block(_inflate(raw))
-                rows = []
-                for nid, lon, lat, tags in nodes:
-                    rows.append((0, nid, lon, lat, None, None, None, None, tags))
-                for wid, refs, tags in ways:
-                    rows.append((1, wid, None, None, refs, None, None, None, tags))
-                for rid, mtypes, mrefs, mroles, tags in rels:
-                    rows.append((2, rid, None, None, None, mtypes, mrefs, mroles, tags))
-                yield pd.DataFrame(
-                    rows,
-                    columns=["kind", "id", "lon", "lat", "refs", "mtypes",
-                             "mrefs", "mroles", "tags"],
-                )
-
-    return blobs.mapInPandas(decode, schema=_RAW_SCHEMA)
+    return scan_chunks(spark, path, chunks, decode, _RAW_SCHEMA)
 
 
 # --------------------------------------------------------- layer assembly

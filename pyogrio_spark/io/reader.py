@@ -87,13 +87,7 @@ def read_table(
     untouched); ``on_invalid`` is the raise/warn/ignore/fix policy of
     /root/reference/pyogrio/geopandas.py:273-285 applied during that
     normalization."""
-    if bbox is not None and mask is not None:
-        # mirror /root/reference/pyogrio/_io.pyx:1682-1683
-        raise ValueError("cannot set both 'bbox' and 'mask'")
-    if fids is not None and (where or bbox is not None or mask is not None or skip_features or max_features):
-        # mirror /root/reference/pyogrio/_io.pyx:1658-1670
-        raise ValueError("'fids' may not be combined with other filters or ranges")
-
+    _check_filters(where, bbox, mask, fids, skip_features, max_features)
     df = _load(spark, source)
 
     sql_order = None
@@ -148,6 +142,109 @@ def read_table(
     return df
 
 
+def _check_filters(where, bbox, mask, fids, skip_features, max_features) -> None:
+    if bbox is not None and mask is not None:
+        # mirror the reference's pyogrio/_io.pyx:1682-1683
+        raise ValueError("cannot set both 'bbox' and 'mask'")
+    if fids is not None and (where or bbox is not None or mask is not None or skip_features or max_features):
+        # mirror the reference's pyogrio/_io.pyx:1658-1670
+        raise ValueError("'fids' may not be combined with other filters or ranges")
+
+
+def scan_chunks(spark: SparkSession, path: str, chunks: list, decode, schema: str,
+                unit: str = "bytes", **read_table_kwargs) -> DataFrame:
+    """Distributed file scan shared by the byte-range readers: one Spark
+    task per entry of ``chunks`` and no shuffle. The chunk table travels
+    in the task closure and ``spark.range(n, numPartitions=n)`` hands
+    each task its index, so the plan is ``Range -> MapInPandas``.
+
+    ``chunks`` are tuples whose first three fields are the chunk's range
+    ``lo``, ``hi`` (in ``unit``) and its first fid (or None); the whole
+    tuple goes to ``decode(chunk) -> pandas frame`` in ``schema`` order;
+    no chunks give the empty frame. A decode error is re-raised as ``FeatureError`` naming the path and
+    the chunk's range and first fid.
+
+    Without ``sql=``, the exact ``bbox``/``mask`` refine runs in the same
+    Python pass with ``read_table``'s kernels, and ``read_table`` applies
+    the remaining filters. With ``sql=``, ``read_table`` applies
+    everything, bbox after the statement's result as the reference does."""
+    from pyogrio_spark.errors import FeatureError
+
+    keep = None
+    if read_table_kwargs.get("sql") is None:
+        kw = read_table_kwargs
+        _check_filters(kw.get("where"), kw.get("bbox"), kw.get("mask"), kw.get("fids"),
+                       kw.get("skip_features"), kw.get("max_features"))
+        keep = _refine_fn(kw.pop("bbox", None), kw.pop("mask", None))
+
+    def scan(batches):
+        for batch in batches:
+            for i in batch["id"].tolist():
+                chunk = chunks[i]
+                try:
+                    pdf = decode(chunk)
+                except Exception as exc:  # re-raised with the chunk's location
+                    fid = "" if chunk[2] is None else f" (first fid {chunk[2]})"
+                    raise FeatureError(
+                        f"{path}: cannot decode {unit} [{chunk[0]}, {chunk[1]}){fid}: "
+                        f"{type(exc).__name__}: {exc}"
+                    ) from exc
+                if keep is not None and len(pdf):
+                    pdf = pdf[keep(pdf[GEOMETRY_COL].to_numpy())]
+                yield pdf
+
+    n = len(chunks)
+    df = spark.range(n, numPartitions=max(n, 1)).mapInPandas(scan, schema=schema)
+    return read_table(spark, df, **read_table_kwargs)
+
+
+def storage_prune_box(read_table_kwargs: dict):
+    """Envelope a file scan may prune storage by (a spatial index) before
+    decoding: the bbox, or a mask's envelope — a superset, the exact
+    refine still runs on what is read. None with ``sql=``: the bbox then
+    applies to the statement's result, not to the source rows."""
+    if read_table_kwargs.get("sql") is not None:
+        return None
+    if read_table_kwargs.get("mask") is not None:
+        return W.bounds(bytes(read_table_kwargs["mask"]))
+    return read_table_kwargs.get("bbox")
+
+
+def _refine_fn(bbox, mask):
+    """geometry values -> keep flags for the exact bbox or mask refine
+    (None when neither is set); validates a mask on the driver."""
+    if bbox is not None:
+        box = tuple(float(v) for v in bbox)
+        return lambda vals: _box_keep(box, vals)
+    if mask is not None:
+        PreparedPolygon(mask)  # validates polygonal mask early
+        return lambda vals: _mask_keep(PreparedPolygon(mask), vals)
+    return None
+
+
+def _box_keep(box, vals) -> np.ndarray:
+    xmin, ymin, xmax, ymax = box
+    # point fast path: skip the parse loop for uniform 2-D point batches
+    if all(isinstance(b, (bytes, bytearray)) and len(b) == 21 for b in vals):
+        lon, lat = W.decode_points(vals, on_invalid="ignore")
+        return (lon >= xmin) & (lon <= xmax) & (lat >= ymin) & (lat <= ymax)
+    # generic path: vectorized CLOSED-interval box intersects — point
+    # rows get the identical closed test as the fast path (result no
+    # longer depends on the batch's composition), non-points are
+    # boundary-inclusive like GEOS intersects
+    return batch_intersects_box(xmin, ymin, xmax, ymax, vals)
+
+
+def _mask_keep(prep: PreparedPolygon, vals) -> np.ndarray:
+    if all(isinstance(b, (bytes, bytearray)) and len(b) == 21 for b in vals):
+        lon, lat = W.decode_points(vals, on_invalid="ignore")
+        return prep.contains_points(lon, lat)
+    # batch kernel: point rows go through the same contains_points
+    # ray-cast as the uniform fast path; lines/polygons are refined
+    # with whole-batch numpy ops, no per-row Python
+    return batch_intersects(prep, vals)
+
+
 def _normalize_2d_udf(on_invalid: str):
     """Geometry-column normalizer for force_2d: 2-D points (21-byte WKB)
     pass through untouched; everything else re-encodes without Z, with
@@ -189,16 +286,7 @@ def _apply_bbox(df: DataFrame, bbox) -> DataFrame:
 
     @pandas_udf("boolean")
     def _refine(wkb: pd.Series) -> pd.Series:
-        vals = wkb.to_numpy()
-        # point fast path: skip the parse loop for uniform 2-D point batches
-        if all(isinstance(b, (bytes, bytearray)) and len(b) == 21 for b in vals):
-            lon, lat = W.decode_points(vals, on_invalid="ignore")
-            return pd.Series((lon >= xmin) & (lon <= xmax) & (lat >= ymin) & (lat <= ymax))
-        # generic path: vectorized CLOSED-interval box intersects — point
-        # rows get the identical closed test as the fast path (result no
-        # longer depends on the Arrow batch's composition), non-points
-        # are boundary-inclusive like GEOS intersects
-        return pd.Series(batch_intersects_box(xmin, ymin, xmax, ymax, vals))
+        return pd.Series(_box_keep((xmin, ymin, xmax, ymax), wkb.to_numpy()))
 
     return df.filter(_refine(F.col(GEOMETRY_COL)))
 
@@ -214,15 +302,7 @@ def _apply_mask(df: DataFrame, mask_wkb: bytes, res: int) -> DataFrame:
 
     @pandas_udf("boolean")
     def _refine(wkb: pd.Series) -> pd.Series:
-        prep = PreparedPolygon(mask_wkb)
-        vals = wkb.to_numpy()
-        if all(isinstance(b, (bytes, bytearray)) and len(b) == 21 for b in vals):
-            lon, lat = W.decode_points(vals, on_invalid="ignore")
-            return pd.Series(prep.contains_points(lon, lat))
-        # batch kernel: point rows go through the same contains_points
-        # ray-cast as the uniform fast path; lines/polygons are refined
-        # with whole-batch numpy ops, no per-row Python
-        return pd.Series(batch_intersects(prep, vals))
+        return pd.Series(_mask_keep(PreparedPolygon(mask_wkb), wkb.to_numpy()))
 
     if GEOMETRY_COL in df.columns:
         df = df.filter(_refine(F.col(GEOMETRY_COL)))

@@ -371,6 +371,81 @@ def _poly_body(stype: int, parts: list[np.ndarray]) -> bytes:
     return body
 
 
+def _shp_header(total_words: int, layer_type: int, bbox) -> bytes:
+    return (
+        struct.pack(">i", 9994) + b"\x00" * 20 + struct.pack(">i", total_words)
+        + struct.pack("<ii", 1000, layer_type)
+        + struct.pack("<4d", *bbox) + struct.pack("<4d", 0, 0, 0, 0)
+    )
+
+
+def _dbf_head(nrec: int, fdefs) -> bytes:
+    """dBase III header, field descriptors and terminator for ``fdefs``
+    [(name, type_char, length, decimals), ...]."""
+    rsize = 1 + sum(fl for _, _, fl, _ in fdefs)
+    hsize = 32 + 32 * len(fdefs) + 1
+    out = struct.pack("<4B", 0x03, 26, 8, 16) + struct.pack("<I", nrec) + struct.pack("<HH", hsize, rsize) + b"\x00" * 20
+    for name, ftype, flen, fdec in fdefs:
+        out += name.encode("ascii")[:11].ljust(11, b"\x00") + ftype.encode() + b"\x00" * 4 + bytes([flen, fdec]) + b"\x00" * 14
+    return out + b"\x0d"
+
+
+def _isnull(v) -> bool:
+    return v is None or v is pd.NA or v is pd.NaT or (isinstance(v, float) and v != v)
+
+
+def _c_width(values) -> int:
+    """DBF C field width: the longest non-null value in UTF-8 bytes,
+    clamped to 1..254 (an all-null column gets width 1)."""
+    return max(1, min(254, max((len(str(v).encode("utf-8")) for v in values if not _isnull(v)), default=0)))
+
+
+def _dbf_cell(v, ftype: str, flen: int, fdec: int) -> bytes:
+    if _isnull(v):
+        return b"?" if ftype == "L" else b" " * flen
+    if ftype == "C":
+        return str(v).encode("utf-8")[:flen].ljust(flen, b" ")
+    if ftype == "L":
+        return b"T" if v else b"F"
+    if fdec:
+        return f"{float(v):>{flen}.{fdec}f}".encode("ascii")[:flen]
+    return f"{int(v):>{flen}d}".encode("ascii")[:flen]
+
+
+def _dbf_records(pdf: pd.DataFrame, fdefs) -> bytes:
+    """The frame's rows as fixed-width DBF records (blank deletion flag)."""
+    if not fdefs:
+        return b" " * len(pdf)
+    cols = [[_dbf_cell(v, ft, fl, fd) for v in pdf[name].tolist()] for name, ft, fl, fd in fdefs]
+    return b"".join(b" " + b"".join(cells) for cells in zip(*cols))
+
+
+def _dbf_relayout(src, dst, n: int, part_widths, widths) -> None:
+    """Copy ``n`` DBF records whose fields have ``part_widths`` into the
+    wider layout ``widths``, space-padding each field on the right, about
+    1 MiB of rows at a time."""
+    pw, w = [1, *part_widths], [1, *widths]  # deletion flag first
+    src_at, dst_at = np.cumsum([0, *pw[:-1]]), np.cumsum([0, *w[:-1]])
+    prsize, rsize = sum(pw), sum(w)
+    rows = max(1, (1 << 20) // rsize)
+    for lo in range(0, n, rows):
+        k = min(rows, n - lo)
+        part = np.frombuffer(src.read(k * prsize), dtype=np.uint8).reshape(k, prsize)
+        out = np.full((k, rsize), ord(" "), dtype=np.uint8)
+        for a, b, width in zip(src_at, dst_at, pw):
+            out[:, b : b + width] = part[:, a : a + width]
+        dst.write(out.tobytes())
+
+
+def _write_sidecars(base: str, crs) -> None:
+    from pyogrio_spark.crs import crs_to_wkt
+
+    with open(base + ".cpg", "w") as f:
+        f.write("UTF-8")
+    with open(base + ".prj", "w") as f:
+        f.write(crs_to_wkt(crs))
+
+
 def write_shapefile(
     pdf: pd.DataFrame, path: str, geom_col: str = "geometry_wkb", crs=None,
     append: bool = False,
@@ -423,6 +498,7 @@ def write_shapefile(
     if not np.isfinite(gx0):
         gx0 = gy0 = gx1 = gy1 = 0.0
     layer_type = shp_types.pop() if len(shp_types) == 1 else 5
+    bbox = (gx0, gy0, gx1, gy1)
 
     shp_chunks, shx_chunks, pos = [], [], 50  # in 16-bit words
     for i, (st, body) in enumerate(records):
@@ -431,17 +507,10 @@ def write_shapefile(
         shp_chunks.append(struct.pack(">ii", i + 1, clen) + body)
         pos += 4 + clen
 
-    def shp_header(total_words: int) -> bytes:
-        return (
-            struct.pack(">i", 9994) + b"\x00" * 20 + struct.pack(">i", total_words)
-            + struct.pack("<ii", 1000, layer_type)
-            + struct.pack("<4d", gx0, gy0, gx1, gy1) + struct.pack("<4d", 0, 0, 0, 0)
-        )
-
     with open(base + ".shp", "wb") as f:
-        f.write(shp_header(pos) + b"".join(shp_chunks))
+        f.write(_shp_header(pos, layer_type, bbox) + b"".join(shp_chunks))
     with open(base + ".shx", "wb") as f:
-        f.write(shp_header(50 + 4 * len(records)) + b"".join(shx_chunks))
+        f.write(_shp_header(50 + 4 * len(records), layer_type, bbox) + b"".join(shx_chunks))
 
     # .dbf: dBase III — C for strings, N for numerics
     attrs = [c for c in pdf.columns if c not in (geom_col, "fid")]
@@ -455,76 +524,40 @@ def write_shapefile(
         elif pdf[c].dtype == bool or dname == "boolean":
             fdefs.append((c, "L", 1, 0))
         else:
-            width = max(1, min(254, int(pdf[c].astype(str).str.encode("utf-8").str.len().max() or 1)))
-            fdefs.append((c, "C", width, 0))
-    rsize = 1 + sum(fl for _, _, fl, _ in fdefs)
-    hsize = 32 + 32 * len(fdefs) + 1
-    hdr = struct.pack("<4B", 0x03, 26, 8, 16) + struct.pack("<I", len(pdf)) + struct.pack("<HH", hsize, rsize) + b"\x00" * 20
-    fd = b""
-    for name, ftype, flen, fdec in fdefs:
-        fd += name.encode("ascii")[:11].ljust(11, b"\x00") + ftype.encode() + b"\x00" * 4 + bytes([flen, fdec]) + b"\x00" * 14
-    body = bytearray()
-    for _, row in pdf.iterrows():
-        body += b" "
-        for name, ftype, flen, fdec in fdefs:
-            v = row[name]
-            if ftype == "C":
-                body += str(v if v is not None else "").encode("utf-8")[:flen].ljust(flen, b" ")
-            elif ftype == "L":
-                body += (
-                    b"?" if v is None or (np.isscalar(v) and pd.isna(v))
-                    else (b"T" if v else b"F")
-                )
-            else:
-                if v is None or (isinstance(v, float) and np.isnan(v)) or (np.isscalar(v) and pd.isna(v)):
-                    body += b" " * flen
-                elif fdec:
-                    body += f"{float(v):>{flen}.{fdec}f}".encode("ascii")[:flen]
-                else:
-                    body += f"{int(v):>{flen}d}".encode("ascii")[:flen]
+            fdefs.append((c, "C", _c_width(pdf[c].tolist()), 0))
     with open(base + ".dbf", "wb") as f:
-        f.write(hdr + fd + b"\x0d" + bytes(body) + b"\x1a")
-    with open(base + ".cpg", "w") as f:
-        f.write("UTF-8")
-    from pyogrio_spark.crs import crs_to_wkt
-
-    with open(base + ".prj", "w") as f:
-        f.write(crs_to_wkt(crs))
+        f.write(_dbf_head(len(pdf), fdefs) + _dbf_records(pdf, fdefs) + b"\x1a")
+    _write_sidecars(base, crs)
 
 
 def write_shapefile_distributed(df, path: str, geom_col: str = "geometry_wkb", crs=None) -> None:
-    """Distributed shapefile sink: the CPU-heavy share — WKB parse and
-    .shp/.dbf record encoding — runs once per partition in mapInPandas
-    into part files; the driver then writes the three headers and
-    STREAMS the parts together, patching each .shp record's sequence
-    number and accumulating the .shx index in the same single pass
-    (record numbers are the one global field in the format, so a pure
-    concat can't work — but patching is 4 bytes per record during the
-    copy, IO-bound like the FlatGeobuf sink's concat). Field layout
-    (DBF widths) is fixed up front from the Spark schema plus one cheap
-    codegen max-length aggregate over string columns.
+    """Distributed shapefile sink in ONE Spark job: each task parses WKB
+    and encodes its partition's .shp records and .dbf rows into part
+    files, with C (string) fields padded to that part's own widths; it
+    reports the widths with its counts and bounds. The driver then
+    writes the three headers and STREAMS the parts together, patching
+    each .shp record's sequence number and accumulating the .shx index
+    in the same single pass (record numbers are the one global field in
+    the format, so a pure concat can't work — but patching is 4 bytes
+    per record during the copy, IO-bound like the FlatGeobuf sink's
+    concat). Each DBF field's width is the maximum over the parts: a
+    part already at those widths is copied as is, a narrower one is
+    re-laid-out with numpy a block of rows at a time. No separate job
+    sizes the fields, so the input plan runs once. A task holds its
+    partition's attribute columns (not its geometries) until the
+    partition ends, to know its widths.
 
     Same conventions as ``write_shapefile`` (N 18/0 ints, N 24/8
-    floats, L logicals, C strings at max observed width, UTF-8 .cpg,
-    ``crs`` to .prj); single-partition output is byte-identical to it."""
+    floats, L logicals, C strings at the longest non-null value's
+    width, UTF-8 .cpg, ``crs`` to .prj); single-partition output is
+    byte-identical to it."""
     import shutil
     import uuid
-
-    from pyspark.sql import functions as F
 
     base = os.path.splitext(path)[0]
     attrs = [c for c in df.columns if c not in (geom_col, "fid")]
     types = dict(df.dtypes)
-    width_cols = [c for c in attrs if types[c] not in
-                  ("bigint", "int", "smallint", "tinyint", "double", "float", "boolean")]
-    if width_cols:
-        wrow = df.agg(
-            *[F.max(F.octet_length(F.col(c).cast("string"))).alias(c) for c in width_cols]
-        ).first()
-        widths = {c: max(1, min(254, int(wrow[c] or 1))) for c in width_cols}
-    else:
-        widths = {}
-    fdefs = []
+    fdefs = []  # C widths are sized per part by the tasks; 1 is the floor
     for c in attrs:
         t = types[c]
         if t in ("bigint", "int", "smallint", "tinyint"):
@@ -534,36 +567,30 @@ def write_shapefile_distributed(df, path: str, geom_col: str = "geometry_wkb", c
         elif t == "boolean":
             fdefs.append((c, "L", 1, 0))
         else:
-            fdefs.append((c, "C", widths[c], 0))
-    rsize = 1 + sum(fl for _, _, fl, _ in fdefs)
+            fdefs.append((c, "C", 1, 0))
 
     parts_dir = f"{path}.parts-{uuid.uuid4().hex[:8]}"
     os.makedirs(parts_dir, exist_ok=True)
     meta_schema = (
         "pid int, n long, minx double, miny double, maxx double, maxy double, "
-        "stypes string"
+        "stypes string, widths array<int>"
     )
 
     def encode(pdfs):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        n = 0
         gx0 = gy0 = np.inf
         gx1 = gy1 = -np.inf
         stypes: set[int] = set()
-        with open(os.path.join(parts_dir, f"part-{pid:05d}.shp"), "wb") as fs, open(
-            os.path.join(parts_dir, f"part-{pid:05d}.dbf"), "wb"
-        ) as fd:
+        attr_parts = []
+        with open(os.path.join(parts_dir, f"part-{pid:05d}.shp"), "wb") as fs:
             for pdf in pdfs:
-                for row in pdf.itertuples(index=False):
-                    d = row._asdict()
-                    b = d.get(geom_col)
+                for b in pdf[geom_col].tolist():
                     if b is None:
                         st, body = 0, struct.pack("<i", 0)
                     else:
-                        g = W.parse_wkb(bytes(b))
-                        st, body = _geom_to_shp_record(g)
+                        st, body = _geom_to_shp_record(W.parse_wkb(bytes(b)))
                         stypes.add(st)
                         x0, y0, x1, y1 = W.bounds(bytes(b))
                         gx0, gy0 = min(gx0, x0), min(gy0, y0)
@@ -571,27 +598,18 @@ def write_shapefile_distributed(df, path: str, geom_col: str = "geometry_wkb", c
                     # record number 0 placeholder: the driver patches the
                     # global sequence during the concat pass
                     fs.write(struct.pack(">ii", 0, len(body) // 2) + body)
-                    rec = bytearray(b" ")
-                    for name, ftype, flen, fdec in fdefs:
-                        v = d.get(name)
-                        if ftype == "C":
-                            rec += str(v if v is not None else "").encode("utf-8")[:flen].ljust(flen, b" ")
-                        elif ftype == "L":
-                            rec += (b"?" if v is None or (np.isscalar(v) and pd.isna(v))
-                                    else (b"T" if v else b"F"))
-                        elif v is None or (np.isscalar(v) and pd.isna(v)) or (
-                            isinstance(v, float) and np.isnan(v)
-                        ):
-                            rec += b" " * flen
-                        elif fdec:
-                            rec += f"{float(v):>{flen}.{fdec}f}".encode("ascii")[:flen]
-                        else:
-                            rec += f"{int(v):>{flen}d}".encode("ascii")[:flen]
-                    fd.write(bytes(rec))
-                    n += 1
+                attr_parts.append(pdf[attrs])
+        part = pd.concat(attr_parts, ignore_index=True) if attr_parts else pd.DataFrame(columns=attrs)
+        part_defs = [
+            (name, ft, _c_width(part[name].tolist()) if ft == "C" else fl, fd)
+            for name, ft, fl, fd in fdefs
+        ]
+        with open(os.path.join(parts_dir, f"part-{pid:05d}.dbf"), "wb") as fd:
+            fd.write(_dbf_records(part, part_defs))
         yield pd.DataFrame(
-            [(pid, n, gx0, gy0, gx1, gy1, ",".join(str(s) for s in sorted(stypes)))],
-            columns=["pid", "n", "minx", "miny", "maxx", "maxy", "stypes"],
+            [(pid, len(part), gx0, gy0, gx1, gy1, ",".join(str(s) for s in sorted(stypes)),
+              [fl for _, _, fl, _ in part_defs])],
+            columns=["pid", "n", "minx", "miny", "maxx", "maxy", "stypes", "widths"],
         )
 
     meta = sorted(df.mapInPandas(encode, schema=meta_schema).collect(), key=lambda r: r["pid"])
@@ -603,25 +621,18 @@ def write_shapefile_distributed(df, path: str, geom_col: str = "geometry_wkb", c
         gy1 = max((r["maxy"] for r in meta if r["n"]), default=-np.inf)
         if not np.isfinite(gx0):
             gx0 = gy0 = gx1 = gy1 = 0.0
+        bbox = (gx0, gy0, gx1, gy1)
         stypes: set[int] = set()
         for r in meta:
             stypes.update(int(s) for s in r["stypes"].split(",") if s)
         layer_type = stypes.pop() if len(stypes) == 1 else 5
 
         shp_bytes = sum(os.path.getsize(os.path.join(parts_dir, f"part-{r['pid']:05d}.shp")) for r in meta)
-
-        def shp_header(total_words: int) -> bytes:
-            return (
-                struct.pack(">i", 9994) + b"\x00" * 20 + struct.pack(">i", total_words)
-                + struct.pack("<ii", 1000, layer_type)
-                + struct.pack("<4d", gx0, gy0, gx1, gy1) + struct.pack("<4d", 0, 0, 0, 0)
-            )
-
         shx_entries = bytearray()
         recno = 0
         pos_words = 50
         with open(base + ".shp", "wb") as out:
-            out.write(shp_header(50 + shp_bytes // 2))
+            out.write(_shp_header(50 + shp_bytes // 2, layer_type, bbox))
             for r in meta:
                 part = os.path.join(parts_dir, f"part-{r['pid']:05d}.shp")
                 with open(part, "rb") as f:
@@ -636,28 +647,20 @@ def write_shapefile_distributed(df, path: str, geom_col: str = "geometry_wkb", c
                         shx_entries += struct.pack(">ii", pos_words, clen)
                         pos_words += 4 + clen
         with open(base + ".shx", "wb") as out:
-            out.write(shp_header(50 + 4 * total) + bytes(shx_entries))
+            out.write(_shp_header(50 + 4 * total, layer_type, bbox) + bytes(shx_entries))
 
-        hsize = 32 + 32 * len(fdefs) + 1
-        hdr = (
-            struct.pack("<4B", 0x03, 26, 8, 16) + struct.pack("<I", total)
-            + struct.pack("<HH", hsize, rsize) + b"\x00" * 20
-        )
-        fd_bytes = b""
-        for name, ftype, flen, fdec in fdefs:
-            fd_bytes += name.encode("ascii")[:11].ljust(11, b"\x00") + ftype.encode() + b"\x00" * 4 + bytes([flen, fdec]) + b"\x00" * 14
+        widths = [max([fl, *(r["widths"][i] for r in meta)]) for i, (_, _, fl, _) in enumerate(fdefs)]
+        fdefs = [(name, ft, w, fd) for (name, ft, _, fd), w in zip(fdefs, widths)]
         with open(base + ".dbf", "wb") as out:
-            out.write(hdr + fd_bytes + b"\x0d")
+            out.write(_dbf_head(total, fdefs))
             for r in meta:
                 with open(os.path.join(parts_dir, f"part-{r['pid']:05d}.dbf"), "rb") as f:
-                    shutil.copyfileobj(f, out, 1 << 20)
+                    if list(r["widths"]) == widths:
+                        shutil.copyfileobj(f, out, 1 << 20)
+                    else:
+                        _dbf_relayout(f, out, r["n"], r["widths"], widths)
             out.write(b"\x1a")
-        with open(base + ".cpg", "w") as f:
-            f.write("UTF-8")
-        from pyogrio_spark.crs import crs_to_wkt
-
-        with open(base + ".prj", "w") as f:
-            f.write(crs_to_wkt(crs))
+        _write_sidecars(base, crs)
     finally:
         shutil.rmtree(parts_dir, ignore_errors=True)
 
@@ -680,17 +683,16 @@ def read_shapefile_distributed(
     """Distributed shapefile scan: the tiny ``.shx`` record index is
     read on the driver, records are split into contiguous chunks, and
     each executor byte-range-reads ONLY its chunk of ``.shp`` and
-    ``.dbf`` inside mapInPandas — no driver-side parse, no full-file
-    read per task. This is the multi-GB plan the single-node
-    ``read_shapefile`` (fixture-scale interchange) deliberately skips;
-    the path must be executor-visible (shared/posix fs or download).
+    ``.dbf`` — one task per chunk, no shuffle, no driver-side parse, no
+    full-file read per task (``reader.scan_chunks``). This is the
+    multi-GB plan the single-node ``read_shapefile`` (fixture-scale
+    interchange) deliberately skips; the path must be executor-visible
+    (shared/posix fs or download).
 
     Semantics match ``read_shapefile_pdf``: same WKB, same attribute
     typing (int-typed DBF numeric columns come back BIGINT and stay
     null-safe per chunk via pandas nullable Int64)."""
-    from pyspark.sql import functions as F  # noqa: F811 (local, matches module import)
-
-    from pyogrio_spark.io.reader import read_table
+    from pyogrio_spark.io.reader import scan_chunks
 
     base = os.path.splitext(path)[0]
     shp_path, dbf_path = base + ".shp", base + ".dbf"
@@ -703,21 +705,10 @@ def read_shapefile_distributed(
         _, hsize, rsize, fields = _dbf_header(f.read(hsize))
     encoding = _read_cpg(base)
 
-    chunks = []
-    for ci, lo in enumerate(range(0, n, int(chunk_records))):
+    chunks = []  # (shp byte_lo, shp byte_hi, rec_lo, rec_hi)
+    for lo in range(0, n, int(chunk_records)):
         hi = min(lo + int(chunk_records), n)
-        chunks.append(
-            (
-                ci,
-                int(offsets[lo]),
-                int(offsets[hi - 1] + lengths[hi - 1]),
-                lo,
-                hi,
-            )
-        )
-    chunk_df = spark.createDataFrame(
-        chunks, schema="chunk_id int, shp_start long, shp_end long, rec_lo long, rec_hi long"
-    ).repartition(len(chunks), F.col("chunk_id"))
+        chunks.append((int(offsets[lo]), int(offsets[hi - 1] + lengths[hi - 1]), lo, hi))
 
     spark_cols = ["`fid` bigint"]
     for name, ftype, flen, fdec in fields:
@@ -732,62 +723,58 @@ def read_shapefile_distributed(
     spark_cols.append("`geometry_wkb` binary")
     schema = ", ".join(spark_cols)
 
-    def parse_chunks(pdfs):
-        for cpdf in pdfs:
-            for row in cpdf.itertuples(index=False):
-                with open(shp_path, "rb") as f:
-                    f.seek(row.shp_start)
-                    blob = f.read(row.shp_end - row.shp_start)
-                with open(dbf_path, "rb") as f:
-                    f.seek(hsize + row.rec_lo * rsize)
-                    dblob = f.read((row.rec_hi - row.rec_lo) * rsize)
-                geoms = []
-                pos = 0
-                while pos + 8 <= len(blob) and len(geoms) < row.rec_hi - row.rec_lo:
-                    _, clen = struct.unpack_from(">ii", blob, pos)
-                    body = blob[pos + 8 : pos + 8 + 2 * clen]
-                    (stype,) = struct.unpack_from("<i", body, 0)
-                    wkb, _t = _shape_to_wkb(stype, body)
-                    geoms.append(wkb)
-                    pos += 8 + 2 * clen
-                cols: dict[str, list] = {name: [] for name, *_ in fields}
-                for i in range(row.rec_hi - row.rec_lo):
-                    rec = dblob[i * rsize : (i + 1) * rsize]
-                    off = 1
-                    for name, ftype, flen, fdec in fields:
-                        raw = rec[off : off + flen]
-                        off += flen
-                        txt = raw.decode(encoding, errors="replace").strip()
-                        if ftype in ("N", "F"):
-                            if txt in ("", "*" * flen):
-                                cols[name].append(None)
-                            elif ftype == "F" or fdec > 0:
-                                cols[name].append(float(txt))
-                            else:
-                                cols[name].append(int(float(txt)) if "." in txt or "e" in txt.lower() else int(txt))
-                        elif ftype == "L":
-                            cols[name].append(None if txt in ("", "?") else txt.upper() in ("T", "Y"))
-                        elif ftype == "D":
-                            cols[name].append(f"{txt[0:4]}-{txt[4:6]}-{txt[6:8]}" if len(txt) == 8 else None)
-                        else:
-                            cols[name].append(txt)
-                out = pd.DataFrame(
-                    {"fid": np.arange(row.rec_lo, row.rec_hi, dtype=np.int64)}
-                )
-                for name, ftype, flen, fdec in fields:
-                    if ftype == "N" and fdec == 0:
-                        out[name] = pd.array(cols[name], dtype="Int64")
-                    elif ftype in ("N", "F"):
-                        out[name] = pd.array(
-                            [np.nan if v is None else v for v in cols[name]], dtype="float64"
-                        )
+    def decode(chunk):
+        shp_start, shp_end, rec_lo, rec_hi = chunk
+        with open(shp_path, "rb") as f:
+            f.seek(shp_start)
+            blob = f.read(shp_end - shp_start)
+        with open(dbf_path, "rb") as f:
+            f.seek(hsize + rec_lo * rsize)
+            dblob = f.read((rec_hi - rec_lo) * rsize)
+        geoms = []
+        pos = 0
+        while pos + 8 <= len(blob) and len(geoms) < rec_hi - rec_lo:
+            _, clen = struct.unpack_from(">ii", blob, pos)
+            body = blob[pos + 8 : pos + 8 + 2 * clen]
+            (stype,) = struct.unpack_from("<i", body, 0)
+            wkb, _t = _shape_to_wkb(stype, body)
+            geoms.append(wkb)
+            pos += 8 + 2 * clen
+        cols: dict[str, list] = {name: [] for name, *_ in fields}
+        for i in range(rec_hi - rec_lo):
+            rec = dblob[i * rsize : (i + 1) * rsize]
+            off = 1
+            for name, ftype, flen, fdec in fields:
+                raw = rec[off : off + flen]
+                off += flen
+                txt = raw.decode(encoding, errors="replace").strip()
+                if ftype in ("N", "F"):
+                    if txt in ("", "*" * flen):
+                        cols[name].append(None)
+                    elif ftype == "F" or fdec > 0:
+                        cols[name].append(float(txt))
                     else:
-                        out[name] = cols[name]
-                out["geometry_wkb"] = geoms
-                yield out
+                        cols[name].append(int(float(txt)) if "." in txt or "e" in txt.lower() else int(txt))
+                elif ftype == "L":
+                    cols[name].append(None if txt in ("", "?") else txt.upper() in ("T", "Y"))
+                elif ftype == "D":
+                    cols[name].append(f"{txt[0:4]}-{txt[4:6]}-{txt[6:8]}" if len(txt) == 8 else None)
+                else:
+                    cols[name].append(txt)
+        out = pd.DataFrame({"fid": np.arange(rec_lo, rec_hi, dtype=np.int64)})
+        for name, ftype, flen, fdec in fields:
+            if ftype == "N" and fdec == 0:
+                out[name] = pd.array(cols[name], dtype="Int64")
+            elif ftype in ("N", "F"):
+                out[name] = pd.array(
+                    [np.nan if v is None else v for v in cols[name]], dtype="float64"
+                )
+            else:
+                out[name] = cols[name]
+        out["geometry_wkb"] = geoms
+        return out
 
-    df = chunk_df.mapInPandas(parse_chunks, schema=schema)
-    return read_table(spark, df, **read_table_kwargs)
+    return scan_chunks(spark, path, chunks, decode, schema, **read_table_kwargs)
 
 
 def read_shapefile(spark, path: str, **read_table_kwargs):

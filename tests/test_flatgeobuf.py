@@ -440,3 +440,30 @@ def test_distributed_indexed_write_hilbert_and_pushdown(spark, tmp_path):
         bad.loc[0, "geometry_wkb"] = None
         bdf = spark.createDataFrame(bad, schema="v bigint, geometry_wkb binary")
         write_flatgeobuf_distributed(bdf, str(tmp_path / "bad.fgb"), index_node_size=16)
+
+
+def test_distributed_decode_error_names_path_and_byte_range(spark, tmp_path):
+    """A corrupt feature frame fails its chunk's decode with an error that
+    names the file, the chunk's byte range and its first fid."""
+    from pyogrio_spark.io.flatgeobuf import _fgb_layout, read_flatgeobuf_distributed
+
+    n = 300
+    pdf = pd.DataFrame(
+        {
+            "v": np.arange(n, dtype=np.int64),
+            "geometry_wkb": [W.encode_point(float(i % 30), float(i // 30)) for i in range(n)],
+        }
+    )
+    path = str(tmp_path / "corrupt.fgb")
+    write_flatgeobuf(pdf, path, index_node_size=16)
+    offsets = _fgb_layout(path)[3]
+    # feature 150's flatbuffer root offset points far past its frame
+    with open(path, "r+b") as f:
+        f.seek(int(offsets[150]) + 4)
+        f.write(struct.pack("<I", 0x7FFFFFF0))
+    with pytest.raises(Exception) as err:
+        read_flatgeobuf_distributed(spark, path, chunk_features=100).collect()
+    msg = str(err.value)
+    assert path in msg
+    assert f"bytes [{int(offsets[100])}, {int(offsets[200])})" in msg
+    assert "first fid 100" in msg

@@ -303,3 +303,84 @@ def test_tfidf_and_packing_plans_stay_jvm_side(spark):
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Python" not in plan and "BatchEvalPython" not in plan
+
+
+@pytest.fixture(scope="module")
+def parcel_files(tmp_path_factory):
+    """The same 300 points as an indexed FlatGeobuf, a shapefile and a
+    GeoPackage."""
+    import numpy as np
+    import pandas as pd
+
+    from pyogrio_spark.geometry import wkb as W
+    from pyogrio_spark.io.flatgeobuf import write_flatgeobuf
+    from pyogrio_spark.io.geopackage import write_geopackage
+    from pyogrio_spark.io.shapefile import write_shapefile
+
+    n = 300
+    pdf = pd.DataFrame(
+        {
+            "name": [f"p{i}" for i in range(n)],
+            "v": np.arange(n, dtype=np.int64),
+            "geometry_wkb": [W.encode_point(float((i * 37) % 100), float((i * 53) % 80)) for i in range(n)],
+        }
+    )
+    d = tmp_path_factory.mktemp("scans")
+    paths = {ext: str(d / f"parcels.{ext}") for ext in ("fgb", "shp", "gpkg")}
+    write_flatgeobuf(pdf, paths["fgb"], index_node_size=16)
+    write_shapefile(pdf, paths["shp"])
+    write_geopackage(pdf, paths["gpkg"], layer="parcels")
+    return paths
+
+
+def test_byte_range_scans_have_no_exchange(spark, parcel_files):
+    """The distributed scans hand each task its chunk through
+    spark.range, not a repartitioned chunk table: no shuffle."""
+    from pyogrio_spark.io.dispatch import open_table
+
+    for path in parcel_files.values():
+        plan = plan_of(open_table(spark, path, distributed=True, where="v > 3"))
+        assert "MapInPandas" in plan and "Exchange" not in plan, path
+
+
+def test_fgb_scan_refines_bbox_inside_the_scan(spark, parcel_files):
+    """Without sql=, the exact bbox refine runs in the scan's Python pass:
+    no separate ArrowEvalPython stage."""
+    from pyogrio_spark.io.dispatch import open_table
+
+    df = open_table(spark, parcel_files["fgb"], distributed=True, bbox=(10.0, 10.0, 30.0, 25.0))
+    plan = plan_of(df)
+    assert "ArrowEvalPython" not in plan and plan.count("MapInPandas") == 1
+
+
+def test_convert_fgb_to_shp_runs_one_spark_job(spark, parcel_files, tmp_path):
+    """Scan, refine, filter, project and encode run as one job: no width
+    aggregate and no re-executed scan."""
+    from pyogrio_spark.io.dispatch import convert_dataset
+
+    sc = spark.sparkContext
+    group = "convert-fgb-shp"
+    sc.setJobGroup(group, group)
+    try:
+        info = convert_dataset(
+            spark, parcel_files["fgb"], str(tmp_path / "out.shp"),
+            bbox=(10.0, 10.0, 30.0, 25.0), where="v % 2 = 0", columns=["name", "v"],
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert info["features"] > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_distributed_sql_then_bbox_matches_driver_reader(spark, parcel_files):
+    """With sql=, bbox applies to the statement's result (reference
+    order): a LIMIT before the bbox keeps a different set of rows than a
+    bbox before the LIMIT would, and both readers agree."""
+    from pyogrio_spark.io.dispatch import open_table
+
+    kw = {"sql": "SELECT * FROM parcels ORDER BY v LIMIT 40", "bbox": (10.0, 10.0, 60.0, 50.0)}
+    for path in parcel_files.values():
+        dist = open_table(spark, path, distributed=True, **kw).toPandas()
+        local = open_table(spark, path, **kw).toPandas()
+        assert sorted(dist.v) == sorted(local.v), path
+        assert 0 < len(dist) < 40

@@ -220,6 +220,87 @@ def test_distributed_sink_roundtrip_and_parity(spark, tmp_path):
         assert a == b, ext
 
 
+def test_null_strings_size_c_fields_like_the_distributed_sink(spark, tmp_path):
+    """C field widths come from non-null values only (an all-null column
+    gets width 1) in both writers, so the driver writer and a
+    one-partition distributed write stay byte-identical when string
+    columns hold nulls and multibyte UTF-8."""
+    import pandas as pd
+
+    from pyogrio_spark.io.shapefile import _dbf_header, write_shapefile, write_shapefile_distributed
+
+    pdf = pd.DataFrame(
+        {
+            "s": ["ab", None, "c"],
+            "u": ["日本", None, "x"],  # 6 UTF-8 bytes
+            "empty": [None, None, None],
+            "v": np.arange(3, dtype=np.int64),
+            "geometry_wkb": [W.encode_point(float(i), 1.0) for i in range(3)],
+        }
+    )
+    ref = str(tmp_path / "ref.shp")
+    write_shapefile(pdf, ref, crs=4326)
+    with open(str(tmp_path / "ref.dbf"), "rb") as f:
+        _, _, _, fields = _dbf_header(f.read())
+    assert [(name, flen) for name, _, flen, _ in fields] == [("s", 2), ("u", 6), ("empty", 1), ("v", 18)]
+
+    df = spark.createDataFrame(
+        pdf, schema="s string, u string, empty string, v bigint, geometry_wkb binary"
+    )
+    one = str(tmp_path / "one.shp")
+    write_shapefile_distributed(df.coalesce(1), one, crs=4326)
+    for ext in (".shp", ".shx", ".dbf", ".prj", ".cpg"):
+        a = open(str(tmp_path / f"one{ext}"), "rb").read()
+        b = open(str(tmp_path / f"ref{ext}"), "rb").read()
+        assert a == b, ext
+
+
+def test_distributed_sink_repads_narrower_parts(spark, tmp_path):
+    """Parts with different string widths (one empty partition, one
+    all-null column): the DBF declares each field at the global maximum
+    width, narrower parts are re-laid-out to it, and the content equals
+    the driver writer's."""
+    import pandas as pd
+
+    from pyogrio_spark.io.shapefile import (
+        _dbf_header,
+        read_shapefile_distributed,
+        read_shapefile_pdf,
+        write_shapefile,
+        write_shapefile_distributed,
+    )
+
+    widths = [2, 11, 0, 5]  # per partition; partition 2 ends up empty
+    rows = [
+        ("n" * (1 + (i % widths[p])) if p != 2 else "", "é" * (p + 1), None, p * 100 + i,
+         W.encode_point(float(p), float(i)))
+        for p in range(4) for i in range(25)
+    ]
+    rdd = spark.sparkContext.parallelize(rows, 4).mapPartitionsWithIndex(
+        lambda i, it: iter([]) if i == 2 else it
+    )
+    df = spark.createDataFrame(rdd, schema="name string, tag string, gone string, v bigint, geometry_wkb binary")
+    assert df.rdd.glom().map(len).collect() == [25, 25, 0, 25]
+
+    multi = str(tmp_path / "multi.shp")
+    write_shapefile_distributed(df, multi, crs=4326)
+    with open(str(tmp_path / "multi.dbf"), "rb") as f:
+        _, _, _, fields = _dbf_header(f.read())
+    assert [(name, flen) for name, _, flen, _ in fields] == [("name", 11), ("tag", 8), ("gone", 1), ("v", 18)]
+
+    pdf = pd.DataFrame([r for r in rows if r[3] // 100 != 2], columns=["name", "tag", "gone", "v", "geometry_wkb"])
+    ref = str(tmp_path / "ref.shp")
+    write_shapefile(pdf, ref, crs=4326)
+    got, _ = read_shapefile_pdf(multi)
+    want, _ = read_shapefile_pdf(ref)
+    key = ["v"]
+    got = got.drop(columns=["fid"]).sort_values(key).reset_index(drop=True)
+    want = want.drop(columns=["fid"]).sort_values(key).reset_index(drop=True)
+    assert got.drop(columns=["geometry_wkb"]).equals(want.drop(columns=["geometry_wkb"]))
+    assert [bytes(b) for b in got.geometry_wkb] == [bytes(b) for b in want.geometry_wkb]
+    assert read_shapefile_distributed(spark, multi, chunk_records=20).count() == 75
+
+
 def test_z_geometry_roundtrip(tmp_path):
     """Z shapefile record types (11/13/15/18): write Z geometries, read
     them back with Z intact (M sections written as no-data and stripped
