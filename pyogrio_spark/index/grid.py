@@ -152,13 +152,20 @@ def parent_expr_sql(cell_sql: str, res: int) -> str:
     )
 
 
+def cell_xy_expr_sql(lon_sql: str, lat_sql: str, res: int) -> tuple[str, str]:
+    """SQL fragments computing the grid column x and row y (``cell_of``'s
+    floor-and-clamp) from lon/lat expressions."""
+    n = _n(res)
+    x = f"least(greatest(cast(floor(({lon_sql} - ({LON0})) / {SPAN_LON} * {n}) as bigint), 0), {n - 1})"
+    y = f"least(greatest(cast(floor(({lat_sql} - ({LAT0})) / {SPAN_LAT} * {n}) as bigint), 0), {n - 1})"
+    return x, y
+
+
 def cell_expr_sql(lon_sql: str, lat_sql: str, res: int) -> str:
     """SQL fragment computing cell_id from lon/lat expressions.
 
     Pure arithmetic -> runs in whole-stage codegen on Spark and is
     byte-for-byte reproducible in DuckDB/ANSI oracles.
     """
-    n = _n(res)
-    x = f"least(greatest(cast(floor(({lon_sql} - ({LON0})) / {SPAN_LON} * {n}) as bigint), 0), {n - 1})"
-    y = f"least(greatest(cast(floor(({lat_sql} - ({LAT0})) / {SPAN_LAT} * {n}) as bigint), 0), {n - 1})"
-    return f"(cast({res} as bigint) * {1 << _RES_SHIFT} + {x} * {n} + {y})"
+    x, y = cell_xy_expr_sql(lon_sql, lat_sql, res)
+    return f"(cast({res} as bigint) * {1 << _RES_SHIFT} + {x} * {_n(res)} + {y})"

@@ -588,7 +588,7 @@ def q_geo_knn(spark, sf):
 
 def q_geo_knn_haversine(spark, sf):
     """kNN under the great-circle metric (production geodesy path):
-    same expansion loop, haversine distance + per-probe guarantee.
+    same planned window join, haversine distance and a km distance bound.
     Output omits the float distance — the oracle compares neighbor SETS
     and ranks, which survive last-ulp libm differences between engines
     (a flip would need two docs within ~1e-15 relative distance)."""
@@ -3218,9 +3218,9 @@ QUERIES = {
     "geo_clip": q_geo_clip,
     "chunk_pack_global": q_chunk_pack_global,
     "geo_knn_join": q_geo_knn,
-    # round 6 swapped geo_knn_join_haversine (driver-green r2-r5; the ring
-    # expansion machinery stays in-window as geo_knn_join — haversine is
-    # the same loop with a different metric, pytest-asserted) for
+    # round 6 swapped geo_knn_join_haversine (driver-green r2-r5; the
+    # planned window join stays in-window as geo_knn_join — haversine is
+    # the same plan with a different metric, pytest-asserted) for
     # bpe_train_merges.
     "bpe_train_merges": q_bpe_train_merges,
     "geo_range_join": q_geo_range_join,
@@ -3289,9 +3289,9 @@ QUERIES = {
     # via window_top_orders and events_sessionize) for the new
     # corpus-global line dedup.
     "dedup_lines_global": q_dedup_lines_global,
-    # round 7 swapped geo_within_distance (driver-green r4-r6; the ring
-    # expansion + distance kernel keeps its hard signal in-window via
-    # geo_knn_join, which shares the cell-ring machinery) to the tail
+    # round 7 swapped geo_within_distance (driver-green r4-r6; the cell
+    # window + distance kernel keeps its hard signal in-window via
+    # geo_knn_join, which shares the window helper) to the tail
     # for the new lakehouse row-op entry.
     "table_upsert": q_table_upsert,
     "geo_areal_interpolate": q_geo_areal_interpolate,

@@ -112,9 +112,9 @@ def run_once_shuffle(cpus: int, n_docs: int) -> dict:
 
 
 def run_once_knn(cpus: int, n_docs: int) -> dict:
-    """Iterative-operator counterpart: kNN join of 100k probes against
-    the full corpus (cell-window expansion rounds, density distance cut,
-    window ranking).
+    """Join-operator counterpart: kNN join of 100k probes against the
+    full corpus (per-cell count histogram planned on the driver, one
+    cell-window join with a distance cut, one window rank).
 
     Index resolution is matched to corpus density — cells should hold
     O(100) docs (res ~ log4(n_docs/100)); at res 7 a 200M-doc corpus

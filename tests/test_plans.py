@@ -5,6 +5,8 @@ drops predicate pushdown, de-broadcasts the dimension side, or sneaks a
 Python UDF into a hot path that must stay in whole-stage codegen.
 """
 
+import re
+
 import pytest
 
 from pyogrio_spark.fixtures import DOCS_SPARK_SCHEMA, make_docs, make_zones
@@ -109,9 +111,44 @@ def test_knn_candidate_stage_has_no_python(spark, docs_parquet):
     probes = spark.createDataFrame(
         [("p0", 10.0, 20.0)], "probe_id string, lon double, lat double"
     )
-    out = knn_join(probes, docs, k=3, initial_ring=2, max_rounds=3)
+    out = knn_join(probes, docs, k=3)
     plan = plan_of(out)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # one planned window join and one rank
+    assert len(re.findall(r"\bWindow \[", plan)) == 1
+    assert "BroadcastHashJoin" in plan
+
+
+def test_knn_job_count_does_not_depend_on_k(spark):
+    """The kNN plan is fixed before it runs: a larger k widens the planned
+    windows but adds no Spark job. One doc sits next to the probe and the
+    rest ~125 deg away, so k=25 has to reach the far cluster."""
+    import numpy as np
+    import pandas as pd
+
+    from pyogrio_spark.index.grid import cell_of
+    from pyogrio_spark.operators.knn import knn_join
+
+    rng = np.random.default_rng(9)
+    pts = pd.DataFrame({
+        "doc_id": [f"d{i:02d}" for i in range(61)],
+        "xmin": np.concatenate([[10.1], rng.uniform(-102, -98, 60)]),
+        "ymin": np.concatenate([[20.0], rng.uniform(-42, -38, 60)]),
+    })
+    pts["cell_id"] = cell_of(pts.xmin.to_numpy(), pts.ymin.to_numpy(), 7)
+    docs = spark.createDataFrame(pts, "doc_id string, xmin double, ymin double, cell_id long")
+    probes = spark.createDataFrame([("p0", 10.0, 20.0)], "probe_id string, lon double, lat double")
+    sc = spark.sparkContext
+    jobs = {}
+    for k in (1, 25):
+        group = f"knn-jobs-k{k}"
+        sc.setJobGroup(group, group)
+        try:
+            assert len(knn_join(probes, docs, k=k).collect()) == k
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[1] == jobs[25], jobs
 
 
 def test_budget_filter_is_jvm_only(spark, docs_parquet):
