@@ -34,8 +34,6 @@ HEADLINE = [
     "dedup_exact",
     "dedup_fingerprint_overlap",
     "text_features",
-    "sim_cosine_topk",
-    "tpch_q1_pricing",
     "events_sessionize",
     "corpus_curation",
     "geo_curation",
@@ -44,8 +42,6 @@ HEADLINE = [
     "dataset_split",
     "domain_mix",
     "curve_linearize",
-    "media_audio_features",
-    "media_image_features",
     "token_budget",
     # round-4 additions: codegen reprojection over the full doc table,
     # batch measure kernels + exact rect clipping over the zone set
@@ -58,23 +54,19 @@ HEADLINE = [
     "chunk_pack_global",
     "text_tfidf",
     "text_lm_score",
-    # round-6 additions: greedy subword tokenization (one-projection
-    # codegen), Gopher repetition filters, cluster-bounded semantic dedup,
-    # corpus-global line dedup, perplexity-percentile gate
-    "text_tokenize",
+    # round-6 additions: Gopher repetition filters, corpus-global line
+    # dedup, perplexity-percentile gate
     "text_repetition",
-    "semdedup_exact",
     "dedup_lines_global",
     "dedup_spans_global",
     "quality_percentile",
     # round-6 scrubbing batch: normalization, PII redaction, URL/domain
     # hygiene (broadcast blocklist anti-join), Bloom-bitset benchmark
-    # decontamination, cluster-balanced diversity sampling
+    # decontamination
     "text_normalize",
     "text_pii_redact",
     "url_domains",
     "decontaminate_bloom",
-    "cluster_sample",
     # span-kind projection over the interleaved sequence; temperature-
     # scaled domain mixing (data-dependent integer targets)
     "spans_strip_media",

@@ -6,8 +6,8 @@ carries each document's interleaved content as
 must survive every stage byte-identically (span_digest,
 functions/geo.py:372). These are the *structure-editing* counterparts:
 project a kind subset out of the sequence and re-compact offsets —
-e.g. strip media spans for a text-only tokenizer pass, or keep only
-media spans for a decode fan-out — without ever leaving the JVM.
+e.g. strip media spans for a text-only pass, or keep only media
+spans for a decode fan-out — without ever leaving the JVM.
 
 All pure higher-order-function codegen (filter/transform with index):
 zero shuffle, zero Python, the array never explodes unless the caller
@@ -38,16 +38,15 @@ def filter_spans_kind(spans_col: Column, keep_kind: str) -> Column:
 
 
 def strip_media_spans(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Text-only view of an interleaved table (tokenizer/dedup input):
-    media spans dropped, offsets compacted, same schema plus
-    orig_offset. Map-only — rides the scan partitioning."""
+    """Text-only view of an interleaved table: media spans dropped,
+    offsets compacted, same schema plus orig_offset. Map-only — rides
+    the scan partitioning."""
     return df.withColumn(spans_col, filter_spans_kind(F.col(spans_col), "text"))
 
 
 def media_ref_table(df: DataFrame, spans_col: str = "spans", key_col: str = "doc_id") -> DataFrame:
     """Flat (key, media_ref, offset) rows for the media side — the
-    decode fan-out input (multimodal.py consumes this shape). One
-    explode over the media-only subsequence."""
+    decode fan-out input. One explode over the media-only subsequence."""
     media = filter_spans_kind(F.col(spans_col), "media")
     ex = df.select(key_col, F.explode(media).alias("s"))
     return ex.select(

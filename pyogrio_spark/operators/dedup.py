@@ -235,7 +235,7 @@ def simhash_near_pairs(
     Each (chunk, value) bucket is capped at ``max_bucket`` members —
     boilerplate corpora concentrate simhashes, and an uncapped hot
     bucket is O(bucket^2) in the self-join (same guard as the minhash
-    and embedding LSH operators)."""
+    LSH operator)."""
     sh = simhash_column(df, text_col, key_col)
     chunks = sh.select(
         key_col,
@@ -510,72 +510,6 @@ def dedup_keep_canonical(df: DataFrame, pairs: DataFrame, key_col: str = "doc_id
     # no broadcast hint: the loser set scales with the dup rate — let
     # Catalyst/AQE pick broadcast vs shuffled anti-join from its size
     return df.join(losers, key_col, "left_anti")
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    key_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    bands: int = 4,
-    threshold: float = 0.95,
-    seed: int = 17,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine, bucketed by BANDED
-    seeded random-hyperplane LSH, verified exactly inside buckets.
-
-    Scale shape mirrors ``minhash_lsh_pairs``: ``bands`` independent
-    plane families (recall at cos=0.95: plane agreement p ~ 0.9, band
-    hit p^8 ~ 0.43, any-of-4 ~ 0.89 vs 0.43 for the old single family),
-    and each (band, bucket) capped at ``max_bucket`` members so a hot
-    bucket (mass-duplicated embedding, zero vectors) costs
-    O(max_bucket^2), never O(bucket^2) — at 10^9 vectors the old
-    uncapped 256-bucket single band was quadratic in the hottest bucket."""
-    import numpy as np
-
-    first = df.select(F.size(vec_col).alias("d")).head()
-    dim = int(first["d"])
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(0, 1, (bands, n_planes, dim))
-
-    norm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x))
-    band_structs = []
-    for band in range(bands):
-        sig = None
-        for p in range(n_planes):
-            plane = F.array(*[F.lit(float(v)) for v in planes[band, p]])
-            dot = F.aggregate(F.zip_with(vec_col, plane, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-            bit = F.when(dot > 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(1 << p)
-            sig = bit if sig is None else sig + bit
-        band_structs.append(F.struct(F.lit(band).alias("band"), sig.alias("bucket")))
-    base = df.select(
-        key_col, vec_col, norm.alias("_n"), F.explode(F.array(*band_structs)).alias("_bb")
-    ).select(key_col, vec_col, "_n", F.col("_bb.band").alias("band"), F.col("_bb.bucket").alias("bucket"))
-    # cap pathological buckets: keep the first max_bucket members
-    w = Window.partitionBy("band", "bucket").orderBy(key_col)
-    base = base.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= max_bucket).drop("_rn")
-    a, b = base.alias("a"), base.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{key_col}") < F.col(f"b.{key_col}")),
-        )
-        .select(
-            F.col(f"a.{key_col}").alias("id_a"),
-            F.col(f"b.{key_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("_va"),
-            F.col(f"b.{vec_col}").alias("_vb"),
-            F.col("a._n").alias("_na"),
-            F.col("b._n").alias("_nb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])  # a pair may collide in several bands
-    )
-    dot = F.aggregate(F.zip_with("_va", "_vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    cos = (dot / (F.col("_na") * F.col("_nb"))).alias("cosine")
-    return cand.select("id_a", "id_b", cos).filter(F.col("cosine") >= threshold)
 
 
 def line_dedup_global(

@@ -80,11 +80,14 @@ def intersects_join(
     a hot cell lands on ``salt`` reducers — same skew treatment as
     ``point_in_polygon_join``."""
     keep = keep_left_cols or [left_key]
+    # left_key rides through the refine so the pair dedup has it even
+    # when keep_left_cols omits it
+    carry = list(dict.fromkeys([*keep, left_key]))
     zgeom = "_zone_geom"
     cover = cover.withColumnRenamed(geom_col, zgeom)
     ztype = cover.schema[zone_key].dataType.simpleString()
 
-    lcells = explode_envelope_cells(left.select(*dict.fromkeys([*keep, "xmin", "ymin", "xmax", "ymax", geom_col])), res)
+    lcells = explode_envelope_cells(left.select(*dict.fromkeys([*carry, "xmin", "ymin", "xmax", "ymax", geom_col])), res)
     if broadcast_cover:
         joined = lcells.join(F.broadcast(cover), on="cell_id", how="inner")
     elif salt > 1:
@@ -107,7 +110,7 @@ def intersects_join(
     coarse_checked = {"zxmin", "zymin", "zxmax", "zymax"}.issubset(set(cover.columns))
     has_is_rect = "is_rect" in cover.columns
 
-    out_cols = [*keep, zone_key]
+    out_cols = [*carry, zone_key]
     # full-cover shortcut is only sound when the ENTIRE envelope sits in
     # this one full cell (then every point of the geometry is inside the
     # polygon). An envelope that straddles cells could hold a geometry
@@ -137,7 +140,7 @@ def intersects_join(
     rest = joined.filter(~jvm_true).select(*rest_cols)
 
     schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields if f.name in keep]
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields if f.name in carry]
         + [f"`{zone_key}` {ztype}"]
     )
 
@@ -175,4 +178,4 @@ def intersects_join(
             yield pdf.loc[hit, out_cols]
 
     refined = rest.mapInPandas(refine, schema=schema)
-    return full.unionByName(refined).dropDuplicates([left_key, zone_key])
+    return full.unionByName(refined).dropDuplicates([left_key, zone_key]).select(*keep, zone_key)

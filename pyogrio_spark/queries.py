@@ -38,7 +38,6 @@ from pyogrio_spark.operators.dedup import (
 )
 from pyogrio_spark.operators.knn import knn_join
 from pyogrio_spark.operators.range_join import bbox_range_join, boxes_cell_cover
-from pyogrio_spark.operators.similarity import cosine_topk_bruteforce, ivf_assign, ivf_topk, make_centroids
 from pyogrio_spark.operators.spatial_join import point_in_polygon_join, zones_cell_cover
 from pyogrio_spark.operators.tiling import adaptive_tiles, assign_tiles
 from pyogrio_spark.operators.zonal import tiles_with_centers, zonal_stats
@@ -131,7 +130,7 @@ def _docs_geo(spark: SparkSession, sf: str) -> DataFrame:
     return docs
 
 
-def _register_views(spark: SparkSession, sf: str, tables=("lineitem", "orders", "customer", "nation", "region", "events")):
+def _register_views(spark: SparkSession, sf: str, tables):
     for t in tables:
         spark.read.parquet(f"{sf}/{t}.parquet").createOrReplaceTempView(t)
 
@@ -142,7 +141,7 @@ _SCAN_PARTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _read_spread(spark: SparkSession, path: str, key: str = "doc_id") -> DataFrame:
-    """Scale-adaptive scan spread for the CPU-heavy text/vector tables
+    """Scale-adaptive scan spread for the CPU-heavy documents table
     (guide §2.5 "input skew: one huge unsplittable file ... repartition
     immediately after the read").
 
@@ -159,9 +158,8 @@ def _read_spread(spark: SparkSession, path: str, key: str = "doc_id") -> DataFra
     The spread target is size-aware (~256 KB of encoded parquet per
     task, capped at the session parallelism): at the smoke scales a
     full-cores spread of a 1 MB table turns every downstream stage into
-    32 near-empty tasks, and iterative operators (the kNN ring loop)
-    pay that scheduler overhead once per round — measured as the guide
-    §2.2 small-task pathology in miniature."""
+    32 near-empty tasks — the guide §2.2 small-task pathology in
+    miniature."""
     df = spark.read.parquet(path)
     sc = spark.sparkContext
     memo = _SCAN_PARTS.get(spark)
@@ -1240,35 +1238,6 @@ SELECT doc_id, token_count, word_piece_count,
 FROM feat"""
 
 
-# ======================================================= similarity queries
-
-def q_sim_topk(spark, sf):
-    emb = _read_spread(spark, f"{sf}/embeddings.parquet", key="vec_id")
-    probes = emb.filter("vec_id < 10").select(F.col("vec_id").alias("probe_id"), "embedding")
-    out = cosine_topk_bruteforce(emb, probes, k=5)
-    return out.select("probe_id", "vec_id", F.col("rank").alias("rnk"))
-
-
-ORACLE_SIM_TOPK = """
-WITH probes AS (SELECT vec_id AS probe_id, embedding AS pe FROM embeddings WHERE vec_id < 10),
-pairs AS (
-  SELECT p.probe_id, e.vec_id,
-         list_inner_product(p.pe, e.embedding)
-           / (sqrt(list_inner_product(p.pe, p.pe)) * sqrt(list_inner_product(e.embedding, e.embedding))) AS cos
-  FROM probes p CROSS JOIN embeddings e),
-r AS (SELECT probe_id, vec_id, row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, vec_id) AS rnk FROM pairs)
-SELECT probe_id, vec_id, rnk FROM r WHERE rnk <= 5
-"""
-
-
-def q_ivf_topk(spark, sf):  # rows-only check (approximate by design)
-    emb = _read_spread(spark, f"{sf}/embeddings.parquet", key="vec_id")
-    cents = make_centroids(64, 8)
-    bucketed = ivf_assign(emb, cents)
-    probes = emb.filter("vec_id < 10").select(F.col("vec_id").alias("probe_id"), "embedding")
-    return ivf_topk(bucketed, probes, cents, k=5, nprobe=4).select("probe_id", "vec_id", "rank")
-
-
 def q_adaptive_tile_map(spark, sf):
     docs = _docs_geo(spark, sf)
     tmap = adaptive_tiles(docs, base_res=3, max_res=9, target_rows=200, lon_col="lon", lat_col="lat")
@@ -1310,203 +1279,6 @@ def _oracle_adaptive(base: int = 3, maxr: int = 9, target: int = 200) -> str:
         f"SELECT cell AS tile_id, {maxr} AS res, CAST(n AS BIGINT) AS row_count FROM r{maxr}"
     )
     return "\n".join(parts) + "\n" + "\nUNION ALL\n".join(sel)
-
-
-def q_media_video_frames(spark, sf):
-    """REAL video path, fully oracle-checked: media spans -> deterministic
-    Y4M payloads (valid YUV4MPEG2 streams) -> actual container walk
-    (header tokens, FRAME markers) sampling every 2nd frame up to 4 per
-    asset -> per-frame mean luma. Constant-luma frames make every
-    feature closed-form in SQL (mean == luma exactly: g*n/n is
-    IEEE-exact)."""
-    from pyogrio_spark.operators.multimodal import extract_video_frames
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    toks = F.split(F.col("text"), " ")
-    ns = F.least(F.ceil(F.size(toks) / F.lit(20.0)).cast("int"), F.lit(4))
-    spans = F.transform(
-        F.sequence(F.lit(0), ns - 1),
-        lambda i: F.struct(
-            F.when((F.col("doc_id") + i) % 3 == 0, F.lit("media")).otherwise(F.lit("text")).alias("kind"),
-            F.lit(None).cast("string").alias("text"),
-            F.concat(F.lit("media://"), F.col("doc_id").cast("string"), F.lit("/"), i.cast("string")).alias(
-                "media_ref"
-            ),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    with_spans = docs.select("doc_id", spans.alias("spans"))
-    return extract_video_frames(with_spans, every_n=2, max_frames=4)
-
-
-ORACLE_VIDEO = """
-WITH base AS (
-  SELECT doc_id, least(CAST(ceil(len(string_split(text, ' ')) / 2e1) AS INT), 4) AS ns FROM documents),
-spans AS (
-  SELECT doc_id, unnest(generate_series(0, ns - 1)) AS i FROM base),
-media AS (SELECT doc_id, i FROM spans WHERE (doc_id + i) % 3 = 0),
-params AS (
-  SELECT doc_id, i,
-         8 + 2 * ((doc_id * 3 + i) % 12) AS w,
-         8 + 2 * ((doc_id * 5 + i) % 8) AS h,
-         4 + (doc_id + i) % 8 AS nf
-  FROM media),
-frames AS (
-  SELECT doc_id, i, w, h, nf, unnest(generate_series(0, 3)) AS slot FROM params)
-SELECT doc_id,
-       'media://' || doc_id || '/' || i AS media_ref,
-       CAST(i AS INT) AS span_offset,
-       CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(nf AS INT) AS n_frames,
-       CAST(slot * 2 AS INT) AS frame_index,
-       CAST((doc_id * 7 + i * 11 + slot * 2 * 13) % 256 AS DOUBLE) AS mean_luma
-FROM frames WHERE slot * 2 < nf
-"""
-
-
-def q_media_audio_features(spark, sf):
-    """REAL media decode path, fully oracle-checked: media spans ->
-    deterministic WAV payloads (valid RIFF/PCM16 files) -> actual codec
-    parse (chunk walk, PCM read) -> rate / samples / duration / RMS.
-    Constant-amplitude synthesis makes every feature closed-form in SQL:
-    rms == amplitude exactly (n*a^2/n and sqrt(a^2) are IEEE-exact)."""
-    from pyogrio_spark.operators.multimodal import extract_audio_features
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    toks = F.split(F.col("text"), " ")
-    ns = F.least(F.ceil(F.size(toks) / F.lit(20.0)).cast("int"), F.lit(4))
-    spans = F.transform(
-        F.sequence(F.lit(0), ns - 1),
-        lambda i: F.struct(
-            F.when((F.col("doc_id") + i) % 3 == 0, F.lit("media")).otherwise(F.lit("text")).alias("kind"),
-            F.lit(None).cast("string").alias("text"),
-            F.concat(F.lit("media://"), F.col("doc_id").cast("string"), F.lit("/"), i.cast("string")).alias(
-                "media_ref"
-            ),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    with_spans = docs.select("doc_id", spans.alias("spans"))
-    return extract_audio_features(with_spans)
-
-
-ORACLE_AUDIO = """
-WITH base AS (
-  SELECT doc_id, least(CAST(ceil(len(string_split(text, ' ')) / 2e1) AS INT), 4) AS ns FROM documents),
-spans AS (
-  SELECT doc_id, unnest(generate_series(0, ns - 1)) AS i FROM base),
-media AS (SELECT doc_id, i FROM spans WHERE (doc_id + i) % 3 = 0)
-SELECT doc_id,
-       'media://' || doc_id || '/' || i AS media_ref,
-       CAST(i AS INT) AS span_offset,
-       CAST(8000 AS INT) AS sample_rate,
-       CAST(64 + (doc_id + i) % 64 AS BIGINT) AS n_samples,
-       CAST((64 + (doc_id + i) % 64) * 1000 AS DOUBLE) / 8000 AS duration_ms,
-       CAST(1000 + (doc_id * 31 + i * 7) % 20000 AS DOUBLE) AS rms
-FROM media
-"""
-
-
-def q_media_image_features(spark, sf):
-    """REAL image decode path, fully oracle-checked: media spans fetch
-    deterministic valid PGM (P5) payloads; a genuine netpbm parser reads
-    header + raster into width/height/maxval/mean. Constant-gray
-    synthesis makes every feature closed-form in SQL (mean == gray
-    exactly)."""
-    from pyogrio_spark.operators.multimodal import extract_image_features
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    toks = F.split(F.col("text"), " ")
-    ns = F.least(F.ceil(F.size(toks) / F.lit(20.0)).cast("int"), F.lit(4))
-    spans = F.transform(
-        F.sequence(F.lit(0), ns - 1),
-        lambda i: F.struct(
-            F.when((F.col("doc_id") + i) % 3 == 0, F.lit("media")).otherwise(F.lit("text")).alias("kind"),
-            F.lit(None).cast("string").alias("text"),
-            F.concat(F.lit("media://"), F.col("doc_id").cast("string"), F.lit("/"), i.cast("string")).alias(
-                "media_ref"
-            ),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    with_spans = docs.select("doc_id", spans.alias("spans"))
-    return extract_image_features(with_spans)
-
-
-ORACLE_IMAGE = """
-WITH base AS (
-  SELECT doc_id, least(CAST(ceil(len(string_split(text, ' ')) / 2e1) AS INT), 4) AS ns FROM documents),
-spans AS (
-  SELECT doc_id, unnest(generate_series(0, ns - 1)) AS i FROM base),
-media AS (SELECT doc_id, i FROM spans WHERE (doc_id + i) % 3 = 0)
-SELECT doc_id,
-       'media://' || doc_id || '/' || i AS media_ref,
-       CAST(i AS INT) AS span_offset,
-       CAST(8 + (doc_id * 3 + i) % 24 AS INT) AS width,
-       CAST(8 + (doc_id * 5 + i) % 16 AS INT) AS height,
-       CAST(255 AS INT) AS maxval,
-       CAST((doc_id * 7 + i * 11) % 256 AS DOUBLE) AS mean_luma
-FROM media
-"""
-
-
-def q_media_resize(spark, sf):
-    """REAL image resize, oracle-checked: decode PGM -> nearest-neighbor
-    downsample to max side 16 -> re-encode -> features of the thumbnail.
-    Constant-gray synthesis keeps mean_luma exact; resized dims are
-    integer arithmetic ((side*16) // max(w,h), never upsampled)."""
-    from pyogrio_spark.operators.multimodal import resize_images
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    toks = F.split(F.col("text"), " ")
-    ns = F.least(F.ceil(F.size(toks) / F.lit(20.0)).cast("int"), F.lit(4))
-    spans = F.transform(
-        F.sequence(F.lit(0), ns - 1),
-        lambda i: F.struct(
-            F.when((F.col("doc_id") + i) % 3 == 0, F.lit("media")).otherwise(F.lit("text")).alias("kind"),
-            F.lit(None).cast("string").alias("text"),
-            F.concat(F.lit("media://"), F.col("doc_id").cast("string"), F.lit("/"), i.cast("string")).alias(
-                "media_ref"
-            ),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    with_spans = docs.select("doc_id", spans.alias("spans"))
-    return resize_images(with_spans, max_side=16)
-
-
-ORACLE_RESIZE = """
-WITH base AS (
-  SELECT doc_id, least(CAST(ceil(len(string_split(text, ' ')) / 2e1) AS INT), 4) AS ns FROM documents),
-spans AS (SELECT doc_id, unnest(generate_series(0, ns - 1)) AS i FROM base),
-media AS (
-  SELECT doc_id, i,
-         8 + (doc_id * 3 + i) % 24 AS w,
-         8 + (doc_id * 5 + i) % 16 AS h
-  FROM spans WHERE (doc_id + i) % 3 = 0)
-SELECT doc_id,
-       'media://' || doc_id || '/' || i AS media_ref,
-       CAST(i AS INT) AS span_offset,
-       CAST(CASE WHEN greatest(w, h) <= 16 THEN w ELSE (w * 16) // greatest(w, h) END AS INT) AS width,
-       CAST(CASE WHEN greatest(w, h) <= 16 THEN h ELSE (h * 16) // greatest(w, h) END AS INT) AS height,
-       CAST(255 AS INT) AS maxval,
-       CAST((doc_id * 7 + i * 11) % 256 AS DOUBLE) AS mean_luma
-FROM media
-"""
-
-
-def q_ivf_topk_full(spark, sf):
-    """IVF with nprobe = n_centroids: every bucket is scanned, so the
-    result is provably EXACT top-k — the full oracle covers the whole
-    IVF machinery (assignment, bucket join, rank); the pruned-nprobe
-    recall is gated separately in tests/test_similarity.py."""
-    emb = _read_spread(spark, f"{sf}/embeddings.parquet", key="vec_id")
-    cents = make_centroids(64, 8)
-    bucketed = ivf_assign(emb, cents)
-    probes = emb.filter("vec_id < 10").select(F.col("vec_id").alias("probe_id"), "embedding")
-    return ivf_topk(bucketed, probes, cents, k=5, nprobe=8).select(
-        "probe_id", "vec_id", F.col("rank").alias("rnk")
-    )
 
 
 def q_geo_measures(spark, sf):
@@ -1623,51 +1395,6 @@ def q_geo_reproject(spark, sf):
     )
 
 
-def q_ivf2_topk_full(spark, sf):
-    """TWO-LEVEL IVF (coarse + shared residual fine codebook — the
-    C >> 256 scale architecture: n_coarse*n_fine effective cells for
-    n_coarse+n_fine dots per row) with every bucket probed: provably
-    exact, so the brute-force oracle covers the whole two-level
-    machinery (train, residual assignment, bucket join, rank); pruned
-    probing is recall-gated in tests/test_similarity.py."""
-    from pyogrio_spark.operators.similarity import ivf2_assign, ivf2_topk, ivf2_train
-
-    emb = _read_spread(spark, f"{sf}/embeddings.parquet", key="vec_id")
-    coarse, fine = ivf2_train(emb, dim=64, n_coarse=4, n_fine=4, iters=1)
-    bucketed = ivf2_assign(emb, coarse, fine)
-    probes = emb.filter("vec_id < 10").select(F.col("vec_id").alias("probe_id"), "embedding")
-    return ivf2_topk(
-        bucketed, probes, coarse, fine, k=5, nprobe_coarse=4, nprobe_fine=4
-    ).select("probe_id", "vec_id", F.col("rank").alias("rnk"))
-
-
-def q_ivf2pq_topk_full(spark, sf):
-    """IVF-PQ (coarse cells + product-quantized residuals + ADC lookup
-    scoring — the classic IVFADC layout; the round-4 verdict's flagged
-    next ANN pressure point): with every coarse cell probed and
-    rerank=None (exact cosine over every candidate) the result is
-    provably exact, so the brute-force oracle covers the whole
-    machinery (coarse train, PQ codebook train, residual encoding, the
-    per-probe ADC LUT, candidate join, rank). ADC-pruned search is
-    recall-gated vs plain ivf2 at equal exact-dot budget in
-    tests/test_similarity.py."""
-    from pyogrio_spark.operators.similarity import (
-        ivf_train,
-        ivfpq_assign,
-        ivfpq_topk,
-        pq_train,
-    )
-
-    emb = _read_spread(spark, f"{sf}/embeddings.parquet", key="vec_id")
-    coarse = ivf_train(emb, dim=64, n_centroids=4, iters=1)
-    books = pq_train(emb, coarse, dim=64, m=4, k_sub=8, iters=1)
-    coded = ivfpq_assign(emb, coarse, books)
-    probes = emb.filter("vec_id < 10").select(F.col("vec_id").alias("probe_id"), "embedding")
-    return ivfpq_topk(coded, probes, coarse, books, k=5, nprobe=4, rerank=None).select(
-        "probe_id", "vec_id", F.col("rank").alias("rnk")
-    )
-
-
 def q_events_asof_rates(spark, sf):
     """AS-OF join (the classic missing Spark operator, distributed
     two-phase plan): every event picks the latest per-type 'rate' row at
@@ -1712,89 +1439,6 @@ FROM ev e ASOF JOIN rates r ON e.event_type = r.event_type AND e.tus >= r.rts_us
 
 
 # ============================================================= sql / events
-
-def q_tpch_q1(spark, sf):
-    _register_views(spark, sf, ("lineitem",))
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sum_disc_price,
-               count(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-        """
-    )
-
-
-ORACLE_Q1 = """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_tpch_q3(spark, sf):
-    _register_views(spark, sf, ("lineitem", "orders", "customer"))
-    return spark.sql(
-        """
-        SELECT o.o_orderkey,
-               CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l.l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-               o.o_orderdate
-        FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-                        JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        WHERE c.c_mktsegment = 'BUILDING'
-          AND o.o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-          AND l.l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-        GROUP BY o.o_orderkey, o.o_orderdate
-        ORDER BY revenue DESC, o_orderkey
-        LIMIT 10
-        """
-    )
-
-
-ORACLE_Q3 = """
-SELECT o.o_orderkey,
-       CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l.l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-       o.o_orderdate
-FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-                JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-  AND l.l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-GROUP BY o.o_orderkey, o.o_orderdate
-ORDER BY revenue DESC, o_orderkey
-LIMIT 10
-"""
-
-
-def q_region_rollup(spark, sf):
-    _register_views(spark, sf, ("customer", "nation", "region"))
-    return spark.sql(
-        """
-        SELECT r_name, count(*) AS n_customers,
-               CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS acctbal_sum
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
-                      JOIN region ON n_regionkey = r_regionkey
-        GROUP BY r_name
-        """
-    )
-
-
-ORACLE_REGION = """
-SELECT r_name, count(*) AS n_customers,
-       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS acctbal_sum
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-"""
 
 
 def q_events_hourly(spark, sf):
@@ -2083,265 +1727,6 @@ GROUP BY lang
 """
 
 
-# ---------------------------------------------------------------- tokenizer
-
-# Fixed subword vocab for the driver queries: every character the
-# corpus uses (segmentation is total by construction — no UNK branch)
-# plus multi-char subwords chosen so greedy maximal-munch produces
-# multi-token words with interesting longest-match decisions
-# ("table" -> tab+le, "customer" -> cu+sto+mer, "merge" -> mer+g+e
-# because "mer" outranks "me" at position 1).
-TOKENIZER_VOCAB = sorted(
-    set("abcdefghijklmnopqrstuvwy")
-    | {
-        "tab", "le", "val", "ue", "wind", "ow", "sc", "an", "row", "or",
-        "der", "so", "rt", "str", "eam", "qu", "ery", "gr", "oup", "ha",
-        "sh", "jo", "in", "key", "li", "ne", "me", "rge", "pa", "fa",
-        "st", "sl", "sm", "all", "ba", "tch", "big", "col", "umn", "cu",
-        "sto", "mer", "da", "ta", "fil", "ter", "dup", "agg", "the",
-        "vec", "tor", "spa", "rk", "que",
-    }
-)
-
-_VOCAB_VALUES = ", ".join(f"('{t}')" for t in TOKENIZER_VOCAB)
-
-# greedy longest-match segmentation of every distinct word as a
-# recursive CTE: the longest vocab prefix at a position is the match
-# with NO longer vocab prefix (NOT EXISTS — aggregates are illegal in
-# a recursive member); one deterministic successor per state so the
-# recursion is a chain, exactly the operator's loop.
-_SEG_CTE = f"""vocab(tok) AS (VALUES {_VOCAB_VALUES}),
-wl AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-words AS (SELECT doc_id, unnest(l) AS word,
-                 unnest(generate_series(1, length(l))) - 1 AS word_idx FROM wl),
-dwords AS (SELECT DISTINCT word FROM words),
-seg(word, pos, tok) AS (
-    SELECT dw.word, 1, v.tok
-    FROM dwords dw JOIN vocab v
-      ON substr(dw.word, 1, length(v.tok)) = v.tok
-     AND NOT EXISTS (SELECT 1 FROM vocab v2
-                     WHERE length(v2.tok) > length(v.tok)
-                       AND substr(dw.word, 1, length(v2.tok)) = v2.tok)
-  UNION ALL
-    SELECT s.word, s.pos + length(s.tok), v.tok
-    FROM seg s JOIN vocab v
-      ON s.pos + length(s.tok) <= length(s.word)
-     AND substr(s.word, s.pos + length(s.tok), length(v.tok)) = v.tok
-     AND NOT EXISTS (SELECT 1 FROM vocab v2
-                     WHERE length(v2.tok) > length(v.tok)
-                       AND substr(s.word, s.pos + length(s.tok), length(v2.tok)) = v2.tok)
-)"""
-
-
-def q_text_tokenize(spark, sf):
-    """Greedy longest-match subword segmentation (WordPiece-style
-    maximal munch) against the fixed vocab — distinct words segmented
-    once in a single Arrow-batched pass, routed back to the corpus
-    (operators/tokenizer.py). One row per subword token occurrence."""
-    from pyogrio_spark.operators.tokenizer import tokenize_greedy
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return tokenize_greedy(docs, TOKENIZER_VOCAB)
-
-
-ORACLE_TEXT_TOKENIZE = f"""WITH RECURSIVE {_SEG_CTE}
-SELECT w.doc_id, w.word_idx, s.pos AS tok_pos, s.tok AS token
-FROM words w JOIN seg s ON w.word = s.word"""
-
-_BPE_MERGES = 8
-
-
-def _oracle_bpe_ctes(k: int) -> str:
-    """Unrolled BPE training rounds: w0 = char-split distinct words with
-    corpus frequencies; each round materializes the argmax pair (ties
-    on pair ascending) and the merged symbol strings. MATERIALIZED is
-    load-bearing — inlined CTEs re-evaluate w{{r-1}} per reference and
-    the chain goes exponential."""
-    parts = [
-        """w0 AS MATERIALIZED (
-  SELECT word, n, ' ' || regexp_replace(word, '(.)', '\\1 ', 'g') AS sym
-  FROM (SELECT w AS word, count(*) AS n
-        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        WHERE length(w) > 0 GROUP BY w))"""
-    ]
-    for r in range(1, k + 1):
-        parts.append(f"""b{r} AS MATERIALIZED (
-  SELECT s1, s2, CAST(sum(n) AS BIGINT) AS freq FROM (
-    SELECT n, unnest(l[1:length(l)-1]) AS s1, unnest(l[2:length(l)]) AS s2
-    FROM (SELECT n, string_split(trim(sym), ' ') AS l FROM w{r - 1}))
-  GROUP BY s1, s2 ORDER BY freq DESC, s1, s2 LIMIT 1)""")
-        parts.append(f"""w{r} AS MATERIALIZED (
-  SELECT word, n, replace(sym, ' ' || b.s1 || ' ' || b.s2 || ' ',
-                          ' ' || b.s1 || b.s2 || ' ') AS sym
-  FROM w{r - 1} CROSS JOIN b{r} b)""")
-    return ",\n".join(parts)
-
-
-def q_bpe_train_merges(spark, sf):
-    """Distributed BPE merge training (operators/tokenizer.py): one
-    pair-count aggregation per merge over the distinct-word table, a
-    single argmax row collected per round, codegen string-replace to
-    apply each merge. Returns the codebook-sized merge table."""
-    from pyogrio_spark.operators.tokenizer import train_bpe_merges
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    merges = train_bpe_merges(docs, num_merges=_BPE_MERGES)
-    return spark.createDataFrame(
-        merges, "merge_rank int, lhs string, rhs string, freq bigint"
-    )
-
-
-ORACLE_BPE_TRAIN = (
-    "WITH "
-    + _oracle_bpe_ctes(_BPE_MERGES)
-    + "\n"
-    + " UNION ALL ".join(
-        f"SELECT {r} AS merge_rank, s1 AS lhs, s2 AS rhs, freq FROM b{r}"
-        for r in range(1, _BPE_MERGES + 1)
-    )
-)
-
-
-def q_text_bpe_apply(spark, sf):
-    """Train 8 BPE merges on the corpus, then apply them as ONE codegen
-    projection (chained string replaces over sentinel-delimited symbol
-    strings) on the distinct-word table, hash-joined back to the word
-    stream. One row per BPE token occurrence."""
-    from pyogrio_spark.operators.tokenizer import apply_bpe_merges, train_bpe_merges
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    merges = train_bpe_merges(docs, num_merges=_BPE_MERGES)
-    return apply_bpe_merges(docs, [(l, r) for _, l, r, _ in merges])
-
-
-ORACLE_BPE_APPLY = (
-    "WITH "
-    + _oracle_bpe_ctes(_BPE_MERGES)
-    + f""",
-wl AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-wds AS (SELECT doc_id, unnest(l) AS word,
-               unnest(generate_series(1, length(l))) - 1 AS word_idx FROM wl),
-toks AS (SELECT word, unnest(tl) AS token,
-                unnest(generate_series(1, length(tl))) - 1 AS tok_idx
-         FROM (SELECT word, string_split(trim(sym), ' ') AS tl FROM w{_BPE_MERGES}))
-SELECT w.doc_id, w.word_idx, t.tok_idx, t.token
-FROM wds w JOIN toks t ON w.word = t.word"""
-)
-
-
-def q_token_budget_subword(spark, sf):
-    """Token-budget selection metered in TOKENIZER tokens: per-doc
-    subword counts under greedy segmentation (distinct-word counts
-    hash-joined back), then the two-phase distributed prefix sum —
-    the real-pipeline version of token_budget (which meters whitespace
-    words)."""
-    from pyogrio_spark.operators.budget import budget_filter
-    from pyogrio_spark.operators.tokenizer import subword_token_counts
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    cnt = subword_token_counts(docs, TOKENIZER_VOCAB, count_col="token_count")
-    docs = docs.select("doc_id", "lang").join(cnt, "doc_id")
-    docs = docs.withColumn("neg_tokens", -F.col("token_count"))
-    kept = budget_filter(
-        docs, budget=5000, group_col="lang", value_col="token_count",
-        order_cols=("neg_tokens", "doc_id"), num_partitions=16,
-    ).drop("neg_tokens")
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("token_count").cast("bigint").alias("tokens_kept"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
-ORACLE_BUDGET_SUBWORD = f"""WITH RECURSIVE {_SEG_CTE},
-wtok AS (SELECT word, count(*) AS nt FROM seg GROUP BY word),
-cnt AS (SELECT w.doc_id, CAST(sum(t.nt) AS BIGINT) AS token_count
-        FROM words w JOIN wtok t ON w.word = t.word GROUP BY w.doc_id),
-t AS (SELECT d.lang, d.doc_id, c.token_count
-      FROM documents d JOIN cnt c ON d.doc_id = c.doc_id),
-c AS (SELECT lang, doc_id, token_count,
-             sum(token_count) OVER (PARTITION BY lang ORDER BY token_count DESC, doc_id
-                                    ROWS UNBOUNDED PRECEDING) AS cum
-      FROM t)
-SELECT lang, count(*) AS n_docs, CAST(sum(token_count) AS BIGINT) AS tokens_kept,
-       min(doc_id) AS first_doc
-FROM c WHERE cum - token_count < 5000
-GROUP BY lang"""
-
-
-# ----------------------------------------------------------------- SemDeDup
-
-_SEMDEDUP_EPS = "3e-1"
-_SEMDEDUP_CAP = 16
-
-
-def q_semdedup_exact(spark, sf):
-    """SemDeDup (operators/similarity.py semantic_dedup): k-means
-    cluster the embeddings (seeded codebook — the deterministic twin
-    of ivf_train, same assignment expression), remove every vector
-    with an earlier same-cluster neighbor above the cosine threshold.
-    Exact within-cluster pairs; returns the kept set."""
-    from pyogrio_spark.operators.similarity import make_centroids, semantic_dedup
-
-    emb = _read_spread(spark, f"{sf}/embeddings.parquet", key="vec_id")
-    cents = make_centroids(64, 8)
-    return semantic_dedup(emb, cents, threshold=float(_SEMDEDUP_EPS))
-
-
-def q_semdedup_pruned(spark, sf):
-    """Pruned SemDeDup twin: only the first probe_cap items per cluster
-    (by key) act as removers — per-cluster cost linear in cap x size,
-    the 100 TB path for skewed clusters. The cap rule is deterministic,
-    so this variant is fully oracled too (QUALIFY row cap), unlike
-    pruned-nprobe IVF whose probe choice is score-dependent."""
-    from pyogrio_spark.operators.similarity import make_centroids, semantic_dedup
-
-    emb = _read_spread(spark, f"{sf}/embeddings.parquet", key="vec_id")
-    cents = make_centroids(64, 8)
-    return semantic_dedup(
-        emb, cents, threshold=float(_SEMDEDUP_EPS), probe_cap=_SEMDEDUP_CAP
-    )
-
-
-def _oracle_semdedup(probe_cap: int | None = None) -> str:
-    """Mirror of semantic_dedup with the seeded codebook inlined as
-    literals: same argmax assignment (first-max tie rule in both
-    engines), same double-cast cosine (bit-parity verified), same
-    earlier-neighbor NOT EXISTS rule."""
-    from pyogrio_spark.operators.similarity import make_centroids
-
-    cents = make_centroids(64, 8)
-    def lit(row):
-        return "[" + ",".join(repr(float(x)) for x in row) + "]::DOUBLE[]"
-
-    scores = ", ".join(
-        f"list_inner_product(CAST(embedding AS DOUBLE[]), {lit(cents[i])})"
-        " / greatest(sqrt(list_inner_product(CAST(embedding AS DOUBLE[]),"
-        " CAST(embedding AS DOUBLE[]))), 1e-12)"
-        for i in range(cents.shape[0])
-    )
-    removers = "assigned"
-    cap_cte = ""
-    if probe_cap is not None:
-        cap_cte = f""",
-removers AS (
-  SELECT * FROM assigned
-  QUALIFY row_number() OVER (PARTITION BY ivf_bucket ORDER BY vec_id) <= {probe_cap})"""
-        removers = "removers"
-    return f"""
-WITH assigned AS MATERIALIZED (
-  SELECT vec_id, CAST(list_position(s, list_max(s)) - 1 AS INTEGER) AS ivf_bucket,
-         CAST(embedding AS DOUBLE[]) AS v
-  FROM (SELECT vec_id, embedding, [{scores}] AS s FROM embeddings)){cap_cte}
-SELECT x.vec_id, x.ivf_bucket FROM assigned x
-WHERE NOT EXISTS (
-  SELECT 1 FROM {removers} y
-  WHERE y.ivf_bucket = x.ivf_bucket AND y.vec_id < x.vec_id
-    AND list_inner_product(x.v, y.v)
-        / (sqrt(list_inner_product(x.v, x.v)) * sqrt(list_inner_product(y.v, y.v)))
-        >= {_SEMDEDUP_EPS})"""
-
-
 # ------------------------------------------------------- repetition filters
 
 _REP_LINE_WORDS = 8
@@ -2467,22 +1852,6 @@ WHERE s.quality >= 0.5 AND s.lang IN ('en', 'es', 'fr')
   AND r.top2_frac <= 8e-2 AND r.dup5_frac <= 1e-2
 GROUP BY s.lang
 """
-
-
-def q_window_top_orders_per_segment(spark, sf):
-    """window-function surface: top-3 orders by price per market segment."""
-    _register_views(spark, sf, ("orders", "customer"))
-    return spark.sql(
-        """
-        WITH j AS (
-          SELECT c.c_mktsegment, o.o_orderkey, o.o_totalprice
-          FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey)
-        SELECT c_mktsegment, o_orderkey, o_totalprice, rnk FROM (
-          SELECT *, row_number() OVER (PARTITION BY c_mktsegment
-                                       ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-          FROM j) WHERE rnk <= 3
-        """
-    )
 
 
 _LINE_DEDUP_WORDS = 8
@@ -2632,8 +2001,6 @@ WITH t AS (
 SELECT doc_id, lang, n_bigrams, lm_score, pct_rank FROM r WHERE pct_rank >= 0.7
 """
 
-
-# ================================================================= registry
 
 # ------------------------------------------------------ corpus scrubbing
 #
@@ -2869,47 +2236,6 @@ hit AS (
   JOIN bpos USING (pos)
   GROUP BY doc_id, g HAVING count(DISTINCT j) = {_BLOOM_K})
 SELECT doc_id, count(*) AS n_hits FROM hit GROUP BY doc_id"""
-
-
-def q_cluster_sample(spark, sf):
-    """Cluster-balanced diversity sampling (operators/similarity.py
-    cluster_balanced_sample): argmax-cosine cluster assignment (the
-    persisted-ivf_bucket expression) + exactly min(16, |cluster|)
-    members per cluster ordered by md5(vec_id) — rare embedding-space
-    modes survive the downsample. Composes the IVF codebook with the
-    stratified_sample keep rule."""
-    from pyogrio_spark.operators.similarity import cluster_balanced_sample, make_centroids
-
-    emb = _read_spread(spark, f"{sf}/embeddings.parquet", key="vec_id")
-    return cluster_balanced_sample(emb, make_centroids(64, 8), n_per_cluster=16)
-
-
-def _oracle_cluster_sample() -> str:
-    """Mirror of cluster_balanced_sample: the seeded codebook inlined
-    as literals with the identical first-max tie rule and double-cast
-    cosine as _oracle_semdedup (bit-parity verified there)."""
-    from pyogrio_spark.operators.similarity import make_centroids
-
-    cents = make_centroids(64, 8)
-
-    def lit(row):
-        return "[" + ",".join(repr(float(x)) for x in row) + "]::DOUBLE[]"
-
-    scores = ", ".join(
-        f"list_inner_product(CAST(embedding AS DOUBLE[]), {lit(cents[i])})"
-        " / greatest(sqrt(list_inner_product(CAST(embedding AS DOUBLE[]),"
-        " CAST(embedding AS DOUBLE[]))), 1e-12)"
-        for i in range(cents.shape[0])
-    )
-    return f"""
-WITH assigned AS (
-  SELECT vec_id, CAST(list_position(s, list_max(s)) - 1 AS INTEGER) AS ivf_bucket
-  FROM (SELECT vec_id, [{scores}] AS s FROM embeddings))
-SELECT vec_id, ivf_bucket, rn FROM (
-  SELECT vec_id, ivf_bucket,
-         row_number() OVER (PARTITION BY ivf_bucket
-                            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-  FROM assigned) WHERE rn <= 16"""
 
 
 def q_corpus_stats(spark, sf):
@@ -3192,255 +2518,80 @@ WHERE NOT coalesce(nullif(ckey % 10, 0) >= 7, false)
 """
 
 
+# ================================================================= registry
+
 QUERIES = {
     "scan_where_project": q_scan_where_project,
     "scan_skip_max": q_scan_skip_max,
     "geo_bbox_filter": q_geo_bbox,
-    # round 7 swapped geo_measures (driver-green r1-r6; the planar
-    # measure kernels keep a hard signal in-window via
-    # geo_measures_geodesic, geo_clip, and geo_areal_interpolate's
-    # area weights) to the tail for semdedup_pruned — the one oracled
-    # entry that had never held a driver row (r6 VERDICT item 1).
-    # round 6 (late) swapped geo_tile_assignment (driver-green r1-r5)
-    # for its strict superset geo_tile_pyramid — the same cell formula
-    # at every level plus the parent rollup, so the tile machinery
-    # keeps its hard signal (assignment itself stays oracled at tail
-    # and inside adaptive_tile_map's frontier).
     "geo_tile_pyramid": q_geo_tile_pyramid,
     "geo_pip_join": q_geo_pip_join,
-    # round 6 swapped geo_pip_join_poly (driver-green r2-r5; the broadcast
-    # PIP planning stays in-window as geo_pip_join, the exact poly-refine
-    # kernel as geo_mask_filter's pytest goldens) for text_tokenize.
-    "text_tokenize": q_text_tokenize,
     "geo_reproject": q_geo_reproject,
     "adaptive_tile_map": q_adaptive_tile_map,
     "geo_intersects_join": q_geo_intersects_join,
     "geo_clip": q_geo_clip,
     "chunk_pack_global": q_chunk_pack_global,
     "geo_knn_join": q_geo_knn,
-    # round 6 swapped geo_knn_join_haversine (driver-green r2-r5; the
-    # planned window join stays in-window as geo_knn_join — haversine is
-    # the same plan with a different metric, pytest-asserted) for
-    # bpe_train_merges.
-    "bpe_train_merges": q_bpe_train_merges,
     "geo_range_join": q_geo_range_join,
-    # round 6 (late) swapped geo_zonal_stats (driver-green r1-r5; the
-    # zonal area-weight machinery keeps a hard signal in-window via
-    # geo_areal_interpolate, and zonal_poly/rasterize stay oracled at
-    # the tail) for the corpus report card.
     "corpus_stats": q_corpus_stats,
-    # round 7 swapped dedup_minhash_signatures (driver-green r4-r6; its
-    # full lineage stays in-window inside dedup_minhash_lsh_pairs, which
-    # recomputes the signatures as its first stage) to the tail for the
-    # new OGRSQL dialect entry.
     "sql_ogr_dialect": q_sql_ogr_dialect,
     "decontaminate_fuzzy": q_decontaminate_fuzzy,
-    # round 6 (late) swapped spans_explode (driver-green r1-r5) for its
-    # strict superset spans_strip_media — the same span synthesis and
-    # order invariant plus the kind projection + offset compaction, so
-    # the interleaved-sequence machinery keeps its hard signal.
     "spans_strip_media": q_spans_strip_media,
     "text_tfidf": q_text_tfidf,
-    # round 6 (late) swapped dedup_exact (driver-green r1-r5; the
-    # exact-hash keeper machinery stays in-window via dedup_lines_global
-    # and corpus_curation_rep's dedup stage) for temperature_resample.
     "temperature_resample": q_temperature_resample,
     "dedup_minhash_lsh_pairs": q_minhash_lsh_pairs,
-    # round 6 (late) swapped dedup_simhash (driver-green r1-r5; the
-    # hamming-chunk blocking stays pytest-covered and the near-dup
-    # surface keeps hard signals via dedup_minhash_lsh_pairs +
-    # dedup_fingerprint_overlap in-window) for url_domains, and
-    # dedup_ngram_jaccard (driver-green r1-r5; the shingle machinery
-    # stays in-window via dedup_minhash_signatures and the LSH-verify
-    # lineage) for text_pii_redact.
     "url_domains": q_url_domains,
     "text_pii_redact": q_text_pii_redact,
     "text_lm_score": q_text_lm_score,
     "dedup_fingerprint_overlap": q_fingerprint_overlap,
-    # round 6 swapped decontaminate (driver-green r2-r5; the exact
-    # hash-equi-join machinery stays in-window as dedup_exact and the
-    # decontamination surface as decontaminate_fuzzy) for text_bpe_apply.
-    "text_bpe_apply": q_text_bpe_apply,
     "dedup_components": q_dedup_components,
-    # round 7 swapped text_features (driver-green r1-r6; the lang-ID +
-    # heuristic-quality stages keep hard signals in-window inside
-    # corpus_curation_rep's gates) to the tail for the new hashed-linear
-    # quality classifier.
     "quality_classifier": q_quality_classifier,
-    # round 6 swapped sim_cosine_topk (driver-green r1-r5; in-window twin
-    # sim_ivf_topk_full is checked against the IDENTICAL brute-force
-    # oracle, so the cosine kernel keeps its hard signal) for
-    # text_repetition.
     "text_repetition": q_text_repetition,
-    "sim_ivf_topk_full": q_ivf_topk_full,
-    "media_audio_features": q_media_audio_features,
-    # round 6 swapped media_image_features (driver-green r2-r5; the PGM
-    # codec stays golden-tested in tests/test_multimodal.py and the media
-    # surface in-window as media_audio_features) for token_budget_subword.
-    "token_budget_subword": q_token_budget_subword,
-    "sim_ivf2_topk_full": q_ivf2_topk_full,
-    # round 6 swapped media_video_frames (driver-green r3-r5; the media
-    # codec machinery stays in-window as media_audio_features +
-    # media_image_features) out of the window for stratified_sample —
-    # the one registry entry that had never had a driver row.
     "stratified_sample": q_stratified_sample,
-    # round 6 (late) swapped tpch_q1_pricing (driver-green r1-r5; the
-    # SQL-passthrough/aggregation machinery keeps hard signals in-window
-    # via window_top_orders and events_sessionize) for the new
-    # corpus-global line dedup.
     "dedup_lines_global": q_dedup_lines_global,
-    # round 7 swapped geo_within_distance (driver-green r4-r6; the cell
-    # window + distance kernel keeps its hard signal in-window via
-    # geo_knn_join, which shares the window helper) to the tail
-    # for the new lakehouse row-op entry.
     "table_upsert": q_table_upsert,
     "geo_areal_interpolate": q_geo_areal_interpolate,
     "geo_measures_geodesic": q_geo_measures_geodesic,
     "events_sessionize": q_events_sessionize,
     "events_asof_rates": q_events_asof_rates,
-    # round 6 (late) swapped read_bounds (driver-green r1-r5; the bounds
-    # kernel stays hard-signaled in-window — every geo query derives its
-    # envelope columns through it and geo_bbox_filter gates on them) for
-    # the new CCNet-style perplexity-percentile gate.
     "quality_percentile": q_quality_percentile,
-    "sim_ivf2pq_topk_full": q_ivf2pq_topk_full,
     "text_chunking": q_text_chunking,
-    # round 6 (late) swapped window_top_orders (driver-green r1-r5; SQL
-    # window-function machinery keeps hard signals in-window via
-    # events_sessionize, text_tfidf ranking, and chunk_pack_global's
-    # two-phase rank) for the new corpus-global substring dedup.
     "dedup_spans_global": q_dedup_spans_global,
-    # round 6 swapped corpus_curation (driver-green r1-r5) for its strict
-    # superset corpus_curation_rep (same dedup + quality + lang stages
-    # plus the new repetition gates) — every stage keeps a hard signal.
     "corpus_curation_rep": q_corpus_curation_rep,
-    # round 6 (late) swapped geo_curation (driver-green r1-r5; every
-    # stage of it — bbox filter, PIP join, measures — keeps its own
-    # hard signal in-window, and the pipeline shape stays in-window as
-    # corpus_curation_rep) for cluster_sample.
-    "cluster_sample": q_cluster_sample,
-    # round 6 swapped dataset_split (driver-green r1-r5; the md5-bucket
-    # machinery keeps hard signals in-window via domain_mix and
-    # stratified_sample's md5 ordering) for semdedup_exact.
-    "semdedup_exact": q_semdedup_exact,
-    # round 7: semdedup_pruned rotated IN (from the r6 tail slot) right
-    # beside its exact twin — both SemDeDup variants now hold driver
-    # rows in the same round.
-    "semdedup_pruned": q_semdedup_pruned,
-    # round 6 (late) swapped domain_mix (driver-green r1-r5; the
-    # md5-bucket resampling machinery keeps hard signals in-window via
-    # stratified_sample and the new cluster_sample keep rule) for
-    # decontaminate_bloom, and token_budget (driver-green r1-r5; the
-    # two-phase prefix-sum machinery stays in-window as
-    # token_budget_subword) for text_normalize.
     "decontaminate_bloom": q_decontaminate_bloom,
     "text_normalize": q_text_normalize,
-    # The driver records correctness rows for the FIRST 50 entries only,
-    # so the window is ROTATED across rounds to give every oracled entry
-    # a hard-signal row (round-3 VERDICT item 8): rounds 1-3 checked
-    # geo_pip_join_boundary / geo_intersects_join_poly /
-    # geo_zonal_stats_poly in-window (all green in CORRECTNESS_r03);
-    # round 4 swapped in geo_pip_join_salted / geo_pip_join_bucketed /
-    # dedup_minhash_signatures (all green in CORRECTNESS_r04); round 5
-    # swaps in the seven round-4 additions (sim_ivf2_topk_full,
-    # geo_measures, geo_reproject, geo_clip, geo_within_distance,
-    # geo_areal_interpolate, geo_measures_geodesic) in place of
-    # long-driver-green entries that have a green twin still in-window
-    # (geo_mask_filter ~ geo_bbox_filter, salted/bucketed ~ geo_pip_join,
-    # media_resize ~ media_image_features, tpch_q3/region_rollup ~
-    # tpch_q1, events_hourly ~ events_sessionize). Every tail entry
-    # remains fully oracled (ORACLES rows below) and pytest-covered
-    # every round via tests/test_entry_oracle.py. Round 5 also swaps
-    # the new sim_ivf2pq_topk_full into total_bounds' slot
-    # (total_bounds: green r1-r4, twin read_bounds stays in-window).
     "total_bounds": q_total_bounds,
     "geo_mask_filter": q_geo_mask,
     "geo_pip_join_salted": q_geo_pip_join_salted,
     "geo_pip_join_bucketed": q_geo_pip_join_bucketed,
-    "media_resize": q_media_resize,
-    "tpch_q3_top_orders": q_tpch_q3,
-    "region_rollup": q_region_rollup,
     "events_hourly": q_events_hourly,
     "geo_pip_join_boundary": q_geo_pip_join_boundary,
     "geo_intersects_join_poly": q_geo_intersects_join_poly,
     "geo_zonal_stats_poly": q_geo_zonal_poly,
-    # round 5 swapped events_json_props (driver-green r1-r4; JSON-parse
-    # machinery also exercised by events_sessionize's payload path) out
-    # of the window to make room for text_chunking, and
-    # spans_reconstruct (driver-green r1-r4; the span byte-identity
-    # invariant stays pytest-asserted through the mapInArrow stages and
-    # spans_explode remains in-window) for text_tfidf.
     "events_json_props": q_events_json_props,
     "spans_reconstruct": q_spans_reconstruct,
-    # round 5 also swapped curve_linearize (driver-green r1-r4;
-    # additionally golden-tested against the reference's own curve
-    # fixtures every round in tests/test_curves.py) for
-    # chunk_pack_global, and dedup_winnow_fingerprints (driver-green
-    # r1-r4; the winnow machinery stays exercised in-window as
-    # dedup_fingerprint_overlap's lineage) for text_lm_score.
     "curve_linearize": q_curve_linearize,
     "dedup_winnow_fingerprints": q_winnow_fingerprints,
-    # round 5 swapped geo_rasterize (driver-green r1-r4; burn-in shares
-    # the zonal machinery with in-window geo_zonal_stats) for
-    # decontaminate_fuzzy.
     "geo_rasterize": q_geo_rasterize,
-    # round 6 swapped media_video_frames here (see its window-slot note
-    # above); the Y4M codec stays golden-tested every round in
-    # tests/test_multimodal.py.
-    "media_video_frames": q_media_video_frames,
-    # round 6 tail additions — each swapped out of the window for a new
-    # tokenizer entry (see the window-slot notes above); all driver-green
-    # r2-r5 with in-window twins, still fully oracled + preflighted.
     "geo_pip_join_poly": q_geo_pip_join_poly,
     "geo_knn_join_haversine": q_geo_knn_haversine,
     "decontaminate": q_decontaminate,
-    "media_image_features": q_media_image_features,
-    "sim_cosine_topk": q_sim_topk,
     "corpus_curation": q_corpus_curation,
     "dataset_split": q_dataset_split,
-    # round 7: geo_measures to the tail (driver-green r1-r6) for
-    # semdedup_pruned's window slot (see the note at the top of the
-    # registry); still fully oracled + preflighted. geo_within_distance
-    # likewise (driver-green r4-r6) for table_upsert's slot.
     "geo_measures": q_geo_measures,
     "geo_within_distance": q_geo_within_distance,
     "dedup_minhash_signatures": q_minhash_signatures,
     "text_features": q_text_features,
-    # round 6 (late) window swaps — both driver-green r1-r5, moved to
-    # the tail for dedup_lines_global / quality_percentile (see the
-    # window-slot notes above); still fully oracled + preflighted.
-    "tpch_q1_pricing": q_tpch_q1,
     "read_bounds": q_read_bounds,
-    # round 6 (late): window_top_orders to the tail (driver-green r1-r5)
-    # for dedup_spans_global; still fully oracled + preflighted.
-    "window_top_orders": q_window_top_orders_per_segment,
-    # round 6 (late) scrubbing-batch swaps — all five driver-green
-    # r1-r5, moved to the tail for text_normalize / text_pii_redact /
-    # url_domains / decontaminate_bloom / cluster_sample (see the
-    # window-slot notes above); still fully oracled + preflighted.
     "dedup_simhash": q_simhash,
     "dedup_ngram_jaccard": q_ngram_jaccard,
     "domain_mix": q_domain_mix,
     "token_budget": q_token_budget,
     "geo_curation": q_geo_curation,
-    # round 6 (late): spans_explode and dedup_exact to the tail
-    # (driver-green r1-r5) for spans_strip_media / temperature_resample
-    # (see the window-slot notes above); still fully oracled.
     "spans_explode": q_spans_explode,
     "dedup_exact": q_dedup_exact,
-    # round 6 (late): geo_tile_assignment to the tail (driver-green
-    # r1-r5) for its superset geo_tile_pyramid; still fully oracled.
     "geo_tile_assignment": q_geo_tile_assignment,
-    # round 6 (late): geo_zonal_stats to the tail (driver-green r1-r5)
-    # for corpus_stats; still fully oracled.
     "geo_zonal_stats": q_geo_zonal,
-    # Rows-only queries (no DuckDB oracle by design) LAST so the driver's
-    # fixed-size correctness window always covers every oracled query first.
-    # (media_features retired in round 3 — all four media paths are real
-    # oracled codecs; adaptive_tile_map gained an exact unrolled-CTE
-    # oracle in round 3, leaving the pruned-nprobe IVF as the single
-    # rows-only entry, recall-gated in pytest.)
-    "sim_ivf_topk": q_ivf_topk,
 }
 
 ORACLES = {
@@ -3500,7 +2651,6 @@ ORACLES = {
     "text_pii_redact": _oracle_text_pii(),
     "url_domains": _oracle_url_domains(),
     "decontaminate_bloom": ORACLE_DECONTAMINATE_BLOOM,
-    "cluster_sample": _oracle_cluster_sample(),
     "spans_strip_media": ORACLE_SPANS_STRIP_MEDIA,
     "temperature_resample": ORACLE_TEMPERATURE_RESAMPLE,
     "geo_tile_pyramid": _oracle_tile_pyramid(),
@@ -3511,21 +2661,11 @@ ORACLES = {
     "text_tfidf": ORACLE_TEXT_TFIDF,
     "chunk_pack_global": ORACLE_CHUNK_PACK_GLOBAL,
     "text_lm_score": ORACLE_TEXT_LM_SCORE,
-    "text_tokenize": ORACLE_TEXT_TOKENIZE,
-    "bpe_train_merges": ORACLE_BPE_TRAIN,
-    "text_bpe_apply": ORACLE_BPE_APPLY,
-    "token_budget_subword": ORACLE_BUDGET_SUBWORD,
     "text_repetition": ORACLE_TEXT_REPETITION,
     "corpus_curation_rep": ORACLE_CURATION_REP,
     "dedup_lines_global": ORACLE_DEDUP_LINES_GLOBAL,
     "dedup_spans_global": ORACLE_DEDUP_SPANS_GLOBAL,
     "quality_percentile": ORACLE_QUALITY_PERCENTILE,
-    "semdedup_exact": _oracle_semdedup(),
-    "semdedup_pruned": _oracle_semdedup(probe_cap=_SEMDEDUP_CAP),
-    "sim_cosine_topk": ORACLE_SIM_TOPK,
-    "sim_ivf_topk_full": ORACLE_SIM_TOPK,
-    "sim_ivf2_topk_full": ORACLE_SIM_TOPK,
-    "sim_ivf2pq_topk_full": ORACLE_SIM_TOPK,
     "geo_measures": f"""SELECT zone_id,
         round((zx1 - zx0) * (zy1 - zy0), 7) AS area_r,
         round(2 * ((zx1 - zx0) + (zy1 - zy0)), 7) AS len_r,
@@ -3576,13 +2716,6 @@ ORACLES = {
         round(radians(lon) * 6378137.0, 4) AS mx,
         round(ln(tan(pi() / 4 + radians(least(greatest(lat, -85.06), 85.06)) / 2)) * 6378137.0, 4) AS my
         FROM {DOCS_GEO_SQL} d""",
-    "media_audio_features": ORACLE_AUDIO,
-    "media_image_features": ORACLE_IMAGE,
-    "media_resize": ORACLE_RESIZE,
-    "media_video_frames": ORACLE_VIDEO,
-    "tpch_q1_pricing": ORACLE_Q1,
-    "tpch_q3_top_orders": ORACLE_Q3,
-    "region_rollup": ORACLE_REGION,
     "events_hourly": ORACLE_EVENTS_HOURLY,
     "events_sessionize": ORACLE_SESSIONIZE,
     "events_asof_rates": ORACLE_ASOF,
@@ -3596,18 +2729,8 @@ ORACLES = {
         SELECT cast(json_extract_string(props, '$.k') as bigint) AS k,
                count(*) AS n_events, min(event_id) AS first_event
         FROM events GROUP BY 1""",
-    "window_top_orders": """
-        WITH j AS (
-          SELECT c.c_mktsegment, o.o_orderkey, o.o_totalprice
-          FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey)
-        SELECT c_mktsegment, o_orderkey, o_totalprice, rnk FROM (
-          SELECT *, row_number() OVER (PARTITION BY c_mktsegment
-                                       ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-          FROM j) t WHERE rnk <= 3""",
     "corpus_curation": ORACLE_CURATION,
     "geo_curation": ORACLE_GEO_CURATION,
     "dataset_split": ORACLE_SPLIT,
     "token_budget": ORACLE_BUDGET,
-    # sim_ivf_topk, adaptive_tile_map: rows-only by design
-    # (approximate / driver-internal determinism checks)
 }

@@ -382,105 +382,13 @@ def run_once_scrub(cpus: int, n_docs: int) -> dict:
             "docs_per_sec": round(n_docs / wall, 1)}
 
 
-def run_once_tokenize(cpus: int, n_docs: int) -> dict:
-    """Round-7 operator family: greedy subword segmentation after the
-    single-pass mapInPandas rework (tokenizer.py tokenize_greedy).
-    Shape under test: corpus word explode (zero-shuffle), distinct-word
-    aggregation (one shuffle, map-side combine), ONE Arrow-batched
-    segmentation stage over the dimension-sized distinct table, hash
-    join back onto the word stream, then a column-consuming aggregate.
-    The Python stage is bounded by distinct words, not corpus size, so
-    the scaling axis is the JVM explode/join/aggregate volume — the
-    100 TB shape.
-
-    SINGLE-BOX CONTROL: string-heavy stages are memory-bandwidth-bound
-    in one JVM (the round-3 shared-bus finding that made the pip family
-    use arithmetic-only synthesis). To separate the operator's plan
-    from the host's bus ceiling, this runner also times ``synth_sec`` —
-    the bare corpus string synthesis+scan with NO tokenizer stage. The
-    honest scaling statement is the ratio of ratios: if full-pipeline
-    N->4N efficiency equals the synthesis efficiency, the tokenizer
-    plan adds zero scaling penalty beyond the shared bus (which a real
-    cluster's per-node buses do not have).
-
-    Heap/GC notes (measured): a 48g heap is wildly unstable here (2M
-    docs: 26s first run then 60-360s repeats — GC/paging thrash against
-    co-tenants); 16g is stable. GC threads are pinned to the width —
-    JVM defaults size GC worker pools to the MACHINE's 32 cores, which
-    silently lends a local[2] run 32 collector threads for its
-    allocation-heavy stages and deflates measured efficiency.
-    """
-    from pyspark.sql import functions as F
-
-    from pyogrio_spark.operators.tokenizer import tokenize_greedy
-    from pyogrio_spark.session import get_spark
-
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
-    spark = get_spark(
-        f"scaling_tok_{cpus}", master=f"local[{cpus}]", shuffle_partitions=64,
-        extra_conf={
-            "spark.ui.showConsoleProgress": "false",
-            # pin GC worker pools to the width (see docstring)
-            "spark.driver.extraJavaOptions": (
-                f"-XX:ParallelGCThreads={cpus} -XX:ConcGCThreads={max(1, cpus // 4)}"
-            ),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.range(n_docs, numPartitions=4 * cpus).select(
-        F.col("id").alias("doc_id"),
-        # 24 words/doc from a 200k-value pool: corpus word stream is
-        # 24x n_docs while the distinct-word table (and therefore the
-        # Python segmentation stage) stays dimension-sized — the Zipf
-        # shape the operator is designed for. This also keeps the
-        # measured scaling axis on the JVM explode/shuffle/join volume:
-        # Python workers are separate PROCESSES not capped by local[N],
-        # so a Python-heavy stage lets a narrow width borrow host cores
-        # and deflates measured efficiency (seen at 0.69 with a 1M-word
-        # pool at only 12 words/doc).
-        F.concat_ws(
-            " ",
-            *[((F.col("id") * (48271 + j)) % 200_000).cast("string") for j in range(24)],
-        ).alias("text"),
-    )
-    vocab = [str(d) for d in range(10)] + [
-        f"{a}{b}" for a in "0123456789" for b in "0123456789"
-    ]
-
-    def run():
-        out = tokenize_greedy(docs, vocab)
-        row = out.select(
-            F.count("*").alias("n"),
-            F.sum(F.length("token")).alias("chars"),
-            F.sum("tok_pos").alias("psum"),
-        ).collect()[0]
-        return row["n"], row["chars"], row["psum"]
-
-    a = run()  # warm pass (codegen compile + JIT + Arrow worker spin-up)
-    t0 = time.perf_counter()
-    b = run()
-    wall = time.perf_counter() - t0
-    # shared-bus control: bare synthesis+scan of the same corpus, no
-    # tokenizer stages at all (see docstring)
-    docs.select(F.sum(F.length("text"))).collect()  # warm
-    t0 = time.perf_counter()
-    docs.select(F.sum(F.length("text"))).collect()
-    synth = time.perf_counter() - t0
-    spark.stop()
-    assert a == b
-    return {"cpus": cpus, "docs": n_docs, "tokens": a[0], "wall_sec": round(wall, 3),
-            "docs_per_sec": round(n_docs / wall, 1),
-            "synth_sec": round(synth, 3)}
-
-
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000_000
     job = sys.argv[2] if len(sys.argv) > 2 else "pip"
     runner = {"pip": run_once, "dedup": run_once_shuffle, "knn": run_once_knn,
               "asof": run_once_asof, "asof_window": run_once_asof_window,
               "minhash": run_once_minhash, "scrub": run_once_scrub,
-              "chunk": run_once_chunk, "linededup": run_once_linededup,
-              "tokenize": run_once_tokenize}[job]
+              "chunk": run_once_chunk, "linededup": run_once_linededup}[job]
     r8 = runner(8, n_docs)
     r32 = runner(32, n_docs)
     eff = (r32["docs_per_sec"] / r8["docs_per_sec"]) / 4.0

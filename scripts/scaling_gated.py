@@ -59,7 +59,6 @@ def run_width(job: str, cpus: int, n_docs: int) -> dict | None:
         "fn = dict(pip=sb.run_once, dedup=sb.run_once_shuffle, knn=sb.run_once_knn,\n"
         "          asof=sb.run_once_asof, minhash=sb.run_once_minhash,\n"
         "          asof_window=sb.run_once_asof_window,\n"
-        "          tokenize=sb.run_once_tokenize,\n"
         "          scrub=sb.run_once_scrub, chunk=sb.run_once_chunk,\n"
         "          linededup=sb.run_once_linededup)[{j!r}]\n"
         "kw = dict(cached=False) if {j!r} == 'pip' else dict()\n"

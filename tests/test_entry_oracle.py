@@ -15,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyogrio_spark.queries import ORACLES, QUERIES
 
 SF = "/root/testdata/sf0.01"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"]
+TABLES = ["orders", "events", "documents"]
 
 
 @pytest.fixture(scope="module")
@@ -62,7 +62,13 @@ def test_query_matches_oracle(spark, ddb, name):
             assert eq.all(), f"{name}.{c}: {np.count_nonzero(~eq)} mismatches; first got={got[c][~eq].iloc[:3].tolist()} want={want[c][~eq].iloc[:3].tolist()}"
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, name):
-    df = QUERIES[name](spark, SF)
-    assert df.count() >= 0 and len(df.schema.fields) > 0
+def test_every_query_has_an_oracle():
+    assert set(QUERIES) == set(ORACLES)
+
+
+def test_bench_headline_names_exist():
+    # a stale HEADLINE name would otherwise surface only as a KeyError
+    # in a bench run
+    import bench
+
+    assert set(bench.HEADLINE) <= set(QUERIES)

@@ -86,3 +86,23 @@ def test_intersects_join_salted_shuffle_same_result(spark):
     salted = pairs(broadcast_cover=False, salt=4)
     assert broadcast == shuffled == salted
     assert broadcast, "fixture must produce pairs"
+
+
+def test_keep_left_cols_without_left_key(spark):
+    # two distinct docs that share every kept column: the pair dedup
+    # must still key on doc_id, which keep_left_cols leaves out
+    ring = np.array([(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0), (0.0, 0.0)])
+    zones_pd = pd.DataFrame({"fid": [1], "geometry_wkb": [W.encode_polygon([ring])]})
+    left = spark.createDataFrame(
+        pd.DataFrame({
+            "doc_id": ["d0", "d1"],
+            "name": ["same", "same"],
+            "geometry_wkb": [W.encode_point(2.0, 3.0), W.encode_point(7.0, 6.0)],
+            "xmin": [2.0, 7.0], "ymin": [3.0, 6.0], "xmax": [2.0, 7.0], "ymax": [3.0, 6.0],
+        }),
+        schema="doc_id string, name string, geometry_wkb binary, xmin double, ymin double, xmax double, ymax double",
+    )
+    cover = zones_cell_cover(spark, zones_pd)
+    out = intersects_join(left, cover, keep_left_cols=["name"])
+    assert out.columns == ["name", "fid"]
+    assert sorted(map(tuple, out.collect())) == [("same", 1), ("same", 1)]

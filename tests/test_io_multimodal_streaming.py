@@ -7,12 +7,6 @@ from pyspark.sql import functions as F
 from pyogrio_spark.fixtures import DOCS_SPARK_SCHEMA, make_docs
 from pyogrio_spark.io.lineage import StageCheckpoint, cell_range_units, unit_filter
 from pyogrio_spark.io.writer import current_snapshot, read_committed, write_table
-import numpy as np
-
-from pyogrio_spark.operators.multimodal import (
-    explode_media_spans,
-    extract_video_frames,
-)
 from pyogrio_spark.streaming.events import sessionize_events, windowed_event_counts
 
 
@@ -120,40 +114,6 @@ def test_lineage_resume_after_mid_unit_kill(spark, tmp_path):
     assert out.select("doc_id").distinct().count() == docs.count()
 
 
-def test_media_span_extraction_and_video_frames(spark):
-    docs = spark.createDataFrame(make_docs(300), schema=DOCS_SPARK_SCHEMA)
-    media = explode_media_spans(docs)
-    n_media = media.count()
-    assert n_media > 0
-    # real Y4M codec: deterministic synthesis -> container walk; every
-    # sampled frame's mean luma must equal the closed-form constant
-    docs2 = docs.withColumn("doc_id", F.monotonically_increasing_id())
-    feats = extract_video_frames(docs2, every_n=2, max_frames=4).toPandas()
-    assert len(feats) > 0
-    for _, r in feats.head(50).iterrows():
-        assert r.width == 8 + 2 * ((r.doc_id * 3 + r.span_offset) % 12)
-        assert r.mean_luma == float((r.doc_id * 7 + r.span_offset * 11 + r.frame_index * 13) % 256)
-        assert r.frame_index % 2 == 0 and r.frame_index < r.n_frames
-    # per-asset frame counts: every 2nd frame, capped at 4
-    per = feats.groupby(["doc_id", "span_offset"]).agg(n=("frame_index", "size"), nf=("n_frames", "first"))
-    assert (per.n == np.minimum((per.nf + 1) // 2, 4)).all()
-
-
-def test_y4m_codec_roundtrip_unit():
-    from pyogrio_spark.operators.multimodal import decode_y4m_frames, synthesize_y4m
-
-    b = synthesize_y4m(5, 1)
-    rows = decode_y4m_frames(pd.Series([b, None, b"junk"]), every_n=2, max_frames=4)
-    assert all(r[0] == 0 for r in rows)  # invalid payloads contribute nothing
-    w, h, nf = 8 + 2 * ((5 * 3 + 1) % 12), 8 + 2 * ((5 * 5 + 1) % 8), 4 + (5 + 1) % 8
-    assert rows[0][1:] == (w, h, nf, 0, float((5 * 7 + 1 * 11) % 256))
-    assert [r[4] for r in rows] == [0, 2, 4, 6][: len(rows)]
-    # a C420 stream (chroma planes present) still means over the Y plane
-    y4m420 = b"YUV4MPEG2 W4 H4 F25:1 Ip A1:1 C420jpeg\n" + (b"FRAME\n" + bytes([9]) * 16 + bytes([128]) * 8) * 2
-    rows420 = decode_y4m_frames(pd.Series([y4m420]), every_n=1, max_frames=8)
-    assert [(r[4], r[5]) for r in rows420] == [(0, 9.0), (1, 9.0)] and rows420[0][3] == 2
-
-
 def test_streaming_windowed_counts_match_batch(spark, tmp_path):
     import shutil
 
@@ -235,43 +195,6 @@ def test_span_sequence_survives_storage_roundtrip(spark, tmp_path):
     back = read_committed(spark, path)
     after = {r.doc_id: r.d for r in back.select("doc_id", span_digest().alias("d")).collect()}
     assert before == after
-
-
-def test_pgm_decoder_handles_comments_and_roundtrip():
-    import numpy as np
-    import pandas as pd
-
-    from pyogrio_spark.operators.multimodal import decode_pgm_batch, synthesize_pgm
-
-    # synthesized payloads decode to their closed-form parameters
-    out = decode_pgm_batch(pd.Series([synthesize_pgm(12, 1)]))
-    assert (out.width[0], out.height[0], out.maxval[0]) == (8 + 37 % 24, 8 + 61 % 16, 255)
-    assert out.mean_luma[0] == (12 * 7 + 11) % 256
-    # netpbm grammar: comments between header fields are legal
-    img = b"P5\n# a comment\n4 2\n# another\n255\n" + bytes(range(8))
-    out2 = decode_pgm_batch(pd.Series([img]))
-    assert (out2.width[0], out2.height[0]) == (4, 2)
-    assert abs(out2.mean_luma[0] - np.arange(8).mean()) < 1e-12
-    # non-PGM bytes -> nulls
-    assert decode_pgm_batch(pd.Series([b"nope"])).width.isna().all()
-
-
-def test_pgm_resize_semantics():
-    import numpy as np
-    import pandas as pd
-
-    from pyogrio_spark.operators.multimodal import decode_pgm_batch, resize_pgm_batch
-
-    # gradient image: resize keeps dims contract and plausible content
-    w, h = 32, 8
-    raster = (np.arange(w * h, dtype=np.uint8) % 256).reshape(h, w)
-    img = f"P5\n{w} {h}\n255\n".encode() + raster.tobytes()
-    small = resize_pgm_batch(pd.Series([img]), max_side=16)[0]
-    meta = decode_pgm_batch(pd.Series([small])).iloc[0]
-    assert meta.width == 16 and meta.height == 4  # (side*16)//32
-    # never upsamples
-    tiny = f"P5\n4 4\n255\n".encode() + bytes(16)
-    assert bytes(resize_pgm_batch(pd.Series([tiny]), max_side=16)[0]) == tiny
 
 
 def test_compact_table_rewrites_small_files_atomically(spark, tmp_path):

@@ -128,26 +128,6 @@ def test_fingerprint_pairs_cap_equivalence(spark):
     assert seen == {(1, 3), (1, 5), (3, 5)}
 
 
-def test_semantic_dedup_salt_invariance(spark):
-    """The salted pair join returns the identical kept set for any salt
-    (every pair meets exactly once for any S; S=1 is the unsalted
-    plan)."""
-    import numpy as np
-
-    from pyogrio_spark.operators.similarity import make_centroids, semantic_dedup
-
-    rng = np.random.default_rng(11)
-    rows = [(int(i), [float(x) for x in rng.normal(0, 1, 16)]) for i in range(300)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    cents = make_centroids(16, 4)
-    a = semantic_dedup(emb, cents, threshold=0.3, salt=1).orderBy("vec_id").collect()
-    b = semantic_dedup(emb, cents, threshold=0.3, salt=8).orderBy("vec_id").collect()
-    c = semantic_dedup(emb, cents, threshold=0.3, salt=3, probe_cap=10).orderBy("vec_id").collect()
-    d = semantic_dedup(emb, cents, threshold=0.3, salt=1, probe_cap=10).orderBy("vec_id").collect()
-    assert a == b
-    assert c == d
-
-
 def test_write_table_footer_count_partitioned(tmp_path, spark):
     """write_table's manifest row count (parquet-footer walk, no second
     job) is exact for plain AND partitioned layouts."""
