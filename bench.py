@@ -30,36 +30,21 @@ HEADLINE = [
     "geo_zonal_stats",
     "spans_explode",
     "spans_reconstruct",
-    "dedup_minhash_lsh_pairs",
-    "dedup_exact",
-    "dedup_fingerprint_overlap",
-    "text_features",
     "events_sessionize",
-    "corpus_curation",
-    "geo_curation",
     "geo_intersects_join",
     "geo_intersects_join_poly",
     "dataset_split",
     "domain_mix",
     "curve_linearize",
-    "token_budget",
     # round-4 additions: codegen reprojection over the full doc table,
     # batch measure kernels + exact rect clipping over the zone set
     "geo_reproject",
     "geo_measures",
     "geo_clip",
     # round-5 additions: zero-shuffle chunk+pack map over the corpus,
-    # cross-doc global packing (two-phase rank), tf-idf top terms
+    # cross-doc global packing (two-phase rank)
     "text_chunking",
     "chunk_pack_global",
-    "text_tfidf",
-    "text_lm_score",
-    # round-6 additions: Gopher repetition filters, corpus-global line
-    # dedup, perplexity-percentile gate
-    "text_repetition",
-    "dedup_lines_global",
-    "dedup_spans_global",
-    "quality_percentile",
     # round-6 scrubbing batch: normalization, PII redaction, URL/domain
     # hygiene (broadcast blocklist anti-join), Bloom-bitset benchmark
     # decontamination
@@ -73,16 +58,11 @@ HEADLINE = [
     "temperature_resample",
     # multi-zoom tile rollup (one corpus agg + reused-exchange parents)
     "geo_tile_pyramid",
-    # per-(lang, source) corpus report card with exact percentiles
-    "corpus_stats",
     # round-7 additions: copy-on-write MERGE + NULL-safe DELETE snapshot
     # ops end-to-end; OGRSQL dialect translation running as one Catalyst
     # statement
     "table_upsert",
     "sql_ogr_dialect",
-    # hashed-linear quality classifier: one codegen aggregate HOF, zero
-    # shuffle, weight vector as a parsed literal
-    "quality_classifier",
 ]
 
 

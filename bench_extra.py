@@ -10,7 +10,7 @@ NOT the frozen driver bench (bench.py). This file:
 Usage:
   python bench_extra.py [query ...]            # default: all HEADLINE
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py \
-      --repeat 3 --plans plans/r08 --suffix _before dedup_fingerprint_overlap
+      --repeat 3 --plans plans/r08 --suffix _before geo_pip_join
 """
 
 from __future__ import annotations

@@ -18,23 +18,30 @@ import os
 _ZIP_CACHE: dict[tuple[str, float], str] = {}
 
 
-def _unzip_member(path: str, want_exts: tuple[str, ...]) -> str:
-    """Extract a zipped dataset (reference: .shp.zip/.shz/.gpkg.zip and
-    the /vsizip/ chain, /root/reference/pyogrio/util.py:94-175) into a
-    temp dir and return the single member matching ``want_exts``.
-    zipfile's extract sanitizes member names (no zip-slip)."""
-    import tempfile
+def _extracted_root(path: str) -> str:
+    """Extract the archive once per (path, mtime) into a temp dir that
+    lives until the process exits. zipfile's extract sanitizes member
+    names (no zip-slip)."""
     import zipfile
+
+    from pyogrio_spark.uri import process_temp_dir
 
     key = (os.path.abspath(path), os.path.getmtime(path))
     root = _ZIP_CACHE.get(key)
     if root is None or not os.path.isdir(root):
-        root = tempfile.mkdtemp(prefix="pyogrio_spark_zip_")
+        root = process_temp_dir("pyogrio_spark_zip_")
         with zipfile.ZipFile(path) as z:
             z.extractall(root)
         _ZIP_CACHE[key] = root
+    return root
+
+
+def _unzip_member(path: str, want_exts: tuple[str, ...]) -> str:
+    """Extract a zipped dataset (reference: .shp.zip/.shz/.gpkg.zip and
+    the /vsizip/ chain, /root/reference/pyogrio/util.py:94-175) and
+    return the single member matching ``want_exts``."""
     hits = []
-    for dirpath, _, files in os.walk(root):
+    for dirpath, _, files in os.walk(_extracted_root(path)):
         hits.extend(
             os.path.join(dirpath, f) for f in files if f.lower().endswith(want_exts)
         )
@@ -48,17 +55,7 @@ def _unzip_member(path: str, want_exts: tuple[str, ...]) -> str:
 def _unzip_named_member(path: str, member: str) -> str:
     """Extract the archive and return the explicitly-requested member
     (the ``zip://a.zip!inner.shp`` chain); reuses the per-archive cache."""
-    import tempfile
-    import zipfile
-
-    key = (os.path.abspath(path), os.path.getmtime(path))
-    root = _ZIP_CACHE.get(key)
-    if root is None or not os.path.isdir(root):
-        root = tempfile.mkdtemp(prefix="pyogrio_spark_zip_")
-        with zipfile.ZipFile(path) as z:
-            z.extractall(root)
-        _ZIP_CACHE[key] = root
-    hit = os.path.join(root, member.lstrip("/"))
+    hit = os.path.join(_extracted_root(path), member.lstrip("/"))
     if not os.path.exists(hit):
         raise ValueError(f"{path}: archive has no member {member!r}")
     return hit

@@ -8,10 +8,6 @@ deterministically from ``doc_id`` with integer arithmetic that both
 engines evaluate bit-identically; synthetic boundaries carry a +-5e-6
 offset so no point ever lands on a zone/bbox edge (the engines use
 different but interior-equivalent predicates).
-
-Shared-hash rule: md5 is the only hash both engines expose, so every
-oracle-checked signature (minhash, simhash, fingerprints) uses the
-60-bit md5 prefix (``_hash60`` in operators/dedup.py).
 """
 
 from __future__ import annotations
@@ -23,19 +19,9 @@ from pyspark.sql import functions as F
 
 from pyogrio_spark.fixtures import DEFAULT_RES as GEO_RES
 from pyogrio_spark.functions.geo import bounds_columns, cell_id_column, point_wkb_column
-from pyogrio_spark.functions.text import LANG_PROFILES, lang_id, quality_score, token_count, word_piece_count
 from pyogrio_spark.geometry import wkb as W
 from pyogrio_spark.index.grid import cell_expr_sql
 from pyogrio_spark.io.reader import read_table
-from pyogrio_spark.operators.dedup import (
-    exact_dedup,
-    fingerprint_overlap_pairs,
-    winnow_fingerprints,
-    minhash_lsh_pairs,
-    minhash_signature,
-    ngram_jaccard_pairs,
-    simhash_column,
-)
 from pyogrio_spark.operators.knn import knn_join
 from pyogrio_spark.operators.range_join import bbox_range_join, boxes_cell_cover
 from pyogrio_spark.operators.spatial_join import point_in_polygon_join, zones_cell_cover
@@ -253,11 +239,10 @@ def _bucketed_pip_tables(spark, sf):
     hit = _BUCKETED_CACHE.get(key)
     if hit is not None:
         return hit
-    import tempfile
-
     from pyogrio_spark.io.writer import write_bucketed
+    from pyogrio_spark.uri import process_temp_dir
 
-    d = tempfile.mkdtemp(prefix="pyogrio_spark_buckets_")
+    d = process_temp_dir("pyogrio_spark_buckets_")
     docs = _docs_geo(spark, sf).select("doc_id", "xmin", "ymin", "cell_id")
     cover = zones_cell_cover(spark, _zones_pd(), res=GEO_RES, zone_key="zone_id")
     write_bucketed(docs, "pip_docs_bkt", ["cell_id"], 32, sort_cols=["cell_id"], path=f"{d}/docs")
@@ -745,205 +730,7 @@ SELECT doc_id, (r = orig) AS matches, md5(r) AS digest FROM rec
 """
 
 
-# ============================================================ dedup queries
-
-def q_dedup_exact(spark, sf):
-    return exact_dedup(spark.read.parquet(f"{sf}/documents.parquet"))
-
-
-def q_minhash_signatures(spark, sf):
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    sig = minhash_signature(docs.select("doc_id", "text"), n_hashes=8)
-    return sig.select("doc_id", *[F.element_at("sig", i + 1).alias(f"h{i}") for i in range(8)])
-
-
-def _oracle_sig_cte(n_hashes: int) -> str:
-    # mirrors minhash_signature: one md5 per shingle, h_i = min(a + i*b)
-    hcols = ",\n    ".join(f"min(a + {i} * b) AS h{i}" for i in range(n_hashes))
-    return f"""
-tok AS (SELECT doc_id, string_split(lower(text), ' ') AS tokens FROM documents),
-sh AS (SELECT doc_id,
-         CASE WHEN len(tokens) >= 3
-              THEN list_transform(range(1, len(tokens) - 1), i -> array_to_string(list_slice(tokens, i, i + 2), ' '))
-              ELSE [array_to_string(tokens, ' ')] END AS shingles
-       FROM tok),
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-ab AS (SELECT doc_id,
-         ('0x' || substring(md5(s), 1, 15))::BIGINT AS a,
-         ('0x' || substring(md5(s), 17, 14))::BIGINT AS b
-       FROM ex),
-sig AS (SELECT doc_id, {hcols} FROM ab GROUP BY doc_id)"""
-
-
-ORACLE_MINHASH_SIG = "WITH " + _oracle_sig_cte(8) + "\nSELECT * FROM sig"
-
-
-def q_minhash_lsh_pairs(spark, sf):
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return minhash_lsh_pairs(docs, n_hashes=16, bands=4, threshold=0.5, max_bucket=64)
-
-
-def _oracle_minhash_pairs() -> str:
-    n, bands, rows = 16, 4, 4
-    band_key = " ".join(
-        "WHEN %d THEN md5(concat_ws(',', %s))" % (b, ", ".join(f"h{b * rows + r}" for r in range(rows)))
-        for b in range(bands)
-    )
-    matches = " + ".join(f"(a.h{i} = b.h{i})::INT" for i in range(n))
-    return f"""WITH {_oracle_sig_cte(n)},
-banded AS (
-  SELECT doc_id, {', '.join(f'h{i}' for i in range(n))}, band,
-         CASE band {band_key} END AS band_key
-  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, {bands - 1})) AS band)
-  QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) <= 64
-)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, ({matches}) / 16.0 AS est_jaccard
-FROM banded a JOIN banded b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-WHERE ({matches}) / 16.0 >= 0.5"""
-
-
-def q_simhash(spark, sf):
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return simhash_column(docs, use_md5=True)
-
-
-def _oracle_simhash() -> str:
-    votes = ",\n    ".join(
-        f"sum(CASE WHEN (hh >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(60)
-    )
-    recompose = " + ".join(f"CASE WHEN b{b} > 0 THEN {1 << b}::BIGINT ELSE 0 END" for b in range(60))
-    return f"""WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tokk FROM documents),
-h AS (SELECT doc_id, ('0x' || substring(md5(tokk), 1, 15))::BIGINT AS hh FROM tok),
-votes AS (SELECT doc_id, {votes} FROM h GROUP BY doc_id)
-SELECT doc_id, ({recompose}) AS simhash FROM votes"""
-
-
-def q_ngram_jaccard(spark, sf):
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return ngram_jaccard_pairs(docs, threshold=0.6)
-
-
-def _oracle_ngram() -> str:
-    # mirrors the rebuilt ngram_jaccard_pairs: candidates = banded
-    # MinHash LSH buckets (capped at 64), exact Jaccard verify >= 0.6
-    n, bands, rows = 16, 4, 4
-    band_key = " ".join(
-        "WHEN %d THEN md5(concat_ws(',', %s))" % (b, ", ".join(f"h{b * rows + r}" for r in range(rows)))
-        for b in range(bands)
-    )
-    return f"""WITH {_oracle_sig_cte(n)},
-banded AS (
-  SELECT doc_id, {', '.join(f'h{i}' for i in range(n))}, band,
-         CASE band {band_key} END AS band_key
-  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, {bands - 1})) AS band)
-  QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id) <= 64
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded a JOIN banded b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
-sets AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh)
-SELECT c.doc_a, c.doc_b,
-       len(list_intersect(x.s, y.s)) / (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) AS jaccard
-FROM cand c JOIN sets x ON x.doc_id = c.doc_a JOIN sets y ON y.doc_id = c.doc_b
-WHERE len(list_intersect(x.s, y.s)) / (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) >= 0.6"""
-
-
-def q_winnow_fingerprints(spark, sf):
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return winnow_fingerprints(docs, k=8, window=16, use_md5=True)
-
-
-ORACLE_WINNOW = """
-WITH g AS (
-  SELECT doc_id, p,
-         ('0x' || substring(md5(substring(text, p, 8)), 1, 15))::BIGINT AS h
-  FROM (SELECT doc_id, text, unnest(generate_series(1, greatest(length(text) - 7, 1))) AS p FROM documents))
-SELECT DISTINCT doc_id,
-       min(h) OVER (PARTITION BY doc_id ORDER BY p ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS fp
-FROM g
-"""
-
-
-def q_fingerprint_overlap(spark, sf):
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return fingerprint_overlap_pairs(docs, k=8, window=16, min_shared=2, use_md5=True)
-
-
-ORACLE_FP_OVERLAP = """
-WITH g AS (
-  SELECT doc_id, p,
-         ('0x' || substring(md5(substring(text, p, 8)), 1, 15))::BIGINT AS h
-  FROM (SELECT doc_id, text, unnest(generate_series(1, greatest(length(text) - 7, 1))) AS p FROM documents)),
-fps AS (
-  SELECT DISTINCT doc_id,
-         min(h) OVER (PARTITION BY doc_id ORDER BY p ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS fp
-  FROM g),
-capped AS (
-  SELECT doc_id, fp FROM fps
-  QUALIFY row_number() OVER (PARTITION BY fp ORDER BY doc_id) <= 64)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared_fps
-FROM capped a JOIN capped b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY 1, 2 HAVING count(*) >= 2
-"""
-
-
-def q_decontaminate_fuzzy(spark, sf):
-    """Fuzzy decontamination: flag corpus docs whose MinHash signature
-    shares any LSH band with a benchmark doc — catches high-Jaccard
-    near-verbatim contamination the exact winnowing pass can miss
-    after small edits. Composes the committed minhash machinery
-    (operators/dedup.py) across TWO tables (corpus x benchmark,
-    benchmark side broadcast) instead of a self-join; shared_bands =
-    bands matched (each corpus doc carries one row per band, bench
-    keys are distinct, so the count is exact)."""
-    n_hashes, bands = 16, 4
-    rows = n_hashes // bands
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    sig = minhash_signature(docs.select("doc_id", "text"), n_hashes=n_hashes).cache()
-
-    def banded(s):
-        return s.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.md5(
-                                F.concat_ws(
-                                    ",", *[F.element_at("sig", b * rows + r + 1) for r in range(rows)]
-                                )
-                            ).alias("band_key"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-
-    bench = banded(sig.filter("doc_id < 5")).select("band", "band_key").distinct()
-    corpus = banded(sig.filter("doc_id >= 5"))
-    hits = corpus.join(F.broadcast(bench), ["band", "band_key"])
-    return hits.groupBy("doc_id").agg(F.count("*").alias("shared_bands"))
-
-
-def _oracle_decontaminate_fuzzy() -> str:
-    n, bands, rows = 16, 4, 4
-    band_key = " ".join(
-        "WHEN %d THEN md5(concat_ws(',', %s))" % (b, ", ".join(f"h{b * rows + r}" for r in range(rows)))
-        for b in range(bands)
-    )
-    return f"""WITH {_oracle_sig_cte(n)},
-banded AS (
-  SELECT doc_id, band, CASE band {band_key} END AS band_key
-  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, {bands - 1})) AS band)
-),
-bench AS (SELECT DISTINCT band, band_key FROM banded WHERE doc_id < 5),
-corpus AS (SELECT * FROM banded WHERE doc_id >= 5)
-SELECT corpus.doc_id, COUNT(*) AS shared_bands
-FROM corpus JOIN bench USING (band, band_key)
-GROUP BY corpus.doc_id"""
+# ====================================================== sampling / chunking
 
 
 def q_stratified_sample(spark, sf):
@@ -975,106 +762,6 @@ SELECT doc_id, lang, source, rn FROM (
          ) AS rn
   FROM documents
 ) WHERE rn <= 20
-"""
-
-
-def q_decontaminate(spark, sf):
-    """Benchmark decontamination — the canonical training-data use of
-    winnowing: flag corpus documents sharing any >= (window+k-1)-char
-    passage with a (small, broadcast) benchmark set. Benchmark = docs
-    with doc_id < 5; result = contaminated corpus docs with the shared-
-    fingerprint count."""
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    # cache: bench and corpus sides otherwise re-execute the winnow
-    # lineage each (in production the fingerprint table is persisted)
-    fps = winnow_fingerprints(docs, k=8, window=16, use_md5=True).cache()
-    bench = fps.filter("doc_id < 5").select(F.col("fp").alias("bfp")).distinct()
-    corpus = fps.filter("doc_id >= 5")
-    hits = corpus.join(F.broadcast(bench), corpus.fp == bench.bfp)
-    return hits.groupBy("doc_id").agg(F.count_distinct("fp").alias("shared_fps"))
-
-
-ORACLE_DECONTAMINATE = """
-WITH g AS (
-  SELECT doc_id, p,
-         ('0x' || substring(md5(substring(text, p, 8)), 1, 15))::BIGINT AS h
-  FROM (SELECT doc_id, text, unnest(generate_series(1, greatest(length(text) - 7, 1))) AS p FROM documents)),
-fps AS (
-  SELECT DISTINCT doc_id,
-         min(h) OVER (PARTITION BY doc_id ORDER BY p ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS fp
-  FROM g),
-bench AS (SELECT DISTINCT fp FROM fps WHERE doc_id < 5)
-SELECT c.doc_id, count(DISTINCT c.fp) AS shared_fps
-FROM fps c JOIN bench b ON c.fp = b.fp
-WHERE c.doc_id >= 5
-GROUP BY c.doc_id
-"""
-
-
-def q_dedup_components(spark, sf):
-    """Near-dup clustering: connected components over the MinHash-LSH
-    pair graph (hash-min label propagation) — the stage that turns
-    pairwise near-dups into keep-one-per-cluster decisions. Oracle:
-    DuckDB recursive CTE computing min reachable id per node over the
-    same LSH edges."""
-    from pyogrio_spark.operators.dedup import connected_components
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    pairs = minhash_lsh_pairs(docs, n_hashes=16, bands=4, threshold=0.5, max_bucket=64).select("doc_a", "doc_b")
-    return connected_components(pairs).select(F.col("node").alias("doc_id"), "comp")
-
-
-def _oracle_components() -> str:
-    pairs = _oracle_minhash_pairs()
-    return f"""WITH RECURSIVE pairs AS ({pairs}),
-sym AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs),
-nodes AS (SELECT DISTINCT src AS node FROM sym),
-reach(node, r) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT re.node, e.dst FROM reach re JOIN sym e ON e.src = re.r)
-SELECT node AS doc_id, min(r) AS comp FROM reach GROUP BY node"""
-
-
-def q_text_features(spark, sf):
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")).alias("fingerprint_md5")
-    return docs.select(
-        "doc_id", token_count(), word_piece_count(), lang_id(), F.round(quality_score(), 6).alias("quality"), fp
-    )
-
-
-def q_text_tfidf(spark, sf):
-    """Top-5 tf-idf terms per document (functions/text.py
-    tfidf_top_terms): integer-only tie-safe ranking, score rounded to
-    6 decimals — exact across engines."""
-    from pyogrio_spark.functions.text import tfidf_top_terms
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return tfidf_top_terms(docs, k=5)
-
-
-ORACLE_TEXT_TFIDF = """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-), tf AS (
-  SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY 1, 2
-), dfq AS (
-  SELECT token, COUNT(*) AS df FROM tf GROUP BY 1
-), n AS (SELECT COUNT(*) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.token, tf.tf, dfq.df,
-         round(tf.tf * ln((n.n_docs + 1) / (dfq.df + 1)), 6) AS tfidf,
-         row_number() OVER (
-           PARTITION BY tf.doc_id
-           ORDER BY tf.tf DESC, dfq.df ASC, tf.token ASC
-         ) AS rnk
-  FROM tf JOIN dfq USING (token) CROSS JOIN n
-)
-SELECT doc_id, token, tf, df, tfidf, rnk FROM scored WHERE rnk <= 5
 """
 
 
@@ -1116,45 +803,6 @@ FROM g
 """
 
 
-def q_text_lm_score(spark, sf):
-    """Corpus-trained bigram LM quality scores (functions/text.py
-    bigram_lm_scores): add-one smoothing, mean bigram log-prob per doc,
-    rounded 6 decimals."""
-    from pyogrio_spark.functions.text import bigram_lm_scores
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return bigram_lm_scores(docs)
-
-
-ORACLE_TEXT_LM_SCORE = """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), m AS (
-  SELECT doc_id, toks FROM t WHERE len(toks) >= 2
-), e AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(toks)),
-                               i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS bg
-  FROM m
-), big AS (
-  SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM e
-), c2 AS (
-  SELECT w1, w2, COUNT(*) AS c2 FROM big GROUP BY 1, 2
-), c1 AS (
-  SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1
-), v AS (
-  SELECT COUNT(*) AS v FROM (
-    SELECT DISTINCT w FROM (SELECT w1 AS w FROM big UNION ALL SELECT w2 FROM big)
-  )
-), s AS (
-  SELECT big.doc_id, ln((c2.c2 + 1) / (c1.c1 + v.v)) AS lp
-  FROM big JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
-)
-SELECT doc_id, COUNT(*) AS n_bigrams, round(avg(lp), 6) AS lm_score
-FROM s GROUP BY doc_id
-"""
-
-
 def q_text_chunking(spark, sf):
     """Fixed-window chunking + capacity packing (operators/chunking.py):
     32-token windows sliding by 24 (8-token overlap), packed 4 chunks /
@@ -1190,52 +838,6 @@ SELECT doc_id,
        CAST(floor(chunk_id / 4) AS BIGINT) AS pack_id
 FROM e
 """
-
-
-def _oracle_text_features() -> str:
-    lang_scores = ",\n    ".join(
-        "len(list_intersect(list_distinct(toks200), [%s])) AS s_%s"
-        % (", ".join(f"'{w}'" for w in words), lang)
-        for lang, words in LANG_PROFILES.items()
-    )
-    # tie-break mirrors Spark's array_max over struct(score, lang):
-    # highest score, then lexicographically greatest lang
-    pred = (
-        "CASE WHEN greatest(s_en, s_es, s_fr, s_de, s_zh) = 0 THEN 'und' "
-        "WHEN s_zh = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'zh' "
-        "WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'fr' "
-        "WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'es' "
-        "WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) THEN 'en' "
-        "ELSE 'de' END"
-    )
-    en_words = ", ".join(f"'{w}'" for w in LANG_PROFILES["en"])
-    return f"""
-WITH base AS (
-  SELECT doc_id, text,
-         length(text) AS n_chars,
-         string_split_regex(trim(text), '\\s+') AS toks,
-         list_slice(string_split_regex(lower(text), '\\s+'), 1, 200) AS toks200
-  FROM documents),
-feat AS (
-  SELECT doc_id, text, n_chars, toks,
-         len(toks) AS token_count,
-         len(regexp_extract_all(text, '\\w+')) + len(regexp_extract_all(text, '[^\\w\\s]')) AS word_piece_count,
-         {lang_scores},
-         len(regexp_extract_all(text, '[A-Za-z]')) / greatest(n_chars, 1) AS alpha_ratio,
-         len(regexp_extract_all(text, '[^\\w\\s]')) / greatest(n_chars, 1) AS punct_ratio,
-         n_chars / greatest(len(toks), 1) AS mean_wlen,
-         len(list_intersect(list_distinct(list_transform(toks, t -> lower(t))), [{en_words}])) AS stop_hits
-  FROM base)
-SELECT doc_id, token_count, word_piece_count,
-       {pred} AS lang_pred,
-       round(
-         (CASE WHEN token_count >= 10 AND token_count <= 10000 THEN 1.0 ELSE 0.3 END) * 0.3
-         + (CASE WHEN mean_wlen >= 2.5 AND mean_wlen <= 12.0 THEN 1.0 ELSE 0.4 END) * 0.2
-         + (CASE WHEN stop_hits >= 2 THEN 1.0 ELSE 0.5 END) * 0.2
-         + least(alpha_ratio * 1.25, 1.0) * 0.2
-         + (1.0 - least(punct_ratio * 4.0, 1.0)) * 0.1, 6) AS quality,
-       md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint_md5
-FROM feat"""
 
 
 def q_adaptive_tile_map(spark, sf):
@@ -1542,106 +1144,6 @@ def q_events_json_props(spark, sf):
     )
 
 
-def q_geo_curation(spark, sf):
-    """END-TO-END geo training-data pipeline in ONE oracled query:
-    documents -> PIP zone assignment (broadcast cell join + rect
-    shortcut) -> per-zone exact dedup (keep first doc per content per
-    zone) -> per-zone token budget (first-fit cumulative cut over
-    doc_id order, budget_filter_window semantics) -> per-zone kept
-    counts + token totals. Exercises geo join + dedup + budget
-    composition through the engine operators."""
-    from pyogrio_spark.operators.budget import budget_filter_window
-
-    cover = zones_cell_cover(spark, _zones_pd(), res=GEO_RES, zone_key="zone_id")
-    joined = point_in_polygon_join(
-        _docs_geo(spark, sf), cover, zone_key="zone_id", keep_doc_cols=["doc_id"]
-    )
-    docs = _read_spread(spark, f"{sf}/documents.parquet").select("doc_id", "text")
-    d = joined.join(docs, "doc_id").withColumn("_tok", token_count())
-    w = Window.partitionBy("zone_id", F.md5("text")).orderBy("doc_id")
-    deduped = d.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
-    budgeted = budget_filter_window(
-        deduped, budget=2000, group_col="zone_id", value_col="_tok", order_cols=("doc_id",)
-    )
-    return budgeted.groupBy("zone_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("_tok").alias("tokens"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
-ORACLE_GEO_CURATION = f"""
-WITH pip AS (
-  SELECT d.doc_id, z.zone_id FROM {DOCS_GEO_SQL} d JOIN {ZONES_SQL} z
-  ON d.lon > z.zx0 AND d.lon < z.zx1 AND d.lat > z.zy0 AND d.lat < z.zy1),
-j AS (
-  SELECT p.zone_id, p.doc_id, len(string_split(doc.text, ' ')) AS tok, doc.text
-  FROM pip p JOIN documents doc ON doc.doc_id = p.doc_id),
-dd AS (
-  SELECT * FROM (
-    SELECT zone_id, doc_id, tok,
-           row_number() OVER (PARTITION BY zone_id, md5(text) ORDER BY doc_id) AS rn
-    FROM j) WHERE rn = 1),
-cum AS (
-  SELECT zone_id, doc_id, tok,
-         sum(tok) OVER (PARTITION BY zone_id ORDER BY doc_id
-                        ROWS UNBOUNDED PRECEDING) AS c
-  FROM dd)
-SELECT zone_id, count(*) AS n_docs, CAST(sum(tok) AS BIGINT) AS tokens,
-       min(doc_id) AS first_doc
-FROM cum WHERE c - tok < 2000
-GROUP BY zone_id
-"""
-
-
-def q_corpus_curation(spark, sf):
-    """Composed training-data pipeline: exact-dedup -> quality gate ->
-    language filter -> per-language token budget accounting. One query
-    exercising dedup + text features + aggregation together."""
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
-    w = F.row_number().over(Window.partitionBy(fp).orderBy("doc_id"))
-    deduped = docs.withColumn("_rn", w).filter(F.col("_rn") == 1).drop("_rn")
-    kept = deduped.filter(F.round(quality_score(), 6) >= 0.5).filter(F.col("lang").isin("en", "es", "fr"))
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(token_count()).alias("total_tokens"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
-ORACLE_CURATION = f"""
-WITH fp AS (
-  SELECT *, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f,
-         row_number() OVER (PARTITION BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-                            ORDER BY doc_id) AS rn
-  FROM documents),
-dd AS (SELECT * FROM fp WHERE rn = 1),
-q AS (
-  SELECT doc_id, lang, text,
-         len(string_split_regex(trim(text), '\\s+')) AS token_count,
-         length(text) AS n_chars,
-         len(regexp_extract_all(text, '[A-Za-z]')) / greatest(length(text), 1) AS alpha_ratio,
-         len(regexp_extract_all(text, '[^\\w\\s]')) / greatest(length(text), 1) AS punct_ratio,
-         length(text) / greatest(len(string_split_regex(trim(text), '\\s+')), 1) AS mean_wlen,
-         len(list_intersect(list_distinct(list_transform(string_split_regex(trim(text), '\\s+'), t -> lower(t))),
-             [{', '.join("'" + w + "'" for w in LANG_PROFILES['en'])}])) AS stop_hits
-  FROM dd),
-scored AS (
-  SELECT doc_id, lang, token_count,
-         round(
-           (CASE WHEN token_count >= 10 AND token_count <= 10000 THEN 1.0 ELSE 0.3 END) * 0.3
-           + (CASE WHEN mean_wlen >= 2.5 AND mean_wlen <= 12.0 THEN 1.0 ELSE 0.4 END) * 0.2
-           + (CASE WHEN stop_hits >= 2 THEN 1.0 ELSE 0.5 END) * 0.2
-           + least(alpha_ratio * 1.25, 1.0) * 0.2
-           + (1.0 - least(punct_ratio * 4.0, 1.0)) * 0.1, 6) AS quality
-  FROM q)
-SELECT lang, count(*) AS n_docs, CAST(sum(token_count) AS BIGINT) AS total_tokens, min(doc_id) AS first_doc
-FROM scored WHERE quality >= 0.5 AND lang IN ('en', 'es', 'fr')
-GROUP BY lang
-"""
-
-
 def q_dataset_split(spark, sf):
     """Deterministic train/val/test assignment by content-stable md5
     bucketing — per (lang, split) counts. Pure codegen, no shuffle
@@ -1689,316 +1191,6 @@ n AS (
 ex AS (SELECT doc_id, lang, unnest(generate_series(0, nc - 1)) AS copy_idx FROM n WHERE nc > 0)
 SELECT lang, copy_idx, count(*) AS n_docs, min(doc_id) AS first_doc
 FROM ex GROUP BY lang, copy_idx
-"""
-
-
-def q_token_budget(spark, sf):
-    """Per-language token-budget selection via the distributed prefix
-    sum (two-phase, no single-reducer window) — longest docs first."""
-    from pyogrio_spark.operators.budget import budget_filter
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    docs = docs.withColumn("token_count", token_count())
-    # longest-first order needs an ascending sortable column for the range shuffle
-    docs = docs.withColumn("neg_tokens", -F.col("token_count"))
-    kept = budget_filter(
-        docs, budget=5000, group_col="lang", value_col="token_count",
-        order_cols=("neg_tokens", "doc_id"), num_partitions=16,
-    ).drop("neg_tokens")
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("token_count").alias("tokens_kept"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
-ORACLE_BUDGET = """
-WITH t AS (
-  SELECT lang, doc_id, len(string_split_regex(trim(text), '\\s+')) AS token_count
-  FROM documents),
-c AS (
-  SELECT lang, doc_id, token_count,
-         sum(token_count) OVER (PARTITION BY lang ORDER BY token_count DESC, doc_id
-                                ROWS UNBOUNDED PRECEDING) AS cum
-  FROM t)
-SELECT lang, count(*) AS n_docs, CAST(sum(token_count) AS BIGINT) AS tokens_kept, min(doc_id) AS first_doc
-FROM c WHERE cum - token_count < 5000
-GROUP BY lang
-"""
-
-
-# ------------------------------------------------------- repetition filters
-
-_REP_LINE_WORDS = 8
-
-
-def q_text_repetition(spark, sf):
-    """Gopher-style repetition quality filters (functions/text.py
-    repetition_scores): top-2/3/4-gram word mass, duplicate-5-gram
-    occurrence fraction, and duplicate-line fractions over fixed
-    8-word segments (the corpus is single-line). All codegen: one
-    token explode, per-doc lead windows, one aggregation tree."""
-    from pyogrio_spark.functions.text import repetition_scores
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return repetition_scores(docs, line_words=_REP_LINE_WORDS)
-
-
-_REP_CTE = f"""toks AS (
-  SELECT doc_id, unnest(l) AS w, unnest(generate_series(1, length(l))) - 1 AS i
-  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)),
-nw AS (SELECT doc_id, count(*) AS n_words FROM toks GROUP BY doc_id),
-led AS (SELECT doc_id, i, w,
-        lead(w, 1) OVER (PARTITION BY doc_id ORDER BY i) AS w1,
-        lead(w, 2) OVER (PARTITION BY doc_id ORDER BY i) AS w2,
-        lead(w, 3) OVER (PARTITION BY doc_id ORDER BY i) AS w3,
-        lead(w, 4) OVER (PARTITION BY doc_id ORDER BY i) AS w4
-        FROM toks),
-grams AS (
-  SELECT doc_id, 2 AS n, w || ' ' || w1 AS g FROM led WHERE w1 IS NOT NULL
-  UNION ALL
-  SELECT doc_id, 3, w || ' ' || w1 || ' ' || w2 FROM led WHERE w2 IS NOT NULL
-  UNION ALL
-  SELECT doc_id, 4, w || ' ' || w1 || ' ' || w2 || ' ' || w3 FROM led WHERE w3 IS NOT NULL
-  UNION ALL
-  SELECT doc_id, 5, w || ' ' || w1 || ' ' || w2 || ' ' || w3 || ' ' || w4
-  FROM led WHERE w4 IS NOT NULL),
-per AS (SELECT doc_id, n, max(c) AS mx, sum(c) AS tot,
-               sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup
-        FROM (SELECT doc_id, n, g, count(*) AS c FROM grams GROUP BY 1, 2, 3)
-        GROUP BY 1, 2),
-lines AS (SELECT doc_id, i // {_REP_LINE_WORDS} AS li, string_agg(w, ' ' ORDER BY i) AS line
-          FROM toks GROUP BY doc_id, i // {_REP_LINE_WORDS}),
-lst AS (SELECT doc_id,
-               round(sum(CASE WHEN c > 1 THEN c ELSE 0 END) / CAST(sum(c) AS DOUBLE), 6) AS dup_line_frac,
-               round(sum(CASE WHEN c > 1 THEN c * len ELSE 0 END) / CAST(sum(c * len) AS DOUBLE), 6) AS dup_line_char_frac
-        FROM (SELECT doc_id, line, count(*) AS c, length(line) AS len
-              FROM lines GROUP BY doc_id, line)
-        GROUP BY doc_id),
-rep AS (
-  SELECT n.doc_id, n.n_words,
-         round(p2.mx * 2 / CAST(n.n_words AS DOUBLE), 6) AS top2_frac,
-         round(p3.mx * 3 / CAST(n.n_words AS DOUBLE), 6) AS top3_frac,
-         round(p4.mx * 4 / CAST(n.n_words AS DOUBLE), 6) AS top4_frac,
-         round(p5.dup / CAST(p5.tot AS DOUBLE), 6) AS dup5_frac,
-         l.dup_line_frac, l.dup_line_char_frac
-  FROM nw n
-  JOIN per p2 ON n.doc_id = p2.doc_id AND p2.n = 2
-  JOIN per p3 ON n.doc_id = p3.doc_id AND p3.n = 3
-  JOIN per p4 ON n.doc_id = p4.doc_id AND p4.n = 4
-  JOIN per p5 ON n.doc_id = p5.doc_id AND p5.n = 5
-  JOIN lst l ON n.doc_id = l.doc_id)"""
-
-ORACLE_TEXT_REPETITION = f"WITH {_REP_CTE}\nSELECT * FROM rep"
-
-
-def q_corpus_curation_rep(spark, sf):
-    """Pretraining filter stack v2: exact-dedup (keep first) ->
-    quality gate -> REPETITION gate (Gopher top-2-gram mass +
-    duplicate-5-gram fraction) -> language filter -> per-language
-    accounting. Extends corpus_curation with the repetition_scores
-    composition."""
-    from pyogrio_spark.functions.text import repetition_scores
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
-    w = F.row_number().over(Window.partitionBy(fp).orderBy("doc_id"))
-    deduped = docs.withColumn("_rn", w).filter(F.col("_rn") == 1).drop("_rn")
-    rep = repetition_scores(docs, line_words=_REP_LINE_WORDS).select(
-        "doc_id", "top2_frac", "dup5_frac"
-    )
-    kept = (
-        deduped.join(rep, "doc_id")
-        .filter(F.round(quality_score(), 6) >= 0.5)
-        .filter(F.col("lang").isin("en", "es", "fr"))
-        .filter((F.col("top2_frac") <= F.lit(8e-2)) & (F.col("dup5_frac") <= F.lit(1e-2)))
-    )
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(token_count()).alias("total_tokens"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
-ORACLE_CURATION_REP = f"""
-WITH {_REP_CTE},
-fp AS (
-  SELECT *, row_number() OVER (PARTITION BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-                               ORDER BY doc_id) AS rn
-  FROM documents),
-dd AS (SELECT * FROM fp WHERE rn = 1),
-q AS (
-  SELECT doc_id, lang, text,
-         len(string_split_regex(trim(text), '\\s+')) AS token_count,
-         len(regexp_extract_all(text, '[A-Za-z]')) / greatest(length(text), 1) AS alpha_ratio,
-         len(regexp_extract_all(text, '[^\\w\\s]')) / greatest(length(text), 1) AS punct_ratio,
-         length(text) / greatest(len(string_split_regex(trim(text), '\\s+')), 1) AS mean_wlen,
-         len(list_intersect(list_distinct(list_transform(string_split_regex(trim(text), '\\s+'), t -> lower(t))),
-             [{', '.join("'" + w + "'" for w in LANG_PROFILES['en'])}])) AS stop_hits
-  FROM dd),
-scored AS (
-  SELECT doc_id, lang, token_count,
-         round(
-           (CASE WHEN token_count >= 10 AND token_count <= 10000 THEN 1.0 ELSE 0.3 END) * 0.3
-           + (CASE WHEN mean_wlen >= 2.5 AND mean_wlen <= 12.0 THEN 1.0 ELSE 0.4 END) * 0.2
-           + (CASE WHEN stop_hits >= 2 THEN 1.0 ELSE 0.5 END) * 0.2
-           + least(alpha_ratio * 1.25, 1.0) * 0.2
-           + (1.0 - least(punct_ratio * 4.0, 1.0)) * 0.1, 6) AS quality
-  FROM q)
-SELECT s.lang, count(*) AS n_docs, CAST(sum(s.token_count) AS BIGINT) AS total_tokens,
-       min(s.doc_id) AS first_doc
-FROM scored s JOIN rep r ON s.doc_id = r.doc_id
-WHERE s.quality >= 0.5 AND s.lang IN ('en', 'es', 'fr')
-  AND r.top2_frac <= 8e-2 AND r.dup5_frac <= 1e-2
-GROUP BY s.lang
-"""
-
-
-_LINE_DEDUP_WORDS = 8
-
-
-def q_dedup_lines_global(spark, sf):
-    """Corpus-global line-level exact dedup (operators/dedup.py
-    line_dedup_global — the C4 / Lee-et-al pipeline stage): every
-    duplicate occurrence of an 8-word line across the corpus is
-    dropped except the first (by (doc_id, line) order), documents
-    reassembled from surviving lines. Zero-shuffle segmentation via
-    chunk_documents; keeper decision is a bigint min over md5(line)."""
-    from pyogrio_spark.operators.dedup import line_dedup_global
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return line_dedup_global(docs, line_words=_LINE_DEDUP_WORDS)
-
-
-_SPAN_DEDUP_WINDOW = 10
-
-
-def q_dedup_spans_global(spark, sf):
-    """Corpus-global exact substring dedup (operators/dedup.py
-    span_dedup_global — the Lee-et-al suffix-array stage at fixed
-    match width): every 10-token sliding span duplicated anywhere in
-    the corpus is cut at token granularity except its first
-    occurrence (by (doc_id, pos)), documents reassembled from
-    surviving tokens. Gram stream + content-hash bigint-min keeper —
-    no suffix array, no all-pairs."""
-    from pyogrio_spark.operators.dedup import span_dedup_global
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return span_dedup_global(docs, window_tokens=_SPAN_DEDUP_WINDOW)
-
-
-ORACLE_DEDUP_SPANS_GLOBAL = f"""
-WITH s AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-toks AS (
-  SELECT doc_id, unnest(l) AS w, unnest(generate_series(1, length(l))) - 1 AS i
-  FROM s),
-g AS (
-  SELECT doc_id, unnest(generate_series(0, length(l) - {_SPAN_DEDUP_WINDOW})) AS p, l
-  FROM s WHERE length(l) >= {_SPAN_DEDUP_WINDOW}),
-grams AS (
-  SELECT doc_id, p, array_to_string(l[p + 1 : p + {_SPAN_DEDUP_WINDOW}], ' ') AS gram
-  FROM g),
-keep AS (SELECT gram, min(doc_id * 1048576 + p) AS keeper FROM grams GROUP BY gram),
-dup AS (
-  SELECT gr.doc_id, gr.p FROM grams gr JOIN keep k
-  ON gr.gram = k.gram AND gr.doc_id * 1048576 + gr.p <> k.keeper),
-cov AS (
-  SELECT DISTINCT doc_id, off FROM (
-    SELECT doc_id, unnest(generate_series(p, p + {_SPAN_DEDUP_WINDOW} - 1)) AS off
-    FROM dup)),
-kept AS (
-  SELECT t.doc_id, t.i, t.w FROM toks t LEFT JOIN cov c
-  ON t.doc_id = c.doc_id AND t.i = c.off WHERE c.doc_id IS NULL),
-nt AS (SELECT doc_id, count(*) AS n_tokens FROM toks GROUP BY doc_id),
-reb AS (
-  SELECT doc_id, string_agg(w, ' ' ORDER BY i) AS text, count(*) AS n_kept
-  FROM kept GROUP BY doc_id)
-SELECT n.doc_id, coalesce(r.text, '') AS text,
-       CAST(n.n_tokens AS BIGINT) AS n_tokens,
-       coalesce(r.n_kept, 0) AS n_kept
-FROM nt n LEFT JOIN reb r USING (doc_id)
-"""
-
-
-ORACLE_DEDUP_LINES_GLOBAL = f"""
-WITH toks AS (
-  SELECT doc_id, unnest(l) AS w, unnest(generate_series(1, length(l))) - 1 AS i
-  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)),
-segs AS (
-  SELECT doc_id, i // {_LINE_DEDUP_WORDS} AS li, string_agg(w, ' ' ORDER BY i) AS line
-  FROM toks GROUP BY doc_id, i // {_LINE_DEDUP_WORDS}),
-keep AS (
-  SELECT line, min(doc_id * 1048576 + li) AS keeper FROM segs GROUP BY line),
-kept AS (
-  SELECT s.doc_id, s.li, s.line FROM segs s JOIN keep k
-  ON s.line = k.line AND s.doc_id * 1048576 + s.li = k.keeper),
-nl AS (SELECT doc_id, count(*) AS n_lines FROM segs GROUP BY doc_id),
-reb AS (
-  SELECT doc_id, string_agg(line, ' ' ORDER BY li) AS text, count(*) AS n_kept
-  FROM kept GROUP BY doc_id)
-SELECT n.doc_id, coalesce(r.text, '') AS text,
-       CAST(n.n_lines AS INTEGER) AS n_lines,
-       coalesce(r.n_kept, 0) AS n_kept
-FROM nl n LEFT JOIN reb r USING (doc_id)
-"""
-
-
-def q_quality_percentile(spark, sf):
-    """CCNet-style perplexity-percentile gate: bigram-LM score the
-    corpus (bigram_lm_scores, already hash-green), keep documents at
-    or above the 0.7 percent-rank of their language (operators/
-    sampling.py percentile_filter). Exact and tie-stable: ranks on the
-    ROUNDED score so both engines rank the identical key. Scale note
-    in the operator docstring — the exact gate is a per-group sort;
-    the approx twin (percentile_filter_approx, two-phase sketch +
-    broadcast threshold) is the 100 TB path, band-gated in pytest."""
-    from pyogrio_spark.functions.text import bigram_lm_scores
-    from pyogrio_spark.operators.sampling import percentile_filter
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    scored = bigram_lm_scores(docs).join(docs.select("doc_id", "lang"), "doc_id")
-    return percentile_filter(scored, "lm_score", 0.7, group_col="lang").select(
-        "doc_id", "lang", F.col("n_bigrams"), "lm_score", "pct_rank"
-    )
-
-
-# same bigram-LM CTE stack as ORACLE_TEXT_LM_SCORE (kept verbatim — the
-# LM score must be the identical rounded key both gates rank on),
-# followed by the per-language percent_rank gate
-ORACLE_QUALITY_PERCENTILE = """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), m AS (
-  SELECT doc_id, toks FROM t WHERE len(toks) >= 2
-), e AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(toks)),
-                               i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS bg
-  FROM m
-), big AS (
-  SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM e
-), c2 AS (
-  SELECT w1, w2, COUNT(*) AS c2 FROM big GROUP BY 1, 2
-), c1 AS (
-  SELECT w1, COUNT(*) AS c1 FROM big GROUP BY 1
-), v AS (
-  SELECT COUNT(*) AS v FROM (
-    SELECT DISTINCT w FROM (SELECT w1 AS w FROM big UNION ALL SELECT w2 FROM big)
-  )
-), s AS (
-  SELECT big.doc_id, ln((c2.c2 + 1) / (c1.c1 + v.v)) AS lp
-  FROM big JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
-), lm AS (
-  SELECT doc_id, COUNT(*) AS n_bigrams, round(avg(lp), 6) AS lm_score
-  FROM s GROUP BY doc_id
-), scored AS (
-  SELECT l.doc_id, d.lang, l.n_bigrams, l.lm_score
-  FROM lm l JOIN documents d USING (doc_id)
-), r AS (
-  SELECT doc_id, lang, n_bigrams, lm_score,
-         round(percent_rank() OVER (PARTITION BY lang ORDER BY lm_score), 9) AS pct_rank
-  FROM scored)
-SELECT doc_id, lang, n_bigrams, lm_score, pct_rank FROM r WHERE pct_rank >= 0.7
 """
 
 
@@ -2193,13 +1385,11 @@ _BLOOM_K, _BLOOM_M, _BLOOM_W, _BLOOM_S = 3, 65536, 16, 4
 def q_decontaminate_bloom(spark, sf):
     """Benchmark decontamination via a broadcast Bloom bitset
     (functions/scrub.py decontaminate_bloom): the benchmark set
-    (doc_id < 5, mirroring the winnow-join `decontaminate` entry)
-    collapses to a 65536-bit filter over strided 16-char grams —
-    m/64 longs in ONE parsed array literal — and every corpus gram
-    tests membership with pure element_at+mask codegen. No join on
+    (doc_id < 5) collapses to a 65536-bit filter over strided 16-char
+    grams — m/64 longs in ONE parsed array literal — and every corpus
+    gram tests membership with pure element_at+mask codegen. No join on
     the corpus side at all: the 100 TB architecture for contamination
-    checks (the winnow-join twin stays the exact-verify path). The
-    oracle simulates the filter bit-exactly (position-set join with
+    checks. The oracle simulates the filter bit-exactly (position-set join with
     count(DISTINCT hash)=k), so even Bloom false positives match."""
     from pyogrio_spark.functions.scrub import decontaminate_bloom
 
@@ -2236,53 +1426,6 @@ hit AS (
   JOIN bpos USING (pos)
   GROUP BY doc_id, g HAVING count(DISTINCT j) = {_BLOOM_K})
 SELECT doc_id, count(*) AS n_hits FROM hit GROUP BY doc_id"""
-
-
-def q_corpus_stats(spark, sf):
-    """Corpus report card: per-(lang, source) doc counts, whitespace
-    token totals, mean quality score, and exact interpolated p50/p90 of
-    doc length — the summary table every curation run publishes. One
-    aggregation; the exact percentiles use the same linear-interpolation
-    definition in both engines (Spark percentile == DuckDB
-    quantile_cont). At 100 TB the exact percentile is the only
-    non-sketch stage — swap percentile_approx (the
-    percentile_filter_approx twin) when the group count explodes."""
-    from pyogrio_spark.functions.text import quality_score, token_count
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    feat = docs.select("lang", "source", "n_chars", token_count(), quality_score())
-    return feat.groupBy("lang", "source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("token_count").alias("total_tokens"),
-        F.round(F.avg("quality_score"), 6).alias("mean_quality"),
-        F.round(F.expr("percentile(n_chars, 0.5)"), 6).alias("p50_chars"),
-        F.round(F.expr("percentile(n_chars, 0.9)"), 6).alias("p90_chars"),
-    )
-
-
-ORACLE_CORPUS_STATS = """
-WITH feat AS (
-  SELECT lang, source, n_chars,
-         len(string_split_regex(trim(text), '\\s+')) AS token_count,
-         (CASE WHEN len(string_split_regex(trim(text), '\\s+')) BETWEEN 10 AND 10000
-               THEN 1.0 ELSE 0.3 END) * 0.3
-         + (CASE WHEN n_chars / greatest(len(string_split_regex(trim(text), '\\s+')), 1)
-                 BETWEEN 2.5 AND 12.0 THEN 1.0 ELSE 0.4 END) * 0.2
-         + (CASE WHEN len(list_intersect(list_distinct(list_transform(
-                     string_split_regex(trim(text), '\\s+'), x -> lower(x))),
-                     ['the','a','and','of','to','in','is','that','it','for'])) >= 2
-                 THEN 1.0 ELSE 0.5 END) * 0.2
-         + least(len(regexp_extract_all(text, '[A-Za-z]')) / greatest(n_chars, 1) * 1.25, 1.0) * 0.2
-         + (1.0 - least(len(regexp_extract_all(text, '[^\\w\\s]')) / greatest(n_chars, 1) * 4.0, 1.0)) * 0.1
-           AS quality_score
-  FROM documents)
-SELECT lang, source, count(*) AS n_docs,
-       CAST(sum(token_count) AS BIGINT) AS total_tokens,
-       round(avg(quality_score), 6) AS mean_quality,
-       round(quantile_cont(n_chars, 0.5), 6) AS p50_chars,
-       round(quantile_cont(n_chars, 0.9), 6) AS p90_chars
-FROM feat GROUP BY lang, source
-"""
 
 
 _PYR_BASE, _PYR_MIN = 8, 4
@@ -2389,42 +1532,6 @@ SELECT r.doc_id, r.source, r.rn FROM r JOIN t USING (source) WHERE r.rn <= t.tar
 """
 
 
-def q_quality_classifier(spark, sf):
-    """Hashed-linear quality classifier (functions/text.py
-    linear_quality_score): fastText-shape feature hashing + integer
-    milli-weight sum as ONE codegen aggregate HOF — zero shuffle, zero
-    explode, weight vector as a parsed literal. Integer scores make the
-    oracle hash-exact (no float aggregation order)."""
-    from pyogrio_spark.functions.text import linear_quality_score
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    out = linear_quality_score(docs, threshold_milli_per_word=0)
-    return out.select(
-        "doc_id", F.col("n_words").cast("bigint").alias("n_words"), "score_milli", "keep"
-    )
-
-
-def _quality_oracle() -> str:
-    from pyogrio_spark.functions.text import linear_quality_weights
-
-    vals = ", ".join(f"({i}, {w})" for i, w in enumerate(linear_quality_weights()))
-    return f"""
-WITH wt(bkt, w) AS (VALUES {vals}),
-words AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-b AS (SELECT doc_id, ('0x' || substring(md5('qw' || word), 1, 15))::BIGINT % 512 AS bkt
-      FROM words WHERE length(word) > 0),
-s AS (SELECT doc_id, count(*) AS n_words, sum(w) AS score_milli
-      FROM b JOIN wt USING (bkt) GROUP BY doc_id)
-SELECT d.doc_id, coalesce(s.n_words, 0) AS n_words,
-       coalesce(s.score_milli, 0)::BIGINT AS score_milli,
-       coalesce(s.score_milli, 0) >= 0 AS keep
-FROM documents d LEFT JOIN s USING (doc_id)
-"""
-
-
-ORACLE_QUALITY_CLASSIFIER = _quality_oracle()
-
-
 def q_sql_ogr_dialect(spark, sf):
     """OGRSQL dialect passthrough (sql_dialect.py translate_ogrsql):
     case-blind identifiers (DOC_ID/LANG/SOURCE against lowercase
@@ -2468,13 +1575,12 @@ def q_table_upsert(spark, sf):
     The oracle replays the same MERGE/DELETE algebra in pure SQL, so a
     hash match certifies replacement, insertion, survivor, and
     NULL-keep semantics of the copy-on-write snapshot ops together."""
-    import tempfile
-
     from pyogrio_spark.io.writer import (
         current_snapshot,
         delete_from_table,
         upsert_table,
     )
+    from pyogrio_spark.uri import process_temp_dir
 
     orders = spark.read.parquet(f"{sf}/orders.parquet")
     base = orders.filter("o_orderkey % 7 = 0").selectExpr(
@@ -2489,7 +1595,7 @@ def q_table_upsert(spark, sf):
             "o_totalprice AS price",
         )
     )
-    d = tempfile.mkdtemp(prefix="pyogrio_spark_upsert_")
+    d = process_temp_dir("pyogrio_spark_upsert_")
     tbl = f"{d}/orders_tbl"
     upsert_table(spark, tbl, base, keys=["okey"])
     upsert_table(spark, tbl, updates, keys=["okey"])
@@ -2533,31 +1639,18 @@ QUERIES = {
     "chunk_pack_global": q_chunk_pack_global,
     "geo_knn_join": q_geo_knn,
     "geo_range_join": q_geo_range_join,
-    "corpus_stats": q_corpus_stats,
     "sql_ogr_dialect": q_sql_ogr_dialect,
-    "decontaminate_fuzzy": q_decontaminate_fuzzy,
     "spans_strip_media": q_spans_strip_media,
-    "text_tfidf": q_text_tfidf,
     "temperature_resample": q_temperature_resample,
-    "dedup_minhash_lsh_pairs": q_minhash_lsh_pairs,
     "url_domains": q_url_domains,
     "text_pii_redact": q_text_pii_redact,
-    "text_lm_score": q_text_lm_score,
-    "dedup_fingerprint_overlap": q_fingerprint_overlap,
-    "dedup_components": q_dedup_components,
-    "quality_classifier": q_quality_classifier,
-    "text_repetition": q_text_repetition,
     "stratified_sample": q_stratified_sample,
-    "dedup_lines_global": q_dedup_lines_global,
     "table_upsert": q_table_upsert,
     "geo_areal_interpolate": q_geo_areal_interpolate,
     "geo_measures_geodesic": q_geo_measures_geodesic,
     "events_sessionize": q_events_sessionize,
     "events_asof_rates": q_events_asof_rates,
-    "quality_percentile": q_quality_percentile,
     "text_chunking": q_text_chunking,
-    "dedup_spans_global": q_dedup_spans_global,
-    "corpus_curation_rep": q_corpus_curation_rep,
     "decontaminate_bloom": q_decontaminate_bloom,
     "text_normalize": q_text_normalize,
     "total_bounds": q_total_bounds,
@@ -2571,25 +1664,15 @@ QUERIES = {
     "events_json_props": q_events_json_props,
     "spans_reconstruct": q_spans_reconstruct,
     "curve_linearize": q_curve_linearize,
-    "dedup_winnow_fingerprints": q_winnow_fingerprints,
     "geo_rasterize": q_geo_rasterize,
     "geo_pip_join_poly": q_geo_pip_join_poly,
     "geo_knn_join_haversine": q_geo_knn_haversine,
-    "decontaminate": q_decontaminate,
-    "corpus_curation": q_corpus_curation,
     "dataset_split": q_dataset_split,
     "geo_measures": q_geo_measures,
     "geo_within_distance": q_geo_within_distance,
-    "dedup_minhash_signatures": q_minhash_signatures,
-    "text_features": q_text_features,
     "read_bounds": q_read_bounds,
-    "dedup_simhash": q_simhash,
-    "dedup_ngram_jaccard": q_ngram_jaccard,
     "domain_mix": q_domain_mix,
-    "token_budget": q_token_budget,
-    "geo_curation": q_geo_curation,
     "spans_explode": q_spans_explode,
-    "dedup_exact": q_dedup_exact,
     "geo_tile_assignment": q_geo_tile_assignment,
     "geo_zonal_stats": q_geo_zonal,
 }
@@ -2634,18 +1717,6 @@ ORACLES = {
     "geo_rasterize": ORACLE_RASTERIZE,
     "spans_explode": ORACLE_SPANS,
     "spans_reconstruct": ORACLE_SPANS_RECONSTRUCT,
-    "dedup_exact": (
-        "SELECT min(doc_id) AS doc_id, md5(text) AS content_hash, count(*) AS dup_count "
-        "FROM documents GROUP BY md5(text)"
-    ),
-    "dedup_minhash_signatures": ORACLE_MINHASH_SIG,
-    "dedup_minhash_lsh_pairs": _oracle_minhash_pairs(),
-    "dedup_simhash": _oracle_simhash(),
-    "dedup_ngram_jaccard": _oracle_ngram(),
-    "dedup_winnow_fingerprints": ORACLE_WINNOW,
-    "dedup_fingerprint_overlap": ORACLE_FP_OVERLAP,
-    "decontaminate": ORACLE_DECONTAMINATE,
-    "decontaminate_fuzzy": _oracle_decontaminate_fuzzy(),
     "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
     "text_normalize": _oracle_text_normalize(),
     "text_pii_redact": _oracle_text_pii(),
@@ -2654,18 +1725,8 @@ ORACLES = {
     "spans_strip_media": ORACLE_SPANS_STRIP_MEDIA,
     "temperature_resample": ORACLE_TEMPERATURE_RESAMPLE,
     "geo_tile_pyramid": _oracle_tile_pyramid(),
-    "corpus_stats": ORACLE_CORPUS_STATS,
-    "dedup_components": _oracle_components(),
-    "text_features": _oracle_text_features(),
     "text_chunking": ORACLE_TEXT_CHUNKING,
-    "text_tfidf": ORACLE_TEXT_TFIDF,
     "chunk_pack_global": ORACLE_CHUNK_PACK_GLOBAL,
-    "text_lm_score": ORACLE_TEXT_LM_SCORE,
-    "text_repetition": ORACLE_TEXT_REPETITION,
-    "corpus_curation_rep": ORACLE_CURATION_REP,
-    "dedup_lines_global": ORACLE_DEDUP_LINES_GLOBAL,
-    "dedup_spans_global": ORACLE_DEDUP_SPANS_GLOBAL,
-    "quality_percentile": ORACLE_QUALITY_PERCENTILE,
     "geo_measures": f"""SELECT zone_id,
         round((zx1 - zx0) * (zy1 - zy0), 7) AS area_r,
         round(2 * ((zx1 - zx0) + (zy1 - zy0)), 7) AS len_r,
@@ -2721,7 +1782,6 @@ ORACLES = {
     "events_asof_rates": ORACLE_ASOF,
     "table_upsert": ORACLE_TABLE_UPSERT,
     "sql_ogr_dialect": ORACLE_SQL_OGR_DIALECT,
-    "quality_classifier": ORACLE_QUALITY_CLASSIFIER,
     "read_bounds": f"SELECT doc_id, lon AS xmin, lat AS ymin, lon AS xmax, lat AS ymax FROM {DOCS_GEO_SQL} d",
     "total_bounds": f"""SELECT min(lon) AS xmin, min(lat) AS ymin, max(lon) AS xmax, max(lat) AS ymax,
         count(*) AS n FROM {DOCS_GEO_SQL} d""",
@@ -2729,8 +1789,5 @@ ORACLES = {
         SELECT cast(json_extract_string(props, '$.k') as bigint) AS k,
                count(*) AS n_events, min(event_id) AS first_event
         FROM events GROUP BY 1""",
-    "corpus_curation": ORACLE_CURATION,
-    "geo_curation": ORACLE_GEO_CURATION,
     "dataset_split": ORACLE_SPLIT,
-    "token_budget": ORACLE_BUDGET,
 }

@@ -5,7 +5,7 @@ continuous-ingest needs of a training-data pipeline:
 
 - ``streaming_first_seen``: online exact dedup — emit only the first
   occurrence of each key (content fingerprint), state = one flag per
-  key. The streaming complement of ``operators.dedup.exact_dedup``.
+  key; a batch frame gets the same result from ``dropDuplicates``.
 - ``streaming_running_totals``: per-key running counters maintained
   across micro-batches.
 """

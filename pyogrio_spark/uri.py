@@ -181,13 +181,31 @@ def storage_path(path: str | Path) -> tuple[str, str | None]:
 _VSIMEM_ROOT: str | None = None
 
 
+def process_temp_dir(prefix: str) -> str:
+    """A new temp directory that is removed when this interpreter exits.
+    Only the creating process removes it: a forked child inherits the
+    exit hook, and its exit must not delete the parent's files."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    path, owner = tempfile.mkdtemp(prefix=prefix), os.getpid()
+
+    def _remove() -> None:
+        if os.getpid() == owner:
+            shutil.rmtree(path, ignore_errors=True)
+
+    atexit.register(_remove)
+    return path
+
+
 def vsimem_root() -> str:
-    """Lazily-created local root backing the /vsimem/ namespace."""
+    """Lazily-created local root backing the /vsimem/ namespace; like
+    GDAL's in-memory filesystem, it ends with the process."""
     global _VSIMEM_ROOT
     if _VSIMEM_ROOT is None or not __import__("os").path.isdir(_VSIMEM_ROOT):
-        import tempfile
-
-        _VSIMEM_ROOT = tempfile.mkdtemp(prefix="pyogrio_spark_vsimem_")
+        _VSIMEM_ROOT = process_temp_dir("pyogrio_spark_vsimem_")
     return _VSIMEM_ROOT
 
 

@@ -74,43 +74,6 @@ def run_once(cpus: int, n_docs: int, cached: bool = True) -> dict:
             "docs_per_sec": round(n_docs / wall, 1)}
 
 
-def run_once_shuffle(cpus: int, n_docs: int) -> dict:
-    """Shuffle-heavy counterpart: exact dedup where ~every key is
-    distinct — no broadcast, no map-side combine relief; the full row
-    stream crosses the wire. This is the worst-case shuffle the engine's
-    groupBy-family operators (dedup, zonal, budget) can see."""
-    from pyspark.sql import functions as F
-
-    from pyogrio_spark.operators.dedup import exact_dedup
-    from pyogrio_spark.session import get_spark
-
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-    # shuffle partition COUNT is held fixed across cluster sizes: it is
-    # a data-sized tuning knob, not a cluster property (a real cluster
-    # job keeps spark.sql.shuffle.partitions as executors scale), so
-    # tying it to 2*cpus would conflate per-partition agg-state size
-    # with the core-scaling signal. NB: measured run-to-run variance on
-    # this GC-bound job is ~2x either way — see BENCH/BASELINE.md §2.
-    spark = get_spark(
-        f"scaling_shuffle_{cpus}", master=f"local[{cpus}]", shuffle_partitions=64,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.range(n_docs, numPartitions=4 * cpus).select(
-        F.col("id").alias("doc_id"),
-        # ~2% duplicate content, rest unique: realistic dedup shape with
-        # no combine relief (every group is size 1-2)
-        F.concat(F.lit("doc "), ((F.col("id") * 48271) % (n_docs * 49 // 50)).cast("string")).alias("text"),
-    ).cache()
-    docs.count()
-    t0 = time.perf_counter()
-    n_groups = exact_dedup(docs).count()
-    wall = time.perf_counter() - t0
-    spark.stop()
-    return {"cpus": cpus, "docs": n_docs, "groups": n_groups, "wall_sec": round(wall, 3),
-            "docs_per_sec": round(n_docs / wall, 1)}
-
-
 def run_once_knn(cpus: int, n_docs: int) -> dict:
     """Join-operator counterpart: kNN join of 100k probes against the
     full corpus (per-cell count histogram planned on the driver, one
@@ -241,102 +204,6 @@ def run_once_chunk(cpus: int, n_docs: int) -> dict:
             "wall_sec": round(wall, 3), "docs_per_sec": round(n_docs / wall, 1)}
 
 
-
-def run_once_linededup(cpus: int, n_docs: int) -> dict:
-    """Round-6 operator family: corpus-global line dedup. Shape under
-    test: zero-shuffle segmentation, md5-keyed bigint-min keeper
-    groupBy (map-side combine), hash-join back, doc-keyed reassembly —
-    three shuffles over the line stream. Synthesized ~32-token docs
-    where ~25% of 8-word lines repeat across docs (every 4th line slot
-    draws from a small shared pool), so the keeper join does real
-    elimination work."""
-    from pyspark.sql import functions as F
-
-    from pyogrio_spark.operators.dedup import line_dedup_global
-    from pyogrio_spark.session import get_spark
-
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-    spark = get_spark(
-        f"scaling_linededup_{cpus}", master=f"local[{cpus}]", shuffle_partitions=64,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # 4 lines/doc x 8 words; line slot 3 of each doc comes from a pool
-    # of 50k shared lines -> global duplicates, the rest unique per doc
-    parts = []
-    for li in range(4):
-        seed = 48271 + li
-        if li == 3:
-            words = [F.concat(F.lit(f"p{j}_"), ((F.col("id") * 16807) % 50_000).cast("string")) for j in range(8)]
-        else:
-            words = [F.concat(F.lit(f"u{li}_{j}_"), ((F.col("id") * seed + j) % (1 << 40)).cast("string")) for j in range(8)]
-        parts.extend(words)
-    docs = spark.range(n_docs, numPartitions=4 * cpus).select(
-        F.col("id").alias("doc_id"), F.concat_ws(" ", *parts).alias("text")
-    )
-
-    def run():
-        out = line_dedup_global(docs, line_words=8)
-        row = out.select(
-            F.count("*").alias("n"),
-            F.sum(F.length("text")).alias("chars"),
-            F.sum("n_kept").alias("kept"),
-            F.sum("n_lines").alias("lines"),
-        ).collect()[0]
-        return row["n"], row["chars"], row["kept"], row["lines"]
-
-    res = run()  # warm pass (codegen compile + JIT)
-    t0 = time.perf_counter()
-    res2 = run()
-    wall = time.perf_counter() - t0
-    spark.stop()
-    assert res == res2
-    return {"cpus": cpus, "docs": n_docs, "rows": res[0], "kept_lines": res[2],
-            "total_lines": res[3], "wall_sec": round(wall, 3),
-            "docs_per_sec": round(n_docs / wall, 1)}
-
-
-def run_once_minhash(cpus: int, n_docs: int) -> dict:
-    """CPU-bound counterpart: MinHash signatures (16-perm Carter-Wegman
-    over one md5 per 3-shingle) on synthesized ~12-word docs. Per-row
-    work is dominated by JVM md5 + codegen string assembly — the regime
-    where core count, not the shared memory bus, is the limit. This is
-    the scaling-evidence job for the engine's hash-heavy operator
-    family (minhash/simhash/winnowing/fingerprinting); the scan-bound
-    flagship join's single-JVM ceiling is reported separately (see
-    BENCH/BASELINE.md round-3 notes)."""
-    from pyspark.sql import functions as F
-
-    from pyogrio_spark.operators.dedup import minhash_signature
-    from pyogrio_spark.session import get_spark
-
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-    spark = get_spark(
-        f"scaling_minhash_{cpus}", master=f"local[{cpus}]", shuffle_partitions=64,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    words = F.transform(
-        F.sequence(F.lit(1), F.lit(12)),
-        lambda i: F.conv(
-            (F.pmod(F.col("id") * 48271 + i * 2_654_435_761, F.lit(1 << 20))).cast("string"), 10, 36
-        ),
-    )
-    docs = spark.range(n_docs, numPartitions=4 * cpus).select(
-        F.col("id").alias("doc_id"), F.array_join(words, " ").alias("text")
-    ).cache()
-    docs.count()
-    # steady-state protocol (same rationale as run_once): warm pass first
-    minhash_signature(docs).agg(F.bit_xor(F.xxhash64("sig"))).collect()
-    t0 = time.perf_counter()
-    sig = minhash_signature(docs)
-    agg = sig.agg(F.bit_xor(F.xxhash64("sig")).alias("x"), F.count("*").alias("n")).first()
-    wall = time.perf_counter() - t0
-    spark.stop()
-    return {"cpus": cpus, "docs": n_docs, "rows": agg["n"], "wall_sec": round(wall, 3),
-            "docs_per_sec": round(n_docs / wall, 1)}
-
-
 def run_once_scrub(cpus: int, n_docs: int) -> dict:
     """Round-6 operator family: corpus scrubbing (normalize + PII
     redaction). Pure zero-shuffle map whose per-row cost is JVM regex
@@ -385,10 +252,9 @@ def run_once_scrub(cpus: int, n_docs: int) -> dict:
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000_000
     job = sys.argv[2] if len(sys.argv) > 2 else "pip"
-    runner = {"pip": run_once, "dedup": run_once_shuffle, "knn": run_once_knn,
+    runner = {"pip": run_once, "knn": run_once_knn,
               "asof": run_once_asof, "asof_window": run_once_asof_window,
-              "minhash": run_once_minhash, "scrub": run_once_scrub,
-              "chunk": run_once_chunk, "linededup": run_once_linededup}[job]
+              "scrub": run_once_scrub, "chunk": run_once_chunk}[job]
     r8 = runner(8, n_docs)
     r32 = runner(32, n_docs)
     eff = (r32["docs_per_sec"] / r8["docs_per_sec"]) / 4.0

@@ -323,23 +323,18 @@ def test_reproject_is_pure_codegen(spark, docs_parquet):
         assert marker not in plan
 
 
-def test_tfidf_and_packing_plans_stay_jvm_side(spark):
-    """The round-5 text ops must plan with no Python stages: tfidf is
-    explode+aggs+join+window, packing is map-only (+ the two-phase rank
-    whose only Python-free shuffle is the range exchange)."""
-    from pyogrio_spark.functions.text import tfidf_top_terms
+def test_packing_plan_stays_jvm_side(spark):
+    """Packing must plan with no Python stages: it is map-only (+ the
+    two-phase rank whose only Python-free shuffle is the range exchange)."""
     from pyogrio_spark.operators.chunking import chunk_documents, pack_chunks_global
 
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon zeta " * 4) for i in range(50)],
         schema="doc_id bigint, text string",
     )
-    for df in (
-        tfidf_top_terms(docs, k=3),
-        pack_chunks_global(chunk_documents(docs, 8, 2), 32, 8),
-    ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Python" not in plan and "BatchEvalPython" not in plan
+    df = pack_chunks_global(chunk_documents(docs, 8, 2), 32, 8)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "BatchEvalPython" not in plan
 
 
 @pytest.fixture(scope="module")

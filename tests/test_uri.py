@@ -141,3 +141,43 @@ def test_open_table_accepts_file_uri_and_zip_member(spark, tmp_path):
     with zipfile.ZipFile(z, "w") as zf:
         zf.write(gj, "inner/t.geojson")
     assert open_table(spark, f"zip://{z}!inner/t.geojson").count() == 2
+
+
+_TEMP_DIRS_SCRIPT = """
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from pyogrio_spark.io.dispatch import _unzip_member
+from pyogrio_spark.uri import vsimem_root, vsimem_to_local
+
+with open(vsimem_to_local("/vsimem/scratch/a.txt"), "w") as f:
+    f.write("x")
+member = _unzip_member(sys.argv[2], (".txt",))
+assert open(member).read() == "y"
+print("VSIMEM", vsimem_root())
+print("ZIP", os.path.dirname(member))
+"""
+
+
+def test_temp_dirs_are_removed_at_exit(tmp_path):
+    """The /vsimem/ root and extracted-archive dirs end with the process
+    that made them, as GDAL's in-memory filesystem does."""
+    import os
+    import subprocess
+    import sys
+    import zipfile
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    archive = tmp_path / "t.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("b.txt", "y")
+    script = tmp_path / "drive.py"
+    script.write_text(_TEMP_DIRS_SCRIPT)
+    proc = subprocess.run(
+        [sys.executable, str(script), root, str(archive)], capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    dirs = dict(line.split(" ", 1) for line in proc.stdout.splitlines())
+    assert set(dirs) == {"VSIMEM", "ZIP"}
+    for d in dirs.values():
+        assert os.path.basename(d).startswith("pyogrio_spark_")
+        assert not os.path.exists(d), d
