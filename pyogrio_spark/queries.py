@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyogrio_spark.fixtures import DEFAULT_RES as GEO_RES
@@ -837,6 +837,110 @@ SELECT doc_id,
        least(32, n - chunk_id * 24) AS n_tokens,
        CAST(floor(chunk_id / 4) AS BIGINT) AS pack_id
 FROM e
+"""
+
+
+# ============================================================ budget / dedup
+
+
+def _token_count() -> Column:
+    """Whitespace token count of ``text``."""
+    return F.size(F.split(F.trim(F.col("text")), r"\s+"))
+
+
+def q_dedup_exact(spark, sf):
+    """Keep the first doc_id per identical text: (doc_id, content_hash, dup_count)."""
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    return (
+        docs.groupBy(F.md5("text").alias("content_hash"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("dup_count"))
+        .select("doc_id", "content_hash", "dup_count")
+    )
+
+
+def q_token_budget(spark, sf):
+    """Per-language token-budget selection via the distributed prefix
+    sum (two-phase, no single-reducer window) — longest docs first."""
+    from pyogrio_spark.operators.budget import budget_filter
+
+    docs = _read_spread(spark, f"{sf}/documents.parquet")
+    docs = docs.withColumn("token_count", _token_count())
+    # longest-first order needs an ascending sortable column for the range shuffle
+    docs = docs.withColumn("neg_tokens", -F.col("token_count"))
+    kept = budget_filter(
+        docs, budget=5000, group_col="lang", value_col="token_count",
+        order_cols=("neg_tokens", "doc_id"), num_partitions=16,
+    ).drop("neg_tokens")
+    return kept.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("token_count").alias("tokens_kept"),
+        F.min("doc_id").alias("first_doc"),
+    )
+
+
+ORACLE_BUDGET = """
+WITH t AS (
+  SELECT lang, doc_id, len(string_split_regex(trim(text), '\\s+')) AS token_count
+  FROM documents),
+c AS (
+  SELECT lang, doc_id, token_count,
+         sum(token_count) OVER (PARTITION BY lang ORDER BY token_count DESC, doc_id
+                                ROWS UNBOUNDED PRECEDING) AS cum
+  FROM t)
+SELECT lang, count(*) AS n_docs, CAST(sum(token_count) AS BIGINT) AS tokens_kept, min(doc_id) AS first_doc
+FROM c WHERE cum - token_count < 5000
+GROUP BY lang
+"""
+
+
+def q_geo_curation(spark, sf):
+    """Geo-scoped document selection in one oracled query: documents ->
+    PIP zone assignment (broadcast cell join + rect shortcut) -> per-zone
+    exact dedup (keep the first doc per content per zone) -> per-zone
+    token budget (first-fit cumulative cut over doc_id order,
+    budget_filter_window semantics) -> per-zone kept counts and token
+    totals."""
+    from pyogrio_spark.operators.budget import budget_filter_window
+
+    cover = zones_cell_cover(spark, _zones_pd(), res=GEO_RES, zone_key="zone_id")
+    joined = point_in_polygon_join(
+        _docs_geo(spark, sf), cover, zone_key="zone_id", keep_doc_cols=["doc_id"]
+    )
+    docs = _read_spread(spark, f"{sf}/documents.parquet").select("doc_id", "text")
+    d = joined.join(docs, "doc_id").withColumn("_tok", _token_count())
+    w = Window.partitionBy("zone_id", F.md5("text")).orderBy("doc_id")
+    deduped = d.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+    budgeted = budget_filter_window(
+        deduped, budget=2000, group_col="zone_id", value_col="_tok", order_cols=("doc_id",)
+    )
+    return budgeted.groupBy("zone_id").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("_tok").alias("tokens"),
+        F.min("doc_id").alias("first_doc"),
+    )
+
+
+ORACLE_GEO_CURATION = f"""
+WITH pip AS (
+  SELECT d.doc_id, z.zone_id FROM {DOCS_GEO_SQL} d JOIN {ZONES_SQL} z
+  ON d.lon > z.zx0 AND d.lon < z.zx1 AND d.lat > z.zy0 AND d.lat < z.zy1),
+j AS (
+  SELECT p.zone_id, p.doc_id, len(string_split(doc.text, ' ')) AS tok, doc.text
+  FROM pip p JOIN documents doc ON doc.doc_id = p.doc_id),
+dd AS (
+  SELECT * FROM (
+    SELECT zone_id, doc_id, tok,
+           row_number() OVER (PARTITION BY zone_id, md5(text) ORDER BY doc_id) AS rn
+    FROM j) WHERE rn = 1),
+cum AS (
+  SELECT zone_id, doc_id, tok,
+         sum(tok) OVER (PARTITION BY zone_id ORDER BY doc_id
+                        ROWS UNBOUNDED PRECEDING) AS c
+  FROM dd)
+SELECT zone_id, count(*) AS n_docs, CAST(sum(tok) AS BIGINT) AS tokens,
+       min(doc_id) AS first_doc
+FROM cum WHERE c - tok < 2000
+GROUP BY zone_id
 """
 
 
@@ -1672,7 +1776,10 @@ QUERIES = {
     "geo_within_distance": q_geo_within_distance,
     "read_bounds": q_read_bounds,
     "domain_mix": q_domain_mix,
+    "token_budget": q_token_budget,
+    "geo_curation": q_geo_curation,
     "spans_explode": q_spans_explode,
+    "dedup_exact": q_dedup_exact,
     "geo_tile_assignment": q_geo_tile_assignment,
     "geo_zonal_stats": q_geo_zonal,
 }
@@ -1717,6 +1824,10 @@ ORACLES = {
     "geo_rasterize": ORACLE_RASTERIZE,
     "spans_explode": ORACLE_SPANS,
     "spans_reconstruct": ORACLE_SPANS_RECONSTRUCT,
+    "dedup_exact": (
+        "SELECT min(doc_id) AS doc_id, md5(text) AS content_hash, count(*) AS dup_count "
+        "FROM documents GROUP BY md5(text)"
+    ),
     "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
     "text_normalize": _oracle_text_normalize(),
     "text_pii_redact": _oracle_text_pii(),
@@ -1789,5 +1900,7 @@ ORACLES = {
         SELECT cast(json_extract_string(props, '$.k') as bigint) AS k,
                count(*) AS n_events, min(event_id) AS first_event
         FROM events GROUP BY 1""",
+    "geo_curation": ORACLE_GEO_CURATION,
     "dataset_split": ORACLE_SPLIT,
+    "token_budget": ORACLE_BUDGET,
 }

@@ -323,9 +323,11 @@ def test_reproject_is_pure_codegen(spark, docs_parquet):
         assert marker not in plan
 
 
-def test_packing_plan_stays_jvm_side(spark):
+def test_tfidf_and_packing_plans_stay_jvm_side(spark):
     """Packing must plan with no Python stages: it is map-only (+ the
-    two-phase rank whose only Python-free shuffle is the range exchange)."""
+    two-phase rank whose only Python-free shuffle is the range exchange).
+    The name predates the removal of the tf-idf operator, whose plan
+    this test also checked."""
     from pyogrio_spark.operators.chunking import chunk_documents, pack_chunks_global
 
     docs = spark.createDataFrame(
