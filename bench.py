@@ -33,8 +33,6 @@ HEADLINE = [
     "events_sessionize",
     "geo_intersects_join",
     "geo_intersects_join_poly",
-    "dataset_split",
-    "domain_mix",
     "curve_linearize",
     # round-4 additions: codegen reprojection over the full doc table,
     # batch measure kernels + exact rect clipping over the zone set
@@ -45,17 +43,8 @@ HEADLINE = [
     # cross-doc global packing (two-phase rank)
     "text_chunking",
     "chunk_pack_global",
-    # round-6 scrubbing batch: normalization, PII redaction, URL/domain
-    # hygiene (broadcast blocklist anti-join), Bloom-bitset benchmark
-    # decontamination
-    "text_normalize",
-    "text_pii_redact",
-    "url_domains",
-    "decontaminate_bloom",
-    # span-kind projection over the interleaved sequence; temperature-
-    # scaled domain mixing (data-dependent integer targets)
+    # span-kind projection over the interleaved sequence
     "spans_strip_media",
-    "temperature_resample",
     # multi-zoom tile rollup (one corpus agg + reused-exchange parents)
     "geo_tile_pyramid",
     # round-7 additions: copy-on-write MERGE + NULL-safe DELETE snapshot

@@ -5,8 +5,8 @@ Several operators cache a range-partitioned frame to PIN its
 and the final job (the range exchange may re-sample/re-plan between
 jobs, silently pairing rows with the wrong pids otherwise — measured
 ~1% wrong asof fills): ``read_table``'s ``skip_features`` distributed
-rank, ``budget_filter``, ``pack_chunks_global`` and
-``asof_join_distributed``. The pin must stay alive
+rank, ``pack_chunks_global`` and ``asof_join_distributed``. The pin
+must stay alive
 until the RETURNED DataFrame has been materialized, so the operator
 cannot unpersist eagerly; without a hook those blocks would occupy
 executor storage memory for the session lifetime (round-2 ADVICE).

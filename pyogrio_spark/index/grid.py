@@ -161,11 +161,16 @@ def cell_xy_expr_sql(lon_sql: str, lat_sql: str, res: int) -> tuple[str, str]:
     return x, y
 
 
+def xy_cell_expr_sql(x_sql: str, y_sql: str, res: int) -> str:
+    """SQL fragment computing cell_id from grid column/row expressions
+    (the expression form of :func:`xy_to_cell`)."""
+    return f"(cast({res} as bigint) * {1 << _RES_SHIFT} + {x_sql} * {_n(res)} + {y_sql})"
+
+
 def cell_expr_sql(lon_sql: str, lat_sql: str, res: int) -> str:
     """SQL fragment computing cell_id from lon/lat expressions.
 
     Pure arithmetic -> runs in whole-stage codegen on Spark and is
     byte-for-byte reproducible in DuckDB/ANSI oracles.
     """
-    x, y = cell_xy_expr_sql(lon_sql, lat_sql, res)
-    return f"(cast({res} as bigint) * {1 << _RES_SHIFT} + {x} * {_n(res)} + {y})"
+    return xy_cell_expr_sql(*cell_xy_expr_sql(lon_sql, lat_sql, res), res)

@@ -327,7 +327,8 @@ def _apply_range(
         else [F.col(c) for c in _order_cols(df)]
     )
     if skip:
-        # distributed global rank (two-phase, same shape as budget_filter):
+        # distributed global rank (two-phase, the shape pack_chunks_global
+        # and asof_join_distributed share):
         # range-shuffle into ordered partitions, count per partition (one
         # tiny collect), broadcast the prefix offsets back, rank locally.
         # Replaces the former Window.orderBy(...) global row_number whose

@@ -11,7 +11,8 @@ Two plans:
   through one reducer — fine for high-cardinality keys, serial for a
   handful of hot keys.
 - ``asof_join_distributed`` (scale plan for FEW/HOT keys): the
-  two-phase pattern of ``budget_filter`` — range-shuffle the union into
+  two-phase pattern of ``read_table``'s ``skip_features`` rank and
+  ``pack_chunks_global`` — range-shuffle the union into
   contiguous (key, ts) partitions, take each partition's last
   right-value per key, broadcast the running "carry-in" value back,
   then fill within partitions in parallel. A single hot key spreads

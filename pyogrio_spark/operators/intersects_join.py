@@ -27,34 +27,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyogrio_spark.geometry.predicates import PreparedPolygon, batch_intersects
-from pyogrio_spark.index.grid import LAT0, LON0, SPAN_LAT, SPAN_LON, _RES_SHIFT
+from pyogrio_spark.index.grid import cell_xy_expr_sql, xy_cell_expr_sql
+from pyogrio_spark.operators.spatial_join import cell_join
 
 DEFAULT_RES = 7
 
 
-def _cell_component(coord_sql_min: str, coord_sql_max: str, origin: float, span: float, n: int):
-    lo = F.least(
-        F.greatest(F.floor((F.expr(coord_sql_min) - F.lit(origin)) / F.lit(span) * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    hi = F.least(
-        F.greatest(F.floor((F.expr(coord_sql_max) - F.lit(origin)) / F.lit(span) * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    return lo, hi
+def _envelope_cell_ranges(res: int) -> tuple[str, str, str, str]:
+    """SQL for the grid column/row range (x0, x1, y0, y1) of each row's
+    envelope (xmin..ymax columns)."""
+    x0, y0 = cell_xy_expr_sql("xmin", "ymin", res)
+    x1, y1 = cell_xy_expr_sql("xmax", "ymax", res)
+    return x0, x1, y0, y1
 
 
 def explode_envelope_cells(df: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """Adds ``cell_id`` rows covering each row's envelope (xmin..ymax
     columns) — sequence+explode arithmetic, no UDF."""
-    n = 1 << res
-    base = 1 << _RES_SHIFT
-    x0, x1 = _cell_component("xmin", "xmax", LON0, SPAN_LON, n)
-    y0, y1 = _cell_component("ymin", "ymax", LAT0, SPAN_LAT, n)
+    x0, x1, y0, y1 = _envelope_cell_ranges(res)
     return (
-        df.withColumn("_cx", F.explode(F.sequence(x0, x1)))
-        .withColumn("_cy", F.explode(F.sequence(y0, y1)))
-        .withColumn("cell_id", F.lit(res).cast("long") * F.lit(base) + F.col("_cx") * n + F.col("_cy"))
+        df.withColumn("_cx", F.expr(f"explode(sequence({x0}, {x1}))"))
+        .withColumn("_cy", F.expr(f"explode(sequence({y0}, {y1}))"))
+        .withColumn("cell_id", F.expr(xy_cell_expr_sql("_cx", "_cy", res)))
         .drop("_cx", "_cy")
     )
 
@@ -68,17 +62,16 @@ def intersects_join(
     geom_col: str = "geometry_wkb",
     keep_left_cols: list[str] | None = None,
     broadcast_cover: bool = True,
-    salt: int = 0,
+    salt_plan: pd.DataFrame | None = None,
 ) -> DataFrame:
     """left (any geometry; needs envelope cols + geometry_wkb) ⋈ polygons
     (``cover`` from zones_cell_cover) on ST_Intersects semantics.
     -> keep_left_cols + zone_key, one row per intersecting pair.
 
     ``broadcast_cover=False`` switches to a shuffle hash join for huge
-    polygon sides (cover no longer fits an executor); ``salt`` > 1 then
-    fans each cover cell out x salt and spreads left rows by key hash so
-    a hot cell lands on ``salt`` reducers — same skew treatment as
-    ``point_in_polygon_join``."""
+    polygon sides (cover no longer fits an executor); ``salt_plan`` then
+    salts its hot cells — the same skew treatment as
+    ``point_in_polygon_join`` (``spatial_join.cell_join``)."""
     keep = keep_left_cols or [left_key]
     # left_key rides through the refine so the pair dedup has it even
     # when keep_left_cols omits it
@@ -88,63 +81,33 @@ def intersects_join(
     ztype = cover.schema[zone_key].dataType.simpleString()
 
     lcells = explode_envelope_cells(left.select(*dict.fromkeys([*carry, "xmin", "ymin", "xmax", "ymax", geom_col])), res)
-    if broadcast_cover:
-        joined = lcells.join(F.broadcast(cover), on="cell_id", how="inner")
-    elif salt > 1:
-        cover = cover.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        lcells = lcells.withColumn("_salt", F.pmod(F.xxhash64(F.col(keep[0])), F.lit(salt)).cast("int"))
-        joined = lcells.join(cover, on=["cell_id", "_salt"], how="inner").drop("_salt")
-    else:
-        joined = lcells.join(cover, on="cell_id", how="inner")
+    joined = cell_join(lcells, cover, left_key, broadcast_cover, salt_plan)
 
-    # coarse: envelope overlap (cover carries the zone bbox for rect zones;
-    # for all zones the cell pre-join already bounds the search)
-    if {"zxmin", "zymin", "zxmax", "zymax"}.issubset(set(cover.columns)):
-        joined = joined.filter(
-            (F.col("xmin") <= F.col("zxmax"))
-            & (F.col("xmax") >= F.col("zxmin"))
-            & (F.col("ymin") <= F.col("zymax"))
-            & (F.col("ymax") >= F.col("zymin"))
-        )
-
-    coarse_checked = {"zxmin", "zymin", "zxmax", "zymax"}.issubset(set(cover.columns))
-    has_is_rect = "is_rect" in cover.columns
+    # coarse: envelope overlap with the zone bbox the cover carries
+    joined = joined.filter("xmin <= zxmax AND xmax >= zxmin AND ymin <= zymax AND ymax >= zymin")
 
     out_cols = [*carry, zone_key]
-    # full-cover shortcut is only sound when the ENTIRE envelope sits in
-    # this one full cell (then every point of the geometry is inside the
-    # polygon). An envelope that straddles cells could hold a geometry
-    # that never enters the full cell at all.
-    n = 1 << res
-    x0e, x1e = _cell_component("xmin", "xmax", LON0, SPAN_LON, n)
-    y0e, y1e = _cell_component("ymin", "ymax", LAT0, SPAN_LAT, n)
-    env_in_one_cell = (x0e == x1e) & (y0e == y1e)
-    jvm_true = F.col("full_cover") & env_in_one_cell
-    if has_is_rect and coarse_checked:
-        # second JVM shortcut, sound for ANY left geometry: a nonempty
-        # geometry whose whole envelope sits inside a RECTANGLE zone
-        # intersects it — no geometry test. At planetary scale small
-        # geometries inside large rect zones dominate: measured on 5M
-        # triangles x 200 rect zones, this cut the Python refine from
-        # ~all true pairs to boundary-crossing pairs only (32.2s -> see
-        # BENCH/BASELINE.md round-2 notes).
-        jvm_true = jvm_true | (
-            F.col("is_rect")
-            & (F.col("xmin") >= F.col("zxmin"))
-            & (F.col("xmax") <= F.col("zxmax"))
-            & (F.col("ymin") >= F.col("zymin"))
-            & (F.col("ymax") <= F.col("zymax"))
-        )
+    # Two JVM shortcuts pass a pair with no geometry test:
+    # - a full-cover cell, sound only when the ENTIRE envelope sits in
+    #   this one cell (an envelope that straddles cells could hold a
+    #   geometry that never enters the full cell at all);
+    # - a RECTANGLE zone containing the whole envelope, sound for any
+    #   nonempty geometry. At planetary scale small geometries inside
+    #   large rect zones dominate: on 5M triangles x 200 rect zones this
+    #   cut the Python refine from ~all true pairs to boundary-crossing
+    #   pairs only (BENCH/BASELINE.md round-2 notes).
+    x0, x1, y0, y1 = _envelope_cell_ranges(res)
+    jvm_true = F.expr(
+        f"(full_cover AND {x0} = {x1} AND {y0} = {y1})"
+        " OR (is_rect AND xmin >= zxmin AND xmax <= zxmax AND ymin >= zymin AND ymax <= zymax)"
+    )
     full = joined.filter(jvm_true).select(*out_cols)
-    rest_cols = [*out_cols, geom_col, zgeom] + (["is_rect"] if has_is_rect and coarse_checked else [])
-    rest = joined.filter(~jvm_true).select(*rest_cols)
+    rest = joined.filter(~jvm_true).select(*out_cols, geom_col, zgeom, "is_rect")
 
     schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields if f.name in carry]
         + [f"`{zone_key}` {ztype}"]
     )
-
-    rect_fast = has_is_rect and coarse_checked
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyogrio_spark.geometry.wkb import rect_mask
@@ -153,18 +116,13 @@ def intersects_join(
         for pdf in batches:
             if pdf.empty:
                 continue
-            hit = np.zeros(len(pdf), dtype=bool)
             geoms = pdf[geom_col].to_numpy()
-            todo = np.ones(len(pdf), dtype=bool)
-            if rect_fast:
-                # rect left x rect zone: the JVM coarse filter already
-                # proved envelope overlap, and for axis-aligned rects the
-                # envelope IS the geometry — intersects without any
-                # geometry test (vectorized header/coord pattern check)
-                fast = rect_mask(list(geoms)) & pdf["is_rect"].to_numpy(dtype=bool)
-                hit[fast] = True
-                todo = ~fast
-            todo_pos = np.flatnonzero(todo)
+            # rect left x rect zone: the JVM coarse filter already proved
+            # envelope overlap, and for axis-aligned rects the envelope IS
+            # the geometry — intersects without any geometry test
+            # (vectorized header/coord pattern check)
+            hit = rect_mask(list(geoms)) & pdf["is_rect"].to_numpy(dtype=bool)
+            todo_pos = np.flatnonzero(~hit)
             sub = pdf.iloc[todo_pos]
             sub_geoms = geoms[todo_pos]
             for zwkb, idx in sub.groupby(zgeom, sort=False).indices.items():

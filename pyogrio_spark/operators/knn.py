@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyogrio_spark.index.grid import LAT0, _RES_SHIFT, cell_res, cell_to_xy, cell_width_deg, cell_xy_expr_sql
+from pyogrio_spark.index.grid import LAT0, cell_res, cell_to_xy, cell_width_deg, cell_xy_expr_sql, xy_cell_expr_sql
 
 DEFAULT_RES = 7
 
@@ -248,10 +248,11 @@ def _window_cells(pts: DataFrame, kx: str, ky: str, n: int, res: int) -> DataFra
     modulo n. ``kx``/``ky`` are SQL expressions; kx <= n//2 and the upper
     end stops at n-1-kx, so no column repeats when the window wraps all
     the way round."""
+    cell = xy_cell_expr_sql(f"pmod(_px + _dx, {n})", "_wy", res)
     return (
         pts.selectExpr("*", f"explode(sequence(-{kx}, least({kx}, {n - 1} - {kx}))) AS _dx")
         .selectExpr("*", f"explode(sequence(greatest(_py - {ky}, 0), least(_py + {ky}, {n - 1}))) AS _wy")
-        .selectExpr("*", f"{res << _RES_SHIFT} + pmod(_px + _dx, {n}) * {n} + _wy AS _cell")
+        .selectExpr("*", f"{cell} AS _cell")
     )
 
 

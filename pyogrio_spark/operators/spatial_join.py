@@ -11,8 +11,8 @@ its mask filter has the same intersects semantics,
 2. **Coarse join**: docs ⋈ cover on ``cell_id`` — a pure integer
    equi-join. A dimension-sized cover side is ``broadcast()`` so the
    docs side never shuffles; a huge polygon side falls back to a
-   shuffle hash join where AQE skew-join plus optional explicit
-   salting (``salt``) split hot coastline/metro cells.
+   shuffle hash join where AQE skew-join plus an optional per-cell
+   salt plan (``plan_salt_factors``) split hot coastline/metro cells.
 3. **Refine**: rows in ``full_cover`` cells pass with no geometry test
    (at planetary scale interior cells dominate — most of the join does
    zero geometry work). Boundary-cell rows get the exact even-odd ray
@@ -131,13 +131,48 @@ def plan_salt_factors(
     return counts[[cell_col, "salt_k"]].rename(columns={cell_col: "cell_id"})
 
 
+def cell_join(
+    left: DataFrame,
+    cover: DataFrame,
+    hash_col: str,
+    broadcast_cover: bool = True,
+    salt_plan: pd.DataFrame | None = None,
+) -> DataFrame:
+    """``left`` ⋈ ``cover`` on ``cell_id``: the coarse join of both
+    spatial joins. The cover is broadcast by default; with
+    ``broadcast_cover=False`` both sides shuffle, and a ``salt_plan``
+    (``plan_salt_factors``) fans each planned cell's cover rows out
+    ``salt_k`` times and spreads that cell's left rows over them by
+    ``xxhash64(hash_col)``, so a hot cell lands on ``salt_k`` reducers
+    and cold cells pay nothing."""
+    if broadcast_cover:
+        if salt_plan is not None:
+            raise ValueError("salt_plan salts the shuffle join: pass broadcast_cover=False with it")
+        return left.join(F.broadcast(cover), on="cell_id", how="inner")
+    if salt_plan is None or salt_plan.empty:
+        return left.join(cover, on="cell_id", how="inner")
+    plan = F.broadcast(
+        left.sparkSession.createDataFrame(salt_plan[["cell_id", "salt_k"]], schema="cell_id bigint, salt_k int")
+    )
+    cover = (
+        cover.join(plan, on="cell_id", how="left")
+        .withColumn("_salt", F.expr("explode(sequence(0, coalesce(salt_k, 1) - 1))"))
+        .drop("salt_k")
+    )
+    left = (
+        left.join(plan, on="cell_id", how="left")
+        .withColumn("_salt", F.expr(f"cast(pmod(xxhash64(`{hash_col}`), coalesce(salt_k, 1)) as int)"))
+        .drop("salt_k")
+    )
+    return left.join(cover, on=["cell_id", "_salt"], how="inner").drop("_salt")
+
+
 def point_in_polygon_join(
     docs: DataFrame,
     cover: DataFrame,
     zone_key: str = "fid",
     geom_col: str = "geometry_wkb",
     broadcast_cover: bool = True,
-    salt: int = 0,
     salt_plan: pd.DataFrame | None = None,
     keep_doc_cols: list[str] | None = None,
     include_boundary: bool = False,
@@ -147,9 +182,10 @@ def point_in_polygon_join(
     ``docs`` needs ``cell_id`` (same res as ``cover``) and point
     coordinates as envelope columns ``xmin``/``ymin`` (for points
     xmin==lon, ymin==lat — the persisted `read_bounds` columns).
-    ``salt`` > 1 applies only to the shuffle-join path: the cover side
-    is exploded ×salt and doc rows spread by doc hash, so one hot cell
-    lands on ``salt`` reducers instead of one.
+    ``broadcast_cover=False`` shuffles both sides; ``salt_plan`` (from
+    ``plan_salt_factors``) then splits its hot cells over several
+    reducers (``cell_join``). A plan with the broadcast join raises
+    ``ValueError``.
 
     Plan: docs ⋈ cover on ``cell_id``, filtered on ``full_cover OR
     contains``, where ``contains`` is the exact ray cast over the
@@ -170,38 +206,5 @@ def point_in_polygon_join(
     # the refine reads the clipped edges and bbox, never the zone geometry
     cover = cover.select("cell_id", zone_key, *REFINE_COLUMNS)
     docs_sel = docs.select(*dict.fromkeys(keep_doc_cols + ["xmin", "ymin", "cell_id"]))
-
-    if broadcast_cover:
-        joined = docs_sel.join(F.broadcast(cover), on="cell_id", how="inner")
-    elif salt_plan is not None and len(salt_plan):
-        # targeted skew salting: only cells in the plan fan out, and each
-        # by its own factor — cold cells pay nothing
-        spark = docs_sel.sparkSession
-        plan = F.broadcast(
-            spark.createDataFrame(salt_plan[["cell_id", "salt_k"]], schema="cell_id bigint, salt_k int")
-        )
-        cover = (
-            cover.join(plan, on="cell_id", how="left")
-            .withColumn("_k", F.coalesce(F.col("salt_k"), F.lit(1)))
-            .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_k") - 1)))
-            .drop("salt_k", "_k")
-        )
-        docs_sel = (
-            docs_sel.join(plan, on="cell_id", how="left")
-            .withColumn(
-                "_salt",
-                F.pmod(F.xxhash64(F.col(keep_doc_cols[0])), F.coalesce(F.col("salt_k"), F.lit(1))).cast("int"),
-            )
-            .drop("salt_k")
-        )
-        joined = docs_sel.join(cover, on=["cell_id", "_salt"], how="inner").drop("_salt")
-    elif salt > 1:
-        cover = cover.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        docs_sel = docs_sel.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(keep_doc_cols[0])), F.lit(salt)).cast("int")
-        )
-        joined = docs_sel.join(cover, on=["cell_id", "_salt"], how="inner").drop("_salt")
-    else:
-        joined = docs_sel.join(cover, on="cell_id", how="inner")
-
+    joined = cell_join(docs_sel, cover, keep_doc_cols[0], broadcast_cover, salt_plan)
     return joined.filter(contains_expr("xmin", "ymin", include_boundary)).select(*keep_doc_cols, zone_key)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyogrio_spark.index.cover import REFINE_COLUMNS, contains_expr
-from pyogrio_spark.index.grid import LAT0, LON0, SPAN_LAT, SPAN_LON, _RES_SHIFT
+from pyogrio_spark.index.grid import LAT0, LON0, cell_expr_sql, cell_width_deg, cell_xy_expr_sql, xy_cell_expr_sql
 
 DEFAULT_RES = 7
 
@@ -27,16 +27,12 @@ DEFAULT_RES = 7
 def tiles_with_centers(tiles: DataFrame, tile_deg: float, res: int = DEFAULT_RES) -> DataFrame:
     """Attach center coords + cell_id to a (tile_x, tile_y, value) grid —
     all arithmetic, codegen-friendly."""
-    n = 1 << res
-    base = 1 << _RES_SHIFT
     cx = (F.col("tile_x").cast("double") + 0.5) * tile_deg
     cy = (F.col("tile_y").cast("double") + 0.5) * tile_deg
-    gx = F.least(F.greatest(F.floor((cx - F.lit(LON0)) / F.lit(SPAN_LON) * n).cast("long"), F.lit(0)), F.lit(n - 1))
-    gy = F.least(F.greatest(F.floor((cy - F.lit(LAT0)) / F.lit(SPAN_LAT) * n).cast("long"), F.lit(0)), F.lit(n - 1))
     return (
         tiles.withColumn("cx", cx)
         .withColumn("cy", cy)
-        .withColumn("cell_id", F.lit(res).cast("long") * F.lit(base) + gx * n + gy)
+        .withColumn("cell_id", F.expr(cell_expr_sql("cx", "cy", res)))
     )
 
 
@@ -115,27 +111,15 @@ def areal_interpolate(
     from pyogrio_spark.geometry import measure as M
     from pyogrio_spark.geometry import wkb as W
 
-    n = 1 << res
-    w_deg = SPAN_LON / n
-    h_deg = SPAN_LAT / n
-    base = 1 << _RES_SHIFT
+    w_deg, h_deg = cell_width_deg(res)
+    x0, y0 = cell_xy_expr_sql("xmin", "ymin", res)
+    x1, y1 = cell_xy_expr_sql("xmax", "ymax", res)
 
     b = bounds_columns(zones.select(zone_key, geom_col, value_col), geom_col)
-
-    def cell_of(col, origin, span):
-        return F.least(
-            F.greatest(F.floor((F.col(col) - F.lit(origin)) / F.lit(span) * n).cast("long"), F.lit(0)),
-            F.lit(n - 1),
-        )
-
     cand = (
-        b.withColumn("_x0", cell_of("xmin", LON0, SPAN_LON))
-        .withColumn("_x1", cell_of("xmax", LON0, SPAN_LON))
-        .withColumn("_y0", cell_of("ymin", LAT0, SPAN_LAT))
-        .withColumn("_y1", cell_of("ymax", LAT0, SPAN_LAT))
-        .withColumn("cx_i", F.explode(F.sequence(F.col("_x0"), F.col("_x1"))))
-        .withColumn("cy_i", F.explode(F.sequence(F.col("_y0"), F.col("_y1"))))
-        .withColumn("tile_id", F.lit(res) * F.lit(base) + F.col("cx_i") * n + F.col("cy_i"))
+        b.withColumn("cx_i", F.expr(f"explode(sequence({x0}, {x1}))"))
+        .withColumn("cy_i", F.expr(f"explode(sequence({y0}, {y1}))"))
+        .withColumn("tile_id", F.expr(xy_cell_expr_sql("cx_i", "cy_i", res)))
         .select(zone_key, geom_col, value_col, "tile_id", "cx_i", "cy_i")
     )
 

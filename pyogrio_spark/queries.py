@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyogrio_spark.fixtures import DEFAULT_RES as GEO_RES
@@ -24,7 +24,7 @@ from pyogrio_spark.index.grid import cell_expr_sql
 from pyogrio_spark.io.reader import read_table
 from pyogrio_spark.operators.knn import knn_join
 from pyogrio_spark.operators.range_join import bbox_range_join, boxes_cell_cover
-from pyogrio_spark.operators.spatial_join import point_in_polygon_join, zones_cell_cover
+from pyogrio_spark.operators.spatial_join import plan_salt_factors, point_in_polygon_join, zones_cell_cover
 from pyogrio_spark.operators.tiling import adaptive_tiles, assign_tiles
 from pyogrio_spark.operators.zonal import tiles_with_centers, zonal_stats
 
@@ -127,25 +127,24 @@ _SCAN_PARTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _read_spread(spark: SparkSession, path: str, key: str = "doc_id") -> DataFrame:
-    """Scale-adaptive scan spread for the CPU-heavy documents table
-    (guide §2.5 "input skew: one huge unsplittable file ... repartition
-    immediately after the read").
+    """Scale-adaptive scan spread for the documents table ("input skew:
+    one huge unsplittable file ... repartition immediately after the
+    read").
 
     The test corpora are written as a single parquet row group, which
     Spark cannot split below one task — so the whole pre-exchange map
-    side of a query (tokenizing, hashing, regex, span synthesis) would
-    run on ONE core no matter how many the session has (measured 5.1 s
-    -> 0.8 s for text_features at sf1.0 on local[32]). Spread the scan
-    to the session's default parallelism when (and only when) the scan
-    yields fewer splits; a production multi-file table already scans
-    with >= cores splits and passes through untouched, so nothing is
-    shuffled at 100 TB.
+    side of a query (the WKB encode, envelope decode and cell index of
+    ``_docs_geo``, span synthesis, chunking) would run on ONE core no
+    matter how many the session has. Spread the scan to the session's
+    default parallelism when (and only when) the scan yields fewer
+    splits; a production multi-file table already scans with >= cores
+    splits and passes through untouched, so nothing is shuffled at
+    100 TB.
 
     The spread target is size-aware (~256 KB of encoded parquet per
     task, capped at the session parallelism): at the smoke scales a
-    full-cores spread of a 1 MB table turns every downstream stage into
-    32 near-empty tasks — the guide §2.2 small-task pathology in
-    miniature."""
+    full-cores spread of a 1 MB table would turn every downstream stage
+    into near-empty tasks."""
     df = spark.read.parquet(path)
     sc = spark.sparkContext
     memo = _SCAN_PARTS.get(spark)
@@ -171,10 +170,9 @@ def _read_spread(spark: SparkSession, path: str, key: str = "doc_id") -> DataFra
     n, target = got
     # hash by the row key rather than round-robin: the key is unique so
     # the spread is just as even, there is no sort-before-repartition,
-    # and every downstream doc-keyed window/groupBy reuses the spread's
-    # partitioning instead of adding its own Exchange of a much larger
-    # derived stream (guide §2.4; repetition_scores 8.3 -> 3.4 s,
-    # minhash 3.2 -> 2.7 s measured in the same window)
+    # and a downstream doc-keyed window (spans_strip_media's per-doc
+    # row_number) reuses the spread's partitioning instead of adding its
+    # own Exchange of the larger exploded stream
     return df.repartition(target, key) if n < target else df
 
 
@@ -219,9 +217,16 @@ def q_geo_pip_join(spark, sf):
 
 
 def q_geo_pip_join_salted(spark, sf):
+    """geo_pip_join as a shuffle join salted by ``plan_salt_factors``;
+    same oracle as geo_pip_join. The synthetic docs lie on a lattice
+    with at most one per res-7 cell, so no cell is hot at any test
+    scale: a zero row budget marks every occupied cell hot and
+    ``max_salt`` splits each 4 ways, so the salted path always runs."""
+    docs = _docs_geo(spark, sf)
     cover = zones_cell_cover(spark, _zones_pd(), res=GEO_RES, zone_key="zone_id")
     return point_in_polygon_join(
-        _docs_geo(spark, sf), cover, zone_key="zone_id", keep_doc_cols=["doc_id"], broadcast_cover=False, salt=4
+        docs, cover, zone_key="zone_id", keep_doc_cols=["doc_id"], broadcast_cover=False,
+        salt_plan=plan_salt_factors(docs, threshold_rows=0, max_salt=4),
     )
 
 
@@ -730,39 +735,7 @@ SELECT doc_id, (r = orig) AS matches, md5(r) AS digest FROM rec
 """
 
 
-# ====================================================== sampling / chunking
-
-
-def q_stratified_sample(spark, sf):
-    """Exact-count stratified sample: exactly min(20, |stratum|) docs
-    per (lang, source) stratum, deterministically ordered by
-    md5(doc_id) — content-stable eval-set construction (re-runs and
-    resumes pick identical docs). Parallelism = number of strata (each
-    stratum's rank is one window partition); at corpus scale strata
-    are lang x source x quality-bucket = thousands of partitions, so
-    no single-reducer bottleneck unless one stratum dominates — then
-    pre-cut by hash before ranking."""
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    w = Window.partitionBy("lang", "source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    return (
-        docs.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= 20)
-        .select("doc_id", "lang", "source", "rn")
-    )
-
-
-ORACLE_STRATIFIED_SAMPLE = """
-SELECT doc_id, lang, source, rn FROM (
-  SELECT doc_id, lang, source,
-         row_number() OVER (
-           PARTITION BY lang, source
-           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-         ) AS rn
-  FROM documents
-) WHERE rn <= 20
-"""
+# ================================================================ chunking
 
 
 def q_chunk_pack_global(spark, sf):
@@ -840,108 +813,7 @@ FROM e
 """
 
 
-# ============================================================ budget / dedup
-
-
-def _token_count() -> Column:
-    """Whitespace token count of ``text``."""
-    return F.size(F.split(F.trim(F.col("text")), r"\s+"))
-
-
-def q_dedup_exact(spark, sf):
-    """Keep the first doc_id per identical text: (doc_id, content_hash, dup_count)."""
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    return (
-        docs.groupBy(F.md5("text").alias("content_hash"))
-        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("dup_count"))
-        .select("doc_id", "content_hash", "dup_count")
-    )
-
-
-def q_token_budget(spark, sf):
-    """Per-language token-budget selection via the distributed prefix
-    sum (two-phase, no single-reducer window) — longest docs first."""
-    from pyogrio_spark.operators.budget import budget_filter
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    docs = docs.withColumn("token_count", _token_count())
-    # longest-first order needs an ascending sortable column for the range shuffle
-    docs = docs.withColumn("neg_tokens", -F.col("token_count"))
-    kept = budget_filter(
-        docs, budget=5000, group_col="lang", value_col="token_count",
-        order_cols=("neg_tokens", "doc_id"), num_partitions=16,
-    ).drop("neg_tokens")
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("token_count").alias("tokens_kept"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
-ORACLE_BUDGET = """
-WITH t AS (
-  SELECT lang, doc_id, len(string_split_regex(trim(text), '\\s+')) AS token_count
-  FROM documents),
-c AS (
-  SELECT lang, doc_id, token_count,
-         sum(token_count) OVER (PARTITION BY lang ORDER BY token_count DESC, doc_id
-                                ROWS UNBOUNDED PRECEDING) AS cum
-  FROM t)
-SELECT lang, count(*) AS n_docs, CAST(sum(token_count) AS BIGINT) AS tokens_kept, min(doc_id) AS first_doc
-FROM c WHERE cum - token_count < 5000
-GROUP BY lang
-"""
-
-
-def q_geo_curation(spark, sf):
-    """Geo-scoped document selection in one oracled query: documents ->
-    PIP zone assignment (broadcast cell join + rect shortcut) -> per-zone
-    exact dedup (keep the first doc per content per zone) -> per-zone
-    token budget (first-fit cumulative cut over doc_id order,
-    budget_filter_window semantics) -> per-zone kept counts and token
-    totals."""
-    from pyogrio_spark.operators.budget import budget_filter_window
-
-    cover = zones_cell_cover(spark, _zones_pd(), res=GEO_RES, zone_key="zone_id")
-    joined = point_in_polygon_join(
-        _docs_geo(spark, sf), cover, zone_key="zone_id", keep_doc_cols=["doc_id"]
-    )
-    docs = _read_spread(spark, f"{sf}/documents.parquet").select("doc_id", "text")
-    d = joined.join(docs, "doc_id").withColumn("_tok", _token_count())
-    w = Window.partitionBy("zone_id", F.md5("text")).orderBy("doc_id")
-    deduped = d.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
-    budgeted = budget_filter_window(
-        deduped, budget=2000, group_col="zone_id", value_col="_tok", order_cols=("doc_id",)
-    )
-    return budgeted.groupBy("zone_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("_tok").alias("tokens"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
-ORACLE_GEO_CURATION = f"""
-WITH pip AS (
-  SELECT d.doc_id, z.zone_id FROM {DOCS_GEO_SQL} d JOIN {ZONES_SQL} z
-  ON d.lon > z.zx0 AND d.lon < z.zx1 AND d.lat > z.zy0 AND d.lat < z.zy1),
-j AS (
-  SELECT p.zone_id, p.doc_id, len(string_split(doc.text, ' ')) AS tok, doc.text
-  FROM pip p JOIN documents doc ON doc.doc_id = p.doc_id),
-dd AS (
-  SELECT * FROM (
-    SELECT zone_id, doc_id, tok,
-           row_number() OVER (PARTITION BY zone_id, md5(text) ORDER BY doc_id) AS rn
-    FROM j) WHERE rn = 1),
-cum AS (
-  SELECT zone_id, doc_id, tok,
-         sum(tok) OVER (PARTITION BY zone_id ORDER BY doc_id
-                        ROWS UNBOUNDED PRECEDING) AS c
-  FROM dd)
-SELECT zone_id, count(*) AS n_docs, CAST(sum(tok) AS BIGINT) AS tokens,
-       min(doc_id) AS first_doc
-FROM cum WHERE c - tok < 2000
-GROUP BY zone_id
-"""
+# ============================================================= geo tiling
 
 
 def q_adaptive_tile_map(spark, sf):
@@ -1248,290 +1120,6 @@ def q_events_json_props(spark, sf):
     )
 
 
-def q_dataset_split(spark, sf):
-    """Deterministic train/val/test assignment by content-stable md5
-    bucketing — per (lang, split) counts. Pure codegen, no shuffle
-    before the aggregate."""
-    from pyogrio_spark.operators.sampling import hash_split
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    out = hash_split(docs, key_col="doc_id", weights={"train": 0.8, "val": 0.1, "test": 0.1})
-    return out.groupBy("lang", "split").agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("first_doc"))
-
-
-ORACLE_SPLIT = """
-SELECT lang,
-       CASE WHEN b < 800000 THEN 'train' WHEN b < 900000 THEN 'val' ELSE 'test' END AS split,
-       count(*) AS n_docs, min(doc_id) AS first_doc
-FROM (SELECT lang, doc_id,
-             ('0x' || substring(md5('split' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000000 AS b
-      FROM documents)
-GROUP BY 1, 2
-"""
-
-
-def q_domain_mix(spark, sf):
-    """Domain mixing: deterministically resample the corpus to target
-    per-language weights (en x1.5 upsampled, others subsampled) — each
-    group-g row appears floor(w) times plus one extra iff its content
-    hash falls under frac(w). Output: per (lang, copy_idx) counts."""
-    from pyogrio_spark.operators.sampling import resample_to_weights
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    out = resample_to_weights(docs, {"en": 1.5, "es": 0.5, "fr": 0.5, "de": 0.5, "zh": 0.5}, group_col="lang")
-    return out.groupBy("lang", "copy_idx").agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("first_doc"))
-
-
-ORACLE_DOMAIN_MIX = """
-WITH b AS (
-  SELECT doc_id, lang,
-         ('0x' || substring(md5('mix' || doc_id), 1, 15))::BIGINT % 1000000 AS bucket
-  FROM documents),
-n AS (
-  SELECT doc_id, lang,
-         CASE WHEN lang = 'en' THEN 1 + CASE WHEN bucket < 500000 THEN 1 ELSE 0 END
-              ELSE 0 + CASE WHEN bucket < 500000 THEN 1 ELSE 0 END END AS nc
-  FROM b),
-ex AS (SELECT doc_id, lang, unnest(generate_series(0, nc - 1)) AS copy_idx FROM n WHERE nc > 0)
-SELECT lang, copy_idx, count(*) AS n_docs, min(doc_id) AS first_doc
-FROM ex GROUP BY lang, copy_idx
-"""
-
-
-# ------------------------------------------------------ corpus scrubbing
-#
-# Round-6 additions: the cleaning stages of a pretraining pipeline
-# (normalize -> redact -> URL hygiene -> benchmark decontamination),
-# functions/scrub.py. The synthetic corpus contains none of these
-# patterns, so each query AUGMENTS the text deterministically from
-# doc_id — the identical expression on both engines — and the oracle
-# compares the scrubbed result exactly (md5 of the output text is the
-# hard signal).
-
-# the normalization mess: tab + typographic junk + doc-varying space
-# run + a control char. Shared constant so the Spark and SQL builds
-# cannot drift.
-_MESS = " “q”—x… "
-
-
-def q_text_normalize(spark, sf):
-    """Text normalization (functions/scrub.py normalize_text):
-    control-strip, typographic fold (curly quotes/dashes/ellipsis/NBSP
-    -> ASCII), whitespace-run collapse, trim. Zero-shuffle map stage;
-    output keyed by md5 of the normalized text."""
-    from pyogrio_spark.functions.scrub import normalize_text
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    aug = F.concat(
-        F.col("text"),
-        F.lit("\t" + _MESS),
-        F.expr("repeat(' ', cast(doc_id % 3 + 1 as int))"),
-        F.lit("\x01end"),
-    )
-    norm = normalize_text(aug)
-    return docs.select(
-        "doc_id",
-        F.md5(norm).alias("norm_md5"),
-        F.length(aug).alias("n_raw"),
-        F.length(norm).alias("n_norm"),
-    )
-
-
-def _oracle_text_normalize() -> str:
-    from pyogrio_spark.functions.scrub import normalize_sql
-
-    aug = (
-        f"text || chr(9) || '{_MESS}' || repeat(' ', CAST(doc_id % 3 + 1 AS INT))"
-        " || chr(1) || 'end'"
-    )
-    return f"""
-SELECT doc_id, md5({normalize_sql(f"({aug})")}) AS norm_md5,
-       length({aug}) AS n_raw, length({normalize_sql(f"({aug})")}) AS n_norm
-FROM documents"""
-
-
-def q_text_pii_redact(spark, sf):
-    """PII redaction (functions/scrub.py redact_pii): emails, phone
-    numbers (dash and dot forms), IPv4 addresses -> typed placeholder
-    tokens, with pre-redaction audit counts. The PII is planted
-    deterministically from doc_id (presence varies by doc so counts
-    are non-constant); md5 of the redacted text pins replacement
-    positions exactly. Pure map stage — regexp codegen, zero shuffle."""
-    from pyogrio_spark.functions.scrub import pii_counts, redact_pii
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    d = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    aug = F.concat(
-        F.col("text"),
-        F.when(
-            d % 3 != 0,
-            F.concat(F.lit(" reach user"), s(d), F.lit("@mail-"), s(d % 5), F.lit(".example.com")),
-        ).otherwise(F.lit("")),
-        F.concat(F.lit(" call 415-555-"), F.lpad(s(d % 10000), 4, "0")),
-        F.when(
-            d % 2 == 0,
-            F.concat(F.lit(" alt 212.555."), F.lpad(s((d * 7) % 10000), 4, "0")),
-        ).otherwise(F.lit("")),
-        F.when(
-            d % 4 != 1,
-            F.concat(F.lit(" from 10."), s(d % 256), F.lit(".0."), s(d % 100)),
-        ).otherwise(F.lit("")),
-    )
-    counts = pii_counts(aug)
-    red = redact_pii(aug)
-    return docs.select(
-        "doc_id",
-        *[v.alias(k) for k, v in counts.items()],
-        F.md5(red).alias("redacted_md5"),
-        F.length(red).alias("n_chars_red"),
-    )
-
-
-def _oracle_text_pii() -> str:
-    from pyogrio_spark.functions.scrub import EMAIL_RE, IPV4_RE, PHONE_RE, redact_sql
-
-    aug = (
-        "text"
-        " || CASE WHEN doc_id % 3 <> 0 THEN ' reach user' || doc_id || '@mail-'"
-        " || (doc_id % 5) || '.example.com' ELSE '' END"
-        " || ' call 415-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')"
-        " || CASE WHEN doc_id % 2 = 0 THEN ' alt 212.555.'"
-        " || lpad(CAST((doc_id * 7) % 10000 AS VARCHAR), 4, '0') ELSE '' END"
-        " || CASE WHEN doc_id % 4 <> 1 THEN ' from 10.' || (doc_id % 256)"
-        " || '.0.' || (doc_id % 100) ELSE '' END"
-    )
-    return f"""
-WITH a AS (SELECT doc_id, ({aug}) AS t FROM documents)
-SELECT doc_id,
-       len(regexp_extract_all(t, '{EMAIL_RE}')) AS n_emails,
-       len(regexp_extract_all(t, '{PHONE_RE}')) AS n_phones,
-       len(regexp_extract_all(t, '{IPV4_RE}')) AS n_ips,
-       md5({redact_sql("t")}) AS redacted_md5,
-       length({redact_sql("t")}) AS n_chars_red
-FROM a"""
-
-
-_URL_BLOCKLIST = ["ads.example0.net", "ads.example2.net"]
-
-
-def q_url_domains(spark, sf):
-    """URL hygiene (functions/scrub.py): extract every URL, derive its
-    domain, DROP whole documents referencing any blocked domain
-    (broadcast blocklist -> doc-level anti-join), then per-domain
-    stats over the survivors. URLs planted deterministically from
-    doc_id; docs with a blocked ad domain lose their cdn URLs too —
-    the doc-level (not URL-level) drop is the point."""
-    from pyogrio_spark.functions.scrub import doc_url_table
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    d = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    aug = F.concat(
-        F.col("text"),
-        F.concat(F.lit(" see https://cdn"), s(d % 40), F.lit(".example.org/p/"), s(d)),
-        F.when(
-            d % 4 == 0,
-            F.concat(F.lit(" ad http://ads.example"), s(d % 3), F.lit(".net/x")),
-        ).otherwise(F.lit("")),
-    )
-    aug_docs = docs.select("doc_id", aug.alias("text"))
-    block = spark.createDataFrame([(b,) for b in _URL_BLOCKLIST], "domain string")
-    # one URL-regex pass (r8): extract the (doc, url, domain) table
-    # ONCE, mark blocked domains by broadcast left join, and drop whole
-    # documents via a per-doc window max — identical output to running
-    # filter_blocked_domains on the documents and re-extracting from the
-    # survivors (URLs are a pure per-doc derivation), at half the regex
-    # cost and without the extract -> distinct -> anti-join round trip
-    # (guide §1.2/§2.4). filter_blocked_domains remains the doc-level
-    # product operator (pytest tests/test_scrub.py).
-    urls = doc_url_table(aug_docs)
-    marked = urls.join(
-        F.broadcast(block.select("domain").distinct().withColumn("_bad", F.lit(1))),
-        "domain",
-        "left",
-    )
-    kept_urls = (
-        marked.withColumn("_doc_bad", F.max(F.col("_bad")).over(Window.partitionBy("doc_id")))
-        .filter(F.col("_doc_bad").isNull())
-    )
-    return (
-        kept_urls
-        .groupBy("domain")
-        .agg(F.count_distinct("doc_id").alias("n_docs"), F.count("*").alias("n_urls"))
-    )
-
-
-def _oracle_url_domains() -> str:
-    from pyogrio_spark.functions.scrub import URL_RE
-
-    blocked = ", ".join(f"'{b}'" for b in _URL_BLOCKLIST)
-    return f"""
-WITH a AS (
-  SELECT doc_id,
-         text || ' see https://cdn' || (doc_id % 40) || '.example.org/p/' || doc_id
-              || CASE WHEN doc_id % 4 = 0 THEN ' ad http://ads.example'
-                 || (doc_id % 3) || '.net/x' ELSE '' END AS t
-  FROM documents),
-u AS (
-  SELECT doc_id, unnest(regexp_extract_all(t, '{URL_RE}')) AS url FROM a),
-du AS (
-  SELECT doc_id, url, regexp_extract(url, '^https?://([^/]+)', 1) AS domain FROM u),
-bad AS (SELECT DISTINCT doc_id FROM du WHERE domain IN ({blocked}))
-SELECT domain, count(DISTINCT doc_id) AS n_docs, count(*) AS n_urls
-FROM du WHERE doc_id NOT IN (SELECT doc_id FROM bad)
-GROUP BY domain"""
-
-
-_BLOOM_K, _BLOOM_M, _BLOOM_W, _BLOOM_S = 3, 65536, 16, 4
-
-
-def q_decontaminate_bloom(spark, sf):
-    """Benchmark decontamination via a broadcast Bloom bitset
-    (functions/scrub.py decontaminate_bloom): the benchmark set
-    (doc_id < 5) collapses to a 65536-bit filter over strided 16-char
-    grams — m/64 longs in ONE parsed array literal — and every corpus
-    gram tests membership with pure element_at+mask codegen. No join on
-    the corpus side at all: the 100 TB architecture for contamination
-    checks. The oracle simulates the filter bit-exactly (position-set join with
-    count(DISTINCT hash)=k), so even Bloom false positives match."""
-    from pyogrio_spark.functions.scrub import decontaminate_bloom
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    return decontaminate_bloom(
-        docs.filter("doc_id >= 5"),
-        docs.filter("doc_id < 5"),
-        width=_BLOOM_W,
-        stride=_BLOOM_S,
-        n_hashes=_BLOOM_K,
-        m_bits=_BLOOM_M,
-    )
-
-
-ORACLE_DECONTAMINATE_BLOOM = f"""
-WITH bg AS (
-  SELECT DISTINCT substring(text, p, {_BLOOM_W}) AS g
-  FROM (SELECT text, unnest(generate_series(1, greatest(length(text) - {_BLOOM_W - 1}, 1),
-               {_BLOOM_S})) AS p
-        FROM documents WHERE doc_id < 5)),
-bpos AS (
-  SELECT DISTINCT ('0x' || substring(md5(g || '#' || j), 1, 15))::BIGINT % {_BLOOM_M} AS pos
-  FROM bg, (VALUES (0), (1), (2)) t(j)),
-cg AS (
-  SELECT DISTINCT doc_id, substring(text, p, {_BLOOM_W}) AS g
-  FROM (SELECT doc_id, text, unnest(generate_series(1, greatest(length(text) - {_BLOOM_W - 1}, 1),
-               {_BLOOM_S})) AS p
-        FROM documents WHERE doc_id >= 5)),
-hit AS (
-  SELECT doc_id, g
-  FROM (SELECT c.doc_id, c.g, t.j,
-               ('0x' || substring(md5(c.g || '#' || t.j), 1, 15))::BIGINT % {_BLOOM_M} AS pos
-        FROM cg c, (VALUES (0), (1), (2)) t(j)) cp
-  JOIN bpos USING (pos)
-  GROUP BY doc_id, g HAVING count(DISTINCT j) = {_BLOOM_K})
-SELECT doc_id, count(*) AS n_hits FROM hit GROUP BY doc_id"""
-
-
 _PYR_BASE, _PYR_MIN = 8, 4
 
 
@@ -1607,32 +1195,6 @@ SELECT doc_id,
        CAST(row_number() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS INT) AS span_idx,
        span_text, i AS orig_offset
 FROM textspans
-"""
-
-
-def q_temperature_resample(spark, sf):
-    """Temperature-scaled domain sampling (operators/sampling.py
-    temperature_resample): per-source targets proportional to
-    n_source^0.5 (integer-quantized so both engines agree exactly),
-    exact md5-ordered take per source — the T5/mC4 mixing rule with
-    data-dependent weights, vs domain_mix's fixed weights."""
-    from pyogrio_spark.operators.sampling import temperature_resample
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    return temperature_resample(docs, alpha=0.5, total=200, group_col="source").select(
-        "doc_id", "source", "rn"
-    )
-
-
-ORACLE_TEMPERATURE_RESAMPLE = """
-WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY source),
-s AS (SELECT source, CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1e6) AS BIGINT) AS sc FROM c),
-t AS (SELECT source, (200 * sc) // (SELECT sum(sc) FROM s) AS target FROM s),
-r AS (SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source
-                                ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-      FROM documents)
-SELECT r.doc_id, r.source, r.rn FROM r JOIN t USING (source) WHERE r.rn <= t.target
 """
 
 
@@ -1745,18 +1307,12 @@ QUERIES = {
     "geo_range_join": q_geo_range_join,
     "sql_ogr_dialect": q_sql_ogr_dialect,
     "spans_strip_media": q_spans_strip_media,
-    "temperature_resample": q_temperature_resample,
-    "url_domains": q_url_domains,
-    "text_pii_redact": q_text_pii_redact,
-    "stratified_sample": q_stratified_sample,
     "table_upsert": q_table_upsert,
     "geo_areal_interpolate": q_geo_areal_interpolate,
     "geo_measures_geodesic": q_geo_measures_geodesic,
     "events_sessionize": q_events_sessionize,
     "events_asof_rates": q_events_asof_rates,
     "text_chunking": q_text_chunking,
-    "decontaminate_bloom": q_decontaminate_bloom,
-    "text_normalize": q_text_normalize,
     "total_bounds": q_total_bounds,
     "geo_mask_filter": q_geo_mask,
     "geo_pip_join_salted": q_geo_pip_join_salted,
@@ -1771,15 +1327,10 @@ QUERIES = {
     "geo_rasterize": q_geo_rasterize,
     "geo_pip_join_poly": q_geo_pip_join_poly,
     "geo_knn_join_haversine": q_geo_knn_haversine,
-    "dataset_split": q_dataset_split,
     "geo_measures": q_geo_measures,
     "geo_within_distance": q_geo_within_distance,
     "read_bounds": q_read_bounds,
-    "domain_mix": q_domain_mix,
-    "token_budget": q_token_budget,
-    "geo_curation": q_geo_curation,
     "spans_explode": q_spans_explode,
-    "dedup_exact": q_dedup_exact,
     "geo_tile_assignment": q_geo_tile_assignment,
     "geo_zonal_stats": q_geo_zonal,
 }
@@ -1787,7 +1338,6 @@ QUERIES = {
 ORACLES = {
     "scan_where_project": "SELECT doc_id, lang, n_chars FROM documents WHERE lang = 'en' AND n_chars > 200",
     "adaptive_tile_map": _oracle_adaptive(base=3, maxr=9, target=200),
-    "domain_mix": ORACLE_DOMAIN_MIX,
     "scan_skip_max": (
         "SELECT doc_id, lang, n_chars FROM documents WHERE lang = 'en' ORDER BY doc_id LIMIT 50 OFFSET 100"
     ),
@@ -1824,17 +1374,7 @@ ORACLES = {
     "geo_rasterize": ORACLE_RASTERIZE,
     "spans_explode": ORACLE_SPANS,
     "spans_reconstruct": ORACLE_SPANS_RECONSTRUCT,
-    "dedup_exact": (
-        "SELECT min(doc_id) AS doc_id, md5(text) AS content_hash, count(*) AS dup_count "
-        "FROM documents GROUP BY md5(text)"
-    ),
-    "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
-    "text_normalize": _oracle_text_normalize(),
-    "text_pii_redact": _oracle_text_pii(),
-    "url_domains": _oracle_url_domains(),
-    "decontaminate_bloom": ORACLE_DECONTAMINATE_BLOOM,
     "spans_strip_media": ORACLE_SPANS_STRIP_MEDIA,
-    "temperature_resample": ORACLE_TEMPERATURE_RESAMPLE,
     "geo_tile_pyramid": _oracle_tile_pyramid(),
     "text_chunking": ORACLE_TEXT_CHUNKING,
     "chunk_pack_global": ORACLE_CHUNK_PACK_GLOBAL,
@@ -1900,7 +1440,4 @@ ORACLES = {
         SELECT cast(json_extract_string(props, '$.k') as bigint) AS k,
                count(*) AS n_events, min(event_id) AS first_event
         FROM events GROUP BY 1""",
-    "geo_curation": ORACLE_GEO_CURATION,
-    "dataset_split": ORACLE_SPLIT,
-    "token_budget": ORACLE_BUDGET,
 }

@@ -20,9 +20,6 @@ wait_load 1.5 1200 || echo "# bench gate timed out; running anyway (recorded)"
 echo "# bench start load: $(cut -d' ' -f1 /proc/loadavg)"
 PYTHONPATH=/root/repo python bench.py 2>/dev/null | tail -1 | tee /tmp/bench_gated.json
 
-echo "=== gated scrub-family pair (20M docs, 2v8) ==="
-python scripts/scaling_gated.py 20000000 scrub 2 2 8 2 2>/dev/null
-
 echo "=== gated pip trials (1.6B docs, 2v8) ==="
 python scripts/scaling_gated.py 1600000000 pip 3 2 8 2 2>/dev/null
 

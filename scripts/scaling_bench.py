@@ -204,57 +204,12 @@ def run_once_chunk(cpus: int, n_docs: int) -> dict:
             "wall_sec": round(wall, 3), "docs_per_sec": round(n_docs / wall, 1)}
 
 
-def run_once_scrub(cpus: int, n_docs: int) -> dict:
-    """Round-6 operator family: corpus scrubbing (normalize + PII
-    redaction). Pure zero-shuffle map whose per-row cost is JVM regex
-    scanning — the text-cleaning regime where core count is the only
-    limit. Docs synthesized with planted PII (~1 email / phone / IP per
-    row) so every regex actually matches and replaces."""
-    from pyspark.sql import functions as F
-
-    from pyogrio_spark.functions.scrub import normalize_text, redact_pii
-    from pyogrio_spark.session import get_spark
-
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-    spark = get_spark(
-        f"scaling_scrub_{cpus}", master=f"local[{cpus}]", shuffle_partitions=64,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    d = F.col("id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    docs = spark.range(n_docs, numPartitions=4 * cpus).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("some  body “text” with   filler words — user"), s(d),
-            F.lit("@mail-"), s(d % 97), F.lit(".example.com tail 415-555-"),
-            F.lpad(s(d % 10000), 4, "0"), F.lit(" from 10."), s(d % 256),
-            F.lit(".0."), s(d % 100), F.lit(" done"),
-        ).alias("text"),
-    ).cache()
-    docs.count()
-
-    def run():
-        out = docs.select(redact_pii(normalize_text(F.col("text"))).alias("t"))
-        row = out.agg(F.sum(F.length("t")).alias("chars"), F.count("*").alias("n")).first()
-        return row["n"], row["chars"]
-
-    res = run()  # steady-state protocol: warm pass (codegen + JIT)
-    t0 = time.perf_counter()
-    res2 = run()
-    wall = time.perf_counter() - t0
-    spark.stop()
-    assert res == res2
-    return {"cpus": cpus, "docs": n_docs, "rows": res[0], "wall_sec": round(wall, 3),
-            "docs_per_sec": round(n_docs / wall, 1)}
-
-
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000_000
     job = sys.argv[2] if len(sys.argv) > 2 else "pip"
     runner = {"pip": run_once, "knn": run_once_knn,
               "asof": run_once_asof, "asof_window": run_once_asof_window,
-              "scrub": run_once_scrub, "chunk": run_once_chunk}[job]
+              "chunk": run_once_chunk}[job]
     r8 = runner(8, n_docs)
     r32 = runner(32, n_docs)
     eff = (r32["docs_per_sec"] / r8["docs_per_sec"]) / 4.0

@@ -6,30 +6,6 @@ import pandas as pd
 
 from pyogrio_spark import read_table, release_pins
 from pyogrio_spark.cache import pinned_count
-from pyogrio_spark.operators.budget import budget_filter
-
-
-def test_release_pins_frees_budget_pin(spark):
-    release_pins()  # start clean
-    # other modules legitimately hold session-lifetime caches (query
-    # fixtures, checkpoints pending GC) — assert against a snapshot, not
-    # global emptiness, so the check is order-independent
-    before = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(100), "grp": [i % 3 for i in range(100)],
-                      "token_count": [10] * 100}),
-        schema="doc_id long, grp long, token_count long",
-    )
-    out = budget_filter(df, budget=100, group_col="grp")
-    n = out.count()  # materialize while the pin is alive
-    assert n == 30  # 10 docs x 10 tokens per group
-    assert pinned_count() >= 1
-    released = release_pins()
-    assert released >= 1 and pinned_count() == 0
-    # no NEW cached RDD blocks left behind by the pinned operator
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    leaked = [str(i) for i in infos if i.id() not in before]
-    assert not leaked, leaked
 
 
 def test_release_pins_frees_skip_features_pin(spark, tmp_path):

@@ -83,7 +83,9 @@ def test_intersects_join_salted_shuffle_same_result(spark):
 
     broadcast = pairs()
     shuffled = pairs(broadcast_cover=False)
-    salted = pairs(broadcast_cover=False, salt=4)
+    # every cover cell salted x4
+    uniform = cover.select("cell_id").distinct().toPandas().assign(salt_k=4)
+    salted = pairs(broadcast_cover=False, salt_plan=uniform)
     assert broadcast == shuffled == salted
     assert broadcast, "fixture must produce pairs"
 

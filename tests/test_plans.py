@@ -151,33 +151,6 @@ def test_knn_job_count_does_not_depend_on_k(spark):
     assert jobs[1] == jobs[25], jobs
 
 
-def test_budget_filter_is_jvm_only(spark, docs_parquet):
-    from pyspark.sql import functions as F
-
-    from pyogrio_spark.operators.budget import budget_filter
-
-    docs = (
-        spark.read.parquet(docs_parquet)
-        .withColumn("v", (F.col("cell_id") % 100).cast("bigint"))
-        .withColumn("grp", F.concat(F.lit("g"), (F.col("cell_id") % 4).cast("string")))
-    )
-    out = budget_filter(docs.select("doc_id", "grp", "v"), budget=500,
-                        group_col="grp", value_col="v", order_cols=("doc_id",), num_partitions=8)
-    plan = plan_of(out)
-    assert "Python" not in plan and "MapInPandas" not in plan
-    # broadcast of the tiny offset table, range shuffle of the stream
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_hash_split_adds_no_shuffle(spark, docs_parquet):
-    from pyogrio_spark.operators.sampling import hash_split
-
-    out = hash_split(spark.read.parquet(docs_parquet).select("doc_id", "cell_id"))
-    plan = plan_of(out)
-    assert "Exchange" not in plan  # a split stamp is map-side only
-    assert "Python" not in plan
-
-
 def test_intersects_join_full_branch_has_no_python(spark):
     from pyogrio_spark.operators.intersects_join import intersects_join
 

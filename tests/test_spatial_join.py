@@ -45,8 +45,10 @@ def test_pip_join_shuffle_salted_same_result(spark, docs_df, docs_pd, zones_pd):
 
     cover = zones_cell_cover(spark, zones_pd)
     base = pairs(point_in_polygon_join(docs_df, cover, keep_doc_cols=["doc_id"]))
+    # every cover cell salted x4
+    uniform = cover.select("cell_id").distinct().toPandas().assign(salt_k=4)
     salted = pairs(
-        point_in_polygon_join(docs_df, cover, keep_doc_cols=["doc_id"], broadcast_cover=False, salt=4)
+        point_in_polygon_join(docs_df, cover, keep_doc_cols=["doc_id"], broadcast_cover=False, salt_plan=uniform)
     )
     plain_shuffle = pairs(point_in_polygon_join(docs_df, cover, keep_doc_cols=["doc_id"], broadcast_cover=False))
     # targeted per-hot-cell plan (hotspot fixture guarantees hot cells exist)
@@ -61,6 +63,20 @@ def test_pip_join_shuffle_salted_same_result(spark, docs_df, docs_pd, zones_pd):
     plan2 = plan_salt_factors(docs_df, threshold_rows=20)
     assert plan.sort_values("cell_id").values.tolist() == plan2.sort_values("cell_id").values.tolist()
     assert base == salted == plain_shuffle == planned
+
+
+def test_salt_plan_with_broadcast_cover_raises(spark, docs_df, zones_pd):
+    from pyogrio_spark.operators.intersects_join import intersects_join
+    from pyogrio_spark.operators.spatial_join import plan_salt_factors
+
+    cover = zones_cell_cover(spark, zones_pd)
+    plan = plan_salt_factors(docs_df, threshold_rows=20)
+    # the broadcast join has no reducers to salt: a plan there is a
+    # caller error, not something to ignore
+    with pytest.raises(ValueError, match="broadcast_cover=False"):
+        point_in_polygon_join(docs_df, cover, keep_doc_cols=["doc_id"], salt_plan=plan)
+    with pytest.raises(ValueError, match="broadcast_cover=False"):
+        intersects_join(docs_df, cover, salt_plan=plan)
 
 
 def test_distributed_cover_matches_driver_cover(spark, zones_pd):
