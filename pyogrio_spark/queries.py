@@ -643,6 +643,16 @@ GROUP BY z.zone_id
 """
 
 
+def q_dedup_exact(spark, sf):
+    """Keep the first doc_id per identical text: (doc_id, content_hash, dup_count)."""
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    return (
+        docs.groupBy(F.md5("text").alias("content_hash"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("dup_count"))
+        .select("doc_id", "content_hash", "dup_count")
+    )
+
+
 def q_spans_explode(spark, sf):
     """Synthesize interleaved spans from text deterministically, then
     explode back to flat columns — the span-sequence invariant as an
@@ -1331,6 +1341,7 @@ QUERIES = {
     "geo_within_distance": q_geo_within_distance,
     "read_bounds": q_read_bounds,
     "spans_explode": q_spans_explode,
+    "dedup_exact": q_dedup_exact,
     "geo_tile_assignment": q_geo_tile_assignment,
     "geo_zonal_stats": q_geo_zonal,
 }
@@ -1374,6 +1385,10 @@ ORACLES = {
     "geo_rasterize": ORACLE_RASTERIZE,
     "spans_explode": ORACLE_SPANS,
     "spans_reconstruct": ORACLE_SPANS_RECONSTRUCT,
+    "dedup_exact": (
+        "SELECT min(doc_id) AS doc_id, md5(text) AS content_hash, count(*) AS dup_count "
+        "FROM documents GROUP BY md5(text)"
+    ),
     "spans_strip_media": ORACLE_SPANS_STRIP_MEDIA,
     "geo_tile_pyramid": _oracle_tile_pyramid(),
     "text_chunking": ORACLE_TEXT_CHUNKING,
