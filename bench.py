@@ -30,7 +30,6 @@ HEADLINE = [
     "geo_zonal_stats",
     "spans_explode",
     "spans_reconstruct",
-    "events_sessionize",
     "geo_intersects_join",
     "geo_intersects_join_poly",
     "curve_linearize",
@@ -39,10 +38,6 @@ HEADLINE = [
     "geo_reproject",
     "geo_measures",
     "geo_clip",
-    # round-5 additions: zero-shuffle chunk+pack map over the corpus,
-    # cross-doc global packing (two-phase rank)
-    "text_chunking",
-    "chunk_pack_global",
     # span-kind projection over the interleaved sequence
     "spans_strip_media",
     # multi-zoom tile rollup (one corpus agg + reused-exchange parents)

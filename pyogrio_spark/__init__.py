@@ -31,7 +31,6 @@ from pyogrio_spark.io.dispatch import (  # noqa: F401
 )
 from pyogrio_spark.io.reader import read_bounds, read_info, read_table  # noqa: F401
 from pyogrio_spark.io.writer import read_committed, write_table  # noqa: F401
-from pyogrio_spark.cache import release_pins  # noqa: F401
 
 # pyogrio-shaped facade at the package root (the names that don't
 # collide with the engine-native API above; compat module carries the

@@ -326,43 +326,36 @@ def _apply_range(
         if order
         else [F.col(c) for c in _order_cols(df)]
     )
-    if skip:
-        # distributed global rank (two-phase, the shape pack_chunks_global
-        # and asof_join_distributed share):
-        # range-shuffle into ordered partitions, count per partition (one
-        # tiny collect), broadcast the prefix offsets back, rank locally.
-        # Replaces the former Window.orderBy(...) global row_number whose
-        # single-partition sort serialized the whole table through one task.
-        from pyspark.sql import Window
-
-        # pin_cache pins the pid assignment across the counts job and the
-        # final rank job (spark_partition_id is per-job-evaluated); the
-        # pin is tracked — pyogrio_spark.cache.release_pins() frees it
-        # once the result is materialized
-        from pyogrio_spark.cache import pin_cache
-
-        parts = pin_cache(
-            df.repartitionByRange(*order_exprs).withColumn("_pid", F.spark_partition_id())
-        )
-        counts = parts.groupBy("_pid").count().collect()  # one row per partition
-        counts.sort(key=lambda r: r["_pid"])
-        offsets, acc = [], 0
-        for r in counts:
-            offsets.append((r["_pid"], acc))
-            acc += r["count"]
-        off_df = df.sparkSession.createDataFrame(offsets, schema="_pid int, _offset bigint")
-        w = Window.partitionBy("_pid").orderBy(*order_exprs)
-        df = (
-            parts.join(F.broadcast(off_df), "_pid")
-            .withColumn("_rn", F.row_number().over(w) + F.col("_offset"))
-            .filter(F.col("_rn") > skip)
-            .drop("_rn", "_pid", "_offset")
-        )
     if maxf is not None:
-        # sort+limit compiles to TakeOrderedAndProject: per-partition top-M
-        # then a single M-row merge — no full global sort
-        df = df.sort(*order_exprs).limit(int(maxf))
-    return df
+        # sort+offset+limit compiles to one TakeOrderedAndProject(limit =
+        # skip + max, offset = skip): per-partition top-(skip + max), then
+        # one merge — one job, no full global sort
+        return df.sort(*order_exprs).offset(int(skip)).limit(int(maxf))
+    # skip only: a distributed global rank. Range-shuffle into ordered
+    # partitions and sort each one; monotonically_increasing_id is then
+    # (partition index << 33) + the row's rank in its partition. One tiny
+    # collect of per-partition counts turns skip into the id of the first
+    # kept row. A bare offset(skip) would need the whole result in one
+    # partition, so every later stage would run as one task.
+    #
+    # The ids are assigned per job, so the counts job and the final job
+    # must read the same materialized partitions. The local checkpoint
+    # holds them for this call only: Spark frees its blocks once the
+    # result is no longer referenced, and a lost block fails the job
+    # instead of being recomputed with new ids.
+    parts = (
+        df.repartitionByRange(*order_exprs)
+        .sortWithinPartitions(*order_exprs)
+        .withColumn("_skip_id", F.monotonically_increasing_id())
+        .localCheckpoint(eager=True)
+    )
+    pid = F.shiftright("_skip_id", 33).alias("_pid")
+    counts = sorted((r["_pid"], r["count"]) for r in parts.groupBy(pid).count().collect())
+    for p, n in counts:
+        if skip < n:
+            return parts.filter(F.col("_skip_id") >= (p << 33) + skip).drop("_skip_id")
+        skip -= n
+    return parts.limit(0).drop("_skip_id")
 
 
 # ------------------------------------------------------------- metadata ops

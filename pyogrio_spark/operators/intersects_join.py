@@ -42,14 +42,14 @@ def _envelope_cell_ranges(res: int) -> tuple[str, str, str, str]:
 
 
 def explode_envelope_cells(df: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    """Adds ``cell_id`` rows covering each row's envelope (xmin..ymax
-    columns) — sequence+explode arithmetic, no UDF."""
+    """One row per grid cell covering each row's envelope (xmin..ymax
+    columns), with the cell's ``cell_x`` column, ``cell_y`` row and
+    ``cell_id`` — sequence+explode arithmetic, no UDF."""
     x0, x1, y0, y1 = _envelope_cell_ranges(res)
     return (
-        df.withColumn("_cx", F.expr(f"explode(sequence({x0}, {x1}))"))
-        .withColumn("_cy", F.expr(f"explode(sequence({y0}, {y1}))"))
-        .withColumn("cell_id", F.expr(xy_cell_expr_sql("_cx", "_cy", res)))
-        .drop("_cx", "_cy")
+        df.withColumn("cell_x", F.expr(f"explode(sequence({x0}, {x1}))"))
+        .withColumn("cell_y", F.expr(f"explode(sequence({y0}, {y1}))"))
+        .withColumn("cell_id", F.expr(xy_cell_expr_sql("cell_x", "cell_y", res)))
     )
 
 
@@ -80,7 +80,9 @@ def intersects_join(
     cover = cover.withColumnRenamed(geom_col, zgeom)
     ztype = cover.schema[zone_key].dataType.simpleString()
 
-    lcells = explode_envelope_cells(left.select(*dict.fromkeys([*carry, "xmin", "ymin", "xmax", "ymax", geom_col])), res)
+    lcells = explode_envelope_cells(
+        left.select(*dict.fromkeys([*carry, "xmin", "ymin", "xmax", "ymax", geom_col])), res
+    ).drop("cell_x", "cell_y")
     joined = cell_join(lcells, cover, left_key, broadcast_cover, salt_plan)
 
     # coarse: envelope overlap with the zone bbox the cover carries

@@ -79,6 +79,8 @@ def knn_join(
     one rank."""
     if metric not in ("planar", "haversine"):
         raise ValueError(f"metric must be planar|haversine, got {metric!r}")
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k!r}")
     t0 = time.perf_counter()
     n = 1 << res
     pts = _probe_cells(probes, probe_key, probe_lon, probe_lat, res)

@@ -59,6 +59,8 @@ def _is_rectangle(wkb: bytes) -> tuple[bool, tuple]:
 def _cover_rows(zones_iter, res: int, zone_key: str, geom_col: str):
     rows = []
     for _, z in zones_iter:
+        if z[geom_col] is None:
+            raise ValueError(f"zone {zone_key}={z[zone_key]!r} has a null {geom_col}")
         wkb = bytes(z[geom_col])
         cells, full, edges = cover_polygon_edges(wkb, res)
         is_rect, bbox = _is_rectangle(wkb)
@@ -122,6 +124,9 @@ def plan_salt_factors(
     per-reducer row budget get salt_k = ceil(count/threshold). The plan is
     a pure function of the input snapshot, so a resumed job reproduces the
     identical physical partitioning."""
+    for name, value in (("threshold_rows", threshold_rows), ("max_salt", max_salt)):
+        if value < 1:
+            raise ValueError(f"{name} must be >= 1, got {value!r}")
     counts = (
         docs.groupBy(cell_col).count().filter(F.col("count") > threshold_rows).toPandas()
     )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyogrio_spark.index.cover import REFINE_COLUMNS, contains_expr
-from pyogrio_spark.index.grid import LAT0, LON0, cell_expr_sql, cell_width_deg, cell_xy_expr_sql, xy_cell_expr_sql
+from pyogrio_spark.index.grid import LAT0, LON0, cell_expr_sql, cell_width_deg
 
 DEFAULT_RES = 7
 
@@ -110,18 +110,11 @@ def areal_interpolate(
     from pyogrio_spark.functions.geo import bounds_columns
     from pyogrio_spark.geometry import measure as M
     from pyogrio_spark.geometry import wkb as W
+    from pyogrio_spark.operators.intersects_join import explode_envelope_cells
 
     w_deg, h_deg = cell_width_deg(res)
-    x0, y0 = cell_xy_expr_sql("xmin", "ymin", res)
-    x1, y1 = cell_xy_expr_sql("xmax", "ymax", res)
-
     b = bounds_columns(zones.select(zone_key, geom_col, value_col), geom_col)
-    cand = (
-        b.withColumn("cx_i", F.expr(f"explode(sequence({x0}, {x1}))"))
-        .withColumn("cy_i", F.expr(f"explode(sequence({y0}, {y1}))"))
-        .withColumn("tile_id", F.expr(xy_cell_expr_sql("cx_i", "cy_i", res)))
-        .select(zone_key, geom_col, value_col, "tile_id", "cx_i", "cy_i")
-    )
+    cand = explode_envelope_cells(b, res).select(geom_col, value_col, "cell_id", "cell_x", "cell_y")
 
     out_schema = "`tile_id` bigint, `part_val` double"
 
@@ -132,9 +125,9 @@ def areal_interpolate(
                 continue
             geoms_raw = list(pdf[geom_col])
             values = pdf[value_col].to_numpy()
-            cxs = pdf["cx_i"].to_numpy()
-            cys = pdf["cy_i"].to_numpy()
-            tids = pdf["tile_id"].to_numpy()
+            cxs = pdf["cell_x"].to_numpy()
+            cys = pdf["cell_y"].to_numpy()
+            tids = pdf["cell_id"].to_numpy()
             tiles, vals = [], []
             for i in range(len(pdf)):
                 wkb = bytes(geoms_raw[i])

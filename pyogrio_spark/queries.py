@@ -24,7 +24,7 @@ from pyogrio_spark.index.grid import cell_expr_sql
 from pyogrio_spark.io.reader import read_table
 from pyogrio_spark.operators.knn import knn_join
 from pyogrio_spark.operators.range_join import bbox_range_join, boxes_cell_cover
-from pyogrio_spark.operators.spatial_join import plan_salt_factors, point_in_polygon_join, zones_cell_cover
+from pyogrio_spark.operators.spatial_join import point_in_polygon_join, zones_cell_cover
 from pyogrio_spark.operators.tiling import adaptive_tiles, assign_tiles
 from pyogrio_spark.operators.zonal import tiles_with_centers, zonal_stats
 
@@ -116,11 +116,6 @@ def _docs_geo(spark: SparkSession, sf: str) -> DataFrame:
     return docs
 
 
-def _register_views(spark: SparkSession, sf: str, tables):
-    for t in tables:
-        spark.read.parquet(f"{sf}/{t}.parquet").createOrReplaceTempView(t)
-
-
 # scan-split memo: one .rdd.getNumPartitions() planning round trip per
 # (session, path), not per query invocation
 _SCAN_PARTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -134,7 +129,7 @@ def _read_spread(spark: SparkSession, path: str, key: str = "doc_id") -> DataFra
     The test corpora are written as a single parquet row group, which
     Spark cannot split below one task — so the whole pre-exchange map
     side of a query (the WKB encode, envelope decode and cell index of
-    ``_docs_geo``, span synthesis, chunking) would run on ONE core no
+    ``_docs_geo`` and span synthesis) would run on ONE core no
     matter how many the session has. Spread the scan to the session's
     default parallelism when (and only when) the scan yields fewer
     splits; a production multi-file table already scans with >= cores
@@ -217,16 +212,16 @@ def q_geo_pip_join(spark, sf):
 
 
 def q_geo_pip_join_salted(spark, sf):
-    """geo_pip_join as a shuffle join salted by ``plan_salt_factors``;
+    """geo_pip_join as a shuffle join salted per cell (``cell_join``);
     same oracle as geo_pip_join. The synthetic docs lie on a lattice
-    with at most one per res-7 cell, so no cell is hot at any test
-    scale: a zero row budget marks every occupied cell hot and
-    ``max_salt`` splits each 4 ways, so the salted path always runs."""
+    with at most one per res-7 cell, so ``plan_salt_factors`` finds no
+    hot cell at any test scale; the plan salts every cover cell 4 ways
+    instead, so the salted path always runs."""
     docs = _docs_geo(spark, sf)
     cover = zones_cell_cover(spark, _zones_pd(), res=GEO_RES, zone_key="zone_id")
+    plan = cover.select("cell_id").distinct().toPandas().assign(salt_k=4)
     return point_in_polygon_join(
-        docs, cover, zone_key="zone_id", keep_doc_cols=["doc_id"], broadcast_cover=False,
-        salt_plan=plan_salt_factors(docs, threshold_rows=0, max_salt=4),
+        docs, cover, zone_key="zone_id", keep_doc_cols=["doc_id"], broadcast_cover=False, salt_plan=plan,
     )
 
 
@@ -643,16 +638,6 @@ GROUP BY z.zone_id
 """
 
 
-def q_dedup_exact(spark, sf):
-    """Keep the first doc_id per identical text: (doc_id, content_hash, dup_count)."""
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    return (
-        docs.groupBy(F.md5("text").alias("content_hash"))
-        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("dup_count"))
-        .select("doc_id", "content_hash", "dup_count")
-    )
-
-
 def q_spans_explode(spark, sf):
     """Synthesize interleaved spans from text deterministically, then
     explode back to flat columns — the span-sequence invariant as an
@@ -742,84 +727,6 @@ ex AS (SELECT doc_id, text, array_to_string(list_slice(toks, i * 5 + 1, i * 5 + 
        FROM (SELECT doc_id, text, toks, unnest(generate_series(0, ns - 1)) AS i FROM b2)),
 rec AS (SELECT doc_id, any_value(text) AS orig, string_agg(st, ' ' ORDER BY i) AS r FROM ex GROUP BY doc_id)
 SELECT doc_id, (r = orig) AS matches, md5(r) AS digest FROM rec
-"""
-
-
-# ================================================================ chunking
-
-
-def q_chunk_pack_global(spark, sf):
-    """Cross-document global packing (operators/chunking.py
-    pack_chunks_global): two-phase distributed rank — range shuffle,
-    partition-local row_number + broadcast offsets; no corpus-sized
-    single window task."""
-    from pyogrio_spark.operators.chunking import chunk_documents, pack_chunks_global
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    ch = chunk_documents(docs, chunk_tokens=32, overlap_tokens=8)
-    return pack_chunks_global(ch, budget_tokens=128, chunk_tokens=32).select(
-        "doc_id",
-        F.col("chunk_id").cast("bigint").alias("chunk_id"),
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        "global_idx",
-        "pack_id",
-    )
-
-
-ORACLE_CHUNK_PACK_GLOBAL = """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), n AS (
-  SELECT doc_id, toks, len(toks) AS n FROM t
-), e AS (
-  SELECT doc_id, n,
-         unnest(range(0, greatest(1, CAST(ceil((n - 32) / 24.0) AS INT) + 1))) AS chunk_id
-  FROM n
-), g AS (
-  SELECT doc_id, chunk_id, least(32, n - chunk_id * 24) AS n_tokens,
-         row_number() OVER (ORDER BY doc_id, chunk_id) - 1 AS global_idx
-  FROM e
-)
-SELECT doc_id, chunk_id, n_tokens, global_idx,
-       CAST(floor(global_idx / 4) AS BIGINT) AS pack_id
-FROM g
-"""
-
-
-def q_text_chunking(spark, sf):
-    """Fixed-window chunking + capacity packing (operators/chunking.py):
-    32-token windows sliding by 24 (8-token overlap), packed 4 chunks /
-    128-token budget. Zero-shuffle map stage — the plan a 100 TB corpus
-    runs."""
-    from pyogrio_spark.operators.chunking import chunk_documents, pack_chunks
-
-    docs = _read_spread(spark, f"{sf}/documents.parquet")
-    ch = chunk_documents(docs, chunk_tokens=32, overlap_tokens=8)
-    return pack_chunks(ch, budget_tokens=128, chunk_tokens=32).select(
-        "doc_id",
-        F.col("chunk_id").cast("bigint").alias("chunk_id"),
-        "chunk_text",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        "pack_id",
-    )
-
-
-ORACLE_TEXT_CHUNKING = """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), n AS (
-  SELECT doc_id, toks, len(toks) AS n FROM t
-), e AS (
-  SELECT doc_id, toks, n,
-         unnest(range(0, greatest(1, CAST(ceil((n - 32) / 24.0) AS INT) + 1))) AS chunk_id
-  FROM n
-)
-SELECT doc_id,
-       chunk_id,
-       array_to_string(toks[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text,
-       least(32, n - chunk_id * 24) AS n_tokens,
-       CAST(floor(chunk_id / 4) AS BIGINT) AS pack_id
-FROM e
 """
 
 
@@ -983,121 +890,7 @@ def q_geo_reproject(spark, sf):
     )
 
 
-def q_events_asof_rates(spark, sf):
-    """AS-OF join (the classic missing Spark operator, distributed
-    two-phase plan): every event picks the latest per-type 'rate' row at
-    or before its timestamp. Rates: one row per (event_type, hour) on a
-    deterministic arithmetic grid; DuckDB's native ASOF JOIN is the
-    oracle. Timestamps compared as epoch-microsecond bigints (tz-proof,
-    see events_sessionize)."""
-    from pyogrio_spark.operators.asof_join import asof_join_distributed
-
-    ev = spark.read.parquet(f"{sf}/events.parquet").select(
-        "event_id", "event_type",
-        F.expr("timestampdiff(MICROSECOND, timestamp_ntz'2024-01-01 00:00:00', ts)").alias("tus"),
-    )
-    types = ev.select("event_type").distinct()
-    rates = (
-        spark.range(0, 2401).select(F.col("id").cast("int").alias("h"))
-        .crossJoin(types)
-        .select(
-            "event_type",
-            (F.col("h").cast("bigint") * F.lit(3600000000).cast("bigint")).alias("rts_us"),
-            (((F.col("h") * 13 + F.length("event_type") * 7) % 1000).cast("double") / F.expr("1e1")).alias("rate"),
-        )
-    )
-    out = asof_join_distributed(
-        ev, rates, ["event_type"], left_ts="tus", right_ts="rts_us", right_vals=["rate"], num_partitions=32
-    )
-    return out.select("event_id", "rate")
-
-
-ORACLE_ASOF = """
-WITH rates AS (
-  SELECT t.event_type, h,
-         CAST(h AS BIGINT) * 3600000000 AS rts_us,
-         CAST((h * 13 + length(t.event_type) * 7) % 1000 AS DOUBLE) / 1e1 AS rate
-  FROM (SELECT DISTINCT event_type FROM events) t
-  CROSS JOIN (SELECT unnest(generate_series(0, 2400)) AS h)),
-ev AS (SELECT event_id, event_type,
-              epoch_us(ts) - epoch_us(TIMESTAMP '2024-01-01 00:00:00') AS tus FROM events)
-SELECT e.event_id, r.rate
-FROM ev e ASOF JOIN rates r ON e.event_type = r.event_type AND e.tus >= r.rts_us
-"""
-
-
-# ============================================================= sql / events
-
-
-def q_events_hourly(spark, sf):
-    _register_views(spark, sf, ("events",))
-    return spark.sql(
-        """
-        SELECT date_trunc('hour', ts) AS hour_start, event_type,
-               count(*) AS n_events,
-               round(sum(value), 3) AS value_sum,
-               min(value) AS value_min, max(value) AS value_max
-        FROM events GROUP BY 1, 2
-        """
-    )
-
-
-ORACLE_EVENTS_HOURLY = """
-SELECT date_trunc('hour', ts) AS hour_start, event_type,
-       count(*) AS n_events,
-       round(sum(value), 3) AS value_sum,
-       min(value) AS value_min, max(value) AS value_max
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_events_sessionize(spark, sf):
-    _register_views(spark, sf, ("events",))
-    return spark.sql(
-        """
-        WITH l AS (
-          SELECT user_id, ts, event_id,
-                 CASE WHEN lag(ts) OVER w IS NULL
-                           OR timestampdiff(MICROSECOND, lag(ts) OVER w, ts) > 1800000000
-                      THEN 1 ELSE 0 END AS new_sess
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        s AS (
-          SELECT user_id, ts,
-                 sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS UNBOUNDED PRECEDING) AS sess_id
-          FROM l)
-        SELECT user_id, sess_id,
-               timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', min(ts)) AS session_start_us,
-               timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', max(ts)) AS session_end_us,
-               count(*) AS n_events
-        FROM s GROUP BY user_id, sess_id
-        """
-    )
-
-
-# Gap test and session bounds in epoch-MICROseconds on both engines so
-# fractional-second timestamps can neither diverge on the 1800 s boundary
-# nor hash differently in the driver's canonicalization.
-ORACLE_SESSIONIZE = """
-WITH l AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-s AS (
-  SELECT user_id, ts,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id
-  FROM l)
-SELECT user_id, sess_id,
-       epoch_us(min(ts)) AS session_start_us,
-       epoch_us(max(ts)) AS session_end_us,
-       count(*) AS n_events
-FROM s GROUP BY user_id, sess_id
-"""
+# ================================================= bounds, sql, table ops
 
 
 def q_read_bounds(spark, sf):
@@ -1114,19 +907,6 @@ def q_total_bounds(spark, sf):
         F.min("xmin").alias("xmin"), F.min("ymin").alias("ymin"),
         F.max("xmax").alias("xmax"), F.max("ymax").alias("ymax"),
         F.count("*").alias("n"),
-    )
-
-
-def q_events_json_props(spark, sf):
-    """JSON field parse (reference OFSTJSON -> json.loads, geopandas.py:508-518)."""
-    _register_views(spark, sf, ("events",))
-    return spark.sql(
-        """
-        SELECT cast(get_json_object(props, '$.k') as bigint) AS k,
-               count(*) AS n_events,
-               min(event_id) AS first_event
-        FROM events GROUP BY 1
-        """
     )
 
 
@@ -1312,7 +1092,6 @@ QUERIES = {
     "adaptive_tile_map": q_adaptive_tile_map,
     "geo_intersects_join": q_geo_intersects_join,
     "geo_clip": q_geo_clip,
-    "chunk_pack_global": q_chunk_pack_global,
     "geo_knn_join": q_geo_knn,
     "geo_range_join": q_geo_range_join,
     "sql_ogr_dialect": q_sql_ogr_dialect,
@@ -1320,18 +1099,13 @@ QUERIES = {
     "table_upsert": q_table_upsert,
     "geo_areal_interpolate": q_geo_areal_interpolate,
     "geo_measures_geodesic": q_geo_measures_geodesic,
-    "events_sessionize": q_events_sessionize,
-    "events_asof_rates": q_events_asof_rates,
-    "text_chunking": q_text_chunking,
     "total_bounds": q_total_bounds,
     "geo_mask_filter": q_geo_mask,
     "geo_pip_join_salted": q_geo_pip_join_salted,
     "geo_pip_join_bucketed": q_geo_pip_join_bucketed,
-    "events_hourly": q_events_hourly,
     "geo_pip_join_boundary": q_geo_pip_join_boundary,
     "geo_intersects_join_poly": q_geo_intersects_join_poly,
     "geo_zonal_stats_poly": q_geo_zonal_poly,
-    "events_json_props": q_events_json_props,
     "spans_reconstruct": q_spans_reconstruct,
     "curve_linearize": q_curve_linearize,
     "geo_rasterize": q_geo_rasterize,
@@ -1341,7 +1115,6 @@ QUERIES = {
     "geo_within_distance": q_geo_within_distance,
     "read_bounds": q_read_bounds,
     "spans_explode": q_spans_explode,
-    "dedup_exact": q_dedup_exact,
     "geo_tile_assignment": q_geo_tile_assignment,
     "geo_zonal_stats": q_geo_zonal,
 }
@@ -1385,14 +1158,8 @@ ORACLES = {
     "geo_rasterize": ORACLE_RASTERIZE,
     "spans_explode": ORACLE_SPANS,
     "spans_reconstruct": ORACLE_SPANS_RECONSTRUCT,
-    "dedup_exact": (
-        "SELECT min(doc_id) AS doc_id, md5(text) AS content_hash, count(*) AS dup_count "
-        "FROM documents GROUP BY md5(text)"
-    ),
     "spans_strip_media": ORACLE_SPANS_STRIP_MEDIA,
     "geo_tile_pyramid": _oracle_tile_pyramid(),
-    "text_chunking": ORACLE_TEXT_CHUNKING,
-    "chunk_pack_global": ORACLE_CHUNK_PACK_GLOBAL,
     "geo_measures": f"""SELECT zone_id,
         round((zx1 - zx0) * (zy1 - zy0), 7) AS area_r,
         round(2 * ((zx1 - zx0) + (zy1 - zy0)), 7) AS len_r,
@@ -1443,16 +1210,9 @@ ORACLES = {
         round(radians(lon) * 6378137.0, 4) AS mx,
         round(ln(tan(pi() / 4 + radians(least(greatest(lat, -85.06), 85.06)) / 2)) * 6378137.0, 4) AS my
         FROM {DOCS_GEO_SQL} d""",
-    "events_hourly": ORACLE_EVENTS_HOURLY,
-    "events_sessionize": ORACLE_SESSIONIZE,
-    "events_asof_rates": ORACLE_ASOF,
     "table_upsert": ORACLE_TABLE_UPSERT,
     "sql_ogr_dialect": ORACLE_SQL_OGR_DIALECT,
     "read_bounds": f"SELECT doc_id, lon AS xmin, lat AS ymin, lon AS xmax, lat AS ymax FROM {DOCS_GEO_SQL} d",
     "total_bounds": f"""SELECT min(lon) AS xmin, min(lat) AS ymin, max(lon) AS xmax, max(lat) AS ymax,
         count(*) AS n FROM {DOCS_GEO_SQL} d""",
-    "events_json_props": """
-        SELECT cast(json_extract_string(props, '$.k') as bigint) AS k,
-               count(*) AS n_events, min(event_id) AS first_event
-        FROM events GROUP BY 1""",
 }

@@ -1,1 +1,1 @@
-from pyogrio_spark.streaming.events import windowed_event_counts, sessionize_events  # noqa: F401
+from pyogrio_spark.streaming.events import streaming_cell_counts, streaming_zone_counts  # noqa: F401

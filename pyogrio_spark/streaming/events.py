@@ -1,61 +1,18 @@
-"""Structured Streaming operators over the events stream.
+"""Spatial operators for Structured Streaming: windowed per-cell and
+per-zone point counts.
 
 The reference has no streaming surface (SURVEY.md §2.5 — its only
-"stream" is a finite Arrow batch iterator), so this module covers the
-engine-side streaming needs of a continuous ingest pipeline: watermarked
-event-time windows and session windows. Batch parity: each function
-also runs on a static DataFrame (Spark's unified API), which is how the
-tests and the DuckDB oracle validate the aggregation logic exactly.
+"stream" is a finite Arrow batch iterator). These run the batch cell
+index and PIP join unchanged on a stream of (ts, lon, lat) rows; the
+only streaming state is the watermarked event-time window count. Batch
+parity: each function also runs on a static DataFrame (Spark's unified
+API), which is how the tests validate it exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-EVENTS_SCHEMA = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-
-
-def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def windowed_event_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Tumbling event-time windows with late-data watermark; on a static
-    frame the watermark is a no-op and results equal the batch groupBy."""
-    e = events.withColumn("ts", F.col("ts").cast("timestamp"))  # NTZ -> LTZ for event-time
-    e = e.withWatermark("ts", watermark) if e.isStreaming else e
-    return (
-        e.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("value_sum"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "value_sum",
-        )
-    )
-
-
-def sessionize_events(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    """Session windows per user (gap-based)."""
-    e = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    e = e.withWatermark("ts", watermark) if e.isStreaming else e
-    return (
-        e.groupBy(F.session_window("ts", gap).alias("s"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("value_sum"))
-        .select(
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "value_sum",
-        )
-    )
 
 
 def streaming_zone_counts(
@@ -135,30 +92,3 @@ def streaming_cell_counts(
         .agg(F.count("*").alias("n_docs"))
         .select(F.col("w.start").alias("window_start"), "cell_id", "n_docs")
     )
-
-
-def dedup_events_stream(
-    events: DataFrame,
-    key_cols: tuple[str, ...] = ("event_id",),
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup: emit the first arrival of each key,
-    suppress re-deliveries that land within the watermark horizon —
-    the at-least-once -> effectively-once ingest stage every
-    continuous training-data pipeline needs in front of its corpus
-    sink.
-
-    Uses ``dropDuplicatesWithinWatermark``: state holds one entry per
-    key seen in the horizon and is evicted as event time advances, so
-    state size is bounded by (arrival rate x watermark), never by
-    corpus size — the property that lets this run forever at ingest
-    scale. On a static frame it degrades to plain ``dropDuplicates``
-    (unified API), which is the exact batch-parity oracle for
-    duplicates that arrive inside the horizon."""
-    e = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if e.isStreaming:
-        return e.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            list(key_cols)
-        )
-    return e.dropDuplicates(list(key_cols))

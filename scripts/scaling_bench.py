@@ -116,100 +116,10 @@ def run_once_knn(cpus: int, n_docs: int) -> dict:
             "docs_per_sec": round(n_docs / wall, 1)}
 
 
-def run_once_asof(cpus: int, n_docs: int, plan: str = "distributed") -> dict:
-    """AS-OF join counterpart: n_docs left rows against a 5-key x 2400-row
-    rate dimension — the FEW/HOT-key case where the per-key window plan
-    serializes on 5 reducers and the two-phase plan spreads each key
-    over range partitions."""
-    from pyspark.sql import functions as F
-
-    from pyogrio_spark.operators.asof_join import asof_join, asof_join_distributed
-    from pyogrio_spark.session import get_spark
-
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-    spark = get_spark(
-        f"scaling_asof_{plan}_{cpus}", master=f"local[{cpus}]", shuffle_partitions=64,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    left = spark.range(n_docs, numPartitions=4 * cpus).select(
-        F.col("id").alias("event_id"),
-        (F.col("id") % 5).alias("key"),
-        ((F.col("id") * 48271) % 8_640_000_000).alias("ts"),
-    ).cache()
-    left.count()
-    rates = spark.range(2400).select(F.col("id").alias("h")).crossJoin(
-        spark.range(5).select(F.col("id").alias("key"))
-    ).select("key", (F.col("h") * 3_600_000).alias("rts"), (F.col("h") * 13 + F.col("key")).cast("double").alias("rate"))
-    fn = asof_join_distributed if plan == "distributed" else asof_join
-    t0 = time.perf_counter()
-    out = fn(left, rates, ["key"], left_ts="ts", right_ts="rts", right_vals=["rate"])
-    # sum(rate), not count(): count() lets Catalyst prune the window fill
-    # entirely and times nothing (see BENCH notes on count-pruning)
-    agg = out.agg(F.sum("rate").alias("s"), F.count("*").alias("n")).first()
-    n_out = agg["n"]
-    wall = time.perf_counter() - t0
-    spark.stop()
-    return {"cpus": cpus, "docs": n_docs, "rows": n_out, "wall_sec": round(wall, 3),
-            "docs_per_sec": round(n_docs / wall, 1)}
-
-
-def run_once_asof_window(cpus: int, n_docs: int) -> dict:
-    return run_once_asof(cpus, n_docs, plan="window")
-
-
-def run_once_chunk(cpus: int, n_docs: int) -> dict:
-    """Round-5 operator family: document chunking + global packing.
-    The chunk stage is a pure-codegen zero-shuffle map (split/sequence/
-    explode/slice); pack_chunks_global adds the two-phase rank (one
-    range exchange + partition-local window). Synthesized ~40-token
-    docs; per-row work is JVM string splitting + array slicing."""
-    from pyspark.sql import functions as F
-
-    from pyogrio_spark.operators.chunking import chunk_documents, pack_chunks_global
-    from pyogrio_spark.session import get_spark
-
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-    spark = get_spark(
-        f"scaling_chunk_{cpus}", master=f"local[{cpus}]", shuffle_partitions=64,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.range(n_docs, numPartitions=4 * cpus).select(
-        F.col("id").alias("doc_id"),
-        # ~40 tokens/doc, content varies by id so nothing constant-folds
-        F.concat_ws(
-            " ",
-            *[F.concat(F.lit(f"w{j}_"), ((F.col("id") * (48271 + j)) % 997).cast("string")) for j in range(40)],
-        ).alias("text"),
-    )
-    def run():
-        out = pack_chunks_global(chunk_documents(docs, 32, 8), 128, 32)
-        # materialize EVERY column (count() would let Catalyst prune the
-        # chunk_text slice/join work — the expensive part)
-        row = out.select(
-            F.count("*").alias("n"),
-            F.sum(F.length("chunk_text")).alias("chars"),
-            F.sum("global_idx").alias("gsum"),
-            F.max("pack_id").alias("pmax"),
-        ).collect()[0]
-        return row["n"], row["chars"]
-    n_chunks, chars = run()  # warm pass (codegen compile + JIT)
-    t0 = time.perf_counter()
-    n2, chars2 = run()
-    wall = time.perf_counter() - t0
-    spark.stop()
-    assert (n2, chars2) == (n_chunks, chars)
-    return {"cpus": cpus, "docs": n_docs, "chunks": n_chunks, "chunk_chars": chars,
-            "wall_sec": round(wall, 3), "docs_per_sec": round(n_docs / wall, 1)}
-
-
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000_000
     job = sys.argv[2] if len(sys.argv) > 2 else "pip"
-    runner = {"pip": run_once, "knn": run_once_knn,
-              "asof": run_once_asof, "asof_window": run_once_asof_window,
-              "chunk": run_once_chunk}[job]
+    runner = {"pip": run_once, "knn": run_once_knn}[job]
     r8 = runner(8, n_docs)
     r32 = runner(32, n_docs)
     eff = (r32["docs_per_sec"] / r8["docs_per_sec"]) / 4.0

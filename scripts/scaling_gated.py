@@ -56,9 +56,7 @@ def run_width(job: str, cpus: int, n_docs: int) -> dict | None:
     code = (
         "import sys, json; sys.path.insert(0, {r!r}); sys.path.insert(0, {s!r});\n"
         "import scaling_bench as sb\n"
-        "fn = dict(pip=sb.run_once, knn=sb.run_once_knn,\n"
-        "          asof=sb.run_once_asof, asof_window=sb.run_once_asof_window,\n"
-        "          chunk=sb.run_once_chunk)[{j!r}]\n"
+        "fn = dict(pip=sb.run_once, knn=sb.run_once_knn)[{j!r}]\n"
         "kw = dict(cached=False) if {j!r} == 'pip' else dict()\n"
         "print('RESULT ' + json.dumps(fn({c}, {n}, **kw)))\n"
     ).format(r=REPO, s=os.path.join(REPO, "scripts"), j=job, c=cpus, n=n_docs)

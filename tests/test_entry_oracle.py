@@ -15,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyogrio_spark.queries import ORACLES, QUERIES
 
 SF = "/root/testdata/sf0.01"
-TABLES = ["orders", "events", "documents"]
+TABLES = ["orders", "documents"]
 
 
 @pytest.fixture(scope="module")
@@ -72,3 +72,27 @@ def test_bench_headline_names_exist():
     import bench
 
     assert set(bench.HEADLINE) <= set(QUERIES)
+
+
+def test_no_orphaned_query_or_oracle():
+    # a q_* function or ORACLE_* string left behind when its registry
+    # entry goes would otherwise pile up unnoticed
+    import ast
+
+    import pyogrio_spark.queries as q
+
+    tree = ast.parse(open(q.__file__).read())
+    q_funcs = {n.name for n in tree.body if isinstance(n, ast.FunctionDef) and n.name.startswith("q_")}
+    oracle_names = {
+        t.id
+        for n in tree.body
+        if isinstance(n, ast.Assign)
+        for t in n.targets
+        if isinstance(t, ast.Name) and t.id.startswith("ORACLE_")
+    }
+    registry = next(
+        n.value for n in tree.body if isinstance(n, ast.Assign) and getattr(n.targets[0], "id", None) == "ORACLES"
+    )
+    used = {x.id for x in ast.walk(registry) if isinstance(x, ast.Name)}
+    assert q_funcs - {f.__name__ for f in QUERIES.values()} == set()
+    assert oracle_names - used == set()

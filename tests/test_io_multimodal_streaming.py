@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from pyogrio_spark.fixtures import DOCS_SPARK_SCHEMA, make_docs
 from pyogrio_spark.io.lineage import StageCheckpoint, cell_range_units, unit_filter
 from pyogrio_spark.io.writer import current_snapshot, read_committed, write_table
-from pyogrio_spark.streaming.events import sessionize_events, windowed_event_counts
 
 
 def test_write_commit_append_overwrite(spark, tmp_path):
@@ -112,33 +111,6 @@ def test_lineage_resume_after_mid_unit_kill(spark, tmp_path):
     out = ck2.read_output()
     assert out.count() == docs.count()  # exactly once, no double-count from the dead files
     assert out.select("doc_id").distinct().count() == docs.count()
-
-
-def test_streaming_windowed_counts_match_batch(spark, tmp_path):
-    import shutil
-
-    stream_dir = str(tmp_path / "events_stream")
-    os.makedirs(stream_dir)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", stream_dir)
-    events = spark.read.parquet(stream_dir)
-    batch = windowed_event_counts(events).toPandas()
-    stream = windowed_event_counts(
-        spark.readStream.schema(events.schema).option("maxFilesPerTrigger", 1).parquet(stream_dir)
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from win_counts").toPandas()
-    a = batch.sort_values(["window_start", "event_type"]).reset_index(drop=True)
-    b = got.sort_values(["window_start", "event_type"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-    sess = sessionize_events(events).toPandas()
-    assert len(sess) > 0 and (sess.n_events >= 1).all()
 
 
 def test_concurrent_appends_lose_no_snapshot(spark, tmp_path):

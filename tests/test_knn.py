@@ -75,6 +75,22 @@ def test_knn_res_mismatch_raises(spark, docs_pd, probes_pd):
         knn_join(probes, docs, k=1, res=6)
 
 
+@pytest.mark.parametrize("k", [0, -2])
+def test_knn_k_below_one_raises_before_any_job(spark, docs_pd, probes_pd, k):
+    docs = spark.createDataFrame(docs_pd, schema=DOCS_SPARK_SCHEMA)
+    probes = spark.createDataFrame(
+        probes_pd[["probe_id", "lon", "lat"]].head(2), schema="probe_id string, lon double, lat double"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("knn_k_below_one", "knn_join with k < 1")
+    try:
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            knn_join(probes, docs, k=k)
+        assert list(sc.statusTracker().getJobIdsForGroup("knn_k_below_one")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def _haversine_np(plon, plat, dlon, dlat):
     import numpy as np
 

@@ -164,13 +164,30 @@ def test_intersects_join_full_branch_has_no_python(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def _sql_plans(spark, after: int = -1) -> dict[int, str]:
+    """Physical plan text of the session's SQL executions, by execution
+    id, for ids above ``after`` (the status store keeps only the most
+    recent ones, so select by id rather than by position)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    plans = {}
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() > after:
+            plans[e.executionId()] = e.physicalPlanDescription()
+    return plans
+
+
 def test_skip_features_has_no_single_partition_exchange(spark, docs_parquet):
-    # distributed skip: range repartition + per-partition rank + broadcast
-    # offsets — never a SinglePartition global-window exchange
+    # distributed skip: range repartition and per-partition sort (in the
+    # local checkpoint that read_table runs) + per-partition counts —
+    # never a SinglePartition global-window exchange, in the result or in
+    # any job read_table ran to build it
+    last = max(_sql_plans(spark), default=-1)
     df = read_table(spark, docs_parquet, skip_features=100, read_geometry=False)
-    plan = plan_of(df)
-    assert "SinglePartition" not in plan, "skip_features fell back to the one-reducer global window"
-    assert "rangepartitioning" in plan.lower()
+    plans = [plan_of(df), *_sql_plans(spark, last).values()]
+    assert not any("SinglePartition" in p for p in plans), "skip_features fell back to the one-reducer global window"
+    assert any("rangepartitioning" in p.lower() for p in plans)
     # correctness: same rows as the semantic-reference global window
     from pyspark.sql import Window, functions as F
 
@@ -294,22 +311,6 @@ def test_reproject_is_pure_codegen(spark, docs_parquet):
     assert plan.lstrip().startswith("*(")  # whole-stage-codegen marker
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
         assert marker not in plan
-
-
-def test_tfidf_and_packing_plans_stay_jvm_side(spark):
-    """Packing must plan with no Python stages: it is map-only (+ the
-    two-phase rank whose only Python-free shuffle is the range exchange).
-    The name predates the removal of the tf-idf operator, whose plan
-    this test also checked."""
-    from pyogrio_spark.operators.chunking import chunk_documents, pack_chunks_global
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta " * 4) for i in range(50)],
-        schema="doc_id bigint, text string",
-    )
-    df = pack_chunks_global(chunk_documents(docs, 8, 2), 32, 8)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "BatchEvalPython" not in plan
 
 
 @pytest.fixture(scope="module")

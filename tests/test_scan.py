@@ -82,12 +82,76 @@ def test_exclusivity_errors(spark, docs_df):
         read_table(spark, docs_df, fids=["doc000000000001"], where="xmin > 0")
 
 
-def test_skip_max(spark, docs_df, docs_pd):
-    ordered = docs_pd.sort_values(["cell_id", "doc_id"])
-    got = read_table(spark, docs_df, skip_features=10, max_features=5)
-    got_ids = [r["doc_id"] for r in got.sort("cell_id", "doc_id").select("doc_id").collect()]
-    want = ordered["doc_id"].iloc[10:15].tolist()
-    assert got_ids == want
+@pytest.fixture(scope="module")
+def docs_parts(spark, docs_pd, tmp_path_factory):
+    """The docs fixture as a 4-file Parquet table: a range plan has
+    partitions to rank across, and its plan shows no cache of its input
+    (``docs_df``'s cache would stand in for the same in-memory rows)."""
+    path = str(tmp_path_factory.mktemp("paging") / "docs")
+    spark.createDataFrame(docs_pd, schema=DOCS_SPARK_SCHEMA).repartition(4, "doc_id").write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() >= 4
+    return df
+
+
+def test_skip_max(spark, docs_parts, docs_pd):
+    # skip + max, skip only, max only, skip past the end, max_features=0
+    ordered = docs_pd.sort_values(["cell_id", "doc_id"])["doc_id"].tolist()
+    for skip, maxf in [(10, 5), (10, None), (0, 7), (1490, None), (1495, 20), (2000, None), (2000, 5), (0, 0), (10, 0)]:
+        got = read_table(spark, docs_parts, skip_features=skip, max_features=maxf, read_geometry=False)
+        got_ids = [r["doc_id"] for r in got.sort("cell_id", "doc_id").select("doc_id").collect()]
+        assert got_ids == ordered[skip:][:maxf], (skip, maxf)
+
+
+def test_skip_max_follows_sql_order_by(spark, docs_parts, docs_pd):
+    ordered = docs_pd.sort_values("xmin", ascending=False)["doc_id"].tolist()
+    for skip, maxf in [(10, 5), (10, None), (0, 7)]:
+        got = read_table(
+            spark, docs_parts, sql="SELECT doc_id, xmin FROM layer ORDER BY xmin DESC", sql_dialect="OGRSQL",
+            skip_features=skip, max_features=maxf, read_geometry=False,
+        )
+        got_ids = [r["doc_id"] for r in got.sort(F.col("xmin").desc()).select("doc_id").collect()]
+        assert got_ids == ordered[skip:][:maxf], (skip, maxf)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_skip_max_plan_shapes(spark, docs_parts):
+    # with max_features: one TakeOrderedAndProject (limit = skip + max,
+    # offset = skip) and nothing cached
+    paged = _plan(read_table(spark, docs_parts, skip_features=100, max_features=50, read_geometry=False))
+    assert paged.count("TakeOrderedAndProject") == 1 and "offset=100" in paged
+    assert "InMemoryRelation" not in paged
+    # skip only: the ranked partitions come from a local checkpoint, not
+    # from a cache that outlives the call
+    skipped = _plan(read_table(spark, docs_parts, skip_features=100, read_geometry=False))
+    assert "InMemoryRelation" not in skipped and "ExistingRDD" in skipped
+
+
+def test_skip_checkpoint_blocks_are_freed(spark, docs_parts):
+    import gc
+    import time
+
+    sc = spark.sparkContext
+
+    def stored():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    out = read_table(spark, docs_parts, skip_features=100, read_geometry=False)
+    assert stored() - before  # the checkpoint holds the ranked partitions
+    assert out.count() == 1400
+    del out
+    gc.collect()
+    # the ContextCleaner frees the blocks once the JVM collects the
+    # checkpointed RDD; poll a bounded time rather than assume when
+    deadline = time.monotonic() + 30
+    while stored() - before and time.monotonic() < deadline:
+        sc._jvm.System.gc()
+        time.sleep(0.25)
+    assert not stored() - before
 
 
 def test_sql_then_filter(spark, docs_df, docs_pd):

@@ -79,6 +79,28 @@ def test_salt_plan_with_broadcast_cover_raises(spark, docs_df, zones_pd):
         intersects_join(docs_df, cover, salt_plan=plan)
 
 
+@pytest.mark.parametrize(
+    "kwargs, name",
+    [({"threshold_rows": 0}, "threshold_rows"), ({"threshold_rows": -3}, "threshold_rows"), ({"max_salt": 0}, "max_salt")],
+)
+def test_salt_plan_rejects_nonpositive_budget(spark, docs_df, kwargs, name):
+    from pyogrio_spark.operators.spatial_join import plan_salt_factors
+
+    with pytest.raises(ValueError, match=name):
+        plan_salt_factors(docs_df, **{"threshold_rows": 20, **kwargs})
+
+
+def test_null_zone_geometry_raises_naming_the_zone(spark, zones_pd):
+    zones = zones_pd.copy()
+    bad = zones["fid"].iloc[3]
+    zones.loc[zones.index[3], "geometry_wkb"] = None
+    with pytest.raises(ValueError, match=f"fid={bad!r}"):
+        zones_cell_cover(spark, zones)
+    zones_df = spark.createDataFrame(zones, schema=ZONES_SPARK_SCHEMA)
+    with pytest.raises(Exception, match=f"fid={bad!r}"):
+        zones_cell_cover_distributed(zones_df).collect()
+
+
 def test_distributed_cover_matches_driver_cover(spark, zones_pd):
     zones_df = spark.createDataFrame(zones_pd, schema=ZONES_SPARK_SCHEMA)
     cols = ["cell_id", "fid", "full_cover", "edges"]

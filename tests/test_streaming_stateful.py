@@ -1,56 +1,5 @@
-import os
-import shutil
-
-import pytest
-
-from pyogrio_spark.streaming.stateful import streaming_first_seen, streaming_running_totals
-
-
-@pytest.fixture()
-def events_stream_dir(tmp_path):
-    d = str(tmp_path / "ev")
-    os.makedirs(d)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", d)
-    return d
-
-
-def test_streaming_first_seen_dedup(spark, events_stream_dir, tmp_path):
-    batch = spark.read.parquet(events_stream_dir)
-    stream = spark.readStream.schema(batch.schema).parquet(events_stream_dir)
-    out = streaming_first_seen(stream, "user_id", ["event_id", "event_type"])
-    q = (
-        out.writeStream.format("memory")
-        .queryName("first_seen")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt1"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from first_seen").toPandas()
-    want_keys = {r["user_id"] for r in batch.select("user_id").distinct().collect()}
-    assert set(got.user_id) == want_keys
-    assert got.user_id.is_unique  # exactly one row per key
-
-
-def test_streaming_running_totals(spark, events_stream_dir, tmp_path):
-    batch = spark.read.parquet(events_stream_dir)
-    stream = spark.readStream.schema(batch.schema).parquet(events_stream_dir)
-    out = streaming_running_totals(stream, "user_id", "value")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from running_totals").toPandas().set_index("user_id")
-    want = batch.groupBy("user_id").count().toPandas().set_index("user_id")
-    # single micro-batch -> running totals equal batch counts
-    for uid, row in want.iterrows():
-        assert got.loc[uid, "running_count"] == row["count"]
+"""Spatial Structured Streaming operators (streaming/events.py): each runs
+as a real StreamingQuery and must match its batch result exactly."""
 
 
 def test_streaming_cell_counts_matches_batch(spark, tmp_path):
@@ -145,55 +94,3 @@ def test_streaming_zone_counts_matches_batch(spark, tmp_path):
     b = batch.sort_values(key).reset_index(drop=True)
     g = got.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(b, g, check_dtype=False)
-
-
-def test_dedup_events_stream_matches_batch_distinct(spark, tmp_path):
-    """Streaming exact dedup under a real StreamingQuery: re-delivered
-    rows arriving in a later file (inside the watermark horizon) are
-    suppressed; the emitted set equals batch dropDuplicates exactly."""
-    import numpy as np
-    import pandas as pd
-
-    from pyogrio_spark.streaming.events import EVENTS_SCHEMA, dedup_events_stream
-
-    n = 200
-    pdf = pd.DataFrame(
-        {
-            "event_id": np.arange(n, dtype=np.int64),
-            "ts": pd.to_datetime("2024-01-01")
-            + pd.to_timedelta((np.arange(n) * 37) % 3600, unit="s"),
-            "user_id": (np.arange(n, dtype=np.int64) * 7) % 23,
-            "event_type": np.where(np.arange(n) % 3 == 0, "click", "view"),
-            "value": np.arange(n, dtype=np.float64) / 8,
-            "props": ["{}"] * n,
-        }
-    )
-    src = str(tmp_path / "dedup_stream_src")
-    # file 1: rows 0-149; file 2: rows 100-199 -> 50 EXACT re-deliveries
-    spark.createDataFrame(pdf.iloc[:150]).coalesce(1).write.parquet(src)
-    spark.createDataFrame(pdf.iloc[100:]).coalesce(1).write.mode("append").parquet(src)
-
-    batch = dedup_events_stream(spark.read.parquet(src)).toPandas()
-    assert len(batch) == n  # sanity: batch path dedups the union
-
-    stream_in = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        dedup_events_stream(stream_in)
-        .writeStream.format("memory")
-        .queryName("dedup_events")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM dedup_events").toPandas()
-
-    assert len(got) == n, f"expected {n} unique events, got {len(got)}"
-    cols = ["event_id", "user_id", "event_type", "value"]
-    b = batch.sort_values("event_id").reset_index(drop=True)[cols]
-    g = got.sort_values("event_id").reset_index(drop=True)[cols]
-    pd.testing.assert_frame_equal(b, g)
