@@ -202,10 +202,10 @@ def _flatten_batch(geoms):
     return vert_xy, vert_row, edge_arr, edge_row, poly_edge_arr, poly_edge_row, valid
 
 
-def _point_in_flat_rings(tx, ty, e, erow, nrows) -> np.ndarray:
-    """Even-odd parity of ONE test point vs many candidates' ring edges
-    (flattened with per-edge row ids) -> bool per row. One vectorized
-    pass over all edges of the batch."""
+def point_in_flat_rings(tx, ty, e, erow, nrows) -> np.ndarray:
+    """Even-odd parity of a test point (one, or one per edge) vs many
+    candidates' ring edges (flattened with per-edge row ids) -> bool per
+    row. One vectorized pass over all edges of the batch."""
     if len(e) == 0:
         return np.zeros(nrows, dtype=bool)
     x0, y0, x1, y1 = e[:, 0], e[:, 1], e[:, 2], e[:, 3]
@@ -283,7 +283,7 @@ def batch_intersects(prep: "PreparedPolygon", geoms) -> np.ndarray:
     if len(poly_edge_arr):
         for ring in prep.rings:
             tx, ty = float(ring[0, 0]), float(ring[0, 1])
-            out |= _point_in_flat_rings(tx, ty, poly_edge_arr, poly_edge_row, n)
+            out |= point_in_flat_rings(tx, ty, poly_edge_arr, poly_edge_row, n)
     # C: boundary crossings (only for rows still undecided)
     todo = valid & ~out
     if todo.any() and len(edge_arr):
@@ -315,7 +315,7 @@ def batch_intersects_box(xmin, ymin, xmax, ymax, geoms) -> np.ndarray:
             out[np.unique(vert_row[hits])] = True
     # box corner inside a polygonal candidate (candidate swallows the box)
     if len(poly_edge_arr):
-        out |= _point_in_flat_rings(float(xmin), float(ymin), poly_edge_arr, poly_edge_row, n)
+        out |= point_in_flat_rings(float(xmin), float(ymin), poly_edge_arr, poly_edge_row, n)
     # candidate edge crosses the box boundary (closed: touching counts)
     todo = valid & ~out
     if todo.any() and len(edge_arr):

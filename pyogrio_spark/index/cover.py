@@ -1,4 +1,4 @@
-"""Polygon -> covering cell set (polyfill) with full/partial flags and
+"""Zone set -> covering cell set (polyfill) with full/partial flags and
 per-cell clipped edges, plus the JVM-side refine predicate over them.
 
 The analogue of H3 polyfill, but each cell carries ``full_cover``:
@@ -14,19 +14,21 @@ those edges — the same arithmetic as ``PreparedPolygon.contains_points``
 in the same order, so it is bit-identical to the numpy kernel and runs
 with no Python stage.
 
-Classification is vectorized across the whole candidate cell grid:
-one segment-vs-box test over (edges x cells) and one batched PIP over
-all cell corners — no per-cell Python loop.
+``cover_table`` classifies a whole zone set at once (Raptor's batched
+"intersection file"): every test is an array op over (cell, edge of its
+zone) pairs, and the result is an Arrow table, so the cover reaches
+Spark with no Python loop per zone or cell and no Python row objects.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from pyogrio_spark.geometry.predicates import PreparedPolygon
-from pyogrio_spark.index.grid import cell_bounds, cover_bbox
+from pyogrio_spark.geometry.predicates import PreparedPolygon, point_in_flat_rings, seg_intersects_box
+from pyogrio_spark.index.grid import cell_bounds, cover_bboxes
 
 EDGES_TYPE = "array<struct<x0:double,y0:double,x1:double,y1:double>>"
 # the cover columns contains_expr reads
@@ -36,91 +38,104 @@ REFINE_COLUMNS = ["full_cover", "zxmin", "zymin", "zxmax", "zymax", "edges"]
 # whose cell_id rounds onto a neighbouring cell's edge still sees every
 # edge it could cross.
 _CLIP_PAD = 1e-6
+_MAX_PAIRS = 1 << 18
 
 
-def _edges_hit_boxes(rings: list[np.ndarray], bx0, by0, bx1, by1) -> np.ndarray:
-    """bool[n_cells]: any ring edge intersects each box (separating-axis
-    test vectorized over edges x cells)."""
-    hit = np.zeros(bx0.shape[0], dtype=bool)
-    for ring in rings:
-        x0, y0 = ring[:-1, 0][:, None], ring[:-1, 1][:, None]
-        x1, y1 = ring[1:, 0][:, None], ring[1:, 1][:, None]
-        BX0, BY0, BX1, BY1 = bx0[None, :], by0[None, :], bx1[None, :], by1[None, :]
-        overlap = (
-            (np.minimum(x0, x1) <= BX1)
-            & (np.maximum(x0, x1) >= BX0)
-            & (np.minimum(y0, y1) <= BY1)
-            & (np.maximum(y0, y1) >= BY0)
-        )
-        dx, dy = x1 - x0, y1 - y0
-        s1 = dx * (BY0 - y0) - dy * (BX0 - x0)
-        s2 = dx * (BY0 - y0) - dy * (BX1 - x0)
-        s3 = dx * (BY1 - y0) - dy * (BX0 - x0)
-        s4 = dx * (BY1 - y0) - dy * (BX1 - x0)
-        all_pos = (s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)
-        all_neg = (s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0)
-        hit |= (overlap & ~(all_pos | all_neg)).any(axis=0)
-    return hit
-
-
-def _clip_edges(rings: list[np.ndarray], bx0, by0, bx1, by1) -> list[np.ndarray]:
-    """Per box, the (k, 4) [x0, y0, x1, y1] edges whose y-range overlaps
-    the box's padded y-band and whose max x reaches its padded xmin.
-
-    A +x ray from (px, py) crosses an edge only if py lies in the edge's
-    y-range and px < the crossing x <= the edge's max x; a point on an
-    edge lies in the edge's bbox. So for points in the box these are the
-    only edges that can change the ray-cast parity or the on-edge test.
-    """
-    e = np.concatenate([np.concatenate([r[:-1, :2], r[1:, :2]], axis=1) for r in rings])
-    pad_x, pad_y = (bx1 - bx0) * _CLIP_PAD, (by1 - by0) * _CLIP_PAD
-    keep = (
-        (np.minimum(e[:, 1], e[:, 3])[:, None] <= (by1 + pad_y)[None, :])
-        & (np.maximum(e[:, 1], e[:, 3])[:, None] >= (by0 - pad_y)[None, :])
-        & (np.maximum(e[:, 0], e[:, 2])[:, None] >= (bx0 - pad_x)[None, :])
-    )
-    return [e[keep[:, j]] for j in range(keep.shape[1])]
-
-
-def _cover(prep: PreparedPolygon, res: int) -> tuple[np.ndarray, np.ndarray]:
-    cand = cover_bbox(*prep.bbox, res)
-    if cand.size == 0:
-        return cand, np.zeros(0, dtype=bool)
-    bx0, by0, bx1, by1 = cell_bounds(cand, res)
-
-    edge_hit = _edges_hit_boxes(prep.rings, bx0, by0, bx1, by1)
-
-    # all 4 corners of each box, one batched PIP call
-    cx = np.concatenate([bx0, bx1, bx0, bx1])
-    cy = np.concatenate([by0, by0, by1, by1])
-    inside = prep.contains_points(cx, cy).reshape(4, cand.size)
-    corners_in_all = inside.all(axis=0)
-    corners_in_any = inside.any(axis=0)
-
-    full = corners_in_all & ~edge_hit
-    # partial: boundary passes through, or a corner is inside, or the box
-    # swallows the polygon entirely (then every candidate box overlaps bbox)
+def _is_rect(prep: PreparedPolygon) -> bool:
+    """A single-ring 5-point polygon whose vertices are its bbox corners:
+    its exact refine is an interval predicate on the zone bbox."""
+    if len(prep.rings) != 1 or prep.rings[0].shape[0] != 5:
+        return False
     xmin, ymin, xmax, ymax = prep.bbox
-    contains_poly = (bx0 <= xmin) & (bx1 >= xmax) & (by0 <= ymin) & (by1 >= ymax)
-    partial = (edge_hit | corners_in_any | contains_poly) & ~full
-    keep = full | partial
-    return cand[keep], full[keep]
+    corners = {(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax)}
+    return set(map(tuple, prep.rings[0][:4].tolist())) == corners
 
 
-def cover_polygon(wkb: bytes, res: int) -> tuple[np.ndarray, np.ndarray]:
-    """-> (cells int64[n], full_cover bool[n]) for cells intersecting the
-    polygon. Cells whose box misses the polygon entirely are dropped."""
-    return _cover(PreparedPolygon(wkb), res)
+def _classify(box, zbox, edges, per_cell, first_edge):
+    """One ``cover_table`` pass over candidate cells (bounds ``box`` and
+    zone bbox ``zbox``, both (4, n)) and the ``per_cell`` edges of each
+    cell's zone from row ``first_edge`` of ``edges`` -> (full, partial,
+    clipped-edge count per cell, the clipped edges in cell order)."""
+    bx0, by0, bx1, by1 = box
+    zx0, zy0, zx1, zy1 = zbox
+    n = bx0.size
+    pad_x, pad_y = (bx1 - bx0) * _CLIP_PAD, (by1 - by0) * _CLIP_PAD
+    # (cell, edge of its zone) pairs, cell-major, each cell's edges in
+    # order; an edge off the cell's padded y-band cannot touch the cell,
+    # cross a corner's ray or be clipped to it, so its pair is dropped
+    pc = np.repeat(np.arange(n), per_cell)
+    pe = np.arange(pc.size) - np.repeat(np.cumsum(per_cell) - per_cell - first_edge, per_cell)
+    ey0, ey1 = edges[pe, 1], edges[pe, 3]
+    band = (np.minimum(ey0, ey1) <= (by1 + pad_y)[pc]) & (np.maximum(ey0, ey1) >= (by0 - pad_y)[pc])
+    pc, e = pc[band], edges[pe[band]]
+    ex0, ey0, ex1, ey1 = e.T
+    hit = seg_intersects_box(ex0, ey0, ex1, ey1, bx0[pc], by0[pc], bx1[pc], by1[pc])
+    edge_hit = np.bincount(pc[hit], minlength=n) > 0
+    inside = np.stack([
+        (cx >= zx0) & (cx <= zx1) & (cy >= zy0) & (cy <= zy1) & point_in_flat_rings(cx[pc], cy[pc], e, pc, n)
+        for cx, cy in ((bx0, by0), (bx1, by0), (bx0, by1), (bx1, by1))
+    ])
+    full = inside.all(axis=0) & ~edge_hit
+    swallows = (bx0 <= zx0) & (bx1 >= zx1) & (by0 <= zy0) & (by1 >= zy1)
+    partial = (edge_hit | inside.any(axis=0) | swallows) & ~full
+    clip = partial[pc] & (np.maximum(ex0, ex1) >= (bx0 - pad_x)[pc])
+    return full, partial, np.bincount(pc[clip], minlength=n), e[clip]
 
 
-def cover_polygon_edges(wkb: bytes, res: int) -> tuple[np.ndarray, np.ndarray, list[list[tuple]]]:
-    """``cover_polygon`` plus each cell's clipped edges as a list of
-    (x0, y0, x1, y1) tuples, the ``EDGES_TYPE`` column value; empty for
-    full-cover cells, which need no refine."""
-    prep = PreparedPolygon(wkb)
-    cells, full = _cover(prep, res)
-    clipped = iter(_clip_edges(prep.rings, *cell_bounds(cells[~full], res)))
-    return cells, full, [[] if f else list(map(tuple, next(clipped).tolist())) for f in full.tolist()]
+def cover_table(keys, wkbs, res: int, zone_key: str = "fid", geom_col: str = "geometry_wkb") -> pa.Table:
+    """Cover a zone set: one row per (zone, covering cell) with columns
+    (cell_id, zone_key, full_cover, geom_col, is_rect, zxmin, zymin,
+    zxmax, zymax, edges), zones in input order, each zone's cells x-major.
+    ``keys``/``wkbs`` are the zone key and polygon columns (Arrow arrays
+    or anything ``pa.array`` takes); a null polygon raises ValueError.
+
+    A cell is full when its four corners are inside the zone
+    (``PreparedPolygon.contains_points``) and no edge touches it
+    (``seg_intersects_box``); partial when an edge touches it, a corner
+    is inside, or it swallows the zone's bbox; dropped otherwise. A
+    partial cell keeps the edges whose y-range meets its y-band and whose
+    max x reaches its xmin (both padded by ``_CLIP_PAD``): no other edge
+    can cross a +x ray from the cell or hold a point of it."""
+    keys, wkbs = pa.array(keys), pa.array(wkbs, pa.binary())
+    preps, zone_edges = [], []
+    for key, wkb in zip(keys.to_pylist(), wkbs.to_pylist()):
+        if wkb is None:
+            raise ValueError(f"zone {zone_key}={key!r} has a null {geom_col}")
+        preps.append(PreparedPolygon(wkb))
+        zone_edges.append(np.concatenate([np.concatenate([r[:-1], r[1:]], axis=1) for r in preps[-1].rings]))
+    # one (x0, y0, x1, y1) edge table, grouped by zone in ring order
+    edges = np.concatenate(zone_edges) if zone_edges else np.empty((0, 4))
+    n_edges = np.array([len(z) for z in zone_edges], dtype=np.int64)
+    first_edge = np.cumsum(n_edges) - n_edges
+
+    zbox = np.array([p.bbox for p in preps], dtype=np.float64).reshape(-1, 4)
+    zone, cells = cover_bboxes(*zbox.T, res)
+    box, zb, per_cell = np.stack(cell_bounds(cells, res)), zbox[zone].T, n_edges[zone]
+    # passes over runs of whole zones, each of about _MAX_PAIRS (cell,
+    # edge) pairs or one bigger zone, bound the memory
+    zone_pass = np.cumsum(np.bincount(zone, minlength=len(preps)) * n_edges) // _MAX_PAIRS
+    cuts = [0, *(np.flatnonzero(np.diff(zone_pass[zone])) + 1), cells.size]
+    passes = [
+        _classify(box[:, a:b], zb[:, a:b], edges, per_cell[a:b], first_edge[zone[a:b]])
+        for a, b in zip(cuts[:-1], cuts[1:])
+    ]
+    full, partial, n_clip, clipped = (np.concatenate(part) for part in zip(*passes))
+    keep = np.flatnonzero(full | partial)
+    offsets = np.concatenate([[0], np.cumsum(n_clip[keep])])
+    kept_edges = pa.StructArray.from_arrays(list(clipped.T), names=["x0", "y0", "x1", "y1"])
+    kz = zone[keep]
+    return pa.table({
+        "cell_id": cells[keep],
+        zone_key: keys.take(kz),
+        "full_cover": full[keep],
+        geom_col: wkbs.take(kz),
+        "is_rect": np.array([_is_rect(p) for p in preps], dtype=bool)[kz],
+        "zxmin": zb[0, keep],
+        "zymin": zb[1, keep],
+        "zxmax": zb[2, keep],
+        "zymax": zb[3, keep],
+        "edges": pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), kept_edges),
+    })
 
 
 def contains_expr(x: str, y: str, include_boundary: bool = False) -> Column:

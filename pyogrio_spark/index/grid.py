@@ -123,17 +123,21 @@ def disk(cell: int, k: int, res: int | None = None) -> np.ndarray:
     return np.unique(xy_to_cell(gx.ravel(), gy.ravel(), res))
 
 
+def cover_bboxes(xmin, ymin, xmax, ymax, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """``cover_bbox`` of many boxes in one vectorized pass -> (box index,
+    cell_id) int64 arrays: boxes in input order, each box's cells x-major."""
+    x0, y0 = cell_to_xy(cell_of(xmin, ymin, res), res)
+    x1, y1 = cell_to_xy(cell_of(xmax, ymax, res), res)
+    ny = np.maximum(y1 - y0 + 1, 0)
+    count = np.maximum(x1 - x0 + 1, 0) * ny
+    box = np.repeat(np.arange(count.size), count)
+    k = np.arange(box.size) - np.repeat(np.cumsum(count) - count, count)
+    return box, xy_to_cell(x0[box] + k // ny[box], y0[box] + k % ny[box], res)
+
+
 def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float, res: int) -> np.ndarray:
     """All cells whose box intersects the given bbox (inclusive edges)."""
-    n = _n(res)
-    x0 = int(np.clip(np.floor((xmin - LON0) / SPAN_LON * n), 0, n - 1))
-    x1 = int(np.clip(np.floor((xmax - LON0) / SPAN_LON * n), 0, n - 1))
-    y0 = int(np.clip(np.floor((ymin - LAT0) / SPAN_LAT * n), 0, n - 1))
-    y1 = int(np.clip(np.floor((ymax - LAT0) / SPAN_LAT * n), 0, n - 1))
-    xs = np.arange(x0, x1 + 1, dtype=np.int64)
-    ys = np.arange(y0, y1 + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(xs, ys, indexing="ij")
-    return xy_to_cell(gx.ravel(), gy.ravel(), res)
+    return cover_bboxes([xmin], [ymin], [xmax], [ymax], res)[1]
 
 
 def parent_expr_sql(cell_sql: str, res: int) -> str:

@@ -40,7 +40,7 @@ from pyspark.sql.functions import pandas_udf
 
 from pyogrio_spark.geometry import wkb as W
 from pyogrio_spark.geometry.predicates import PreparedPolygon, batch_intersects, batch_intersects_box
-from pyogrio_spark.index.cover import cover_polygon
+from pyogrio_spark.index.cover import cover_table
 
 DEFAULT_RES = 7
 
@@ -142,7 +142,10 @@ def read_table(
     return df
 
 
-def _check_filters(where, bbox, mask, fids, skip_features, max_features) -> None:
+def _check_filters(where=None, bbox=None, mask=None, fids=None, skip_features=0, max_features=None, **_) -> None:
+    if bbox is not None and (len(bbox) != 4 or bbox[0] > bbox[2] or bbox[1] > bbox[3]):
+        # an inverted box (or one across the antimeridian) would match nothing
+        raise ValueError(f"bbox must be (xmin, ymin, xmax, ymax) with xmin <= xmax and ymin <= ymax, got {bbox!r}")
     if bbox is not None and mask is not None:
         # mirror the reference's pyogrio/_io.pyx:1682-1683
         raise ValueError("cannot set both 'bbox' and 'mask'")
@@ -172,10 +175,8 @@ def scan_chunks(spark: SparkSession, path: str, chunks: list, decode, schema: st
 
     keep = None
     if read_table_kwargs.get("sql") is None:
-        kw = read_table_kwargs
-        _check_filters(kw.get("where"), kw.get("bbox"), kw.get("mask"), kw.get("fids"),
-                       kw.get("skip_features"), kw.get("max_features"))
-        keep = _refine_fn(kw.pop("bbox", None), kw.pop("mask", None))
+        _check_filters(**read_table_kwargs)
+        keep = _refine_fn(read_table_kwargs.pop("bbox", None), read_table_kwargs.pop("mask", None))
 
     def scan(batches):
         for batch in batches:
@@ -203,6 +204,7 @@ def storage_prune_box(read_table_kwargs: dict):
     decoding: the bbox, or a mask's envelope — a superset, the exact
     refine still runs on what is read. None with ``sql=``: the bbox then
     applies to the statement's result, not to the source rows."""
+    _check_filters(**read_table_kwargs)
     if read_table_kwargs.get("sql") is not None:
         return None
     if read_table_kwargs.get("mask") is not None:
@@ -297,8 +299,8 @@ def _apply_mask(df: DataFrame, mask_wkb: bytes, res: int) -> DataFrame:
     if all(c in df.columns for c in BOUNDS_COLS):
         df = df.filter(_coarse_bbox_pred(mxmin, mymin, mxmax, mymax))
     if "cell_id" in df.columns:
-        cells, full = cover_polygon(mask_wkb, res)
-        df = df.filter(F.col("cell_id").isin([int(c) for c in cells]))
+        cells = cover_table([0], [mask_wkb], res)["cell_id"]
+        df = df.filter(F.col("cell_id").isin(cells.to_pylist()))
 
     @pandas_udf("boolean")
     def _refine(wkb: pd.Series) -> pd.Series:
@@ -343,8 +345,10 @@ def _apply_range(
     # holds them for this call only: Spark frees its blocks once the
     # result is no longer referenced, and a lost block fails the job
     # instead of being recomputed with new ids.
+    # explicit count: adaptive execution would fold a small frame into one
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     parts = (
-        df.repartitionByRange(*order_exprs)
+        df.repartitionByRange(n_parts, *order_exprs)
         .sortWithinPartitions(*order_exprs)
         .withColumn("_skip_id", F.monotonically_increasing_id())
         .localCheckpoint(eager=True)

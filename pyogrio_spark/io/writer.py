@@ -25,6 +25,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @contextlib.contextmanager
@@ -198,8 +199,14 @@ def read_committed(spark: SparkSession, path: str, snapshot: str | None = None) 
             raise KeyError(f"snapshot {snapshot} is not the current snapshot; only current is materialized")
     if entry is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
+    return _read_snapshot(spark, path, entry)
+
+
+def _read_snapshot(spark: SparkSession, path: str, entry: dict) -> DataFrame:
+    """A manifest entry's data, read with the schema it stores: no
+    schema-inference job, and older files read a later column as null."""
     dirs = [os.path.join(path, d) for d in entry["data_dirs"]]
-    return spark.read.parquet(*dirs)
+    return spark.read.schema(StructType.fromJson(entry["schema"])).parquet(*dirs)
 
 
 def current_snapshot(path: str) -> dict | None:
@@ -263,7 +270,7 @@ def compact_table(
         dirs = [os.path.join(path, d) for d in entry["data_dirs"]]
         files_before, total_bytes = _dir_file_stats(spark, dirs)
         n_out = max(1, -(-total_bytes // max(1, int(target_bytes))))
-        df = spark.read.parquet(*dirs)
+        df = _read_snapshot(spark, path, entry)
         if sort_by:
             out = df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(*sort_by)
         else:
@@ -407,8 +414,7 @@ def upsert_table(
                 s for s in _read_manifest(path)["snapshots"] if s["id"] == snap
             )["row_count"]
             return {"snapshot": snap, "matched": 0, "inserted": n_up, "rows": n_up}
-        dirs = [os.path.join(path, d) for d in entry["data_dirs"]]
-        cur = spark.read.parquet(*dirs)
+        cur = _read_snapshot(spark, path, entry)
         survivors = cur.join(updates.select(*keys).distinct(), keys, "left_anti")
         merged = survivors.unionByName(updates)
         n_cur, n_up = entry["row_count"], updates.count()
@@ -451,8 +457,7 @@ def delete_from_table(
         entry = current_snapshot(path)
         if entry is None:
             raise FileNotFoundError(f"no committed snapshot at {path}")
-        dirs = [os.path.join(path, d) for d in entry["data_dirs"]]
-        cur = spark.read.parquet(*dirs)
+        cur = _read_snapshot(spark, path, entry)
         # SQL DELETE removes only rows where the predicate is TRUE;
         # rows where it evaluates to NULL (nullable columns) survive.
         # A bare NOT(pred) would drop them — coalesce to false first.

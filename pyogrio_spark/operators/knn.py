@@ -89,6 +89,10 @@ def knn_join(
     docs_pts = _doc_points(docs, doc_key, doc_lon, doc_lat).dropna(subset=["_dlon", "_dlat", "_dcell"])
     hist = docs_pts.groupBy("_dcell").count().toPandas()
     cells = pts.groupBy("_px", "_py").count().toPandas()
+    no_xy = cells["_px"].isna() | cells["_py"].isna()
+    if no_xy.any():
+        n_bad = int(cells["count"][no_xy].sum())
+        raise ValueError(f"knn_join: {n_bad} probe(s) have a null {probe_lon!r} or {probe_lat!r}")
     px, py, n_probes = (np.asarray(cells[c], dtype=np.int64) for c in ("_px", "_py", "count"))
     kx, ky, dist_cut = plan_windows(hist["_dcell"], hist["count"], px, py, k, res, metric)
 
@@ -233,10 +237,12 @@ def within_distance_join(
 
 
 def _probe_cells(probes: DataFrame, probe_key: str, probe_lon: str, probe_lat: str, res: int) -> DataFrame:
-    """(probe_key, _plon, _plat, _px, _py): the probe's grid column and row."""
+    """(probe_key, _plon, _plat, _px, _py): the probe's grid column and row,
+    null for a null coordinate (the clamp's least/greatest skip nulls)."""
     px, py = cell_xy_expr_sql(f"`{probe_lon}`", f"`{probe_lat}`", res)
     return probes.selectExpr(
-        f"`{probe_key}`", f"`{probe_lon}` AS _plon", f"`{probe_lat}` AS _plat", f"{px} AS _px", f"{py} AS _py"
+        f"`{probe_key}`", f"`{probe_lon}` AS _plon", f"`{probe_lat}` AS _plat",
+        f"if(`{probe_lon}` IS NULL, NULL, {px}) AS _px", f"if(`{probe_lat}` IS NULL, NULL, {py}) AS _py",
     )
 
 

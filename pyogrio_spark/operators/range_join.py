@@ -14,11 +14,12 @@ the pair key (a box spanning c cells would otherwise emit c copies).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyogrio_spark.index.grid import cover_bbox
+from pyogrio_spark.index.grid import cover_bboxes
 
 DEFAULT_RES = 7
 
@@ -29,17 +30,12 @@ def boxes_cell_cover(
     res: int = DEFAULT_RES,
     box_key: str = "box_id",
 ) -> DataFrame:
-    # itertuples, not iterrows: iterrows upcasts mixed int/float rows to
-    # float64, turning an int64 box_id into 0.0 and failing the bigint
-    # schema check in createDataFrame.
+    box, cells = cover_bboxes(boxes.xmin, boxes.ymin, boxes.xmax, boxes.ymax, res)
     key_is_int = pd.api.types.is_integer_dtype(boxes[box_key])
-    rows = []
-    for b in boxes.itertuples(index=False):
-        key = getattr(b, box_key)
-        key = int(key) if key_is_int else str(key)
-        for c in cover_bbox(b.xmin, b.ymin, b.xmax, b.ymax, res).tolist():
-            rows.append((int(c), key, float(b.xmin), float(b.ymin), float(b.xmax), float(b.ymax)))
-    pdf = pd.DataFrame(rows, columns=["cell_id", box_key, "bxmin", "bymin", "bxmax", "bymax"])
+    keys = boxes[box_key].to_numpy()[box]
+    pdf = pd.DataFrame({"cell_id": cells, box_key: keys if key_is_int else keys.astype(str)})
+    for c in ("xmin", "ymin", "xmax", "ymax"):
+        pdf["b" + c] = boxes[c].to_numpy(dtype=np.float64)[box]
     ktype = "bigint" if key_is_int else "string"
     return spark.createDataFrame(
         pdf, schema=f"cell_id bigint, {box_key} {ktype}, bxmin double, bymin double, bxmax double, bymax double"

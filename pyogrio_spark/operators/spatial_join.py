@@ -30,46 +30,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyogrio_spark.geometry.predicates import PreparedPolygon
-from pyogrio_spark.index.cover import EDGES_TYPE, REFINE_COLUMNS, contains_expr, cover_polygon_edges
+from pyogrio_spark.index.cover import EDGES_TYPE, REFINE_COLUMNS, contains_expr, cover_table
 
 DEFAULT_RES = 7
-
-
-def _is_rectangle(wkb: bytes) -> tuple[bool, tuple]:
-    """A single-ring 5-point polygon whose vertices are exactly its bbox
-    corners. For such zones the exact PIP refine degenerates to an interval
-    predicate — evaluable JVM-side with no geometry parsing (the envelope-
-    exactness shortcut of /root/reference/pyogrio/core.py:207-212)."""
-    try:
-        prep = PreparedPolygon(wkb)
-    except Exception:
-        return False, ()
-    if len(prep.rings) != 1 or prep.rings[0].shape[0] != 5:
-        return False, prep.bbox
-    xmin, ymin, xmax, ymax = prep.bbox
-    corners = {(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax)}
-    pts = {(float(x), float(y)) for x, y in prep.rings[0][:4]}
-    return pts == corners, prep.bbox
-
-
-def _cover_rows(zones_iter, res: int, zone_key: str, geom_col: str):
-    rows = []
-    for _, z in zones_iter:
-        if z[geom_col] is None:
-            raise ValueError(f"zone {zone_key}={z[zone_key]!r} has a null {geom_col}")
-        wkb = bytes(z[geom_col])
-        cells, full, edges = cover_polygon_edges(wkb, res)
-        is_rect, bbox = _is_rectangle(wkb)
-        for c, f, e in zip(cells.tolist(), full.tolist(), edges):
-            rows.append((int(c), z[zone_key], bool(f), wkb, is_rect, *bbox, e))
-    return pd.DataFrame(
-        rows,
-        columns=["cell_id", zone_key, "full_cover", geom_col, "is_rect", "zxmin", "zymin", "zxmax", "zymax", "edges"],
-    )
 
 
 def _cover_schema(zone_key: str, ztype: str, geom_col: str) -> str:
@@ -92,12 +59,14 @@ def zones_cell_cover(
     full-cover cells).
 
     Driver-side for dimension-sized zone tables (admin boundaries,
-    1e2-1e5 polygons — the common case); use
-    ``zones_cell_cover_distributed`` when the polygon side is itself big.
+    1e2-1e5 polygons — the common case): ``index.cover.cover_table``
+    covers the whole set in one vectorized pass and its Arrow table goes
+    to Spark as is. Use ``zones_cell_cover_distributed`` when the polygon
+    side is itself big.
     """
-    pdf = _cover_rows(zones.iterrows(), res, zone_key, geom_col)
+    table = cover_table(zones[zone_key], zones[geom_col], res, zone_key, geom_col)
     ztype = "bigint" if pd.api.types.is_integer_dtype(zones[zone_key]) else "string"
-    return spark.createDataFrame(pdf, schema=_cover_schema(zone_key, ztype, geom_col))
+    return spark.createDataFrame(table, schema=_cover_schema(zone_key, ztype, geom_col))
 
 
 def zones_cell_cover_distributed(
@@ -106,14 +75,15 @@ def zones_cell_cover_distributed(
     zone_key: str = "fid",
     geom_col: str = "geometry_wkb",
 ) -> DataFrame:
-    """Same cover computed on executors via mapInPandas — the scale path."""
+    """Same cover computed on executors, one ``cover_table`` per Arrow
+    batch via mapInArrow — the scale path."""
     ztype = zones_df.schema[zone_key].dataType.simpleString()
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _cover_rows(pdf.iterrows(), res, zone_key, geom_col)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            yield from cover_table(b.column(zone_key), b.column(geom_col), res, zone_key, geom_col).to_batches()
 
-    return zones_df.select(zone_key, geom_col).mapInPandas(gen, schema=_cover_schema(zone_key, ztype, geom_col))
+    return zones_df.select(zone_key, geom_col).mapInArrow(gen, schema=_cover_schema(zone_key, ztype, geom_col))
 
 
 def plan_salt_factors(

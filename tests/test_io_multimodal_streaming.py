@@ -22,6 +22,37 @@ def test_write_commit_append_overwrite(spark, tmp_path):
     assert read_committed(spark, path).count() == 5
 
 
+def test_read_committed_runs_no_spark_job(spark, tmp_path):
+    path = str(tmp_path / "t")
+    write_table(spark.range(100).selectExpr("id", "id * 2 AS v"), path)
+    sc = spark.sparkContext
+    sc.setJobGroup("read_committed_jobs", "read_committed")
+    try:
+        df = read_committed(spark, path)  # the schema comes from the manifest
+        assert list(sc.statusTracker().getJobIdsForGroup("read_committed_jobs")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.dtypes == [("id", "bigint"), ("v", "bigint")] and df.count() == 100
+
+
+def test_read_committed_column_added_by_append_reads_null(spark, tmp_path):
+    path = str(tmp_path / "t")
+    write_table(spark.range(3), path, mode="append")
+    write_table(spark.range(3, 5).selectExpr("id", "'x' AS tag"), path, mode="append")
+    got = sorted(tuple(r) for r in read_committed(spark, path).collect())
+    assert got == [(0, None), (1, None), (2, None), (3, "x"), (4, "x")]
+
+
+def test_read_committed_partition_column_types(spark, tmp_path):
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "007", 3), (2, "010", 4)], "id long, code string, bucket int")
+    write_table(df, path, partition_by=["code", "bucket"])
+    back = read_committed(spark, path)
+    # inference would read the digit strings back as integers 7 and 10
+    assert back.dtypes == [("id", "bigint"), ("code", "string"), ("bucket", "int")]
+    assert sorted(tuple(r) for r in back.collect()) == [(1, "007", 3), (2, "010", 4)]
+
+
 def test_crs_roundtrip_through_table_properties(spark, tmp_path):
     from pyogrio_spark.io.reader import read_info
 

@@ -75,6 +75,17 @@ def test_knn_res_mismatch_raises(spark, docs_pd, probes_pd):
         knn_join(probes, docs, k=1, res=6)
 
 
+def test_knn_null_probe_coordinates_raise(spark, docs_pd):
+    docs = spark.createDataFrame(docs_pd, schema=DOCS_SPARK_SCHEMA)
+    probes = spark.createDataFrame(
+        [("a", 10.0, 20.0), ("b", None, 20.0), ("c", 10.0, None), ("d", None, None)],
+        schema="probe_id string, lon double, lat double",
+    )
+    # without the check they would silently get no neighbours
+    with pytest.raises(ValueError, match="3 probe.*'lon' or 'lat'"):
+        knn_join(probes, docs, k=2)
+
+
 @pytest.mark.parametrize("k", [0, -2])
 def test_knn_k_below_one_raises_before_any_job(spark, docs_pd, probes_pd, k):
     docs = spark.createDataFrame(docs_pd, schema=DOCS_SPARK_SCHEMA)

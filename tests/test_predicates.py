@@ -2,8 +2,8 @@ import numpy as np
 
 from pyogrio_spark.geometry import wkb as W
 from pyogrio_spark.geometry.predicates import PreparedPolygon, points_in_polygon, seg_intersects_box
-from pyogrio_spark.index.cover import cover_polygon
-from pyogrio_spark.index.grid import cell_bounds, cell_of
+from pyogrio_spark.index.cover import _CLIP_PAD, cover_table
+from pyogrio_spark.index.grid import cell_bounds, cell_of, cover_bbox
 
 
 SQ = np.array([(0.0, 0.0), (10, 0), (10, 10), (0, 10), (0, 0)])
@@ -68,7 +68,8 @@ def test_classify_box():
 def test_cover_polygon_flags_agree_with_pip():
     b = W.encode_polygon([SQ])
     res = 7
-    cells, full = cover_polygon(b, res)
+    t = cover_table([0], [b], res)
+    cells, full = t["cell_id"].to_numpy(), t["full_cover"].to_numpy()
     assert len(cells) > 0
     prep = PreparedPolygon(b)
     for c, f in zip(cells, full):
@@ -85,6 +86,60 @@ def test_cover_polygon_flags_agree_with_pip():
     pc = cell_of(px[inside], py[inside], res)
     cellset = set(cells.tolist())
     assert all(int(c) in cellset for c in pc)
+
+
+def _cover_per_cell(fid, wkb, res):
+    """Reference cover, one cell at a time: ``classify_box`` of every
+    candidate cell and the edge clip of each partial cell on its own."""
+    prep = PreparedPolygon(wkb)
+    e = np.concatenate([np.concatenate([r[:-1], r[1:]], axis=1) for r in prep.rings])
+    rows = []
+    for c in cover_bbox(*prep.bbox, res).tolist():
+        x0, y0, x1, y1 = (float(v) for v in cell_bounds(np.int64(c), res))
+        kind = prep.classify_box(x0, y0, x1, y1)
+        if kind == "none":
+            continue
+        edges = []
+        if kind == "partial":
+            px, py = (x1 - x0) * _CLIP_PAD, (y1 - y0) * _CLIP_PAD
+            keep = (
+                (np.minimum(e[:, 1], e[:, 3]) <= y1 + py)
+                & (np.maximum(e[:, 1], e[:, 3]) >= y0 - py)
+                & (np.maximum(e[:, 0], e[:, 2]) >= x0 - px)
+            )
+            edges = [dict(zip(("x0", "y0", "x1", "y1"), row)) for row in e[keep].tolist()]
+        rows.append((c, fid, kind == "full", edges))
+    return rows
+
+
+def _cover_zone_sets():
+    from pyogrio_spark.fixtures import make_zones
+
+    zones = make_zones()
+    hole = W.encode_polygon([SQ, HOLE])
+    multi = W.encode_multipolygon([[SQ], [SQ + 20.0], [np.array([(30.0, 0), (40, 5), (30, 10), (30, 0)])]])
+    # zones reaching the grid's clamped edges at +-180 and +-90
+    ne = W.encode_polygon([np.array([(170.0, 80), (180, 80), (180, 90), (170, 90), (170, 80)])])
+    sw = W.encode_polygon([np.array([(-180.0, -90), (-171, -90), (-175, -84), (-180, -90)])])
+    # a notch edge a hair above the row line y = 8.4375 at res 7: only the
+    # clip's padding keeps it in the partial cells just below the line
+    y = -90 + 70 * 180 / 128 + 1e-9
+    notch = W.encode_polygon([np.array([(0.5, 5.0), (7, 5), (7, y), (3, y), (3, 12), (0.5, 12), (0.5, 5)])])
+    yield "make_zones res 7", list(zip(zones.fid, zones.geometry_wkb)), 7
+    # res 9 on every 20th zone keeps the per-cell reference quick
+    yield "make_zones res 9", list(zip(zones.fid[::20], zones.geometry_wkb[::20])), 9
+    yield "hole, multipolygon, clamped, notch", [(1, hole), (2, multi), (3, ne), (4, sw), (5, notch)], 7
+    yield "one zone", [(7, hole)], 9
+
+
+def test_cover_table_matches_per_cell_reference():
+    for name, zones, res in _cover_zone_sets():
+        t = cover_table([f for f, _ in zones], [w for _, w in zones], res)
+        got = list(zip(t["cell_id"].to_pylist(), t["fid"].to_pylist(), t["full_cover"].to_pylist(),
+                       t["edges"].to_pylist()))
+        want = [row for fid, wkb in zones for row in _cover_per_cell(fid, wkb, res)]
+        assert got == want, name
+        assert any(not full for _, _, full, _ in got), name
 
 
 def _zoo(rng):

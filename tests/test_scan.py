@@ -82,6 +82,31 @@ def test_exclusivity_errors(spark, docs_df):
         read_table(spark, docs_df, fids=["doc000000000001"], where="xmin > 0")
 
 
+@pytest.mark.parametrize("bbox", [(170.0, -90.0, -170.0, 90.0), (0.0, 10.0, 1.0, 5.0), (0.0, 0.0, 1.0)])
+def test_inverted_or_malformed_bbox_raises(spark, docs_df, tmp_path, bbox):
+    from pyogrio_spark.io.dispatch import open_table
+    from pyogrio_spark.io.flatgeobuf import write_flatgeobuf
+
+    path = str(tmp_path / "pts.fgb")
+    pts = [W.encode_point(175.0, 0.0), W.encode_point(-175.0, 0.0)]
+    write_flatgeobuf(pd.DataFrame({"name": ["east", "west"], "geometry_wkb": pts}), path, index_node_size=16)
+    # an antimeridian-crossing box used to match nothing on every path
+    with pytest.raises(ValueError, match="bbox"):
+        read_table(spark, docs_df, bbox=bbox)
+    for distributed in (False, True):
+        with pytest.raises(ValueError, match="bbox"):
+            open_table(spark, path, distributed=distributed, bbox=bbox)
+
+
+def test_skip_only_rank_is_distributed(spark):
+    # the range shuffle has an explicit partition count, so adaptive
+    # execution does not fold a small frame into one partition
+    df = spark.range(2000).selectExpr("id AS doc_id", "id % 7 AS v")
+    out = read_table(spark, df, skip_features=10)
+    assert out.select(F.spark_partition_id()).distinct().count() > 1
+    assert sorted(r.doc_id for r in out.collect()) == list(range(10, 2000))
+
+
 @pytest.fixture(scope="module")
 def docs_parts(spark, docs_pd, tmp_path_factory):
     """The docs fixture as a 4-file Parquet table: a range plan has

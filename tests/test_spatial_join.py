@@ -102,17 +102,26 @@ def test_null_zone_geometry_raises_naming_the_zone(spark, zones_pd):
 
 
 def test_distributed_cover_matches_driver_cover(spark, zones_pd):
-    zones_df = spark.createDataFrame(zones_pd, schema=ZONES_SPARK_SCHEMA)
-    cols = ["cell_id", "fid", "full_cover", "edges"]
-    a = zones_cell_cover(spark, zones_pd).select(*cols)
-    b = zones_cell_cover_distributed(zones_df).select(*cols)
+    zones_df = spark.createDataFrame(zones_pd, schema=ZONES_SPARK_SCHEMA).repartition(3)
+    a = zones_cell_cover(spark, zones_pd)
+    b = zones_cell_cover_distributed(zones_df)
+    assert a.schema == b.schema
 
     def rows(df):
-        return sorted((r.cell_id, r.fid, r.full_cover, tuple(map(tuple, r.edges))) for r in df.collect())
+        return sorted((*r[:-1], tuple(map(tuple, r.edges))) for r in df.collect())
 
     la, lb = rows(a), rows(b)
     assert la == lb
-    assert all(bool(e) != f for _, _, f, e in la)  # edges on boundary rows only
+    assert all(bool(r[-1]) != r[2] for r in la)  # edges on boundary rows only
+
+
+def test_empty_zone_frame_gives_empty_cover(spark, zones_pd):
+    empty = zones_pd.iloc[:0]
+    driver = zones_cell_cover(spark, empty)
+    distributed = zones_cell_cover_distributed(spark.createDataFrame(empty, schema=ZONES_SPARK_SCHEMA))
+    for cover in (driver, distributed):
+        assert cover.schema == zones_cell_cover(spark, zones_pd).schema
+        assert cover.count() == 0
 
 
 def test_pip_join_default_keep_doc_cols(spark, docs_df, docs_pd, zones_pd):
@@ -396,13 +405,14 @@ def _expected_pairs(zones, docs_pd, include_boundary):
     """contains_points per zone; a non-primary row can only meet the
     zones whose cover has its cell (the cover is built for ``cell_of``)."""
     from pyogrio_spark.geometry.predicates import PreparedPolygon
-    from pyogrio_spark.index.cover import cover_polygon
+    from pyogrio_spark.index.cover import cover_table
 
     x, y = docs_pd.xmin.to_numpy(), docs_pd.ymin.to_numpy()
     want = []
     for fid, wkb in zip(zones.fid, zones.geometry_wkb):
         hit = PreparedPolygon(wkb).contains_points(x, y, include_boundary=include_boundary)
-        hit &= docs_pd.primary.to_numpy() | docs_pd.cell_id.isin(cover_polygon(wkb, 7)[0]).to_numpy()
+        cells = cover_table([fid], [wkb], 7)["cell_id"].to_numpy()
+        hit &= docs_pd.primary.to_numpy() | docs_pd.cell_id.isin(cells).to_numpy()
         want += [(d, fid) for d in docs_pd.doc_id[hit]]
     return sorted(want)
 
