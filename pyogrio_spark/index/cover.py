@@ -71,13 +71,14 @@ def _classify(box, zbox, edges, per_cell, first_edge):
     ex0, ey0, ex1, ey1 = e.T
     hit = seg_intersects_box(ex0, ey0, ex1, ey1, bx0[pc], by0[pc], bx1[pc], by1[pc])
     edge_hit = np.bincount(pc[hit], minlength=n) > 0
-    inside = np.stack([
-        (cx >= zx0) & (cx <= zx1) & (cy >= zy0) & (cy <= zy1) & point_in_flat_rings(cx[pc], cy[pc], e, pc, n)
-        for cx, cy in ((bx0, by0), (bx1, by0), (bx0, by1), (bx1, by1))
-    ])
-    full = inside.all(axis=0) & ~edge_hit
-    swallows = (bx0 <= zx0) & (bx1 >= zx1) & (by0 <= zy0) & (by1 >= zy1)
-    partial = (edge_hit | inside.any(axis=0) | swallows) & ~full
+    # the box test is closed, so a cell no edge touches lies wholly on
+    # one side of the boundary: one corner's ray cast decides it, and a
+    # cell that swallows its zone's bbox is touched by the zone's edges
+    q = ~edge_hit[pc]
+    inside = (bx0 >= zx0) & (bx0 <= zx1) & (by0 >= zy0) & (by0 <= zy1) & point_in_flat_rings(
+        bx0[pc[q]], by0[pc[q]], e[q], pc[q], n
+    )
+    full, partial = inside & ~edge_hit, edge_hit
     clip = partial[pc] & (np.maximum(ex0, ex1) >= (bx0 - pad_x)[pc])
     return full, partial, np.bincount(pc[clip], minlength=n), e[clip]
 
@@ -89,10 +90,9 @@ def cover_table(keys, wkbs, res: int, zone_key: str = "fid", geom_col: str = "ge
     ``keys``/``wkbs`` are the zone key and polygon columns (Arrow arrays
     or anything ``pa.array`` takes); a null polygon raises ValueError.
 
-    A cell is full when its four corners are inside the zone
-    (``PreparedPolygon.contains_points``) and no edge touches it
-    (``seg_intersects_box``); partial when an edge touches it, a corner
-    is inside, or it swallows the zone's bbox; dropped otherwise. A
+    A cell is partial when an edge touches it (``seg_intersects_box``,
+    closed); otherwise it is full when a corner is inside the zone
+    (``PreparedPolygon.contains_points``) and dropped when not. A
     partial cell keeps the edges whose y-range meets its y-band and whose
     max x reaches its xmin (both padded by ``_CLIP_PAD``): no other edge
     can cross a +x ray from the cell or hold a point of it."""

@@ -92,6 +92,20 @@ def _parquet_row_count(data_dir: str) -> int:
     return total
 
 
+def _row_group_bytes(df: DataFrame) -> int:
+    """Parquet row-group size for writing ``df``: Spark's own read-split
+    size, ``min(maxPartitionBytes, max(openCostInBytes, estimate //
+    defaultParallelism))``, over the optimizer's size estimate of the
+    plan. Every read split of the written table then holds at least one
+    row group, so a small table scans on every core; a big one (or a
+    plan whose estimate overflows) keeps Parquet's 128 MB default."""
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    estimate = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    per_core = estimate // spark.sparkContext.defaultParallelism
+    return min(conf.filesMaxPartitionBytes(), max(conf.filesOpenCostInBytes(), per_core))
+
+
 def write_table(
     df: DataFrame,
     path: str,
@@ -125,7 +139,7 @@ def write_table(
     snap_id = hashlib.sha256(f"{nonce}:{schema_json}:{mode}".encode()).hexdigest()[:16]
     data_dir = os.path.join(path, "data", snap_id)
 
-    writer = df.write.mode("overwrite")
+    writer = df.write.mode("overwrite").option("parquet.block.size", _row_group_bytes(df))
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data_dir)

@@ -12,8 +12,12 @@ different but interior-equivalent predicates).
 
 from __future__ import annotations
 
+import math
+import os
+
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -116,53 +120,33 @@ def _docs_geo(spark: SparkSession, sf: str) -> DataFrame:
     return docs
 
 
-# scan-split memo: one .rdd.getNumPartitions() planning round trip per
-# (session, path), not per query invocation
-_SCAN_PARTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def _read_spread(spark: SparkSession, path: str, key: str = "doc_id") -> DataFrame:
     """Scale-adaptive scan spread for the documents table ("input skew:
     one huge unsplittable file ... repartition immediately after the
     read").
 
-    The test corpora are written as a single parquet row group, which
-    Spark cannot split below one task — so the whole pre-exchange map
-    side of a query (the WKB encode, envelope decode and cell index of
-    ``_docs_geo`` and span synthesis) would run on ONE core no
-    matter how many the session has. Spread the scan to the session's
-    default parallelism when (and only when) the scan yields fewer
-    splits; a production multi-file table already scans with >= cores
-    splits and passes through untouched, so nothing is shuffled at
-    100 TB.
+    The test corpora are written as a single parquet row group. Spark
+    may cut the file into several byte-range splits, but only the split
+    holding the row group's midpoint reads rows, so the whole
+    pre-exchange map side of a query (the WKB encode, envelope decode
+    and cell index of ``_docs_geo`` and span synthesis) would run on ONE
+    core. The spread is therefore decided from the row-group count in
+    the parquet footers, not from the split count: repartition when the
+    scan has fewer row groups than the spread target. A production
+    multi-file table already has >= cores row groups and passes through
+    untouched, so nothing is shuffled at 100 TB.
 
     The spread target is size-aware (~256 KB of encoded parquet per
     task, capped at the session parallelism): at the smoke scales a
     full-cores spread of a 1 MB table would turn every downstream stage
     into near-empty tasks."""
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(r, f) for r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet")
+    ]
+    size = sum(os.path.getsize(f) for f in files)
+    n = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
+    target = max(2, min(spark.sparkContext.defaultParallelism, math.ceil(size / (256 * 1024))))
     df = spark.read.parquet(path)
-    sc = spark.sparkContext
-    memo = _SCAN_PARTS.get(spark)
-    if memo is None:
-        memo = _SCAN_PARTS.setdefault(spark, {})
-    got = memo.get(path)
-    if got is None:
-        import math
-        import os as _os
-
-        if _os.path.isfile(path):
-            size = _os.path.getsize(path)
-        else:
-            size = sum(
-                _os.path.getsize(_os.path.join(r, f))
-                for r, _d, fs in _os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            )
-        target = max(2, min(sc.defaultParallelism, math.ceil(size / (256 * 1024))))
-        got = (df.rdd.getNumPartitions(), target)
-        memo[path] = got
-    n, target = got
     # hash by the row key rather than round-robin: the key is unique so
     # the spread is just as even, there is no sort-before-repartition,
     # and a downstream doc-keyed window (spans_strip_media's per-doc

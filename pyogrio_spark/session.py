@@ -14,6 +14,7 @@ import os
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_JAVA_OPTS = "-XX:+UseParallelGC -XX:GCTimeRatio=19"
 
 
 def get_spark(
@@ -49,15 +50,27 @@ def get_spark(
         # 20-30% of suite wall on a 32-thread local driver (measured
         # 102.7-117.1 s -> 81.7 s for the full sf1.0 bench); batch
         # executors have no latency SLO, so the parallel collector is
-        # the right default on a cluster too. Override via env.
+        # the right default on a cluster too. GCTimeRatio=19 sets a 5%
+        # GC-time goal in place of ParallelGC's 1%: once a small table
+        # scans on every core, four Parquet writers allocate at 1.7x
+        # the rate of one, and to meet the 1% goal the JVM grew eden
+        # from 451 to 619 MB and the 20k-doc PIP join's peak RSS from
+        # 877-1078 to 1278-1321 MB (+29%). With the 5% goal it read
+        # 888-956 MB, for about 0.01 s more GC per op. Override via env.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),
+            os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", _JAVA_OPTS),
         )
         .config(
             "spark.executor.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_EXECUTOR_JAVA_OPTS", "-XX:+UseParallelGC"),
+            os.environ.get("SPARK_GRAFT_EXECUTOR_JAVA_OPTS", _JAVA_OPTS),
         )
+        # Spark packs files into read splits of max(openCostInBytes,
+        # bytes / cores) and charges each file openCostInBytes; at the
+        # 4 MB default a sub-MB table is one split however many row
+        # groups it has. 64 KiB lets it split per row group, and
+        # io.writer.write_table sizes row groups by the same formula.
+        .config("spark.sql.files.openCostInBytes", str(64 << 10))
         # Python workers import the package from its source root, so a
         # mapInPandas stage works without the caller setting PYTHONPATH
         # (Spark merges this with the workers' own PYTHONPATH). Not

@@ -35,6 +35,29 @@ def test_read_committed_runs_no_spark_job(spark, tmp_path):
     assert df.dtypes == [("id", "bigint"), ("v", "bigint")] and df.count() == 100
 
 
+def test_committed_small_table_scans_on_every_core(spark, tmp_path):
+    """A one-file table far below Spark's default 4 MB split floor is
+    written in row groups of Spark's read-split size, so read_committed
+    gives every core a non-empty split with no exchange."""
+    path = str(tmp_path / "t")
+    docs = spark.createDataFrame(make_docs(20_000), schema=DOCS_SPARK_SCHEMA).coalesce(1)
+    write_table(docs, path, mode="overwrite")
+    back = read_committed(spark, path)
+    sizes = back.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    assert len(sizes) >= spark.sparkContext.defaultParallelism
+    assert sum(r["count"] for r in sizes) == 20_000
+
+
+def test_row_group_bytes_caps_big_plan_at_max_partition_bytes(spark):
+    """A plan estimated above parallelism x 128 MiB keeps the largest
+    split size as its row-group size; only the plan is planned."""
+    from pyogrio_spark.io.writer import _row_group_bytes
+
+    big = spark.range(1 << 40)  # 8 TiB by the optimizer's estimate
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    assert _row_group_bytes(big) == max_bytes == 128 << 20
+
+
 def test_read_committed_column_added_by_append_reads_null(spark, tmp_path):
     path = str(tmp_path / "t")
     write_table(spark.range(3), path, mode="append")

@@ -40,3 +40,20 @@ def test_read_spread_splits_single_row_group_scan(spark):
     ))
     assert df.rdd.getNumPartitions() == expect
     assert expect >= 2
+
+
+def test_read_spread_decides_from_footer_row_groups(spark):
+    """sf0.1's documents file (594 KB, one row group) scans as several
+    byte-range splits under the session's 64 KiB split floor, but only
+    one of them holds rows; _read_spread counts row groups, not splits,
+    so every task of its spread gets rows."""
+    import math
+    import os
+
+    from pyogrio_spark.queries import _read_spread
+
+    path = "/root/testdata/sf0.1/documents.parquet"
+    expect = min(spark.sparkContext.defaultParallelism, math.ceil(os.path.getsize(path) / (256 * 1024)))
+    df = _read_spread(spark, path)
+    nonempty = df.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert nonempty == expect >= 2

@@ -1,6 +1,7 @@
 """get_spark defaults: a session works on this host with no hand-set
-environment — master sized to the CPUs this process may run on, and
-Python workers that can import the package."""
+environment — master sized to the CPUs this process may run on, Python
+workers that can import the package, the JVM's GC-time goal and the
+64 KiB file split floor."""
 
 import os
 import subprocess
@@ -26,6 +27,9 @@ _SCRIPT = textwrap.dedent(
                 yield pdf
 
         print("ROWS", spark.range(10).mapInPandas(probe, schema="id long").count())
+        jvm_args = list(spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+        assert "-XX:GCTimeRatio=19" in jvm_args, jvm_args
+        assert spark._jsparkSession.sessionState().conf().filesOpenCostInBytes() == 64 << 10
     finally:
         spark.stop()
     """
@@ -33,7 +37,8 @@ _SCRIPT = textwrap.dedent(
 
 
 def test_default_session_python_workers_import_package(tmp_path):
-    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS")}
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_JAVA_OPTS")}
     script = tmp_path / "drive.py"
     script.write_text(_SCRIPT)
     proc = subprocess.run(
