@@ -14,31 +14,11 @@ Arrow stream straight to the consumer without per-feature conversion.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 
 from pyogrio_spark.geometry import wkb as W
-
-
-def arrow_map_column(df: DataFrame, col: str, batch_fn: Callable) -> DataFrame:
-    """Rewrite ``col`` via ``batch_fn(pa.Array) -> pa.Array`` inside
-    mapInArrow; all other columns stream through zero-copy. The output
-    schema equals the input schema (the transform must be type-stable).
-    """
-    import pyarrow as pa
-
-    idx = df.columns.index(col)
-    names = df.columns
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for rb in batches:
-            new = batch_fn(rb.column(idx))
-            yield pa.RecordBatch.from_arrays(
-                [new if i == idx else rb.column(i) for i in range(rb.num_columns)], names=names
-            )
-
-    return df.mapInArrow(run, schema=df.schema)
 
 
 def normalize_geometry_arrow(
@@ -52,6 +32,7 @@ def normalize_geometry_arrow(
     (binary_length == 21) and returned as the SAME buffer — the stage
     then costs a length scan, nothing else, and spans/attributes never
     leave Arrow. Only batches containing non-point rows pay the decode.
+    ``read_table(force_2d=True)`` runs this same stage.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -87,4 +68,13 @@ def normalize_geometry_arrow(
                 out.append(None if g is None else W.encode_geom(g))
         return pa.array(out, type=pa.binary())
 
-    return arrow_map_column(df, geom_col, fix)
+    idx = df.columns.index(geom_col)
+
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        # every other column streams through as its own Arrow buffers
+        for rb in batches:
+            cols = rb.columns
+            cols[idx] = fix(cols[idx])
+            yield pa.RecordBatch.from_arrays(cols, names=rb.schema.names)
+
+    return df.mapInArrow(run, schema=df.schema)

@@ -119,13 +119,18 @@ def open_table(
     Zip-archive variants (.shp.zip/.shz/.gpkg.zip/.zip) extract to a
     cached temp dir first.
 
-    ``distributed=True`` routes to the byte-range-partitioned scan of
-    each format (shapefile .shx offsets, GeoPackage pk ranges,
-    FlatGeobuf R-tree leaves; GeoJSONSeq and OSM are always
-    distributed) — the multi-GB path; requires the file to be
-    executor-visible. Plain GeoJSON FeatureCollection has no
-    distributed variant (single JSON document; GeoJSONSeq is the
-    declared scale layout) and raises."""
+    Shapefile, GeoPackage and FlatGeobuf each have one chunk decoder
+    (shapefile .shx record ranges, GeoPackage pk ranges, FlatGeobuf
+    R-tree leaves); ``distributed`` chooses where it runs, not which
+    decoder: one Spark task per chunk (the file must be
+    executor-visible), or the driver (the default; needed for archives
+    extracted on the driver). Both give the same schema and rows.
+    GeoJSONSeq with ``distributed=True`` splits by line and returns the
+    raw ``properties_json`` column, so it takes no read_table filters and
+    raises ``NoDistributedScan`` when given any. OSM is always
+    distributed. Plain GeoJSON FeatureCollection has no distributed
+    variant (single JSON document; GeoJSONSeq is the declared scale
+    layout) and raises ``NoDistributedScan``."""
     if isinstance(path, (str, os.PathLike)):
         # URI grammar first (file:// / zip://...!member / remote
         # schemes), then existence: a missing path must surface the
@@ -147,37 +152,26 @@ def open_table(
         elif isinstance(path, (str, os.PathLike)):
             read_table_kwargs["layer_name"] = os.path.basename(str(path)).split(".", 1)[0]
     if fmt == "shapefile":
-        from pyogrio_spark.io.shapefile import read_shapefile, read_shapefile_distributed
+        from pyogrio_spark.io.shapefile import read_shapefile
 
-        fn = read_shapefile_distributed if distributed else read_shapefile
-        return fn(spark, str(path), **read_table_kwargs)
+        return read_shapefile(spark, str(path), distributed=distributed, **read_table_kwargs)
     if fmt == "geopackage":
-        from pyogrio_spark.io.geopackage import read_geopackage, read_geopackage_distributed
+        from pyogrio_spark.io.geopackage import read_geopackage
 
-        fn = read_geopackage_distributed if distributed else read_geopackage
-        return fn(spark, str(path), layer=layer, **read_table_kwargs)
+        return read_geopackage(spark, str(path), layer=layer, distributed=distributed, **read_table_kwargs)
+    if fmt == "flatgeobuf":
+        from pyogrio_spark.io.flatgeobuf import read_flatgeobuf
+
+        return read_flatgeobuf(spark, str(path), distributed=distributed, **read_table_kwargs)
     if fmt == "geojson":
-        low = str(path).lower()
-        if low.endswith((".geojsonl", ".geojsons")):
+        if distributed:
+            _geojson_distributed_check(str(path), read_table_kwargs)
             from pyogrio_spark.io.geojson import read_geojson_seq_distributed
 
-            if distributed:
-                return read_geojson_seq_distributed(spark, str(path))
-        elif distributed:
-            from pyogrio_spark.errors import NoDistributedScan
-
-            raise NoDistributedScan(
-                "GeoJSON FeatureCollection has no distributed scan (one JSON "
-                "document); convert to GeoJSONSeq (.geojsonl) for the scale path"
-            )
+            return read_geojson_seq_distributed(spark, str(path))
         from pyogrio_spark.io.geojson import read_geojson
 
         return read_geojson(spark, str(path), **read_table_kwargs)
-    if fmt == "flatgeobuf":
-        from pyogrio_spark.io.flatgeobuf import read_flatgeobuf, read_flatgeobuf_distributed
-
-        fn = read_flatgeobuf_distributed if distributed else read_flatgeobuf
-        return fn(spark, str(path), **read_table_kwargs)
     if fmt == "osm":
         from pyogrio_spark.io.osm_pbf import read_osm
 
@@ -185,6 +179,32 @@ def open_table(
     from pyogrio_spark.io.reader import read_table
 
     return read_table(spark, path, **read_table_kwargs)
+
+
+def _geojson_distributed_check(path: str, read_table_kwargs: dict) -> None:
+    """Raise ``NoDistributedScan`` unless the line-split GeoJSONSeq scan
+    can serve the call: a FeatureCollection is one JSON document, and the
+    scan's raw ``properties_json`` frame takes no read_table argument."""
+    import inspect
+
+    from pyogrio_spark.errors import NoDistributedScan
+    from pyogrio_spark.io.reader import read_table
+
+    if not path.lower().endswith((".geojsonl", ".geojsons")):
+        raise NoDistributedScan(
+            "GeoJSON FeatureCollection has no distributed scan (one JSON "
+            "document); convert to GeoJSONSeq (.geojsonl) for the scale path"
+        )
+    params = inspect.signature(read_table).parameters
+    given = []
+    for k, v in sorted(read_table_kwargs.items()):
+        default = params[k].default if k in params else object()
+        if not (v is default or (type(v) is type(default) and v == default)):
+            given.append(k)
+    if given:
+        raise NoDistributedScan(
+            f"the distributed GeoJSONSeq scan returns raw properties_json and would ignore {', '.join(given)}"
+        )
 
 
 def _check_exists(path: str) -> None:
@@ -295,19 +315,21 @@ def convert_dataset(
     (columns/where/bbox/mask/fids/skip/max) with format codecs.
 
     ``distributed=True`` keeps BOTH halves on executors where the
-    formats allow it: byte-range-partitioned scans (shapefile .shx,
-    GPKG pk ranges, FGB R-tree leaves, GeoJSONSeq lines) into
-    distributed single-file sinks (FGB / shapefile part-encode +
-    driver byte-stitch, GeoJSONSeq part files) — the multi-GB
-    conversion never materializes the dataset on the driver. A
-    FlatGeobuf, shapefile or GeoPackage source into a shapefile or
-    unindexed FlatGeobuf sink is ONE Spark job with one task per scan
-    chunk and no shuffle: each task decodes its chunk, applies the
-    exact bbox/mask refine (without ``sql=``), the ``where`` filter and
-    the projection, and encodes its part file. Formats
-    without a distributed half (GeoJSON FeatureCollection, GPKG
-    single-writer SQLite sink) fall back to the driver-side codec with
-    a toPandas boundary, same as the reference's single-process write.
+    formats allow it: the format's one chunk decoder runs one task per
+    chunk (shapefile .shx ranges, GPKG pk ranges, FGB R-tree leaves;
+    ``distributed`` chooses where that decoder runs, not which one),
+    feeding distributed single-file sinks (FGB / shapefile part-encode +
+    driver byte-stitch) — the multi-GB conversion never materializes
+    the dataset on the driver. A FlatGeobuf, shapefile or GeoPackage
+    source into a shapefile or unindexed FlatGeobuf sink is ONE Spark
+    job with one task per scan chunk and no shuffle: each task decodes
+    its chunk, applies the exact bbox/mask refine (without ``sql=``),
+    the ``where`` filter and the projection, and encodes its part file.
+    A source whose distributed scan cannot serve the call (GeoJSON
+    FeatureCollection, or GeoJSONSeq given read_table filters) is read
+    on the driver instead; sinks without a distributed half (GeoJSON,
+    GPKG single-writer SQLite) use the driver-side codec with a toPandas
+    boundary, same as the reference's single-process write.
 
     ``crs=None`` carries the source CRS through (the ogr2ogr default);
     pass a crs to override.

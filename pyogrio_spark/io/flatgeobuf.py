@@ -737,8 +737,20 @@ def _crs_from_header(buf, header: Table) -> str | None:
     return None
 
 
-_NUMPY_OF_SPARK = {"bigint": "int64", "double": "float64", "boolean": "bool",
-                   "string": "object", "binary": "object"}
+def _read_header(path: str):
+    """Magic check and Header flatbuffer -> (header Table, its buffer,
+    column spec, byte offset of the first feature past any index)."""
+    with open(path, "rb") as f:
+        head = f.read(12)
+        if head[:3] != b"fgb" or head[3:4] != b"\x03" or head[4:7] != b"fgb":
+            raise ValueError(f"{path}: not a FlatGeobuf file (bad magic)")
+        (hsize,) = struct.unpack_from("<I", head, 8)
+        hdr_buf = head[8:] + f.read(hsize)
+    header = Table.root(hdr_buf, 4)
+    spec = [(c.string(0), c.scalar(1, "<B", 0)) for c in header.table_vector(7)]
+    count, node_size = header.scalar(8, "<Q", 0), header.scalar(9, "<H", 16)
+    index_size = packed_rtree_size(count, node_size) if node_size > 0 and count > 0 else 0
+    return header, hdr_buf, spec, 12 + hsize + index_size
 
 
 def flatgeobuf_info(path: str) -> dict:
@@ -746,24 +758,17 @@ def flatgeobuf_info(path: str) -> dict:
     type, column spec, features_count, crs) — no feature reads; the
     features_count/envelope fields exist in the format precisely so
     metadata queries stay O(1)."""
-    with open(path, "rb") as f:
-        head = f.read(12)
-        if head[:3] != b"fgb" or head[3] != 3 or head[4:7] != b"fgb":
-            raise ValueError(f"{path}: not a FlatGeobuf file (bad magic)")
-        (hsize,) = struct.unpack_from("<I", head, 8)
-        f.seek(8)
-        hdr_buf = f.read(4 + hsize)
-    header = Table.root(hdr_buf, 4)
+    from pyogrio_spark.io.reader import NUMPY_DTYPE
+
+    header, hdr_buf, spec, _ = _read_header(path)
     envelope = header.scalar_vector(1, "d")
-    layer_code = header.scalar(2, "<B", 0)
     has_z = header.scalar(3, "<B", 0)
-    spec = [(c.string(0), c.scalar(1, "<B", 0)) for c in header.table_vector(7)]
-    gtype = GEOM_CODE_TO_NAME.get(layer_code, "Unknown")
+    gtype = GEOM_CODE_TO_NAME.get(header.scalar(2, "<B", 0), "Unknown")
     return {
         "layer_name": header.string(0) or os.path.splitext(os.path.basename(path))[0],
         "features": header.scalar(8, "<Q", 0),
         "fields": [s[0] for s in spec],
-        "dtypes": [_NUMPY_OF_SPARK[_spark_type(ct)] for _, ct in spec],
+        "dtypes": [NUMPY_DTYPE[_spark_type(ct)] for _, ct in spec],
         "column_spec": spec,
         "total_bounds": tuple(envelope) if envelope else None,
         "geometry_type": gtype + (" Z" if has_z and gtype != "Unknown" else ""),
@@ -773,10 +778,10 @@ def flatgeobuf_info(path: str) -> dict:
     }
 
 
-def _decode_frames(buf: bytes, off: int, spec, layer_code: int) -> tuple[list, list[dict]]:
-    """Size-prefixed feature frames from ``off`` to the end of ``buf`` ->
-    (WKB per feature, property dict per feature)."""
-    geoms, prop_rows = [], []
+def _decode_frames(buf: bytes, spec, layer_code: int) -> tuple[list, list[dict]]:
+    """Size-prefixed feature frames filling ``buf`` -> (WKB per feature,
+    property dict per feature)."""
+    geoms, prop_rows, off = [], [], 0
     while off + 4 <= len(buf):
         (fsize,) = struct.unpack_from("<I", buf, off)
         feat = Table.root(buf, off + 4)
@@ -788,65 +793,8 @@ def _decode_frames(buf: bytes, off: int, spec, layer_code: int) -> tuple[list, l
     return geoms, prop_rows
 
 
-def read_flatgeobuf_pdf(path: str) -> tuple[pd.DataFrame, dict]:
-    """Parse a FlatGeobuf file into (pandas frame with fid/attrs/
-    geometry_wkb, info dict mirroring read_info)."""
-    with open(path, "rb") as f:
-        data = f.read()
-    if data[:3] != b"fgb" or data[3] != 3 or data[4:7] != b"fgb":
-        raise ValueError(f"{path}: not a FlatGeobuf file (bad magic)")
-    off = 8
-    (hsize,) = struct.unpack_from("<I", data, off)
-    header = Table.root(data, off + 4)
-    off += 4 + hsize
-
-    layer_name = header.string(0) or os.path.splitext(os.path.basename(path))[0]
-    envelope = header.scalar_vector(1, "d")
-    layer_code = header.scalar(2, "<B", 0)
-    features_count = header.scalar(8, "<Q", 0)
-    index_node_size = header.scalar(9, "<H", 16)
-    spec = [(c.string(0), c.scalar(1, "<B", 0)) for c in header.table_vector(7)]
-    crs = _crs_from_header(data, header)
-
-    if index_node_size > 0 and features_count > 0:
-        off += packed_rtree_size(features_count, index_node_size)
-
-    geoms, prop_rows = _decode_frames(data, off, spec, layer_code)
-    pdf = pd.DataFrame({"fid": np.arange(len(geoms), dtype=np.int64)})
-    for name, ctype in spec:
-        vals = [r.get(name) for r in prop_rows]
-        if ctype in (COL_LONG, COL_INT, COL_SHORT, COL_BYTE, COL_UBYTE, COL_USHORT,
-                     COL_UINT, COL_ULONG) and all(v is not None for v in vals):
-            pdf[name] = np.array(vals, dtype=np.int64)
-        elif ctype in (COL_DOUBLE, COL_FLOAT):
-            pdf[name] = np.array([np.nan if v is None else v for v in vals], dtype=np.float64)
-        elif ctype == COL_BOOL and all(v is not None for v in vals):
-            pdf[name] = np.array(vals, dtype=bool)
-        else:
-            pdf[name] = vals
-    pdf["geometry_wkb"] = geoms
-
-    seen = {W.geom_type_name(b) for b in geoms if b is not None}
-    gtype = GEOM_CODE_TO_NAME.get(layer_code, "Unknown")
-    if gtype == "Unknown" and len(seen) == 1:
-        gtype = next(iter(seen))
-    info = {
-        "layer_name": layer_name,
-        "features": len(geoms),
-        "fields": [s[0] for s in spec],
-        "dtypes": [str(pdf[s[0]].dtype) for s in spec],
-        "total_bounds": tuple(envelope) if envelope else None,
-        "geometry_type": gtype,
-        "crs": crs,
-        "encoding": "UTF-8",
-        "column_spec": spec,
-    }
-    return pdf, info
-
-
 def _spark_type(ctype: int) -> str:
-    """FGB ColumnType -> Spark SQL type (shared by the driver-side and
-    distributed scans, so both produce the same schema for one file)."""
+    """FGB ColumnType -> Spark SQL type."""
     if ctype in (COL_BYTE, COL_UBYTE, COL_SHORT, COL_USHORT, COL_INT,
                  COL_UINT, COL_LONG, COL_ULONG):
         return "bigint"
@@ -859,51 +807,42 @@ def _spark_type(ctype: int) -> str:
     return "string"
 
 
-def read_flatgeobuf(spark, path: str, **read_table_kwargs):
-    """FlatGeobuf -> engine DataFrame (fid, attributes, geometry_wkb),
-    composable with every read_table filter (where/bbox/mask/columns...).
-    Driver-side parse, like the other interchange format drivers —
-    corpus-scale data lives in parquet/committed tables.
+def _decoder(path: str, layer_code: int, spec):
+    """The one FlatGeobuf decoder: (Spark fields, ``decode``), where
+    ``decode((byte_lo, byte_hi, first fid))`` reads only that byte range
+    of feature frames."""
+    from pyogrio_spark.io.reader import chunk_frame
 
-    The Spark schema comes from the file's COLUMN SPEC, not pandas
-    dtype sniffing — a binary attribute (object dtype of bytes) or a
-    nullable boolean would otherwise fall into the string branch and
-    fail createDataFrame (round-3 ADVICE)."""
-    from pyogrio_spark.io.reader import read_table
+    fields = [(name, _spark_type(ct)) for name, ct in spec]
 
-    pdf, info = read_flatgeobuf_pdf(path)
-    spec = info["column_spec"]
-    out = _spark_frame(pdf["fid"].to_numpy(dtype=np.int64), {name: list(pdf[name]) for name, _ in spec},
-                       list(pdf["geometry_wkb"]), spec)
-    df = spark.createDataFrame(out, schema=_spark_schema(spec))
-    return read_table(spark, df, **read_table_kwargs)
+    def decode(chunk) -> pd.DataFrame:
+        byte_lo, byte_hi, fid_lo = chunk
+        with open(path, "rb") as f:
+            f.seek(byte_lo)
+            buf = f.read(byte_hi - byte_lo)
+        geoms, prop_rows = _decode_frames(buf, spec, layer_code)
+        values = [[r.get(name) for r in prop_rows] for name, _ in spec]
+        return chunk_frame(np.arange(fid_lo, fid_lo + len(geoms)), fields, values, geoms)
 
-
-def _spark_schema(spec) -> str:
-    return ", ".join(
-        ["`fid` bigint"]
-        + [f"`{name}` {_spark_type(ct)}" for name, ct in spec]
-        + ["`geometry_wkb` binary"]
-    )
+    return fields, decode
 
 
-def _spark_frame(fids, cols: dict[str, list], geoms: list, spec) -> pd.DataFrame:
-    """Decoded columns typed for ``_spark_schema``: nullable Int64 and
-    boolean, float64 with NaN for nulls, objects for string/binary."""
-    out = pd.DataFrame({"fid": fids})
-    for name, ct in spec:
-        t = _spark_type(ct)
-        vals = cols[name]
-        if t == "bigint":
-            out[name] = pd.array(vals, dtype="Int64")
-        elif t == "double":
-            out[name] = pd.array([np.nan if v is None else v for v in vals], dtype="float64")
-        elif t == "boolean":
-            out[name] = pd.array(vals, dtype="boolean")
-        else:
-            out[name] = vals
-    out["geometry_wkb"] = geoms
-    return out
+def read_flatgeobuf_pdf(path: str) -> tuple[pd.DataFrame, dict]:
+    """The whole file through the one decoder -> (pandas frame with
+    fid/attrs/geometry_wkb in numpy dtypes, info dict mirroring
+    read_info)."""
+    from pyogrio_spark.io.reader import numpy_dtypes
+
+    header, _, spec, feat0 = _read_header(path)
+    decode = _decoder(path, header.scalar(2, "<B", 0), spec)[1]
+    pdf = numpy_dtypes(decode((feat0, os.path.getsize(path), 0)))
+    info = flatgeobuf_info(path)
+    seen = {W.geom_type_name(b) for b in pdf["geometry_wkb"] if b is not None}
+    if info["geometry_type"] == "Unknown" and len(seen) == 1:
+        info["geometry_type"] = next(iter(seen))
+    info["features"] = len(pdf)
+    info["dtypes"] = [str(pdf[name].dtype) for name, _ in spec]
+    return pdf, info
 
 
 def list_layers(path: str) -> list[list[str]]:
@@ -913,30 +852,15 @@ def list_layers(path: str) -> list[list[str]]:
 
 def _fgb_layout(path: str):
     """(spec, layer_code, feature_section_start, absolute feature
-    offsets) reading only the header and either the R-tree LEAF slice
-    (indexed files: one seek, 40 bytes per feature) or a 4-byte-size
-    seek-walk (index-less files: no payload reads)."""
+    offsets, file size, leaf bboxes or None) reading only the header and
+    either the R-tree LEAF slice (indexed files: one seek, 40 bytes per
+    feature) or a 4-byte-size seek-walk (index-less files: no payload
+    reads)."""
+    header, _, spec, feat0 = _read_header(path)
+    features_count = header.scalar(8, "<Q", 0)
     file_size = os.path.getsize(path)
     with open(path, "rb") as f:
-        head = f.read(12)
-        if head[:3] != b"fgb" or head[3] != 3 or head[4:7] != b"fgb":
-            raise ValueError(f"{path}: not a FlatGeobuf file (bad magic)")
-        (hsize,) = struct.unpack_from("<I", head, 8)
-        f.seek(8)
-        hdr_buf = f.read(4 + hsize)
-        header = Table.root(hdr_buf, 4)
-        layer_code = header.scalar(2, "<B", 0)
-        features_count = header.scalar(8, "<Q", 0)
-        node_size = header.scalar(9, "<H", 16)
-        spec = [(c.string(0), c.scalar(1, "<B", 0)) for c in header.table_vector(7)]
-        index_off = 8 + 4 + hsize
-        index_size = (
-            packed_rtree_size(features_count, node_size)
-            if node_size > 0 and features_count > 0
-            else 0
-        )
-        feat0 = index_off + index_size
-        if index_size:
+        if header.scalar(9, "<H", 16) > 0 and features_count > 0:
             # leaves are the LAST features_count nodes; their offsets are
             # feature-section-relative and ascending (features are stored
             # in the same Hilbert order as the leaf level)
@@ -956,23 +880,22 @@ def _fgb_layout(path: str):
                 pos += 4 + fsize
             offsets = np.array(offsets_l, dtype=np.int64)
             leaf_boxes = None
-    return spec, layer_code, feat0, offsets, file_size, leaf_boxes
+    return spec, header.scalar(2, "<B", 0), feat0, offsets, file_size, leaf_boxes
 
 
-def read_flatgeobuf_distributed(
-    spark, path: str, chunk_features: int = 50_000, **read_table_kwargs
-):
-    """Distributed FlatGeobuf scan: per-feature byte offsets come from
-    the packed R-tree's leaf nodes (or a header-only seek-walk for
-    index-less files) on the driver; executors byte-range-read and
-    decode ONLY their own contiguous chunk of feature frames, one task
-    per chunk and no shuffle (``reader.scan_chunks``, shared with the
-    distributed shapefile and GeoPackage scans). Without ``sql=``, the
-    exact bbox/mask refine runs in the same Python pass as the decode.
-    The path must be executor-visible."""
-    from pyogrio_spark.io.reader import scan_chunks, storage_prune_box
+def read_flatgeobuf(spark, path: str, distributed: bool = False, chunk_features: int = 50_000,
+                    **read_table_kwargs):
+    """FlatGeobuf -> engine DataFrame (fid, attributes, geometry_wkb),
+    composable with every read_table filter. Per-feature byte offsets
+    come from the packed R-tree's leaf nodes (or a header-only seek-walk
+    for index-less files) on the driver and split the feature section
+    into contiguous chunks of ``chunk_features``; ``distributed`` places
+    the decode (``reader.scan_chunks``): one Spark task per chunk, or the
+    driver (needed when executors cannot see the path). The Spark schema
+    comes from the file's column spec."""
+    from pyogrio_spark.io.reader import chunk_schema, id_runs, scan_chunks, storage_prune_box
 
-    spec, layer_code, _feat0, offsets, file_size, leaf_boxes = _fgb_layout(path)
+    spec, layer_code, _, offsets, file_size, leaf_boxes = _fgb_layout(path)
     n = len(offsets)
     # bbox pushdown to the STORAGE layer: when the file carries the
     # packed R-tree, prune whole byte ranges on the driver using the
@@ -982,34 +905,20 @@ def read_flatgeobuf_distributed(
     # the scan reads only those ranges — the reference's reason for the
     # index (bounds-assisted reads, core.py:184-187).
     bbox = storage_prune_box(read_table_kwargs)
+    idx = np.arange(n)
     if bbox is not None and leaf_boxes is not None:
         qx0, qy0, qx1, qy1 = bbox
-        keep = (
+        idx = np.flatnonzero(
             (leaf_boxes[:, 0] <= qx1)
             & (leaf_boxes[:, 2] >= qx0)
             & (leaf_boxes[:, 1] <= qy1)
             & (leaf_boxes[:, 3] >= qy0)
         )
-        idx = np.flatnonzero(keep)
-        runs = np.split(idx, np.flatnonzero(np.diff(idx) > 1) + 1) if len(idx) else []
-    else:
-        runs = [np.arange(n, dtype=np.int64)]
-    chunks = []  # (byte_lo, byte_hi, fid_lo)
-    for run in runs:
-        for lo_i in range(0, len(run), int(chunk_features)):
-            seg = run[lo_i : lo_i + int(chunk_features)]
-            lo, hi = int(seg[0]), int(seg[-1]) + 1
-            chunks.append((int(offsets[lo]), int(offsets[hi]) if hi < n else file_size, lo))
-    # no chunks (zero-feature file, or bbox pruned everything): the scan
-    # returns the empty frame with the file's schema
-
-    def decode(chunk):
-        byte_lo, byte_hi, fid_lo = chunk
-        with open(path, "rb") as f:
-            f.seek(byte_lo)
-            buf = f.read(byte_hi - byte_lo)
-        geoms, prop_rows = _decode_frames(buf, 0, spec, layer_code)
-        fids = np.arange(fid_lo, fid_lo + len(geoms), dtype=np.int64)
-        return _spark_frame(fids, {name: [r.get(name) for r in prop_rows] for name, _ in spec}, geoms, spec)
-
-    return scan_chunks(spark, path, chunks, decode, _spark_schema(spec), **read_table_kwargs)
+    # (byte_lo, byte_hi, fid_lo); none for a zero-feature file or a bbox that pruned everything
+    chunks = [
+        (int(offsets[seg[0]]), int(offsets[seg[-1] + 1]) if seg[-1] + 1 < n else file_size, int(seg[0]))
+        for seg in id_runs(idx, int(chunk_features))
+    ]
+    fields, decode = _decoder(path, layer_code, spec)
+    return scan_chunks(spark, path, chunks, decode, chunk_schema(fields),
+                       distributed=distributed, **read_table_kwargs)

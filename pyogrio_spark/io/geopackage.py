@@ -9,14 +9,14 @@ which parse to their linear downgrades exactly like the reference's
 scan (list_layers on curve.gpkg reports LineString,
 /root/reference/pyogrio/tests/test_core.py:311-316).
 
-Null typing parity with the reference's raw read
+One decoder reads a half-open primary-key window of a layer; the Spark
+reader splits the layer into such windows (one task each, or all on
+the driver) and ``read_geopackage_pdf`` reads the whole layer as one.
+Spark types come from the column declarations (nullable INTEGER is
+BIGINT). The pandas reader keeps the reference's raw-read null typing
 (/root/reference/pyogrio/tests/test_raw_io.py:968-979): numeric
 columns containing nulls surface as float64 with NaN (float32 stays
 float32); null-free integer columns stay int64.
-
-Scale note: like the shapefile source, parsing happens on the driver —
-GPKG is a dimension-sized interchange format here; bulk fact data is
-parquet. A rowid-range mapInPandas split is the scale path.
 """
 
 from __future__ import annotations
@@ -97,15 +97,71 @@ def _srs_display(con, srs_id) -> str | None:
     return disp or f"EPSG:{srs_id}"
 
 
-def _sqlite_dtype(decl: str) -> str:
-    """GPKG declared type -> the numpy dtype name the engine surfaces."""
+def _spark_type(decl: str) -> str:
+    """GPKG declared column type -> the Spark type of its column."""
     if decl in ("TINYINT", "SMALLINT", "MEDIUMINT", "INT", "INTEGER", "BOOLEAN"):
-        return "int64"
+        return "bigint"
     if decl == "FLOAT":
-        return "float32"
+        return "float"
     if decl in ("REAL", "DOUBLE"):
-        return "float64"
-    return "object"
+        return "double"
+    if decl == "BLOB":
+        return "binary"
+    return "string"
+
+
+def _layer_meta(con, path: str, layer: str | None):
+    """Registry lookup of one feature layer (default: the first) ->
+    (layer, geometry column, geometry type name, srs_id, z flag, primary
+    key, [(attribute, declared type), ...])."""
+    layers = list_layers(path)
+    if not layers:
+        raise ValueError(f"no feature layers in {path}")
+    if layer is None:
+        layer = layers[0][0]
+    row = con.execute(
+        "SELECT column_name, geometry_type_name, srs_id, z FROM gpkg_geometry_columns WHERE table_name = ?",
+        (layer,),
+    ).fetchone()
+    if row is None:
+        raise ValueError(f"{path}: no feature layer {layer!r}")
+    gcol, gtype, srs, zflag = row
+    tinfo = list(con.execute(f'PRAGMA table_info("{layer}")'))
+    pk = next((r[1] for r in tinfo if r[5] == 1), "rowid")
+    attrs = [(r[1], (r[2] or "").upper()) for r in tinfo if r[1] not in (pk, gcol)]
+    return layer, gcol, gtype, srs, zflag, pk, attrs
+
+
+def _pk_range(con, layer: str, pk: str) -> tuple[int, int]:
+    """Half-open primary-key range of the layer's rows ((0, 0) when empty)."""
+    lo, hi = con.execute(f'SELECT min("{pk}"), max("{pk}") FROM "{layer}"').fetchone()
+    return (0, 0) if lo is None else (int(lo), int(hi) + 1)
+
+
+def _decoder(path: str, layer: str, gcol: str, pk: str, attrs):
+    """The one GeoPackage decoder: (Spark fields, ``decode``), where
+    ``decode((pk_lo, pk_hi, first fid))`` opens the file read-only and
+    range-scans that half-open pk window (a rowid B-tree seek, so no
+    task touches pages outside its chunk)."""
+    from pyogrio_spark.io.reader import chunk_frame
+
+    fields = [(c, _spark_type(d)) for c, d in attrs]
+    sel = ", ".join([f'"{pk}"'] + [f'"{c}"' for c, _ in attrs] + [f'"{gcol}"'])
+
+    def decode(chunk) -> pd.DataFrame:
+        pk_lo, pk_hi, _ = chunk
+        con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
+        try:
+            rows = con.execute(
+                f'SELECT {sel} FROM "{layer}" WHERE "{pk}" >= ? AND "{pk}" < ? ORDER BY "{pk}"',
+                (pk_lo, pk_hi),
+            ).fetchall()
+        finally:
+            con.close()
+        cols = [list(c) for c in zip(*rows)] or [[] for _ in range(len(fields) + 2)]
+        return chunk_frame(cols[0], fields, cols[1:-1], [gpkg_blob_to_wkb(b) for b in cols[-1]])
+
+    return fields, decode
 
 
 def geopackage_info(path: str, layer: str | None = None) -> dict:
@@ -115,24 +171,15 @@ def geopackage_info(path: str, layer: str | None = None) -> dict:
     cost profile the reference's GPKG driver capabilities advertise
     (fast_feature_count/fast_total_bounds). Dtypes are DECL-derived, so
     nullable integer columns report int64, not post-pandas float64."""
+    from pyogrio_spark.io.reader import NUMPY_DTYPE
+
     con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
     try:
-        layers = list_layers(path)
-        if not layers:
-            raise ValueError(f"no feature layers in {path}")
-        if layer is None:
-            layer = layers[0][0]
-        gcol, gtype, srs, zflag = con.execute(
-            "SELECT column_name, geometry_type_name, srs_id, z FROM gpkg_geometry_columns WHERE table_name = ?",
-            (layer,),
-        ).fetchone()
+        layer, gcol, gtype, srs, zflag, pk, attrs = _layer_meta(con, path, layer)
         bounds_row = con.execute(
             "SELECT min_x, min_y, max_x, max_y FROM gpkg_contents WHERE table_name = ?",
             (layer,),
         ).fetchone()
-        tinfo = list(con.execute(f'PRAGMA table_info("{layer}")'))
-        pk = next((r[1] for r in tinfo if r[5] == 1), tinfo[0][1])
-        attrs = [(r[1], (r[2] or "").upper()) for r in tinfo if r[1] not in (pk, gcol)]
         (nrec,) = con.execute(f'SELECT COUNT(*) FROM "{layer}"').fetchone()
         crs = _srs_display(con, srs)
         # layer metadata: GDAL surfaces gpkg_contents identifier/
@@ -188,7 +235,7 @@ def geopackage_info(path: str, layer: str | None = None) -> dict:
         "layer_name": layer,
         "features": int(nrec),
         "fields": [n for n, _ in attrs],
-        "dtypes": [_sqlite_dtype(d) for _, d in attrs],
+        "dtypes": [NUMPY_DTYPE[_spark_type(d)] for _, d in attrs],
         "total_bounds": total_bounds,
         "geometry_type": _GPKG_TYPE.get((gtype or "").upper(), gtype)
         + (" Z" if zflag == 1 else ""),
@@ -203,65 +250,33 @@ def geopackage_info(path: str, layer: str | None = None) -> dict:
 
 
 def read_geopackage_pdf(path: str, layer: str | None = None) -> tuple[pd.DataFrame, dict]:
-    """One GPKG feature layer -> (pandas frame with fid/attrs/geometry_wkb,
-    info dict). Defaults to the first (only) feature layer."""
-    con = sqlite3.connect(path)
+    """One GPKG feature layer through the one decoder -> (pandas frame
+    with fid/attrs/geometry_wkb in numpy dtypes, info dict). Defaults to
+    the first feature layer."""
+    from pyogrio_spark.io.reader import numpy_dtypes
+
+    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
     try:
-        layers = list_layers(path)
-        if not layers:
-            raise ValueError(f"no feature layers in {path}")
-        if layer is None:
-            layer = layers[0][0]
-        gcol, gtype, srs = con.execute(
-            "SELECT column_name, geometry_type_name, srs_id FROM gpkg_geometry_columns WHERE table_name = ?",
-            (layer,),
-        ).fetchone()
-        decl = {r[1]: (r[2] or "").upper() for r in con.execute(f'PRAGMA table_info("{layer}")')}
-        cur = con.execute(f'SELECT * FROM "{layer}"')
-        names = [d[0] for d in cur.description]
-        rows = cur.fetchall()
+        layer, gcol, gtype, srs, _, pk, attrs = _layer_meta(con, path, layer)
+        lo, hi = _pk_range(con, layer, pk)
+        crs = _srs_display(con, srs)
     finally:
         con.close()
-
-    data = {n: [r[i] for r in rows] for i, n in enumerate(names)}
-    geoms = [gpkg_blob_to_wkb(b) for b in data.pop(gcol)]
-    fid_col = names[0]  # GPKG primary key (fid) is the first column
-    pdf = pd.DataFrame(data)
-
-    # reference null-typing parity: nullable numerics -> float64 (NaN),
-    # FLOAT stays float32, null-free integers stay int64
-    for c in pdf.columns:
-        if c == fid_col:
-            pdf[c] = pdf[c].astype("int64")
-            continue
-        d = decl.get(c, "")
-        if d in ("TINYINT", "SMALLINT", "MEDIUMINT", "INT", "INTEGER", "BOOLEAN"):
-            pdf[c] = pdf[c].astype("int64") if pdf[c].notna().all() else pdf[c].astype("float64")
-        elif d == "FLOAT":
-            pdf[c] = pdf[c].astype("float32")
-        elif d in ("REAL", "DOUBLE"):
-            pdf[c] = pdf[c].astype("float64")
-    pdf = pdf.rename(columns={fid_col: "fid"})
-    pdf["geometry_wkb"] = geoms
+    pdf = numpy_dtypes(_decoder(path, layer, gcol, pk, attrs)[1]((lo, hi, lo)))
 
     # keep the " Z" suffix: the reference reports e.g. "LineString Z"
     # for 3-D layers (test_core.py:304-310)
-    seen = {W.geom_type_name(g) for g in geoms if g is not None}
+    seen = {W.geom_type_name(g) for g in pdf["geometry_wkb"] if g is not None}
     if len(seen) == 1:
         inferred = next(iter(seen))
-    elif seen <= {"Polygon", "MultiPolygon"}:
+    elif seen and seen <= {"Polygon", "MultiPolygon"}:
         inferred = "MultiPolygon"
     else:
         inferred = _GPKG_TYPE.get((gtype or "").upper(), "Unknown")
-    con2 = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-    try:
-        crs = _srs_display(con2, srs)
-    finally:
-        con2.close()
     info = {
         "layer_name": layer,
         "features": len(pdf),
-        "fields": [c for c in pdf.columns if c not in ("fid", "geometry_wkb")],
+        "fields": [c for c, _ in attrs],
         "geometry_type": inferred,
         "crs": crs,
         "encoding": "UTF-8",
@@ -273,6 +288,8 @@ _DTYPE_TO_GPKG = {
     "int8": "TINYINT", "int16": "SMALLINT", "int32": "MEDIUMINT", "int64": "INTEGER",
     "uint8": "TINYINT", "uint16": "SMALLINT", "uint32": "MEDIUMINT", "uint64": "INTEGER",
     "float32": "FLOAT", "float64": "REAL", "bool": "BOOLEAN", "object": "TEXT",
+    # pandas' nullable dtypes
+    "Int32": "MEDIUMINT", "Int64": "INTEGER", "Float64": "REAL", "boolean": "BOOLEAN",
 }
 
 
@@ -557,62 +574,27 @@ def _append_geopackage(
         con.close()
 
 
-def read_geopackage(spark, path: str, layer: str | None = None, **read_table_kwargs):
-    """GPKG layer -> engine DataFrame, composable with read_table filters."""
-    from pyogrio_spark.io.reader import read_table
-
-    pdf, _ = read_geopackage_pdf(path, layer)
-    fields = []
-    for c in pdf.columns:
-        if c == "geometry_wkb":
-            fields.append(f"`{c}` binary")
-        elif pdf[c].dtype == np.int64:
-            fields.append(f"`{c}` bigint")
-        elif pdf[c].dtype == np.float32:
-            fields.append(f"`{c}` float")
-        elif pdf[c].dtype == np.float64:
-            fields.append(f"`{c}` double")
-        else:
-            fields.append(f"`{c}` string")
-    df = spark.createDataFrame(pdf, schema=", ".join(fields))
-    return read_table(spark, df, **read_table_kwargs)
-
-
-def read_geopackage_distributed(
-    spark, path: str, layer: str | None = None, chunk_rows: int = 100_000, **read_table_kwargs
+def read_geopackage(
+    spark, path: str, layer: str | None = None, distributed: bool = False,
+    chunk_rows: int = 100_000, **read_table_kwargs,
 ):
-    """Distributed GPKG scan: the driver reads only the registry tables
-    and the layer's primary-key range; executors each open the SQLite
-    file read-only and range-scan their own pk window — SQLite's rowid
-    B-tree makes each range seek O(log n), so no task touches pages
-    outside its chunk. Same plan as ``read_shapefile_distributed``
-    (``reader.scan_chunks``: one task per chunk, no shuffle, exact
-    bbox/mask refine in the scan); this is the multi-GB plan the
-    single-node ``read_geopackage`` (fixture-scale interchange)
-    deliberately skips. The path must be executor-visible.
+    """GPKG layer -> engine DataFrame (fid, attributes, geometry_wkb),
+    composable with every read_table filter. The driver reads only the
+    registry tables and the layer's primary-key range and splits it into
+    windows of ``chunk_rows``; ``distributed`` places the decode
+    (``reader.scan_chunks``): one Spark task per window, or the driver
+    (needed when executors cannot see the path). A zero-feature layer
+    gives the empty frame with the declared schema.
 
-    Typing: Spark-schema-first — INTEGER-family columns come back as
-    nullable BIGINT (per-chunk nulls carried via pandas Int64), FLOAT as
-    float, REAL/DOUBLE as double; the pandas reader's null-typing parity
-    conventions (nullable ints -> float64) apply to the single-node
-    interchange path only."""
-    from pyogrio_spark.io.reader import scan_chunks, storage_prune_box
+    Typing comes from the declarations: INTEGER-family columns are
+    nullable BIGINT, FLOAT is float, REAL/DOUBLE double, BLOB binary,
+    anything else string."""
+    from pyogrio_spark.io.reader import chunk_schema, id_runs, scan_chunks, storage_prune_box
 
     con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
     try:
-        layers = list_layers(path)
-        if not layers:
-            raise ValueError(f"no feature layers in {path}")
-        if layer is None:
-            layer = layers[0][0]
-        (gcol,) = con.execute(
-            "SELECT column_name FROM gpkg_geometry_columns WHERE table_name = ?", (layer,)
-        ).fetchone()
-        tinfo = list(con.execute(f'PRAGMA table_info("{layer}")'))
-        pk = next((r[1] for r in tinfo if r[5] == 1), "rowid")
-        decl = {r[1]: (r[2] or "").upper() for r in tinfo}
-        attrs = [r[1] for r in tinfo if r[1] not in (pk, gcol)]
-        lo_hi = con.execute(f'SELECT min("{pk}"), max("{pk}") FROM "{layer}"').fetchone()
+        layer, gcol, _, _, _, pk, attrs = _layer_meta(con, path, layer)
+        lo, hi = _pk_range(con, layer, pk)
         # bbox pushdown to the STORAGE layer: when the file carries the
         # gpkg_rtree_index extension, prune whole pk ranges on the
         # driver from the R-tree (superset of the exact answer — the
@@ -635,71 +617,13 @@ def read_geopackage_distributed(
             )
     finally:
         con.close()
-    if lo_hi[0] is None:
-        raise ValueError(f"{path}:{layer} is empty")
-    lo, hi = int(lo_hi[0]), int(lo_hi[1])
 
     # chunks are half-open pk windows (pk_lo, pk_hi, first fid = pk_lo);
-    # none when the bbox pruned everything
+    # none when the layer is empty or the bbox pruned everything
     if cand_ids is not None:
-        runs = (
-            np.split(cand_ids, np.flatnonzero(np.diff(cand_ids) > 1) + 1)
-            if len(cand_ids)
-            else []
-        )
-        chunks = [
-            (int(seg[0]), int(seg[-1]) + 1, int(seg[0]))
-            for run in runs
-            for seg in (run[i : i + int(chunk_rows)] for i in range(0, len(run), int(chunk_rows)))
-        ]
+        chunks = [(int(seg[0]), int(seg[-1]) + 1, int(seg[0])) for seg in id_runs(cand_ids, int(chunk_rows))]
     else:
-        chunks = [
-            (start, min(start + int(chunk_rows), hi + 1), start)
-            for start in range(lo, hi + 1, int(chunk_rows))
-        ]
-
-    def _spark_type(c: str) -> str:
-        d = decl.get(c, "")
-        if d in ("TINYINT", "SMALLINT", "MEDIUMINT", "INT", "INTEGER", "BOOLEAN"):
-            return "bigint"
-        if d == "FLOAT":
-            return "float"
-        if d in ("REAL", "DOUBLE"):
-            return "double"
-        if d == "BLOB":
-            return "binary"
-        return "string"
-
-    schema = ", ".join(
-        ["`fid` bigint"]
-        + [f"`{c}` {_spark_type(c)}" for c in attrs]
-        + ["`geometry_wkb` binary"]
-    )
-    sel = ", ".join([f'"{pk}"'] + [f'"{c}"' for c in attrs] + [f'"{gcol}"'])
-
-    def decode(chunk):
-        pk_lo, pk_hi, _ = chunk
-        c = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-        try:
-            rows = c.execute(
-                f'SELECT {sel} FROM "{layer}" WHERE "{pk}" >= ? AND "{pk}" < ? ORDER BY "{pk}"',
-                (pk_lo, pk_hi),
-            ).fetchall()
-        finally:
-            c.close()
-        out = pd.DataFrame({"fid": pd.array([r[0] for r in rows], dtype="Int64")})
-        for i, cname in enumerate(attrs, start=1):
-            vals = [r[i] for r in rows]
-            t = _spark_type(cname)
-            if t == "bigint":
-                out[cname] = pd.array(vals, dtype="Int64")
-            elif t in ("float", "double"):
-                out[cname] = pd.array(
-                    [np.nan if v is None else v for v in vals], dtype="float64"
-                )
-            else:
-                out[cname] = vals
-        out["geometry_wkb"] = [gpkg_blob_to_wkb(r[-1]) for r in rows]
-        return out
-
-    return scan_chunks(spark, path, chunks, decode, schema, unit="pk", **read_table_kwargs)
+        chunks = [(start, min(start + int(chunk_rows), hi), start) for start in range(lo, hi, int(chunk_rows))]
+    fields, decode = _decoder(path, layer, gcol, pk, attrs)
+    return scan_chunks(spark, path, chunks, decode, chunk_schema(fields), unit="pk",
+                       distributed=distributed, **read_table_kwargs)

@@ -127,9 +127,6 @@ def read_table(
     if skip_features or max_features is not None:
         df = _apply_range(df, skip_features, max_features, order=sql_order)
 
-    if force_2d and GEOMETRY_COL in df.columns:
-        df = df.withColumn(GEOMETRY_COL, _normalize_2d_udf(on_invalid)(F.col(GEOMETRY_COL)))
-
     if columns is not None:
         # exact-name match, source order, dedup (reference _io.pyx:1741-1763)
         seen: set[str] = set()
@@ -139,6 +136,10 @@ def read_table(
     elif not read_geometry and GEOMETRY_COL in df.columns:
         df = df.drop(GEOMETRY_COL)
 
+    if force_2d and GEOMETRY_COL in df.columns:
+        from pyogrio_spark.functions.arrow_stages import normalize_geometry_arrow
+
+        df = normalize_geometry_arrow(df, GEOMETRY_COL, force_2d=True, on_invalid=on_invalid)
     return df
 
 
@@ -155,21 +156,25 @@ def _check_filters(where=None, bbox=None, mask=None, fids=None, skip_features=0,
 
 
 def scan_chunks(spark: SparkSession, path: str, chunks: list, decode, schema: str,
-                unit: str = "bytes", **read_table_kwargs) -> DataFrame:
-    """Distributed file scan shared by the byte-range readers: one Spark
-    task per entry of ``chunks`` and no shuffle. The chunk table travels
-    in the task closure and ``spark.range(n, numPartitions=n)`` hands
-    each task its index, so the plan is ``Range -> MapInPandas``.
+                unit: str = "bytes", distributed: bool = True, **read_table_kwargs) -> DataFrame:
+    """The one Spark read of a chunked file format. ``chunks`` are tuples
+    whose first three fields are the chunk's range ``lo``, ``hi`` (in
+    ``unit``) and its first fid (or None); the whole tuple goes to
+    ``decode(chunk) -> pandas frame`` in ``schema`` order. A decode error
+    is re-raised as ``FeatureError`` naming the path and the chunk's
+    range and first fid.
 
-    ``chunks`` are tuples whose first three fields are the chunk's range
-    ``lo``, ``hi`` (in ``unit``) and its first fid (or None); the whole
-    tuple goes to ``decode(chunk) -> pandas frame`` in ``schema`` order;
-    no chunks give the empty frame. A decode error is re-raised as ``FeatureError`` naming the path and
-    the chunk's range and first fid.
+    ``distributed`` only places the decode. True: one Spark task per
+    chunk and no shuffle; the chunk table travels in the task closure and
+    ``spark.range(n, numPartitions=n)`` hands each task its index, so the
+    plan is ``Range -> MapInPandas`` (the path must be executor-visible).
+    False: the driver decodes the same chunks and hands the frame to
+    ``createDataFrame`` with the same schema. No chunks give the empty
+    frame either way.
 
-    Without ``sql=``, the exact ``bbox``/``mask`` refine runs in the same
-    Python pass with ``read_table``'s kernels, and ``read_table`` applies
-    the remaining filters. With ``sql=``, ``read_table`` applies
+    Without ``sql=``, the exact ``bbox``/``mask`` refine runs right after
+    each chunk's decode with ``read_table``'s kernels, and ``read_table``
+    applies the remaining filters. With ``sql=``, ``read_table`` applies
     everything, bbox after the statement's result as the reference does."""
     from pyogrio_spark.errors import FeatureError
 
@@ -178,25 +183,81 @@ def scan_chunks(spark: SparkSession, path: str, chunks: list, decode, schema: st
         _check_filters(**read_table_kwargs)
         keep = _refine_fn(read_table_kwargs.pop("bbox", None), read_table_kwargs.pop("mask", None))
 
-    def scan(batches):
-        for batch in batches:
-            for i in batch["id"].tolist():
-                chunk = chunks[i]
-                try:
-                    pdf = decode(chunk)
-                except Exception as exc:  # re-raised with the chunk's location
-                    fid = "" if chunk[2] is None else f" (first fid {chunk[2]})"
-                    raise FeatureError(
-                        f"{path}: cannot decode {unit} [{chunk[0]}, {chunk[1]}){fid}: "
-                        f"{type(exc).__name__}: {exc}"
-                    ) from exc
-                if keep is not None and len(pdf):
-                    pdf = pdf[keep(pdf[GEOMETRY_COL].to_numpy())]
-                yield pdf
+    def decode_one(chunk) -> pd.DataFrame:
+        try:
+            pdf = decode(chunk)
+        except Exception as exc:  # re-raised with the chunk's location
+            fid = "" if chunk[2] is None else f" (first fid {chunk[2]})"
+            raise FeatureError(
+                f"{path}: cannot decode {unit} [{chunk[0]}, {chunk[1]}){fid}: "
+                f"{type(exc).__name__}: {exc}"
+            ) from exc
+        if keep is not None and len(pdf):
+            pdf = pdf[keep(pdf[GEOMETRY_COL].to_numpy())]
+        return pdf
 
-    n = len(chunks)
-    df = spark.range(n, numPartitions=max(n, 1)).mapInPandas(scan, schema=schema)
+    if distributed:
+        def scan(batches):
+            for batch in batches:
+                for i in batch["id"].tolist():
+                    yield decode_one(chunks[i])
+
+        n = len(chunks)
+        df = spark.range(n, numPartitions=max(n, 1)).mapInPandas(scan, schema=schema)
+    else:
+        frames = [decode_one(chunk) for chunk in chunks]
+        df = spark.createDataFrame(pd.concat(frames, ignore_index=True) if frames else [], schema=schema)
     return read_table(spark, df, **read_table_kwargs)
+
+
+# Spark type of a decoded attribute -> the numpy dtype name read_info reports
+NUMPY_DTYPE = {"bigint": "int64", "float": "float32", "double": "float64", "boolean": "bool",
+               "string": "object", "binary": "object"}
+
+
+def chunk_schema(fields: list[tuple[str, str]]) -> str:
+    """DDL of a chunk decoder's frame: ``fid``, the (name, Spark type)
+    attribute ``fields`` in file order, then the geometry."""
+    return ", ".join(["`fid` bigint", *(f"`{n}` {t}" for n, t in fields), f"`{GEOMETRY_COL}` binary"])
+
+
+def chunk_frame(fids, fields: list[tuple[str, str]], values: list[list], geoms: list) -> pd.DataFrame:
+    """Decoded values (None for null) -> the frame ``chunk_schema(fields)``
+    describes: nullable Int64 and boolean, float with NaN, objects for
+    strings and binary."""
+    out = pd.DataFrame({"fid": np.asarray(fids, dtype=np.int64)})
+    for (name, t), vals in zip(fields, values):
+        if t == "bigint":
+            out[name] = pd.array(vals, dtype="Int64")
+        elif t in ("float", "double"):
+            out[name] = np.array([np.nan if v is None else v for v in vals], dtype=NUMPY_DTYPE[t])
+        elif t == "boolean":
+            out[name] = pd.array(vals, dtype="boolean")
+        else:
+            out[name] = vals
+    out[GEOMETRY_COL] = geoms
+    return out
+
+
+def numpy_dtypes(pdf: pd.DataFrame) -> pd.DataFrame:
+    """A decoded frame in the ``*_pdf`` readers' numpy dtypes: a nullable
+    integer column is int64 when it holds no null, else float64 with
+    NaN; a nullable boolean column is bool, else objects with None."""
+    for c in pdf.columns:
+        s = pdf[c]
+        if s.dtype == "Int64":
+            pdf[c] = s.astype("int64" if s.notna().all() else "float64")
+        elif s.dtype == "boolean":
+            pdf[c] = s.astype(bool) if s.notna().all() else [None if v is pd.NA else bool(v) for v in s]
+    return pdf
+
+
+def id_runs(ids: np.ndarray, size: int) -> list[np.ndarray]:
+    """Ascending ids -> their runs of consecutive ids, each cut into
+    pieces of at most ``size``: the chunks of a scan that reads only
+    what a storage index kept."""
+    runs = np.split(ids, np.flatnonzero(np.diff(ids) > 1) + 1) if len(ids) else []
+    return [run[i : i + size] for run in runs for i in range(0, len(run), size)]
 
 
 def storage_prune_box(read_table_kwargs: dict):
@@ -245,29 +306,6 @@ def _mask_keep(prep: PreparedPolygon, vals) -> np.ndarray:
     # ray-cast as the uniform fast path; lines/polygons are refined
     # with whole-batch numpy ops, no per-row Python
     return batch_intersects(prep, vals)
-
-
-def _normalize_2d_udf(on_invalid: str):
-    """Geometry-column normalizer for force_2d: 2-D points (21-byte WKB)
-    pass through untouched; everything else re-encodes without Z, with
-    curve linearization for free (parse linearizes). Invalid rows follow
-    the on_invalid policy (fix closes unclosed rings)."""
-
-    @pandas_udf("binary")
-    def _norm(wkb: pd.Series) -> pd.Series:
-        vals = wkb.to_numpy()
-        out = []
-        for b in vals:
-            if b is None:
-                out.append(None)
-            elif len(b) == 21 and bytes(b[:5]) == W._POINT_LE_2D:
-                out.append(bytes(b))
-            else:
-                g = W.from_wkb(bytes(b), force_2d=True, on_invalid=on_invalid)
-                out.append(None if g is None else W.encode_geom(g))
-        return pd.Series(out)
-
-    return _norm
 
 
 def _coarse_bbox_pred(xmin, ymin, xmax, ymax):

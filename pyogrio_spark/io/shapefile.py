@@ -13,11 +13,10 @@ Geometries convert to ISO WKB — the engine's wire format — with
 shapefile ring-orientation semantics (outer rings clockwise, holes
 counter-clockwise; holes assigned to the containing outer ring).
 
-Scale note: parsing happens on the driver; shapefiles are a
-dimension-sized interchange format (the 100-TB fact tables are
-parquet/Iceberg). For a large .shp the .shx record index supports
-range-splitting the record stream across executors via mapInPandas —
-same pattern as ``zones_cell_cover_distributed``.
+One decoder reads a contiguous record range: its byte range of the
+.shp (from the .shx index) and its records of the .dbf. The Spark
+reader splits the file into such ranges (one task each, or all on the
+driver) and ``read_shapefile_pdf`` reads the whole file as one.
 """
 
 from __future__ import annotations
@@ -30,6 +29,7 @@ import pandas as pd
 
 from pyogrio_spark.geometry import wkb as W
 from pyogrio_spark.geometry.predicates import points_in_ring
+from pyogrio_spark.io.reader import chunk_frame
 
 
 def _ring_signed_area(ring: np.ndarray) -> float:
@@ -58,31 +58,31 @@ def _assemble_polygons(rings: list[np.ndarray]):
     return groups
 
 
-def _shape_to_wkb(shape_type: int, buf: bytes) -> tuple[bytes | None, str | None]:
-    """One .shp record body -> (WKB, base type name).
+def _shape_to_wkb(shape_type: int, buf: bytes) -> bytes | None:
+    """One .shp record body -> WKB (None for a null shape).
 
     Z types (11/13/15/18) carry the Z array through to WKB Z; M-only
     types (21/23/25/28) and the optional trailing M block of Z types
     are stripped — the engine's documented M handling (SURVEY §2.4,
     reference force_2d/M semantics)."""
     if shape_type == 0:
-        return None, None
+        return None
     base = shape_type % 10 if shape_type != 28 else 8  # 11->1, 13->3, 15->5, 18/28->8
     has_z = 11 <= shape_type <= 18
     if base == 1:  # Point / PointZ / PointM
         x, y = struct.unpack_from("<dd", buf, 4)
         if has_z and len(buf) >= 28:
             (z,) = struct.unpack_from("<d", buf, 20)
-            return W.encode_point(x, y, z), "Point"
-        return W.encode_point(x, y), "Point"
+            return W.encode_point(x, y, z)
+        return W.encode_point(x, y)
     if base == 8:  # MultiPoint (+Z/M)
         (n,) = struct.unpack_from("<i", buf, 36)
         pts = np.frombuffer(buf, dtype="<f8", count=2 * n, offset=40).reshape(n, 2)
         zoff = 40 + 16 * n
         if has_z and len(buf) >= zoff + 16 + 8 * n:
             z = np.frombuffer(buf, dtype="<f8", count=n, offset=zoff + 16)
-            return W.encode_multipoint(np.column_stack([pts, z])), "MultiPoint"
-        return W.encode_multipoint(pts), "MultiPoint"
+            return W.encode_multipoint(np.column_stack([pts, z]))
+        return W.encode_multipoint(pts)
     if base in (3, 5):  # PolyLine / Polygon (+Z/M)
         nparts, npoints = struct.unpack_from("<ii", buf, 36)
         parts = np.frombuffer(buf, dtype="<i4", count=nparts, offset=44)
@@ -96,33 +96,24 @@ def _shape_to_wkb(shape_type: int, buf: bytes) -> tuple[bytes | None, str | None
         pieces = [np.ascontiguousarray(pts[bounds[i] : bounds[i + 1]]) for i in range(nparts)]
         if base == 3:
             if len(pieces) == 1:
-                return W.encode_linestring(pieces[0]), "LineString"
-            return W.encode_multilinestring(pieces), "MultiLineString"
+                return W.encode_linestring(pieces[0])
+            return W.encode_multilinestring(pieces)
         groups = _assemble_polygons(pieces)
         if len(groups) == 1:
-            return W.encode_polygon(groups[0]), "Polygon"
-        return W.encode_multipolygon(groups), "MultiPolygon"
+            return W.encode_polygon(groups[0])
+        return W.encode_multipolygon(groups)
     raise ValueError(f"unsupported shapefile shape type {shape_type}")
 
 
-def _read_shp(path: str):
+def _read_shp_header(path: str) -> tuple[int, tuple]:
+    """.shp file header -> (layer shape type, bbox)."""
     with open(path, "rb") as f:
-        data = f.read()
-    (magic,) = struct.unpack_from(">i", data, 0)
+        header = f.read(100)
+    (magic,) = struct.unpack_from(">i", header, 0)
     if magic != 9994:
         raise ValueError(f"not a shapefile: magic {magic}")
-    bbox = struct.unpack_from("<4d", data, 36)
-    geoms, types = [], []
-    pos = 100
-    while pos + 8 <= len(data):
-        _, clen = struct.unpack_from(">ii", data, pos)
-        body = data[pos + 8 : pos + 8 + 2 * clen]
-        (stype,) = struct.unpack_from("<i", body, 0)
-        wkb, tname = _shape_to_wkb(stype, body)
-        geoms.append(wkb)
-        types.append(tname)
-        pos += 8 + 2 * clen
-    return geoms, types, bbox
+    (shape_type,) = struct.unpack_from("<i", header, 32)
+    return shape_type, struct.unpack_from("<4d", header, 36)
 
 
 def _dbf_header(data: bytes):
@@ -142,40 +133,11 @@ def _dbf_header(data: bytes):
     return nrec, hsize, rsize, fields
 
 
-def _read_dbf(path: str, encoding: str = "utf-8"):
+def _read_dbf_header(path: str):
     with open(path, "rb") as f:
-        data = f.read()
-    nrec, hsize, rsize, fields = _dbf_header(data)
-    cols: dict[str, list] = {name: [] for name, *_ in fields}
-    for i in range(nrec):
-        rec = data[hsize + i * rsize : hsize + (i + 1) * rsize]
-        if not rec or rec[0:1] == b"*":  # deleted
-            continue
-        off = 1
-        for name, ftype, flen, fdec in fields:
-            raw = rec[off : off + flen]
-            off += flen
-            txt = raw.decode(encoding, errors="replace").strip()
-            if ftype in ("N", "F"):
-                if txt in ("", "*" * flen):
-                    cols[name].append(None)
-                elif ftype == "F" or fdec > 0 or "." in txt or "e" in txt.lower():
-                    cols[name].append(float(txt))
-                else:
-                    cols[name].append(int(txt))
-            elif ftype == "L":
-                cols[name].append(None if txt in ("", "?") else txt.upper() in ("T", "Y"))
-            elif ftype == "D":
-                cols[name].append(f"{txt[0:4]}-{txt[4:6]}-{txt[6:8]}" if len(txt) == 8 else None)
-            else:  # C and anything else: text
-                cols[name].append(txt)
-    pdf = pd.DataFrame(cols)
-    for name, ftype, flen, fdec in fields:
-        if ftype == "N" and fdec == 0 and pdf[name].notna().all():
-            pdf[name] = pdf[name].astype("int64")
-        elif ftype in ("N", "F") and (fdec > 0 or ftype == "F"):
-            pdf[name] = pdf[name].astype("float64")
-    return pdf
+        head = f.read(32)
+        (hsize,) = struct.unpack_from("<H", head, 8)
+        return _dbf_header(head + f.read(hsize - 32))
 
 
 def _read_cpg(base: str) -> str:
@@ -201,18 +163,16 @@ def _crs_from_prj(base: str) -> str | None:
     return display_crs(wkt) if wkt else None
 
 
-def _dbf_dtype(ftype: str, flen: int, fdec: int) -> str:
-    """DBF field decl -> the numpy dtype name the ENGINE surfaces for it
-    (bigint->int64 etc.) — decl-derived, so a numeric column that
-    happens to contain nulls still reports its integer type instead of
-    the post-pandas float64 (round-3 VERDICT item 2)."""
+def _spark_type(ftype: str, fdec: int) -> str:
+    """DBF field declaration -> the Spark type of its column. Decl-derived,
+    so a numeric column holding nulls keeps its integer type."""
     if ftype == "N" and fdec == 0:
-        return "int64"
+        return "bigint"
     if ftype in ("N", "F"):
-        return "float64"
+        return "double"
     if ftype == "L":
-        return "bool"
-    return "object"
+        return "boolean"
+    return "string"
 
 
 _SHP_LAYER_TYPE = {
@@ -232,24 +192,16 @@ def shapefile_info(path: str) -> dict:
     .dbf header (record count + field decls), .prj, .cpg — no feature
     scan, the metadata cost profile the reference gets from GDAL's
     driver capabilities (fast_feature_count/fast_total_bounds)."""
+    from pyogrio_spark.io.reader import NUMPY_DTYPE
+
     base = os.path.splitext(path)[0]
-    with open(base + ".shp", "rb") as f:
-        header = f.read(100)
-    (magic,) = struct.unpack_from(">i", header, 0)
-    if magic != 9994:
-        raise ValueError(f"not a shapefile: magic {magic}")
-    (shape_type,) = struct.unpack_from("<i", header, 32)
-    bbox = struct.unpack_from("<4d", header, 36)
-    with open(base + ".dbf", "rb") as f:
-        head = f.read(32)
-        (hsize,) = struct.unpack_from("<H", head, 8)
-        f.seek(0)
-        nrec, _, _, fields = _dbf_header(f.read(hsize))
+    shape_type, bbox = _read_shp_header(base + ".shp")
+    nrec, _, _, fields = _read_dbf_header(base + ".dbf")
     return {
         "layer_name": os.path.basename(base),
         "features": nrec,
         "fields": [name for name, *_ in fields],
-        "dtypes": [_dbf_dtype(ft, fl, fd) for _, ft, fl, fd in fields],
+        "dtypes": [NUMPY_DTYPE[_spark_type(ft, fd)] for _, ft, _, fd in fields],
         "field_specs": fields,
         "total_bounds": tuple(bbox) if nrec else None,
         "geometry_type": _SHP_LAYER_TYPE.get(shape_type, "Unknown"),
@@ -259,36 +211,126 @@ def shapefile_info(path: str) -> dict:
     }
 
 
-def read_shapefile_pdf(path: str) -> tuple[pd.DataFrame, dict]:
-    """Parse .shp + .dbf into (pandas frame with fid/attrs/geometry_wkb,
-    info dict mirroring read_info)."""
-    base = os.path.splitext(path)[0]
-    geoms, types, bbox = _read_shp(base + ".shp")
-    attrs = _read_dbf(base + ".dbf", _read_cpg(base))
-    if len(attrs) != len(geoms):
-        raise ValueError(f"shp/dbf record mismatch: {len(geoms)} vs {len(attrs)}")
-    pdf = attrs.copy()
-    pdf.insert(0, "fid", np.arange(len(geoms), dtype=np.int64))
-    pdf["geometry_wkb"] = geoms
+def _dbf_value(txt: str, ftype: str, flen: int, fdec: int):
+    """One stripped DBF field text -> its value typed for ``_spark_type``
+    (None for null)."""
+    if ftype in ("N", "F"):
+        if txt in ("", "*" * flen):
+            return None
+        if ftype == "F" or fdec > 0:
+            return float(txt)
+        return int(float(txt)) if "." in txt or "e" in txt.lower() else int(txt)
+    if ftype == "L":
+        return None if txt in ("", "?") else txt.upper() in ("T", "Y")
+    if ftype == "D":
+        return f"{txt[0:4]}-{txt[4:6]}-{txt[6:8]}" if len(txt) == 8 else None
+    return txt
 
+
+def _decoder(path: str):
+    """The one Shapefile decoder: (Spark fields, ``decode``), where
+    ``decode((shp_lo, shp_hi, rec_lo, rec_hi))`` reads only that byte
+    range of the .shp and those records of the .dbf. Records whose DBF
+    deletion flag is ``*`` are skipped, as OGR's driver does; ``fid`` is
+    the record number, so deleted records leave a gap."""
+    base = os.path.splitext(path)[0]
+    shp_path, dbf_path = base + ".shp", base + ".dbf"
+    _read_shp_header(shp_path)
+    _, hsize, rsize, specs = _read_dbf_header(dbf_path)
+    encoding = _read_cpg(base)
+    fields = [(name, _spark_type(ft, fd)) for name, ft, _, fd in specs]
+
+    def decode(chunk) -> pd.DataFrame:
+        shp_lo, shp_hi, rec_lo, rec_hi = chunk
+        n = rec_hi - rec_lo
+        with open(shp_path, "rb") as f:
+            f.seek(shp_lo)
+            blob = f.read(shp_hi - shp_lo)
+        with open(dbf_path, "rb") as f:
+            f.seek(hsize + rec_lo * rsize)
+            recs = np.frombuffer(f.read(n * rsize), dtype=np.uint8)
+        if len(recs) != n * rsize:
+            raise ValueError(f"{dbf_path} ends before record {rec_hi}")
+        recs = recs.reshape(n, rsize)
+        live = recs[:, 0] != ord("*")
+        geoms, pos = [], 0
+        for keep in live:
+            _, clen = struct.unpack_from(">ii", blob, pos)
+            if keep:
+                body = blob[pos + 8 : pos + 8 + 2 * clen]
+                geoms.append(_shape_to_wkb(struct.unpack_from("<i", body, 0)[0], body))
+            pos += 8 + 2 * clen
+        recs, values, off = recs[live], [], 1
+        for _, ftype, flen, fdec in specs:
+            texts = (bytes(r).decode(encoding, errors="replace").strip() for r in recs[:, off : off + flen])
+            values.append([_dbf_value(t, ftype, flen, fdec) for t in texts])
+            off += flen
+        return chunk_frame(np.arange(rec_lo, rec_hi)[live], fields, values, geoms)
+
+    return fields, decode
+
+
+def _read_shx(path: str) -> tuple[np.ndarray, np.ndarray]:
+    """.shx record index -> (byte offset of each record header, total
+    byte length incl. the 8-byte header). The index is 8 bytes/record —
+    a 100M-record shapefile's index is 800 MB, but only the per-chunk
+    slices matter and the driver reads it once."""
+    with open(path, "rb") as f:
+        data = f.read()
+    n = (len(data) - 100) // 8
+    arr = np.frombuffer(data, dtype=">i4", count=2 * n, offset=100).reshape(n, 2)
+    return arr[:, 0].astype(np.int64) * 2, arr[:, 1].astype(np.int64) * 2 + 8
+
+
+def read_shapefile(spark, path: str, distributed: bool = False, chunk_records: int = 50_000,
+                   **read_table_kwargs):
+    """Shapefile -> engine DataFrame (fid, attributes, geometry_wkb),
+    composable with every read_table filter (where/bbox/mask/columns...).
+    The .shx record index splits the records into contiguous chunks of
+    ``chunk_records``; each chunk byte-range-reads only its part of the
+    .shp and .dbf. ``distributed`` places the decode
+    (``reader.scan_chunks``): one Spark task per chunk, or the driver
+    (needed when executors cannot see the path). The Spark schema comes
+    from the DBF field declarations, so nullable integer and logical
+    columns keep their types."""
+    from pyogrio_spark.io.reader import chunk_schema, scan_chunks
+
+    base = os.path.splitext(path)[0]
+    offsets, lengths = _read_shx(base + ".shx")
+    nrec = _read_dbf_header(base + ".dbf")[0]
+    if nrec != len(offsets):
+        raise ValueError(f"{path}: .shx indexes {len(offsets)} records, .dbf holds {nrec}")
+    fields, decode = _decoder(path)
+    chunks = []  # (shp byte_lo, shp byte_hi, rec_lo, rec_hi)
+    for lo in range(0, len(offsets), int(chunk_records)):
+        hi = min(lo + int(chunk_records), len(offsets))
+        chunks.append((int(offsets[lo]), int(offsets[hi - 1] + lengths[hi - 1]), lo, hi))
+    return scan_chunks(spark, path, chunks, decode, chunk_schema(fields),
+                       distributed=distributed, **read_table_kwargs)
+
+
+def read_shapefile_pdf(path: str) -> tuple[pd.DataFrame, dict]:
+    """The whole file through the one decoder -> (pandas frame with
+    fid/attrs/geometry_wkb in numpy dtypes, info dict mirroring
+    read_info)."""
+    from pyogrio_spark.io.reader import numpy_dtypes
+
+    base = os.path.splitext(path)[0]
     info = shapefile_info(path)
+    pdf = numpy_dtypes(_decoder(path)[1]((100, os.path.getsize(base + ".shp"), 0, info["features"])))
     # record-level refinement of the header type: the reference's
     # promote inference (geopandas.py:679-740) — a polygon layer whose
     # records are all plain Polygon reports Polygon
-    seen = {t for t in types if t}
+    seen = {W.geom_type_name(b).split(" ")[0] for b in pdf["geometry_wkb"] if b is not None}
     if seen <= {"Polygon", "MultiPolygon"} and "MultiPolygon" in seen:
         info["geometry_type"] = "MultiPolygon"
     elif len(seen) == 1:
         info["geometry_type"] = next(iter(seen))
     elif seen:
         info["geometry_type"] = "Unknown"
-    info["features"] = len(geoms)
-    info["total_bounds"] = tuple(bbox)
+    info["features"] = len(pdf)
+    info["total_bounds"] = _read_shp_header(base + ".shp")[1]
     return pdf, info
-
-
-_SHP_TYPE = {"Point": 1, "LineString": 3, "Polygon": 5, "MultiPoint": 8,
-             "MultiLineString": 3, "MultiPolygon": 5}
 
 
 _M_NODATA = -1e39  # spec: M < -1e38 means "no data"
@@ -663,158 +705,3 @@ def write_shapefile_distributed(df, path: str, geom_col: str = "geometry_wkb", c
         _write_sidecars(base, crs)
     finally:
         shutil.rmtree(parts_dir, ignore_errors=True)
-
-
-def _read_shx(path: str) -> tuple[np.ndarray, np.ndarray]:
-    """.shx record index -> (byte offset of each record header, total
-    byte length incl. the 8-byte header). The index is 8 bytes/record —
-    a 100M-record shapefile's index is 800 MB, but only the per-chunk
-    slices matter and the driver reads it once."""
-    with open(path, "rb") as f:
-        data = f.read()
-    n = (len(data) - 100) // 8
-    arr = np.frombuffer(data, dtype=">i4", count=2 * n, offset=100).reshape(n, 2)
-    return arr[:, 0].astype(np.int64) * 2, arr[:, 1].astype(np.int64) * 2 + 8
-
-
-def read_shapefile_distributed(
-    spark, path: str, chunk_records: int = 50_000, **read_table_kwargs
-):
-    """Distributed shapefile scan: the tiny ``.shx`` record index is
-    read on the driver, records are split into contiguous chunks, and
-    each executor byte-range-reads ONLY its chunk of ``.shp`` and
-    ``.dbf`` — one task per chunk, no shuffle, no driver-side parse, no
-    full-file read per task (``reader.scan_chunks``). This is the
-    multi-GB plan the single-node ``read_shapefile`` (fixture-scale
-    interchange) deliberately skips; the path must be executor-visible
-    (shared/posix fs or download).
-
-    Semantics match ``read_shapefile_pdf``: same WKB, same attribute
-    typing (int-typed DBF numeric columns come back BIGINT and stay
-    null-safe per chunk via pandas nullable Int64)."""
-    from pyogrio_spark.io.reader import scan_chunks
-
-    base = os.path.splitext(path)[0]
-    shp_path, dbf_path = base + ".shp", base + ".dbf"
-    offsets, lengths = _read_shx(base + ".shx")
-    n = len(offsets)
-    with open(dbf_path, "rb") as f:
-        head = f.read(32)
-        (hsize,) = struct.unpack_from("<H", head, 8)
-        f.seek(0)
-        _, hsize, rsize, fields = _dbf_header(f.read(hsize))
-    encoding = _read_cpg(base)
-
-    chunks = []  # (shp byte_lo, shp byte_hi, rec_lo, rec_hi)
-    for lo in range(0, n, int(chunk_records)):
-        hi = min(lo + int(chunk_records), n)
-        chunks.append((int(offsets[lo]), int(offsets[hi - 1] + lengths[hi - 1]), lo, hi))
-
-    spark_cols = ["`fid` bigint"]
-    for name, ftype, flen, fdec in fields:
-        if ftype == "N" and fdec == 0:
-            spark_cols.append(f"`{name}` bigint")
-        elif ftype in ("N", "F"):
-            spark_cols.append(f"`{name}` double")
-        elif ftype == "L":
-            spark_cols.append(f"`{name}` boolean")
-        else:
-            spark_cols.append(f"`{name}` string")
-    spark_cols.append("`geometry_wkb` binary")
-    schema = ", ".join(spark_cols)
-
-    def decode(chunk):
-        shp_start, shp_end, rec_lo, rec_hi = chunk
-        with open(shp_path, "rb") as f:
-            f.seek(shp_start)
-            blob = f.read(shp_end - shp_start)
-        with open(dbf_path, "rb") as f:
-            f.seek(hsize + rec_lo * rsize)
-            dblob = f.read((rec_hi - rec_lo) * rsize)
-        geoms = []
-        pos = 0
-        while pos + 8 <= len(blob) and len(geoms) < rec_hi - rec_lo:
-            _, clen = struct.unpack_from(">ii", blob, pos)
-            body = blob[pos + 8 : pos + 8 + 2 * clen]
-            (stype,) = struct.unpack_from("<i", body, 0)
-            wkb, _t = _shape_to_wkb(stype, body)
-            geoms.append(wkb)
-            pos += 8 + 2 * clen
-        cols: dict[str, list] = {name: [] for name, *_ in fields}
-        for i in range(rec_hi - rec_lo):
-            rec = dblob[i * rsize : (i + 1) * rsize]
-            off = 1
-            for name, ftype, flen, fdec in fields:
-                raw = rec[off : off + flen]
-                off += flen
-                txt = raw.decode(encoding, errors="replace").strip()
-                if ftype in ("N", "F"):
-                    if txt in ("", "*" * flen):
-                        cols[name].append(None)
-                    elif ftype == "F" or fdec > 0:
-                        cols[name].append(float(txt))
-                    else:
-                        cols[name].append(int(float(txt)) if "." in txt or "e" in txt.lower() else int(txt))
-                elif ftype == "L":
-                    cols[name].append(None if txt in ("", "?") else txt.upper() in ("T", "Y"))
-                elif ftype == "D":
-                    cols[name].append(f"{txt[0:4]}-{txt[4:6]}-{txt[6:8]}" if len(txt) == 8 else None)
-                else:
-                    cols[name].append(txt)
-        out = pd.DataFrame({"fid": np.arange(rec_lo, rec_hi, dtype=np.int64)})
-        for name, ftype, flen, fdec in fields:
-            if ftype == "N" and fdec == 0:
-                out[name] = pd.array(cols[name], dtype="Int64")
-            elif ftype in ("N", "F"):
-                out[name] = pd.array(
-                    [np.nan if v is None else v for v in cols[name]], dtype="float64"
-                )
-            else:
-                out[name] = cols[name]
-        out["geometry_wkb"] = geoms
-        return out
-
-    return scan_chunks(spark, path, chunks, decode, schema, **read_table_kwargs)
-
-
-def read_shapefile(spark, path: str, **read_table_kwargs):
-    """Shapefile -> engine DataFrame (fid, attributes, geometry_wkb),
-    composable with every read_table filter (where/bbox/mask/columns...).
-    Driver-side parse — right for fixture-scale interchange; use
-    ``read_shapefile_distributed`` for multi-GB files.
-
-    The Spark schema comes from the DBF field DECLARATIONS (same
-    mapping as the distributed scan), so nullable integer and logical
-    columns keep their types instead of degrading through pandas object
-    dtype."""
-    from pyogrio_spark.io.reader import read_table
-
-    pdf, info = read_shapefile_pdf(path)
-    decl = {name: (ft, fl, fd) for name, ft, fl, fd in info["field_specs"]}
-    fields = ["`fid` bigint"]
-    out = pd.DataFrame({"fid": pdf["fid"].to_numpy(dtype=np.int64)})
-    for c in pdf.columns:
-        if c in ("fid", "geometry_wkb"):
-            continue
-        ft, fl, fd = decl[c]
-        if ft == "N" and fd == 0:
-            fields.append(f"`{c}` bigint")
-            out[c] = pd.array(
-                [None if v is None or (np.isscalar(v) and pd.isna(v)) else int(v) for v in pdf[c]],
-                dtype="Int64",
-            )
-        elif ft in ("N", "F"):
-            fields.append(f"`{c}` double")
-            out[c] = pd.array(
-                [np.nan if v is None else v for v in pdf[c]], dtype="float64"
-            )
-        elif ft == "L":
-            fields.append(f"`{c}` boolean")
-            out[c] = pd.array(list(pdf[c]), dtype="boolean")
-        else:
-            fields.append(f"`{c}` string")
-            out[c] = list(pdf[c])
-    fields.append("`geometry_wkb` binary")
-    out["geometry_wkb"] = list(pdf["geometry_wkb"])
-    df = spark.createDataFrame(out, schema=", ".join(fields))
-    return read_table(spark, df, **read_table_kwargs)

@@ -307,7 +307,7 @@ def test_gpkg_distributed_bbox_pushdown_uses_rtree(spark, tmp_path):
     the driver: a tight bbox produces fewer chunks than a full scan,
     and results match the unpruned scan exactly."""
     from pyogrio_spark.compat import write_dataframe
-    from pyogrio_spark.io.geopackage import read_geopackage_distributed
+    from pyogrio_spark.io.geopackage import read_geopackage
 
     n = 500
     pdf = pd.DataFrame(
@@ -319,14 +319,14 @@ def test_gpkg_distributed_bbox_pushdown_uses_rtree(spark, tmp_path):
     p = str(tmp_path / "big.gpkg")
     write_dataframe(pdf, p)
     bbox = (10.0, 0.0, 20.0, 1.0)
-    pruned = read_geopackage_distributed(spark, p, chunk_rows=50, bbox=bbox)
-    full = read_geopackage_distributed(spark, p, chunk_rows=50)
+    pruned = read_geopackage(spark, p, distributed=True, chunk_rows=50, bbox=bbox)
+    full = read_geopackage(spark, p, distributed=True, chunk_rows=50)
     # pruning happened at the partition level
     assert pruned.rdd.getNumPartitions() < full.rdd.getNumPartitions()
     want = {r.v for r in full.collect() if 10.0 <= r.v % 100 <= 20.0 and 0.0 <= r.v // 100 <= 1.0}
     assert {r.v for r in pruned.collect()} == want
     # empty bbox yields an empty frame, not an error
-    none = read_geopackage_distributed(spark, p, chunk_rows=50, bbox=(300.0, 300.0, 301.0, 301.0))
+    none = read_geopackage(spark, p, distributed=True, chunk_rows=50, bbox=(300.0, 300.0, 301.0, 301.0))
     assert none.count() == 0
 
 
@@ -360,8 +360,8 @@ def test_mask_filter_prunes_storage_ranges(spark, tmp_path):
     indexed distributed scans — exact results preserved by the
     read_table refine."""
     from pyogrio_spark.compat import write_dataframe
-    from pyogrio_spark.io.flatgeobuf import write_flatgeobuf, read_flatgeobuf_distributed
-    from pyogrio_spark.io.geopackage import read_geopackage_distributed
+    from pyogrio_spark.io.flatgeobuf import write_flatgeobuf, read_flatgeobuf
+    from pyogrio_spark.io.geopackage import read_geopackage
 
     n = 400
     pdf = pd.DataFrame(
@@ -381,15 +381,15 @@ def test_mask_filter_prunes_storage_ranges(spark, tmp_path):
 
     gp = str(tmp_path / "m.gpkg")
     write_dataframe(pdf.rename(columns={"geometry_wkb": "geometry"}), gp)
-    pruned = read_geopackage_distributed(spark, gp, chunk_rows=40, mask=mask)
-    full = read_geopackage_distributed(spark, gp, chunk_rows=40)
+    pruned = read_geopackage(spark, gp, distributed=True, chunk_rows=40, mask=mask)
+    full = read_geopackage(spark, gp, distributed=True, chunk_rows=40)
     assert pruned.rdd.getNumPartitions() < full.rdd.getNumPartitions()
     assert {r.v for r in pruned.collect()} == want
 
     fp = str(tmp_path / "m.fgb")
     write_flatgeobuf(pdf, fp, index_node_size=16)
-    fpruned = read_flatgeobuf_distributed(spark, fp, chunk_features=40, mask=mask)
-    ffull = read_flatgeobuf_distributed(spark, fp, chunk_features=40)
+    fpruned = read_flatgeobuf(spark, fp, distributed=True, chunk_features=40, mask=mask)
+    ffull = read_flatgeobuf(spark, fp, distributed=True, chunk_features=40)
     assert fpruned.rdd.getNumPartitions() < ffull.rdd.getNumPartitions()
     assert {r.v for r in fpruned.collect()} == want
 

@@ -220,7 +220,6 @@ def test_distributed_scan_matches_single_node(spark, tmp_path, node_size):
 
     from pyogrio_spark.io.flatgeobuf import (
         read_flatgeobuf,
-        read_flatgeobuf_distributed,
         write_flatgeobuf,
     )
 
@@ -240,7 +239,7 @@ def test_distributed_scan_matches_single_node(spark, tmp_path, node_size):
     )
     path = str(tmp_path / f"d{node_size}.fgb")
     write_flatgeobuf(pdf, path, index_node_size=node_size)
-    dist = read_flatgeobuf_distributed(spark, path, chunk_features=100)
+    dist = read_flatgeobuf(spark, path, distributed=True, chunk_features=100)
     assert dist.rdd.getNumPartitions() == 5  # 450/100 -> 5 byte-range chunks
     got = dist.toPandas().sort_values("name").reset_index(drop=True)
     want = read_flatgeobuf(spark, path).toPandas().sort_values("name").reset_index(drop=True)
@@ -249,8 +248,8 @@ def test_distributed_scan_matches_single_node(spark, tmp_path, node_size):
     assert [bytes(b) for b in got.geometry_wkb] == [bytes(b) for b in want.geometry_wkb]
     np.testing.assert_allclose(got.score.to_numpy(), want.score.to_numpy())
     # composes with read_table filters
-    f = read_flatgeobuf_distributed(
-        spark, path, chunk_features=100, where="v % 2 = 0", columns=["name", "v"]
+    f = read_flatgeobuf(
+        spark, path, distributed=True, chunk_features=100, where="v % 2 = 0", columns=["name", "v"]
     ).toPandas()
     assert len(f) == n // 2 and (f.v % 2 == 0).all()
 
@@ -261,7 +260,7 @@ def test_distributed_bbox_pushdown_prunes_byte_ranges(spark, tmp_path):
     the rows the unpruned path returns."""
     import numpy as np
 
-    from pyogrio_spark.io.flatgeobuf import read_flatgeobuf_distributed, write_flatgeobuf
+    from pyogrio_spark.io.flatgeobuf import read_flatgeobuf, write_flatgeobuf
 
     n = 400
     xs = np.array([(i * 37) % 100 for i in range(n)], dtype=np.float64)
@@ -275,8 +274,8 @@ def test_distributed_bbox_pushdown_prunes_byte_ranges(spark, tmp_path):
     path = str(tmp_path / "bbox.fgb")
     write_flatgeobuf(pdf, path, index_node_size=16)
     bbox = (10.0, 10.0, 30.0, 25.0)
-    pruned = read_flatgeobuf_distributed(spark, path, chunk_features=100, bbox=bbox)
-    full = read_flatgeobuf_distributed(spark, path, chunk_features=100)
+    pruned = read_flatgeobuf(spark, path, distributed=True, chunk_features=100, bbox=bbox)
+    full = read_flatgeobuf(spark, path, distributed=True, chunk_features=100)
     want = {
         f"f{i}"
         for i in range(n)
@@ -287,8 +286,8 @@ def test_distributed_bbox_pushdown_prunes_byte_ranges(spark, tmp_path):
     # the pruned plan reads strictly fewer byte-range chunks
     assert pruned.rdd.getNumPartitions() < full.rdd.getNumPartitions() or len(want) <= 100
     # miss-everything bbox still yields a well-formed empty frame
-    empty = read_flatgeobuf_distributed(
-        spark, path, chunk_features=100, bbox=(500.0, 500.0, 600.0, 600.0)
+    empty = read_flatgeobuf(
+        spark, path, distributed=True, chunk_features=100, bbox=(500.0, 500.0, 600.0, 600.0)
     )
     assert empty.count() == 0 and "geometry_wkb" in empty.columns
 
@@ -332,13 +331,13 @@ def test_distributed_empty_file_matches_single_node(spark, tmp_path):
     """A valid zero-feature file returns an empty frame (same schema)
     from BOTH scan paths — distributed=True changes the plan, not the
     behavior (round-3 ADVICE: it used to raise ValueError)."""
-    from pyogrio_spark.io.flatgeobuf import read_flatgeobuf_distributed
+    from pyogrio_spark.io.flatgeobuf import read_flatgeobuf
 
     pdf = pd.DataFrame({"geometry_wkb": pd.Series([], dtype=object), "tag": pd.Series([], dtype=object)})
     p = str(tmp_path / "empty.fgb")
     write_flatgeobuf(pdf, p)
     single = read_flatgeobuf(spark, p)
-    dist = read_flatgeobuf_distributed(spark, p)
+    dist = read_flatgeobuf(spark, p, distributed=True)
     assert single.count() == 0 and dist.count() == 0
     assert dist.schema == single.schema
 
@@ -350,7 +349,7 @@ def test_distributed_sink_roundtrip_and_parity(spark, tmp_path):
     byte-for-byte."""
     from pyogrio_spark.io.flatgeobuf import (
         flatgeobuf_info,
-        read_flatgeobuf_distributed,
+        read_flatgeobuf,
         write_flatgeobuf_distributed,
     )
 
@@ -377,7 +376,7 @@ def test_distributed_sink_roundtrip_and_parity(spark, tmp_path):
     assert hdr["total_bounds"] == (0.0, 0.0, 49.0, 3.0)
     assert hdr["geometry_type"] == "Point"
     # distributed reader reads the distributed write
-    assert read_flatgeobuf_distributed(spark, multi, chunk_features=64).count() == 200
+    assert read_flatgeobuf(spark, multi, distributed=True, chunk_features=64).count() == 200
 
     # single-partition write is byte-identical to the driver-side writer
     one = str(tmp_path / "one.fgb")
@@ -394,7 +393,7 @@ def test_distributed_indexed_write_hilbert_and_pushdown(spark, tmp_path):
     byte-range pushdown prunes and whose feature order matches the
     driver-side indexed writer's Hilbert order."""
     from pyogrio_spark.io.flatgeobuf import (
-        read_flatgeobuf_distributed,
+        read_flatgeobuf,
         write_flatgeobuf_distributed,
     )
 
@@ -426,8 +425,8 @@ def test_distributed_indexed_write_hilbert_and_pushdown(spark, tmp_path):
 
     # the index actually prunes byte ranges on a tight bbox
     bbox = (10.0, 10.0, 25.0, 25.0)
-    pruned = read_flatgeobuf_distributed(spark, dist, chunk_features=32, bbox=bbox)
-    full = read_flatgeobuf_distributed(spark, dist, chunk_features=32)
+    pruned = read_flatgeobuf(spark, dist, distributed=True, chunk_features=32, bbox=bbox)
+    full = read_flatgeobuf(spark, dist, distributed=True, chunk_features=32)
     assert pruned.rdd.getNumPartitions() < full.rdd.getNumPartitions()
     want = {
         int(v) for i, v in enumerate(pdf.v)
@@ -445,7 +444,7 @@ def test_distributed_indexed_write_hilbert_and_pushdown(spark, tmp_path):
 def test_distributed_decode_error_names_path_and_byte_range(spark, tmp_path):
     """A corrupt feature frame fails its chunk's decode with an error that
     names the file, the chunk's byte range and its first fid."""
-    from pyogrio_spark.io.flatgeobuf import _fgb_layout, read_flatgeobuf_distributed
+    from pyogrio_spark.io.flatgeobuf import _fgb_layout, read_flatgeobuf
 
     n = 300
     pdf = pd.DataFrame(
@@ -462,7 +461,7 @@ def test_distributed_decode_error_names_path_and_byte_range(spark, tmp_path):
         f.seek(int(offsets[150]) + 4)
         f.write(struct.pack("<I", 0x7FFFFFF0))
     with pytest.raises(Exception) as err:
-        read_flatgeobuf_distributed(spark, path, chunk_features=100).collect()
+        read_flatgeobuf(spark, path, distributed=True, chunk_features=100).collect()
     msg = str(err.value)
     assert path in msg
     assert f"bytes [{int(offsets[100])}, {int(offsets[200])})" in msg

@@ -73,6 +73,24 @@ def test_distributed_seq_reader(frame, tmp_path, spark):
     assert got == sorted(frame.geometry_wkb)
 
 
+def test_distributed_seq_never_drops_filters(frame, tmp_path, spark):
+    """The line-split GeoJSONSeq scan returns raw properties_json, so
+    given read_table filters it raises NoDistributedScan naming them;
+    convert_dataset then reads on the driver, which applies them."""
+    import pyogrio_spark as ps
+    from pyogrio_spark.errors import NoDistributedScan
+
+    p = str(tmp_path / "f.geojsonl")
+    write_geojson(frame, p)
+    with pytest.raises(NoDistributedScan, match="columns, where"):
+        ps.open_table(spark, p, distributed=True, where="v >= 3", columns=["v"])
+    assert ps.open_table(spark, p, distributed=True).count() == 4  # no filters: line split
+    out = str(tmp_path / "out.geojsonl")
+    ps.convert_dataset(spark, p, out, where="v >= 3", columns=["v"])
+    back = read_geojson_pdf(out)
+    assert sorted(back.v) == [3, 4] and "properties_json" not in back.columns
+
+
 def test_open_table_dispatch(tmp_path, spark, frame):
     import pyogrio_spark as ps
 

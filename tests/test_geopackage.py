@@ -105,11 +105,11 @@ def test_roundtrip_reference_fixture_content(tmp_path):
 
 
 def test_distributed_scan_matches_single_node(spark, tmp_path):
-    """read_geopackage_distributed must return the same rows/WKB as the
+    """read_geopackage(distributed=True) must return the same rows/WKB as the
     driver-side reader, through genuinely partitioned pk-range chunks."""
     import pandas as pd
 
-    from pyogrio_spark.io.geopackage import read_geopackage_distributed, write_geopackage
+    from pyogrio_spark.io.geopackage import read_geopackage, write_geopackage
 
     n = 257
     pdf = pd.DataFrame(
@@ -131,7 +131,7 @@ def test_distributed_scan_matches_single_node(spark, tmp_path):
     con.commit()
     con.close()
 
-    dist = read_geopackage_distributed(spark, path, chunk_rows=64)
+    dist = read_geopackage(spark, path, distributed=True, chunk_rows=64)
     # 257 rows / 64-pk chunks -> 5 genuinely separate scan partitions
     assert dist.rdd.getNumPartitions() == 5
     got = dist.toPandas().sort_values("fid").reset_index(drop=True)
@@ -150,7 +150,7 @@ def test_distributed_scan_matches_single_node(spark, tmp_path):
     )
     np.testing.assert_allclose(got.score.to_numpy(), want.score.to_numpy())
     # composes with read_table filters like every other source
-    f = read_geopackage_distributed(
-        spark, path, chunk_rows=64, where="score > 30", columns=["name", "score"]
+    f = read_geopackage(
+        spark, path, distributed=True, chunk_rows=64, where="score > 30", columns=["name", "score"]
     ).toPandas()
     assert (f.score > 30).all() and list(f.columns) == ["name", "score", "geometry_wkb"]

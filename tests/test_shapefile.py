@@ -74,11 +74,11 @@ def test_distributed_scan_matches_driver_parse(spark, ne):
     """Byte-range chunked scan (.shx-partitioned mapInPandas) must
     reproduce the driver-side parse exactly: same fids, attributes,
     byte-identical WKB — across multiple chunks."""
-    from pyogrio_spark.io.shapefile import read_shapefile_distributed
+    from pyogrio_spark.io.shapefile import read_shapefile
 
     pdf, _ = ne
     got = (
-        read_shapefile_distributed(spark, NE, chunk_records=40)
+        read_shapefile(spark, NE, distributed=True, chunk_records=40)
         .toPandas()
         .sort_values("fid")
         .reset_index(drop=True)
@@ -95,12 +95,12 @@ def test_distributed_scan_partitioning_and_filters(spark):
     """The scan must actually fan out (one task per chunk, 5 chunks at
     40 records/chunk for 177 features) and compose with read_table
     filters pushed through mapInPandas output."""
-    from pyogrio_spark.io.shapefile import read_shapefile_distributed
+    from pyogrio_spark.io.shapefile import read_shapefile
 
-    df = read_shapefile_distributed(spark, NE, chunk_records=40)
+    df = read_shapefile(spark, NE, distributed=True, chunk_records=40)
     assert df.rdd.getNumPartitions() == 5
-    af = read_shapefile_distributed(
-        spark, NE, chunk_records=40, where="continent = 'Africa'", columns=["name"]
+    af = read_shapefile(
+        spark, NE, distributed=True, chunk_records=40, where="continent = 'Africa'", columns=["name"]
     )
     rows = af.collect()
     assert 0 < len(rows) < 177 and set(af.columns) == {"name", "geometry_wkb"}
@@ -206,9 +206,9 @@ def test_distributed_sink_roundtrip_and_parity(spark, tmp_path):
     }
     assert got == want
     # .shx agrees with a fresh offset walk (the distributed reader uses it)
-    from pyogrio_spark.io.shapefile import read_shapefile_distributed
+    from pyogrio_spark.io.shapefile import read_shapefile
 
-    assert read_shapefile_distributed(spark, multi, chunk_records=64).count() == n
+    assert read_shapefile(spark, multi, distributed=True, chunk_records=64).count() == n
 
     one = str(tmp_path / "one.shp")
     write_shapefile_distributed(df.coalesce(1), one, crs=32633)
@@ -264,7 +264,7 @@ def test_distributed_sink_repads_narrower_parts(spark, tmp_path):
 
     from pyogrio_spark.io.shapefile import (
         _dbf_header,
-        read_shapefile_distributed,
+        read_shapefile,
         read_shapefile_pdf,
         write_shapefile,
         write_shapefile_distributed,
@@ -298,7 +298,7 @@ def test_distributed_sink_repads_narrower_parts(spark, tmp_path):
     want = want.drop(columns=["fid"]).sort_values(key).reset_index(drop=True)
     assert got.drop(columns=["geometry_wkb"]).equals(want.drop(columns=["geometry_wkb"]))
     assert [bytes(b) for b in got.geometry_wkb] == [bytes(b) for b in want.geometry_wkb]
-    assert read_shapefile_distributed(spark, multi, chunk_records=20).count() == 75
+    assert read_shapefile(spark, multi, distributed=True, chunk_records=20).count() == 75
 
 
 def test_z_geometry_roundtrip(tmp_path):
