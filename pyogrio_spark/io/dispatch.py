@@ -325,11 +325,12 @@ def convert_dataset(
     job with one task per scan chunk and no shuffle: each task decodes
     its chunk, applies the exact bbox/mask refine (without ``sql=``),
     the ``where`` filter and the projection, and encodes its part file.
-    A source whose distributed scan cannot serve the call (GeoJSON
-    FeatureCollection, or GeoJSONSeq given read_table filters) is read
-    on the driver instead; sinks without a distributed half (GeoJSON,
-    GPKG single-writer SQLite) use the driver-side codec with a toPandas
-    boundary, same as the reference's single-process write.
+    GeoJSON is read on the driver: a FeatureCollection has no
+    distributed scan, and the line-split GeoJSONSeq scan yields raw
+    ``properties_json`` instead of the attributes. Sinks without a
+    distributed half (GeoJSON, GPKG single-writer SQLite) use the
+    driver-side codec with a toPandas boundary, same as the reference's
+    single-process write.
 
     ``crs=None`` carries the source CRS through (the ogr2ogr default);
     pass a crs to override.
@@ -342,8 +343,11 @@ def convert_dataset(
 
     from pyogrio_spark.errors import NoDistributedScan
 
+    # the line-split GeoJSONSeq scan yields raw properties_json, not the
+    # attributes: a conversion reads GeoJSONSeq on the driver
+    scan_distributed = distributed and not str(src).lower().endswith((".geojsonl", ".geojsons"))
     try:
-        df = open_table(spark, src, layer=layer, distributed=distributed, **read_table_kwargs)
+        df = open_table(spark, src, layer=layer, distributed=scan_distributed, **read_table_kwargs)
     except NoDistributedScan:
         # only this specific condition falls back (round-5 ADVICE):
         # genuine argument/format ValueErrors propagate immediately

@@ -10,9 +10,12 @@ table. This engine path gives the same surface without GDAL.
 
 File layout: 8 magic bytes ``fgb\\x03fgb\\x01``, a size-prefixed Header
 flatbuffer, an optional packed Hilbert R-tree index, then size-prefixed
-Feature flatbuffers. The writer emits ``index_node_size=0`` (no index —
-features keep input order, which is what byte-fidelity round trips
-want); the reader skips any index via the packed-R-tree size formula.
+Feature flatbuffers. The writers emit no index by default (features
+keep input order, which is what byte-fidelity round trips want), or the
+index with ``index_node_size>0``; the reader skips any index via the
+packed-R-tree size formula. Both writers run one part encoder and one
+stitch (``io/sink.py``): the pandas frame is one part, a Spark
+DataFrame one part per partition.
 
 Geometry: FlatGeobuf's type enum equals the WKB base-type codes, and
 coordinates live in a flat ``xy`` vector with ring/part ``ends``
@@ -22,7 +25,10 @@ from the engine's WKB ``Geom`` is loss-free for 2-D and Z geometries.
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
+import shutil
 import struct
 
 import numpy as np
@@ -90,18 +96,23 @@ def hilbert_d(x: np.ndarray, y: np.ndarray, order: int = _HILBERT_ORDER) -> np.n
     return d
 
 
+def _hilbert_keys(bboxes: np.ndarray, env) -> np.ndarray:
+    """Hilbert index of each bbox center quantized within the dataset
+    envelope ``env`` (minx, miny, maxx, maxy)."""
+    w = (env[2] - env[0]) or 1.0
+    h = (env[3] - env[1]) or 1.0
+    hmax = (1 << _HILBERT_ORDER) - 1
+    cx = np.floor(hmax * (((bboxes[:, 0] + bboxes[:, 2]) / 2 - env[0]) / w))
+    cy = np.floor(hmax * (((bboxes[:, 1] + bboxes[:, 3]) / 2 - env[1]) / h))
+    return hilbert_d(cx, cy)
+
+
 def hilbert_order(bboxes: np.ndarray) -> np.ndarray:
     """Permutation sorting features by the Hilbert index of their bbox
     center within the dataset envelope (the spec's sort for indexed
     files)."""
-    minx, miny = bboxes[:, 0].min(), bboxes[:, 1].min()
-    maxx, maxy = bboxes[:, 2].max(), bboxes[:, 3].max()
-    w = (maxx - minx) or 1.0
-    h = (maxy - miny) or 1.0
-    hmax = (1 << _HILBERT_ORDER) - 1
-    cx = np.floor(hmax * (((bboxes[:, 0] + bboxes[:, 2]) / 2 - minx) / w))
-    cy = np.floor(hmax * (((bboxes[:, 1] + bboxes[:, 3]) / 2 - miny) / h))
-    return np.argsort(hilbert_d(cx, cy), kind="stable")
+    env = (bboxes[:, 0].min(), bboxes[:, 1].min(), bboxes[:, 2].max(), bboxes[:, 3].max())
+    return np.argsort(_hilbert_keys(bboxes, env), kind="stable")
 
 
 def build_packed_rtree(bboxes: np.ndarray, feature_offsets: np.ndarray, node_size: int = 16) -> bytes:
@@ -281,57 +292,49 @@ def _parse_geometry(t: Table, type_code: int) -> "W.Geom":
 # ----------------------------------------------------------- properties
 
 
-def _column_spec(pdf: pd.DataFrame, cols: list[str]) -> list[tuple[str, int]]:
+def _fgb_columns(schema) -> list[tuple[str, int]]:
+    """The one FlatGeobuf typing rule, over the Arrow types of the
+    attribute columns: each integer width and sign, float and double,
+    bool and binary to its own ColumnType, dates and timestamps to
+    DateTime (ISO 8601 text), anything else to String."""
+    import pyarrow as pa
+
+    ints = {(8, True): COL_BYTE, (8, False): COL_UBYTE, (16, True): COL_SHORT, (16, False): COL_USHORT,
+            (32, True): COL_INT, (32, False): COL_UINT, (64, True): COL_LONG, (64, False): COL_ULONG}
     spec = []
-    for c in cols:
-        dt = pdf[c].dtype
-        name = str(dt)
-        if dt == np.int64 or name == "Int64":
-            spec.append((c, COL_LONG))
-        elif dt == np.int32 or name == "Int32":
-            spec.append((c, COL_INT))
-        elif dt == np.float64 or name == "Float64":
-            spec.append((c, COL_DOUBLE))
-        elif dt == np.float32 or name == "Float32":
-            spec.append((c, COL_FLOAT))
-        elif dt == bool or name == "boolean":
-            spec.append((c, COL_BOOL))
-        elif name.startswith("datetime64"):
-            spec.append((c, COL_DATETIME))
+    for name, t in zip(schema.names, schema.types):
+        if pa.types.is_integer(t):
+            spec.append((name, ints[t.bit_width, pa.types.is_signed_integer(t)]))
+        elif pa.types.is_floating(t):
+            spec.append((name, COL_FLOAT if t.bit_width <= 32 else COL_DOUBLE))
+        elif pa.types.is_boolean(t):
+            spec.append((name, COL_BOOL))
+        elif pa.types.is_binary(t) or pa.types.is_large_binary(t):
+            spec.append((name, COL_BINARY))
+        elif pa.types.is_date(t) or pa.types.is_timestamp(t):
+            spec.append((name, COL_DATETIME))
         else:
-            # object column: type the first non-null sample (nulls render
-            # as omitted slots either way). bool before int: Python bool
-            # is an int subclass.
-            sample = next((v for v in pdf[c] if v is not None and not pd.isna(v)), None)
-            if isinstance(sample, (bytes, bytearray)):
-                spec.append((c, COL_BINARY))
-            elif isinstance(sample, (bool, np.bool_)):
-                spec.append((c, COL_BOOL))
-            elif isinstance(sample, (int, np.integer)):
-                spec.append((c, COL_LONG))
-            elif isinstance(sample, (float, np.floating)):
-                spec.append((c, COL_DOUBLE))
-            else:
-                spec.append((c, COL_STRING))
+            spec.append((name, COL_STRING))
     return spec
 
 
-def _encode_properties(row, spec: list[tuple[str, int]]) -> bytes:
+def _encode_properties(values, spec: list[tuple[str, int]]) -> bytes:
+    """One feature's attribute ``values`` (in ``spec`` order) -> its
+    properties bytes; a null is an omitted slot."""
     out = bytearray()
-    for i, (name, ctype) in enumerate(spec):
-        v = row[name]
-        if v is None or (np.isscalar(v) and pd.isna(v)):
-            continue  # nullable column omitted = null
+    for i, (v, (_, ctype)) in enumerate(zip(values, spec)):
+        if v is None or v is pd.NA or (np.isscalar(v) and pd.isna(v)):
+            continue
         out += struct.pack("<H", i)
-        if ctype in _SCALAR_COL_FMT:
-            out += struct.pack(_SCALAR_COL_FMT[ctype], bool(v) if ctype == COL_BOOL else v)
-        elif ctype == COL_BINARY:
+        fmt = _SCALAR_COL_FMT.get(ctype)
+        if fmt is not None:
+            out += struct.pack(fmt, bool(v) if ctype == COL_BOOL else float(v) if fmt in ("<f", "<d") else int(v))
+            continue
+        if ctype == COL_BINARY:
             bv = bytes(v)
-            out += struct.pack("<I", len(bv)) + bv
         else:  # String / Json / DateTime — length-prefixed UTF-8
-            s = pd.Timestamp(v).isoformat() if ctype == COL_DATETIME else str(v)
-            bv = s.encode("utf-8")
-            out += struct.pack("<I", len(bv)) + bv
+            bv = (pd.Timestamp(v).isoformat() if ctype == COL_DATETIME else str(v)).encode("utf-8")
+        out += struct.pack("<I", len(bv)) + bv
     return bytes(out)
 
 
@@ -371,8 +374,7 @@ def _build_header(
 ) -> bytes:
     """Size-prefixed Header flatbuffer (slots: name=0 envelope=1
     geometry_type=2 has_z=3 columns=7 features_count=8
-    index_node_size=9 crs=10) — shared by the driver-side and
-    distributed sinks."""
+    index_node_size=9 crs=10)."""
     hb = Builder()
     col_offs = []
     for name, ctype in spec:
@@ -417,17 +419,104 @@ def _build_header(
     return hb.finish(hb.end_table(), size_prefixed=True)
 
 
-def _encode_feature(g, row, spec: list[tuple[str, int]]) -> bytes:
-    """One (Geom | None, property dict) -> size-prefixed Feature
-    flatbuffer — shared by the driver-side and distributed sinks."""
-    fb = Builder()
-    geom_off = None if g is None else _build_geometry(fb, g)
-    props = _encode_properties(row, spec)
-    props_off = fb.create_scalar_vector(props, len(props), 1) if props else None
-    fb.start_table()
-    fb.add_offset(0, geom_off)
-    fb.add_offset(1, props_off)
-    return fb.finish(fb.end_table(), size_prefixed=True)
+def _encode_part(frames, part: str, geom_col: str, cols: list[str], spec, leaves: bool) -> dict:
+    """The one FlatGeobuf part encoder: ``frames`` -> ``part`` (size-prefixed
+    Feature flatbuffers) and, when ``leaves``, ``part.leaf`` (one packed
+    R-tree leaf per feature: its bbox and part-relative byte offset).
+    Returns the part's feature count, envelope, geometry types and Z
+    flag."""
+    n, pos = 0, 0
+    env = [np.inf, np.inf, -np.inf, -np.inf]
+    gtypes: set[str] = set()
+    has_z = False
+    with open(part, "wb") as f, (open(part + ".leaf", "wb") if leaves else contextlib.nullcontext()) as leaf:
+        for pdf in frames:
+            rows = zip(*(pdf[c].tolist() for c in cols)) if cols else itertools.repeat(())
+            for b, values in zip(pdf[geom_col].tolist(), rows):
+                fb = Builder()
+                geom_off = None
+                if b is not None:
+                    g = W.parse_wkb(bytes(b))
+                    gtypes.add(g.type)
+                    has_z = has_z or g.has_z
+                    x0, y0, x1, y1 = W._geom_bounds(g)
+                    env = [min(env[0], x0), min(env[1], y0), max(env[2], x1), max(env[3], y1)]
+                    geom_off = _build_geometry(fb, g)
+                elif leaves:
+                    raise ValueError("index_node_size > 0 requires non-null geometries")
+                props = _encode_properties(values, spec)
+                props_off = fb.create_scalar_vector(props, len(props), 1) if props else None
+                fb.start_table()
+                fb.add_offset(0, geom_off)
+                fb.add_offset(1, props_off)
+                feature = fb.finish(fb.end_table(), size_prefixed=True)
+                f.write(feature)
+                if leaves:
+                    leaf.write(struct.pack("<4dQ", x0, y0, x1, y1, pos))
+                pos += len(feature)
+                n += 1
+    return {"n": n, "minx": env[0], "miny": env[1], "maxx": env[2], "maxy": env[3],
+            "gtypes": sorted(gtypes), "has_z": has_z}
+
+
+def _stitch(path: str, metas: list[dict], spec, layer_name, crs, index_node_size: int) -> None:
+    """The one FlatGeobuf stitch: the parts' metadata -> the header (count,
+    envelope, layer type: the one geometry type, MultiPolygon for a
+    Polygon/MultiPolygon mix, else Unknown), the packed R-tree built
+    from the parts' leaf files (their offsets shifted by each part's
+    base; parts come in Hilbert order), then the parts streamed into
+    ``path`` in order. The upper tree levels are built in memory, 40
+    bytes per feature. An empty file declares no index."""
+    total = sum(m["n"] for m in metas)
+    env = [min((m["minx"] for m in metas), default=np.inf), min((m["miny"] for m in metas), default=np.inf),
+           max((m["maxx"] for m in metas), default=-np.inf), max((m["maxy"] for m in metas), default=-np.inf)]
+    if not np.isfinite(env[0]):
+        env = [0.0, 0.0, 0.0, 0.0]
+    types = {t for m in metas for t in m["gtypes"]}
+    if len(types) == 1:
+        layer_code = GEOM_NAME_TO_CODE[next(iter(types))]
+    elif types and types <= {"Polygon", "MultiPolygon"}:
+        layer_code = GEOM_NAME_TO_CODE["MultiPolygon"]
+    else:
+        layer_code = 0  # Unknown: per-feature geometry types carry it
+    index_node_size = index_node_size if index_node_size > 0 and total else 0
+    index_bytes = b""
+    if index_node_size:
+        boxes, offsets, base = [], [], 0
+        for m in metas:
+            raw = np.fromfile(m["part"] + ".leaf", dtype=np.uint8).reshape(-1, 40)
+            boxes.append(raw[:, :32].copy().view("<f8").reshape(-1, 4))
+            offsets.append(raw[:, 32:].copy().view("<u8").ravel().astype(np.int64) + base)
+            base += os.path.getsize(m["part"])
+        index_bytes = build_packed_rtree(np.concatenate(boxes), np.concatenate(offsets), index_node_size)
+    header = _build_header(
+        spec, layer_code, any(m["has_z"] for m in metas), env, total,
+        layer_name or os.path.splitext(os.path.basename(path))[0], crs, index_node_size,
+    )
+    with open(path, "wb") as out:
+        out.write(MAGIC + header + index_bytes)
+        for m in metas:
+            with open(m["part"], "rb") as f:
+                shutil.copyfileobj(f, out, 1 << 20)
+
+
+def _write(data, path: str, geom_col: str, layer_name, crs, index_node_size: int) -> None:
+    """Type the attributes, run the one part encoder over ``data`` (a
+    pandas frame in process, or a Spark DataFrame per partition) and
+    stitch the parts into ``path``."""
+    from pyogrio_spark.io.sink import attribute_schema, encoded_parts
+
+    # a ``fid`` column is the engine's row-id convention, not an
+    # attribute: FIDs are driver-assigned on read, as in the reference
+    cols = [c for c in data.columns if c not in (geom_col, "fid")]
+    spec = _fgb_columns(attribute_schema(data, cols))
+    meta = "n long, minx double, miny double, maxx double, maxy double, gtypes array<string>, has_z boolean"
+
+    def encode(frames, part):
+        return _encode_part(frames, part, geom_col, cols, spec, index_node_size > 0)
+
+    with encoded_parts(data, path, encode, meta) as metas:
+        _stitch(path, metas, spec, layer_name, crs, index_node_size)
 
 
 def write_flatgeobuf(
@@ -439,93 +528,29 @@ def write_flatgeobuf(
     crs_wkt: str | None = None,
     index_node_size: int = 0,
 ) -> None:
-    """Write a FlatGeobuf file from a frame with a WKB geometry column.
+    """Write a FlatGeobuf file from a pandas frame with a WKB geometry
+    column, in process and without Spark: the frame is the one part of
+    the part encoder, and the stitch writes the header, any index and
+    the features. ``write_flatgeobuf_distributed`` runs the same encoder
+    per partition, so a one-partition write of the same rows gives the
+    same bytes. ``crs_wkt`` is an alias of ``crs``.
 
     ``index_node_size=0`` (default): no spatial index — features keep
     their input order and round-trip byte-identically through
     ``read_flatgeobuf_pdf``. ``index_node_size>0`` (spec default 16):
-    writes the static packed Hilbert R-tree; features are re-sorted
-    into Hilbert order (the spec's contract for indexed files) and the
-    leaf nodes carry their byte offsets — which the distributed reader
-    uses for byte-range partitioning. Indexing requires non-null
-    geometries (a bbox per feature)."""
-    # like every other format sink here, a ``fid`` column is the
-    # engine's ROW-ID convention, not an attribute — drop it on write
-    # (the reader regenerates sequential fids), matching the reference
-    # where FIDs are driver-assigned, never stored fields
-    attr_cols = [c for c in pdf.columns if c not in (geom_col, "fid")]
-    spec = _column_spec(pdf, attr_cols)
-    geoms = [None if b is None else W.parse_wkb(bytes(b)) for b in pdf[geom_col]]
-
-    types = {g.type for g in geoms if g is not None}
-    if len(types) == 1:
-        layer_code = GEOM_NAME_TO_CODE[next(iter(types))]
-    elif types <= {"Polygon", "MultiPolygon"} and types:
-        layer_code = GEOM_NAME_TO_CODE["MultiPolygon"]
-    else:
-        layer_code = 0  # Unknown: per-feature geometry types carry it
-    has_z = any(g.has_z for g in geoms if g is not None)
-
-    env = [np.inf, np.inf, -np.inf, -np.inf]
-    for g in geoms:
-        if g is None:
-            continue
-        x0, y0, x1, y1 = W._geom_bounds(g)
-        env = [min(env[0], x0), min(env[1], y0), max(env[2], x1), max(env[3], y1)]
-    if not np.isfinite(env[0]):
-        env = [0.0, 0.0, 0.0, 0.0]
-
+    the frame is first sorted into Hilbert order (``hilbert_order``, the
+    spec's contract for indexed files) and the static packed Hilbert
+    R-tree is written, its leaves carrying the features' byte offsets —
+    which the distributed reader uses for byte-range partitioning.
+    Indexing requires non-null geometries (a bbox per feature)."""
     if crs is None and crs_wkt is not None:
-        crs = crs_wkt  # back-compat alias
-    header = _build_header(
-        spec, layer_code, has_z, env, len(pdf),
-        layer_name or os.path.splitext(os.path.basename(path))[0],
-        crs, index_node_size,
-    )
-
-    rows = pdf[attr_cols].to_dict("records") if attr_cols else [{}] * len(pdf)
-
-    def frame(g, row) -> bytes:
-        return _encode_feature(g, row, spec)
-
-    index_bytes = b""
-    if index_node_size > 0 and len(pdf) > 0:
-        if any(g is None for g in geoms):
+        crs = crs_wkt
+    if index_node_size > 0 and len(pdf):
+        bboxes = W.bounds_many(pdf[geom_col])
+        if np.isnan(bboxes).any():
             raise ValueError("index_node_size > 0 requires non-null geometries")
-        bboxes = np.array([W._geom_bounds(g) for g in geoms], dtype=np.float64)
-        order = hilbert_order(bboxes)
-        geoms = [geoms[i] for i in order]
-        rows = [rows[i] for i in order]
-        bboxes = bboxes[order]
-        frames = [frame(g, row) for g, row in zip(geoms, rows)]
-        offsets = np.cumsum([0] + [len(fr) for fr in frames[:-1]]).astype(np.uint64)
-        index_bytes = build_packed_rtree(bboxes, offsets, index_node_size)
-    else:
-        frames = [frame(g, row) for g, row in zip(geoms, rows)]
-
-    with open(path, "wb") as f:
-        f.write(MAGIC)
-        f.write(header)
-        f.write(index_bytes)
-        for fr in frames:
-            f.write(fr)
-
-
-def _spec_from_spark_schema(dtypes: list[tuple[str, str]]) -> list[tuple[str, int]]:
-    """Spark (name, type) pairs -> FGB column spec (inverse of
-    _spark_type; both sinks of one frame agree on typing)."""
-    to_col = {
-        "tinyint": COL_BYTE, "smallint": COL_SHORT, "int": COL_INT,
-        "bigint": COL_LONG, "float": COL_FLOAT, "double": COL_DOUBLE,
-        "boolean": COL_BOOL, "binary": COL_BINARY, "string": COL_STRING,
-    }
-    spec = []
-    for name, t in dtypes:
-        if t.startswith("timestamp") or t == "date":
-            spec.append((name, COL_DATETIME))
-        else:
-            spec.append((name, to_col.get(t, COL_STRING)))
-    return spec
+        pdf = pdf.iloc[hilbert_order(bboxes)]
+    _write(pdf, path, geom_col, layer_name, crs, index_node_size)
 
 
 def write_flatgeobuf_distributed(
@@ -536,183 +561,46 @@ def write_flatgeobuf_distributed(
     crs=None,
     index_node_size: int = 0,
 ) -> None:
-    """Distributed FlatGeobuf sink: the EXPENSIVE work — WKB parse and
-    FlatBuffers feature encoding — runs once per partition inside
-    mapInPandas, each task writing its encoded feature section to a
-    part file; the driver then writes the header (feature count,
-    envelope, geometry type aggregated from per-part metadata) and
-    streams the parts into the single output file in partition order.
-    The driver's share of the job is sequential byte copying only — the
-    irreducible cost of a single-file target — so encode throughput
-    scales with executors (the write-side mirror of the distributed
-    byte-range scans; parts dir must be on a filesystem shared with
-    executors, the same contract as those scans).
+    """FlatGeobuf sink for a Spark DataFrame: each task runs the one part
+    encoder over its partition inside a ``mapInPandas`` (WKB parse and
+    FlatBuffers encoding scale with executors) and reports its metadata;
+    the driver runs the same stitch as ``write_flatgeobuf``, streaming
+    the parts into the output in partition order. An unindexed write is
+    one Spark job with no exchange, keeps partition order, and a
+    one-partition write is byte-identical to ``write_flatgeobuf``. The
+    parts directory sits next to ``path``, so executors must see it.
 
-    Layout: index_node_size=0 (default) keeps partition order, same as
-    the driver-side writer's default, and round-trips byte-identically
-    through both readers. ``index_node_size>0`` writes the packed
-    Hilbert R-tree: features are GLOBALLY sorted by the Hilbert key of
-    their bbox center (computed vectorized per batch, one Spark range
-    sort — the distributed equivalent of the driver writer's argsort),
-    each task writes its feature section AND a packed leaf-node side
-    file (40 bytes/feature), and the driver assembles the tree from
-    the streamed leaf level (upper levels are built in memory: 40
-    bytes per feature on the driver — fine to ~10^8 features, stated
-    bound). Indexing requires non-null geometries, like the
-    driver-side writer."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    cols = [c for c in df.columns if c not in (geom_col, "fid")]
-    spec = _spec_from_spark_schema([(c, t) for c, t in df.dtypes if c not in (geom_col, "fid")])
-
+    ``index_node_size>0`` first computes the dataset envelope (one
+    job), then sorts the rows GLOBALLY by the Hilbert key of their bbox
+    center (one Spark range sort, the same key as ``hilbert_order``);
+    each part then also writes its R-tree leaves. Indexing requires
+    non-null geometries."""
     if index_node_size > 0:
-        # pass 1: dataset envelope (needed to quantize Hilbert centers)
+        from pyspark.sql import functions as F
+
         def _bounds(pdfs):
             for pdf in pdfs:
                 if len(pdf) == 0:
                     continue
-                bs = W.bounds_many([None if b is None else bytes(b) for b in pdf[geom_col]])
+                bs = W.bounds_many(pdf[geom_col])
                 if np.isnan(bs).any():
                     raise ValueError("index_node_size > 0 requires non-null geometries")
-                yield pd.DataFrame(
-                    [(float(bs[:, 0].min()), float(bs[:, 1].min()),
-                      float(bs[:, 2].max()), float(bs[:, 3].max()))],
-                    columns=["minx", "miny", "maxx", "maxy"],
-                )
+                yield pd.DataFrame([(bs[:, 0].min(), bs[:, 1].min(), bs[:, 2].max(), bs[:, 3].max())],
+                                   columns=["minx", "miny", "maxx", "maxy"])
 
-        env_row = (
+        env = [float(v) for v in (
             df.select(geom_col).mapInPandas(_bounds, schema="minx double, miny double, maxx double, maxy double")
             .agg(F.min("minx"), F.min("miny"), F.max("maxx"), F.max("maxy"))
             .first()
-        )
-        e0, e1, e2, e3 = (float(v) for v in env_row)
-        w = (e2 - e0) or 1.0
-        h = (e3 - e1) or 1.0
-        hmax = (1 << _HILBERT_ORDER) - 1
+        )]
 
         def _hkey(pdfs):
             for pdf in pdfs:
-                bs = W.bounds_many([bytes(b) for b in pdf[geom_col]])
-                cx = np.floor(hmax * (((bs[:, 0] + bs[:, 2]) / 2 - e0) / w))
-                cy = np.floor(hmax * (((bs[:, 1] + bs[:, 3]) / 2 - e1) / h))
-                out = pdf.copy()
-                out["_hkey"] = hilbert_d(cx, cy).astype(np.int64)
-                yield out
+                yield pdf.assign(_hkey=_hilbert_keys(W.bounds_many(pdf[geom_col]), env).astype(np.int64))
 
         hschema = ", ".join(f"`{c}` {t}" for c, t in df.dtypes) + ", `_hkey` bigint"
         df = df.mapInPandas(_hkey, schema=hschema).orderBy("_hkey").drop("_hkey")
-
-    parts_dir = f"{path}.parts-{uuid.uuid4().hex[:8]}"
-    os.makedirs(parts_dir, exist_ok=True)
-
-    meta_schema = (
-        "pid int, part string, n long, minx double, miny double, "
-        "maxx double, maxy double, gtypes string, has_z boolean"
-    )
-    write_leaves = index_node_size > 0
-
-    def encode(pdfs):
-        import pandas as _pd
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        part = os.path.join(parts_dir, f"part-{pid:05d}")
-        n = 0
-        env = [np.inf, np.inf, -np.inf, -np.inf]
-        gtypes: set[str] = set()
-        has_z = False
-        leaf = open(part + ".leaf", "wb") if write_leaves else None
-        try:
-            with open(part, "wb") as f:
-                pos = 0
-                for pdf in pdfs:
-                    rows = pdf[cols].to_dict("records") if cols else [{}] * len(pdf)
-                    for g_wkb, row in zip(pdf[geom_col], rows):
-                        g = None if g_wkb is None else W.parse_wkb(bytes(g_wkb))
-                        if g is not None:
-                            gtypes.add(g.type)
-                            has_z = has_z or g.has_z
-                            x0, y0, x1, y1 = W._geom_bounds(g)
-                            env = [min(env[0], x0), min(env[1], y0),
-                                   max(env[2], x1), max(env[3], y1)]
-                        elif write_leaves:
-                            raise ValueError("index_node_size > 0 requires non-null geometries")
-                        frame_bytes = _encode_feature(g, row, spec)
-                        f.write(frame_bytes)
-                        if leaf is not None:
-                            # part-relative offset; driver shifts by the
-                            # part's base when assembling the leaf level
-                            leaf.write(struct.pack("<4dQ", x0, y0, x1, y1, pos))
-                        pos += len(frame_bytes)
-                        n += 1
-        finally:
-            if leaf is not None:
-                leaf.close()
-        yield _pd.DataFrame(
-            [(pid, part, n, env[0], env[1], env[2], env[3],
-              ",".join(sorted(gtypes)), has_z)],
-            columns=["pid", "part", "n", "minx", "miny", "maxx", "maxy",
-                     "gtypes", "has_z"],
-        )
-
-    meta = df.mapInPandas(encode, schema=meta_schema).collect()
-    try:
-        meta = sorted(meta, key=lambda r: r["pid"])
-        total = sum(r["n"] for r in meta)
-        env = [
-            min((r["minx"] for r in meta if r["n"]), default=np.inf),
-            min((r["miny"] for r in meta if r["n"]), default=np.inf),
-            max((r["maxx"] for r in meta if r["n"]), default=-np.inf),
-            max((r["maxy"] for r in meta if r["n"]), default=-np.inf),
-        ]
-        if not np.isfinite(env[0]):
-            env = [0.0, 0.0, 0.0, 0.0]
-        types = set()
-        for r in meta:
-            types.update(t for t in r["gtypes"].split(",") if t)
-        if len(types) == 1:
-            layer_code = GEOM_NAME_TO_CODE[next(iter(types))]
-        elif types <= {"Polygon", "MultiPolygon"} and types:
-            layer_code = GEOM_NAME_TO_CODE["MultiPolygon"]
-        else:
-            layer_code = 0
-        has_z = any(r["has_z"] for r in meta)
-        index_bytes = b""
-        if write_leaves and total > 0:
-            # leaf level: concat part leaf files, shifting each part's
-            # relative offsets by the cumulative byte base of the parts
-            # before it (parts are range-partitioned by Hilbert key, so
-            # pid order IS global Hilbert order)
-            recs = []
-            base = 0
-            for r in meta:
-                raw = np.fromfile(r["part"] + ".leaf", dtype=np.uint8).reshape(-1, 40)
-                if len(raw):
-                    boxes = raw[:, :32].copy().view("<f8").reshape(-1, 4)
-                    offs = raw[:, 32:].copy().view("<u8").ravel().astype(np.int64) + base
-                    recs.append((boxes, offs))
-                base += os.path.getsize(r["part"])
-            bboxes = np.concatenate([b for b, _ in recs], axis=0)
-            offsets = np.concatenate([o for _, o in recs])
-            index_bytes = build_packed_rtree(bboxes, offsets, index_node_size)
-        header = _build_header(
-            spec, layer_code, has_z, env, total,
-            layer_name or os.path.splitext(os.path.basename(path))[0],
-            crs, index_node_size if (write_leaves and total > 0) else 0,
-        )
-        with open(path, "wb") as out:
-            out.write(MAGIC)
-            out.write(header)
-            out.write(index_bytes)
-            for r in meta:
-                with open(r["part"], "rb") as f:
-                    shutil.copyfileobj(f, out, 1 << 20)
-    finally:
-        shutil.rmtree(parts_dir, ignore_errors=True)
+    _write(df, path, geom_col, layer_name, crs, index_node_size)
 
 
 # ------------------------------------------------------------------ read

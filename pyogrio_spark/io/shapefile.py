@@ -16,13 +16,18 @@ counter-clockwise; holes assigned to the containing outer ring).
 One decoder reads a contiguous record range: its byte range of the
 .shp (from the .shx index) and its records of the .dbf. The Spark
 reader splits the file into such ranges (one task each, or all on the
-driver) and ``read_shapefile_pdf`` reads the whole file as one.
+driver) and ``read_shapefile_pdf`` reads the whole file as one. The
+writers mirror it: one part encoder and one stitch (``io/sink.py``),
+the pandas frame being one part and a Spark DataFrame one part per
+partition.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import struct
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -124,7 +129,7 @@ def _dbf_header(data: bytes):
     fields = []
     pos = 32
     while pos < hsize - 1 and data[pos] != 0x0D:
-        name = data[pos : pos + 11].split(b"\x00")[0].decode("ascii")
+        name = data[pos : pos + 11].split(b"\x00")[0].decode("utf-8", errors="replace")
         ftype = chr(data[pos + 11])
         flen = data[pos + 16]
         fdec = data[pos + 17]
@@ -423,13 +428,58 @@ def _shp_header(total_words: int, layer_type: int, bbox) -> bytes:
 
 def _dbf_head(nrec: int, fdefs) -> bytes:
     """dBase III header, field descriptors and terminator for ``fdefs``
-    [(name, type_char, length, decimals), ...]."""
+    [(name, type_char, length, decimals), ...] (names laundered by
+    ``_dbf_fields``)."""
     rsize = 1 + sum(fl for _, _, fl, _ in fdefs)
     hsize = 32 + 32 * len(fdefs) + 1
     out = struct.pack("<4B", 0x03, 26, 8, 16) + struct.pack("<I", nrec) + struct.pack("<HH", hsize, rsize) + b"\x00" * 20
     for name, ftype, flen, fdec in fdefs:
-        out += name.encode("ascii")[:11].ljust(11, b"\x00") + ftype.encode() + b"\x00" * 4 + bytes([flen, fdec]) + b"\x00" * 14
+        out += name.encode("utf-8").ljust(11, b"\x00") + ftype.encode() + b"\x00" * 4 + bytes([flen, fdec]) + b"\x00" * 14
     return out + b"\x0d"
+
+
+def _cut_utf8(name: str, nbytes: int) -> str:
+    """``name`` cut to at most ``nbytes`` UTF-8 bytes at a character boundary."""
+    return name.encode("utf-8")[:nbytes].decode("utf-8", errors="ignore")
+
+
+def _launder(names) -> list[str]:
+    """DBF field names laundered as GDAL's shapefile driver does: at most
+    10 UTF-8 bytes, unique regardless of case, a colliding name's tail
+    replaced by ``_1``, ``_2``, ...; one warning per renamed field."""
+    out, seen = [], set()
+    for name in map(str, names):
+        new, k = _cut_utf8(name, 10), 0
+        while new.lower() in seen:
+            k += 1
+            new = _cut_utf8(name, 10 - len(f"_{k}")) + f"_{k}"
+        seen.add(new.lower())
+        if new != name:
+            warnings.warn(f"Normalized/laundered field name: {name!r} to {new!r}", RuntimeWarning)
+        out.append(new)
+    return out
+
+
+def _dbf_fields(schema) -> list[tuple[str, str, int, int]]:
+    """The one DBF typing rule, over the Arrow types of the attribute
+    columns: integers of any width -> N 18.0, floats -> N 24.8, booleans
+    -> L, dates -> D, anything else -> C written with ``str`` (width 1
+    here; the encoder sizes it per part). Names go through ``_launder``."""
+    import pyarrow as pa
+
+    fdefs = []
+    for name, t in zip(_launder(schema.names), schema.types):
+        if pa.types.is_integer(t):
+            fdefs.append((name, "N", 18, 0))
+        elif pa.types.is_floating(t):
+            fdefs.append((name, "N", 24, 8))
+        elif pa.types.is_boolean(t):
+            fdefs.append((name, "L", 1, 0))
+        elif pa.types.is_date(t):
+            fdefs.append((name, "D", 8, 0))
+        else:
+            fdefs.append((name, "C", 1, 0))
+    return fdefs
 
 
 def _isnull(v) -> bool:
@@ -449,17 +499,11 @@ def _dbf_cell(v, ftype: str, flen: int, fdec: int) -> bytes:
         return str(v).encode("utf-8")[:flen].ljust(flen, b" ")
     if ftype == "L":
         return b"T" if v else b"F"
+    if ftype == "D":
+        return f"{v:%Y%m%d}".encode("ascii")
     if fdec:
         return f"{float(v):>{flen}.{fdec}f}".encode("ascii")[:flen]
     return f"{int(v):>{flen}d}".encode("ascii")[:flen]
-
-
-def _dbf_records(pdf: pd.DataFrame, fdefs) -> bytes:
-    """The frame's rows as fixed-width DBF records (blank deletion flag)."""
-    if not fdefs:
-        return b" " * len(pdf)
-    cols = [[_dbf_cell(v, ft, fl, fd) for v in pdf[name].tolist()] for name, ft, fl, fd in fdefs]
-    return b"".join(b" " + b"".join(cells) for cells in zip(*cols))
 
 
 def _dbf_relayout(src, dst, n: int, part_widths, widths) -> None:
@@ -479,7 +523,82 @@ def _dbf_relayout(src, dst, n: int, part_widths, widths) -> None:
         dst.write(out.tobytes())
 
 
-def _write_sidecars(base: str, crs) -> None:
+def _encode_part(frames, part: str, geom_col: str, attrs: list[str], fdefs) -> dict:
+    """The one Shapefile part encoder: ``frames`` -> ``part.shp`` (records
+    numbered 0; the stitch patches the numbers) and ``part.dbf`` (rows
+    with each C field at this part's longest value). Holds the part's
+    attribute columns, not its geometries, until the part ends, to know
+    those widths. Returns the part's record count, bbox, shape types and
+    field widths."""
+    x0 = y0 = np.inf
+    x1 = y1 = -np.inf
+    stypes: set[int] = set()
+    attr_frames = []
+    with open(part + ".shp", "wb") as f:
+        for pdf in frames:
+            for b in pdf[geom_col].tolist():
+                if b is None:
+                    body = struct.pack("<i", 0)
+                else:
+                    g = W.parse_wkb(bytes(b))
+                    st, body = _geom_to_shp_record(g)
+                    stypes.add(st)
+                    gx0, gy0, gx1, gy1 = W._geom_bounds(g)
+                    x0, y0, x1, y1 = min(x0, gx0), min(y0, gy0), max(x1, gx1), max(y1, gy1)
+                f.write(struct.pack(">ii", 0, len(body) // 2) + body)
+            attr_frames.append(pdf[attrs])
+    rows = pd.concat(attr_frames, ignore_index=True) if attr_frames else pd.DataFrame(columns=attrs)
+    cols = [rows[c].tolist() for c in attrs]
+    fdefs = [(name, ft, _c_width(vals) if ft == "C" else fl, fd) for vals, (name, ft, fl, fd) in zip(cols, fdefs)]
+    cells = [[_dbf_cell(v, ft, fl, fd) for v in vals] for vals, (_, ft, fl, fd) in zip(cols, fdefs)]
+    with open(part + ".dbf", "wb") as f:
+        f.write(b"".join(b" " + b"".join(row) for row in zip(*cells)) if cells else b" " * len(rows))
+    return {"n": len(rows), "minx": x0, "miny": y0, "maxx": x1, "maxy": y1,
+            "stypes": sorted(stypes), "widths": [fl for _, _, fl, _ in fdefs]}
+
+
+def _stitch(path: str, metas: list[dict], fdefs, crs) -> None:
+    """The one Shapefile stitch: the parts' metadata -> the headers (count,
+    bbox, layer type: the one shape type, else Polygon), then one pass
+    over the parts that patches each .shp record's number (the one
+    global field of the format, 4 bytes per record) and builds the .shx
+    index. Each DBF field is declared at its widest part's width; a part
+    at those widths is copied as is, a narrower one re-laid out a block
+    of rows at a time."""
+    base = os.path.splitext(path)[0]
+    total = sum(m["n"] for m in metas)
+    x0 = min((m["minx"] for m in metas), default=np.inf)
+    bbox = (x0, min(m["miny"] for m in metas), max(m["maxx"] for m in metas),
+            max(m["maxy"] for m in metas)) if np.isfinite(x0) else (0.0, 0.0, 0.0, 0.0)
+    stypes = {s for m in metas for s in m["stypes"]}
+    layer_type = stypes.pop() if len(stypes) == 1 else 5
+
+    shp_bytes = sum(os.path.getsize(m["part"] + ".shp") for m in metas)
+    shx, recno, pos = bytearray(), 0, 50  # pos in 16-bit words
+    with open(base + ".shp", "wb") as out:
+        out.write(_shp_header(50 + shp_bytes // 2, layer_type, bbox))
+        for m in metas:
+            with open(m["part"] + ".shp", "rb") as f:
+                while len(hdr := f.read(8)) == 8:
+                    (_, clen) = struct.unpack(">ii", hdr)
+                    recno += 1
+                    out.write(struct.pack(">ii", recno, clen) + f.read(2 * clen))
+                    shx += struct.pack(">ii", pos, clen)
+                    pos += 4 + clen
+    with open(base + ".shx", "wb") as out:
+        out.write(_shp_header(50 + 4 * total, layer_type, bbox) + bytes(shx))
+
+    widths = [max([fl, *(m["widths"][i] for m in metas)]) for i, (_, _, fl, _) in enumerate(fdefs)]
+    with open(base + ".dbf", "wb") as out:
+        out.write(_dbf_head(total, [(name, ft, w, fd) for (name, ft, _, fd), w in zip(fdefs, widths)]))
+        for m in metas:
+            with open(m["part"] + ".dbf", "rb") as f:
+                if list(m["widths"]) == widths:
+                    shutil.copyfileobj(f, out, 1 << 20)
+                else:
+                    _dbf_relayout(f, out, m["n"], m["widths"], widths)
+        out.write(b"\x1a")
+
     from pyogrio_spark.crs import crs_to_wkt
 
     with open(base + ".cpg", "w") as f:
@@ -488,20 +607,44 @@ def _write_sidecars(base: str, crs) -> None:
         f.write(crs_to_wkt(crs))
 
 
+def _write(data, path: str, geom_col: str, crs) -> None:
+    """Type the attributes, run the one part encoder over ``data`` (a
+    pandas frame in process, or a Spark DataFrame per partition) and
+    stitch the parts into ``path``."""
+    from pyogrio_spark.io.sink import attribute_schema, encoded_parts
+
+    attrs = [c for c in data.columns if c not in (geom_col, "fid")]
+    fdefs = _dbf_fields(attribute_schema(data, attrs))
+    meta = "n long, minx double, miny double, maxx double, maxy double, stypes array<int>, widths array<int>"
+
+    def encode(frames, part):
+        return _encode_part(frames, part, geom_col, attrs, fdefs)
+
+    with encoded_parts(data, path, encode, meta) as metas:
+        _stitch(path, metas, fdefs, crs)
+
+
 def write_shapefile(
     pdf: pd.DataFrame, path: str, geom_col: str = "geometry_wkb", crs=None,
     append: bool = False,
 ) -> None:
-    """Write .shp/.shx/.dbf/.cpg/.prj from a frame with a WKB geometry
-    column — the reference's default driver, written from the public
-    spec. Round-trips through read_shapefile_pdf.
+    """Write .shp/.shx/.dbf/.cpg/.prj from a pandas frame with a WKB
+    geometry column, in process and without Spark: the frame is the one
+    part of the part encoder, and the stitch writes the files.
+    ``write_shapefile_distributed`` runs the same encoder per partition,
+    so a one-partition write of the same rows gives the same bytes.
 
-    ``crs`` is an int EPSG code, ``"EPSG:<n>"``, or WKT (default
-    EPSG:4326) and is persisted to ``.prj`` — the reference writes the
-    caller's CRS rather than assuming one (_io.pyx:2810-2816).
+    Fields: integers of any width are N 18.0, floats N 24.8, booleans L,
+    ``datetime.date`` values D, anything else C at the longest value's
+    UTF-8 width (UTF-8 ``.cpg``). Names are laundered as GDAL does (at
+    most 10 bytes, unique, a warning per renamed field). ``crs`` is an
+    int EPSG code, ``"EPSG:<n>"``, or WKT (default EPSG:4326) and is
+    persisted to ``.prj`` — the reference writes the caller's CRS
+    rather than assuming one (_io.pyx:2810-2816).
 
     ``append=True`` keeps the existing features and CRS and adds the
-    frame's rows (implemented as parse + rewrite: the record sections
+    frame's rows, matching its laundered column names to the layer's
+    fields (implemented as parse + rewrite: the record sections
     of all three files are length-prefixed but the headers carry global
     bounds/counts, so an in-place tail append would still rewrite the
     headers; at interchange scale the difference is noise)."""
@@ -511,6 +654,8 @@ def write_shapefile(
             raise ValueError(f"append=True but {path} does not exist")
         existing, info = read_shapefile_pdf(path)
         incoming = pdf.rename(columns={geom_col: "geometry_wkb"})
+        names = [c for c in incoming.columns if c not in ("geometry_wkb", "fid")]
+        incoming = incoming.rename(columns=dict(zip(names, _launder(names))))
         want = [c for c in existing.columns if c != "fid"]
         have = [c for c in incoming.columns if c != "fid"]
         if set(want) != set(have):
@@ -523,185 +668,16 @@ def write_shapefile(
         return write_shapefile(
             merged, path, geom_col="geometry_wkb", crs=crs if crs is not None else info["crs"]
         )
-    geoms = [W.parse_wkb(bytes(b)) if b is not None else None for b in pdf[geom_col]]
-
-    records, shp_types = [], set()
-    gx0 = gy0 = np.inf
-    gx1 = gy1 = -np.inf
-    for g in geoms:
-        if g is None:
-            records.append((0, struct.pack("<i", 0)))
-            continue
-        st, body = _geom_to_shp_record(g)
-        shp_types.add(st)
-        records.append((st, body))
-        x0, y0, x1, y1 = W.bounds(W.encode_geom(g))
-        gx0, gy0, gx1, gy1 = min(gx0, x0), min(gy0, y0), max(gx1, x1), max(gy1, y1)
-    if not np.isfinite(gx0):
-        gx0 = gy0 = gx1 = gy1 = 0.0
-    layer_type = shp_types.pop() if len(shp_types) == 1 else 5
-    bbox = (gx0, gy0, gx1, gy1)
-
-    shp_chunks, shx_chunks, pos = [], [], 50  # in 16-bit words
-    for i, (st, body) in enumerate(records):
-        clen = len(body) // 2
-        shx_chunks.append(struct.pack(">ii", pos, clen))
-        shp_chunks.append(struct.pack(">ii", i + 1, clen) + body)
-        pos += 4 + clen
-
-    with open(base + ".shp", "wb") as f:
-        f.write(_shp_header(pos, layer_type, bbox) + b"".join(shp_chunks))
-    with open(base + ".shx", "wb") as f:
-        f.write(_shp_header(50 + 4 * len(records), layer_type, bbox) + b"".join(shx_chunks))
-
-    # .dbf: dBase III — C for strings, N for numerics
-    attrs = [c for c in pdf.columns if c not in (geom_col, "fid")]
-    fdefs = []
-    for c in attrs:
-        dname = str(pdf[c].dtype)
-        if pdf[c].dtype == np.int64 or dname == "Int64":
-            fdefs.append((c, "N", 18, 0))
-        elif pdf[c].dtype == np.float64 or pdf[c].dtype == np.float32:
-            fdefs.append((c, "N", 24, 8))
-        elif pdf[c].dtype == bool or dname == "boolean":
-            fdefs.append((c, "L", 1, 0))
-        else:
-            fdefs.append((c, "C", _c_width(pdf[c].tolist()), 0))
-    with open(base + ".dbf", "wb") as f:
-        f.write(_dbf_head(len(pdf), fdefs) + _dbf_records(pdf, fdefs) + b"\x1a")
-    _write_sidecars(base, crs)
+    _write(pdf, path, geom_col, crs)
 
 
 def write_shapefile_distributed(df, path: str, geom_col: str = "geometry_wkb", crs=None) -> None:
-    """Distributed shapefile sink in ONE Spark job: each task parses WKB
-    and encodes its partition's .shp records and .dbf rows into part
-    files, with C (string) fields padded to that part's own widths; it
-    reports the widths with its counts and bounds. The driver then
-    writes the three headers and STREAMS the parts together, patching
-    each .shp record's sequence number and accumulating the .shx index
-    in the same single pass (record numbers are the one global field in
-    the format, so a pure concat can't work — but patching is 4 bytes
-    per record during the copy, IO-bound like the FlatGeobuf sink's
-    concat). Each DBF field's width is the maximum over the parts: a
-    part already at those widths is copied as is, a narrower one is
-    re-laid-out with numpy a block of rows at a time. No separate job
-    sizes the fields, so the input plan runs once. A task holds its
-    partition's attribute columns (not its geometries) until the
-    partition ends, to know its widths.
-
-    Same conventions as ``write_shapefile`` (N 18/0 ints, N 24/8
-    floats, L logicals, C strings at the longest non-null value's
-    width, UTF-8 .cpg, ``crs`` to .prj); single-partition output is
+    """Shapefile sink for a Spark DataFrame in ONE Spark job with no
+    exchange: each task runs the one part encoder over its partition
+    inside a ``mapInPandas`` and reports its metadata; the driver runs
+    the same stitch as ``write_shapefile``, streaming the parts into the
+    output. The input plan runs once. The parts directory sits next to
+    ``path``, so executors must see it. Same field types, names and
+    sidecars as ``write_shapefile``; a one-partition write is
     byte-identical to it."""
-    import shutil
-    import uuid
-
-    base = os.path.splitext(path)[0]
-    attrs = [c for c in df.columns if c not in (geom_col, "fid")]
-    types = dict(df.dtypes)
-    fdefs = []  # C widths are sized per part by the tasks; 1 is the floor
-    for c in attrs:
-        t = types[c]
-        if t in ("bigint", "int", "smallint", "tinyint"):
-            fdefs.append((c, "N", 18, 0))
-        elif t in ("double", "float"):
-            fdefs.append((c, "N", 24, 8))
-        elif t == "boolean":
-            fdefs.append((c, "L", 1, 0))
-        else:
-            fdefs.append((c, "C", 1, 0))
-
-    parts_dir = f"{path}.parts-{uuid.uuid4().hex[:8]}"
-    os.makedirs(parts_dir, exist_ok=True)
-    meta_schema = (
-        "pid int, n long, minx double, miny double, maxx double, maxy double, "
-        "stypes string, widths array<int>"
-    )
-
-    def encode(pdfs):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        gx0 = gy0 = np.inf
-        gx1 = gy1 = -np.inf
-        stypes: set[int] = set()
-        attr_parts = []
-        with open(os.path.join(parts_dir, f"part-{pid:05d}.shp"), "wb") as fs:
-            for pdf in pdfs:
-                for b in pdf[geom_col].tolist():
-                    if b is None:
-                        st, body = 0, struct.pack("<i", 0)
-                    else:
-                        st, body = _geom_to_shp_record(W.parse_wkb(bytes(b)))
-                        stypes.add(st)
-                        x0, y0, x1, y1 = W.bounds(bytes(b))
-                        gx0, gy0 = min(gx0, x0), min(gy0, y0)
-                        gx1, gy1 = max(gx1, x1), max(gy1, y1)
-                    # record number 0 placeholder: the driver patches the
-                    # global sequence during the concat pass
-                    fs.write(struct.pack(">ii", 0, len(body) // 2) + body)
-                attr_parts.append(pdf[attrs])
-        part = pd.concat(attr_parts, ignore_index=True) if attr_parts else pd.DataFrame(columns=attrs)
-        part_defs = [
-            (name, ft, _c_width(part[name].tolist()) if ft == "C" else fl, fd)
-            for name, ft, fl, fd in fdefs
-        ]
-        with open(os.path.join(parts_dir, f"part-{pid:05d}.dbf"), "wb") as fd:
-            fd.write(_dbf_records(part, part_defs))
-        yield pd.DataFrame(
-            [(pid, len(part), gx0, gy0, gx1, gy1, ",".join(str(s) for s in sorted(stypes)),
-              [fl for _, _, fl, _ in part_defs])],
-            columns=["pid", "n", "minx", "miny", "maxx", "maxy", "stypes", "widths"],
-        )
-
-    meta = sorted(df.mapInPandas(encode, schema=meta_schema).collect(), key=lambda r: r["pid"])
-    try:
-        total = sum(r["n"] for r in meta)
-        gx0 = min((r["minx"] for r in meta if r["n"]), default=np.inf)
-        gy0 = min((r["miny"] for r in meta if r["n"]), default=np.inf)
-        gx1 = max((r["maxx"] for r in meta if r["n"]), default=-np.inf)
-        gy1 = max((r["maxy"] for r in meta if r["n"]), default=-np.inf)
-        if not np.isfinite(gx0):
-            gx0 = gy0 = gx1 = gy1 = 0.0
-        bbox = (gx0, gy0, gx1, gy1)
-        stypes: set[int] = set()
-        for r in meta:
-            stypes.update(int(s) for s in r["stypes"].split(",") if s)
-        layer_type = stypes.pop() if len(stypes) == 1 else 5
-
-        shp_bytes = sum(os.path.getsize(os.path.join(parts_dir, f"part-{r['pid']:05d}.shp")) for r in meta)
-        shx_entries = bytearray()
-        recno = 0
-        pos_words = 50
-        with open(base + ".shp", "wb") as out:
-            out.write(_shp_header(50 + shp_bytes // 2, layer_type, bbox))
-            for r in meta:
-                part = os.path.join(parts_dir, f"part-{r['pid']:05d}.shp")
-                with open(part, "rb") as f:
-                    while True:
-                        hdr = f.read(8)
-                        if len(hdr) < 8:
-                            break
-                        (_, clen) = struct.unpack(">ii", hdr)
-                        recno += 1
-                        out.write(struct.pack(">ii", recno, clen))
-                        out.write(f.read(2 * clen))
-                        shx_entries += struct.pack(">ii", pos_words, clen)
-                        pos_words += 4 + clen
-        with open(base + ".shx", "wb") as out:
-            out.write(_shp_header(50 + 4 * total, layer_type, bbox) + bytes(shx_entries))
-
-        widths = [max([fl, *(r["widths"][i] for r in meta)]) for i, (_, _, fl, _) in enumerate(fdefs)]
-        fdefs = [(name, ft, w, fd) for (name, ft, _, fd), w in zip(fdefs, widths)]
-        with open(base + ".dbf", "wb") as out:
-            out.write(_dbf_head(total, fdefs))
-            for r in meta:
-                with open(os.path.join(parts_dir, f"part-{r['pid']:05d}.dbf"), "rb") as f:
-                    if list(r["widths"]) == widths:
-                        shutil.copyfileobj(f, out, 1 << 20)
-                    else:
-                        _dbf_relayout(f, out, r["n"], r["widths"], widths)
-            out.write(b"\x1a")
-        _write_sidecars(base, crs)
-    finally:
-        shutil.rmtree(parts_dir, ignore_errors=True)
+    _write(df, path, geom_col, crs)
