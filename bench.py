@@ -5,9 +5,7 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 Each query is materialized with a column-consuming aggregate
 (sum(xxhash64(*cols))) so Catalyst cannot prune expensive projected
 columns the way it does under count() — round-1 finding, now applied
-to the harness itself. Times include full plan execution. Run
-scripts/scaling_bench.py for the N-vs-4N scaling-efficiency evidence
-(BENCH/BASELINE.md).
+to the harness itself. Times include full plan execution.
 """
 
 from __future__ import annotations

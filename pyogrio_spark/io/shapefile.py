@@ -24,6 +24,7 @@ partition.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import struct
@@ -218,7 +219,7 @@ def shapefile_info(path: str) -> dict:
 
 def _dbf_value(txt: str, ftype: str, flen: int, fdec: int):
     """One stripped DBF field text -> its value typed for ``_spark_type``
-    (None for null)."""
+    (None for null; a blank C field is null, as OGR reads it)."""
     if ftype in ("N", "F"):
         if txt in ("", "*" * flen):
             return None
@@ -229,7 +230,7 @@ def _dbf_value(txt: str, ftype: str, flen: int, fdec: int):
         return None if txt in ("", "?") else txt.upper() in ("T", "Y")
     if ftype == "D":
         return f"{txt[0:4]}-{txt[4:6]}-{txt[6:8]}" if len(txt) == 8 else None
-    return txt
+    return txt or None
 
 
 def _decoder(path: str):
@@ -599,12 +600,16 @@ def _stitch(path: str, metas: list[dict], fdefs, crs) -> None:
                     _dbf_relayout(f, out, m["n"], m["widths"], widths)
         out.write(b"\x1a")
 
-    from pyogrio_spark.crs import crs_to_wkt
-
     with open(base + ".cpg", "w") as f:
         f.write("UTF-8")
-    with open(base + ".prj", "w") as f:
-        f.write(crs_to_wkt(crs))
+    if crs is None:  # no .prj, and not an overwritten layer's stale one
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(base + ".prj")
+    else:
+        from pyogrio_spark.crs import crs_to_wkt
+
+        with open(base + ".prj", "w") as f:
+            f.write(crs_to_wkt(crs))
 
 
 def _write(data, path: str, geom_col: str, crs) -> None:
@@ -638,9 +643,10 @@ def write_shapefile(
     ``datetime.date`` values D, anything else C at the longest value's
     UTF-8 width (UTF-8 ``.cpg``). Names are laundered as GDAL does (at
     most 10 bytes, unique, a warning per renamed field). ``crs`` is an
-    int EPSG code, ``"EPSG:<n>"``, or WKT (default EPSG:4326) and is
-    persisted to ``.prj`` — the reference writes the caller's CRS
-    rather than assuming one (_io.pyx:2810-2816).
+    int EPSG code, ``"EPSG:<n>"``, or WKT and is persisted to ``.prj``;
+    ``crs=None`` writes no ``.prj`` (and removes a stale one), so the
+    layer reads back with no CRS — the reference writes the caller's
+    CRS rather than assuming one (_io.pyx:2810-2816).
 
     ``append=True`` keeps the existing features and CRS and adds the
     frame's rows, matching its laundered column names to the layer's

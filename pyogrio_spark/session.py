@@ -4,7 +4,10 @@ Local testing runs on ``local[N]``; the same configuration block is what
 we would ship to a 1000-executor cluster via spark-submit --py-files:
 AQE on (runtime skew-join splitting + partition coalescing), Arrow
 enabled for the pandas-UDF refine stages, and shuffle partition counts
-sized by the caller, not hard-coded.
+sized by the caller, not hard-coded. Python workers import the package
+from its source root and run under ``pyogrio_spark._daemon``, Spark's
+daemon minus the per-task re-read of unchanged zip archives. Every
+default can be overridden through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -76,6 +79,13 @@ def get_spark(
         # (Spark merges this with the workers' own PYTHONPATH). Not
         # addPyFile: zip imports slow down every Python worker start.
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # Same assumption: the workers' daemon is pyogrio_spark._daemon,
+        # Spark's daemon minus the per-task re-read of its unchanged
+        # zip archives (about 0.25 s of CPU per Python task on CPython
+        # 3.11). Where executors cannot import the package before their
+        # first task (--py-files only), pass "pyspark.daemon" through
+        # extra_conf.
+        .config("spark.python.daemon.module", "pyogrio_spark._daemon")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -1,7 +1,7 @@
 """get_spark defaults: a session works on this host with no hand-set
 environment — master sized to the CPUs this process may run on, Python
-workers that can import the package, the JVM's GC-time goal and the
-64 KiB file split floor."""
+workers that can import the package, the JVM's GC-time goal, the
+64 KiB file split floor and the daemon that skips unchanged zip archives."""
 
 import os
 import subprocess
@@ -21,12 +21,19 @@ _SCRIPT = textwrap.dedent(
         assert spark.sparkContext.master == f"local[{len(os.sched_getaffinity(0))}]", spark.sparkContext.master
 
         def probe(batches):
+            import zipimport
+
             from pyogrio_spark.geometry.predicates import PreparedPolygon  # noqa: F401
 
+            code = zipimport.zipimporter.invalidate_caches.__code__
             for pdf in batches:
-                yield pdf
+                yield pdf.assign(fn=f"{code.co_filename}:{code.co_name}")
 
-        print("ROWS", spark.range(10).mapInPandas(probe, schema="id long").count())
+        rows = spark.range(10).mapInPandas(probe, schema="id long, fn string").collect()
+        print("ROWS", len(rows))
+        fns = {r.fn for r in rows}
+        assert len(fns) == 1 and fns.pop().endswith("pyogrio_spark/_daemon.py:invalidate_caches"), fns
+        assert spark.sparkContext.getConf().get("spark.python.daemon.module") == "pyogrio_spark._daemon"
         jvm_args = list(spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
         assert "-XX:GCTimeRatio=19" in jvm_args, jvm_args
         assert spark._jsparkSession.sessionState().conf().filesOpenCostInBytes() == 64 << 10

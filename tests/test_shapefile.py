@@ -162,6 +162,49 @@ def test_write_shapefile_points_and_lines(tmp_path):
     assert back2.n.tolist() == [7]
 
 
+def test_blank_string_field_reads_back_as_null(spark, tmp_path):
+    """A blank DBF C field is null, as OGR reads it, on both placements
+    (the empty string has no other spelling in a DBF)."""
+    import pandas as pd
+
+    from pyogrio_spark.io.shapefile import write_shapefile
+
+    pdf = pd.DataFrame(
+        {"label": ["a", None, ""], "geometry_wkb": [W.encode_point(float(i), 0.0) for i in range(3)]}
+    )
+    p = str(tmp_path / "labels.shp")
+    write_shapefile(pdf, p, crs=4326)
+    assert read_shapefile_pdf(p)[0]["label"].tolist() == ["a", None, None]
+    rows = read_shapefile(spark, p, distributed=True).orderBy("fid").collect()
+    assert [r.label for r in rows] == ["a", None, None]
+
+
+def test_no_crs_writes_no_prj(spark, tmp_path):
+    """crs=None writes no .prj (and drops an overwritten layer's), so the
+    layer reads back with no CRS; convert_dataset of a source without a
+    CRS gives a shapefile without one, as ogr2ogr does."""
+    import pandas as pd
+
+    from pyogrio_spark.io.dispatch import convert_dataset
+    from pyogrio_spark.io.flatgeobuf import write_flatgeobuf
+    from pyogrio_spark.io.shapefile import write_shapefile
+
+    pdf = pd.DataFrame({"n": np.arange(3, dtype=np.int64),
+                        "geometry_wkb": [W.encode_point(float(i), 1.0) for i in range(3)]})
+    shp = tmp_path / "pts.shp"
+    write_shapefile(pdf, str(shp), crs=32633)
+    assert read_shapefile_pdf(str(shp))[1]["crs"] == "EPSG:32633"
+    write_shapefile(pdf, str(shp))
+    assert not shp.with_suffix(".prj").exists()
+    assert read_shapefile_pdf(str(shp))[1]["crs"] is None
+
+    fgb, out = str(tmp_path / "src.fgb"), tmp_path / "out.shp"
+    write_flatgeobuf(pdf, fgb)
+    info = convert_dataset(spark, fgb, str(out))
+    assert info["crs"] is None and not out.with_suffix(".prj").exists()
+    assert info["features"] == 3
+
+
 def test_distributed_sink_roundtrip_and_parity(spark, tmp_path):
     """write_shapefile_distributed: executors encode .shp/.dbf records;
     the driver stream-patches record numbers and builds .shx in one
