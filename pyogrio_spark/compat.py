@@ -793,8 +793,9 @@ def write_dataframe(
     pandas with WKB bytes in ``geometry`` (or ``geometry_wkb``);
     format from ``driver`` or the path extension. ``crs`` (int EPSG /
     'EPSG:<n>' / WKT) is persisted per format — .prj, GPKG srs
-    registry, FlatGeobuf Crs table, GeoJSON 'crs' member; default
-    EPSG:4326. ``append=True`` adds features to an existing dataset
+    registry, FlatGeobuf Crs table, GeoJSON 'crs' member; with none,
+    the file reads back with no CRS (GeoJSON: WGS84 by definition).
+    ``append=True`` adds features to an existing dataset
     (raw.py:668); FlatGeobuf refuses, matching the reference driver's
     missing append capability. ``metadata``/``layer_metadata``/
     ``dataset_metadata`` follow the reference's validation

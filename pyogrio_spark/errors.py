@@ -29,14 +29,6 @@ class FieldError(DataLayerError):
     """Getting or setting a non-geometry field failed."""
 
 
-class NoDistributedScan(ValueError):
-    """The format has no byte-range-partitioned scan (e.g. a GeoJSON
-    FeatureCollection is one JSON document). Engine-specific — the
-    reference is single-process so the distinction doesn't exist there.
-    Callers like ``convert_dataset`` catch exactly this to fall back to
-    the driver-side codec without masking genuine argument errors."""
-
-
 def check_dataset_path(path: str) -> None:
     """Raise ``DataSourceError`` for a local path that does not exist,
     with the same message shape GDAL surfaces through the reference

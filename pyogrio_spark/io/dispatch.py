@@ -119,18 +119,14 @@ def open_table(
     Zip-archive variants (.shp.zip/.shz/.gpkg.zip/.zip) extract to a
     cached temp dir first.
 
-    Shapefile, GeoPackage and FlatGeobuf each have one chunk decoder
-    (shapefile .shx record ranges, GeoPackage pk ranges, FlatGeobuf
-    R-tree leaves); ``distributed`` chooses where it runs, not which
-    decoder: one Spark task per chunk (the file must be
+    Shapefile, GeoPackage, FlatGeobuf and GeoJSON each have one chunk
+    decoder (shapefile .shx record ranges, GeoPackage pk ranges,
+    FlatGeobuf R-tree leaves, GeoJSONSeq line-aligned byte ranges, a
+    FeatureCollection as one chunk); ``distributed`` chooses where it
+    runs, not which decoder: one Spark task per chunk (the file must be
     executor-visible), or the driver (the default; needed for archives
-    extracted on the driver). Both give the same schema and rows.
-    GeoJSONSeq with ``distributed=True`` splits by line and returns the
-    raw ``properties_json`` column, so it takes no read_table filters and
-    raises ``NoDistributedScan`` when given any. OSM is always
-    distributed. Plain GeoJSON FeatureCollection has no distributed
-    variant (single JSON document; GeoJSONSeq is the declared scale
-    layout) and raises ``NoDistributedScan``."""
+    extracted on the driver). Both give the same schema and rows. OSM is
+    always distributed."""
     if isinstance(path, (str, os.PathLike)):
         # URI grammar first (file:// / zip://...!member / remote
         # schemes), then existence: a missing path must surface the
@@ -164,14 +160,9 @@ def open_table(
 
         return read_flatgeobuf(spark, str(path), distributed=distributed, **read_table_kwargs)
     if fmt == "geojson":
-        if distributed:
-            _geojson_distributed_check(str(path), read_table_kwargs)
-            from pyogrio_spark.io.geojson import read_geojson_seq_distributed
-
-            return read_geojson_seq_distributed(spark, str(path))
         from pyogrio_spark.io.geojson import read_geojson
 
-        return read_geojson(spark, str(path), **read_table_kwargs)
+        return read_geojson(spark, str(path), distributed=distributed, **read_table_kwargs)
     if fmt == "osm":
         from pyogrio_spark.io.osm_pbf import read_osm
 
@@ -179,32 +170,6 @@ def open_table(
     from pyogrio_spark.io.reader import read_table
 
     return read_table(spark, path, **read_table_kwargs)
-
-
-def _geojson_distributed_check(path: str, read_table_kwargs: dict) -> None:
-    """Raise ``NoDistributedScan`` unless the line-split GeoJSONSeq scan
-    can serve the call: a FeatureCollection is one JSON document, and the
-    scan's raw ``properties_json`` frame takes no read_table argument."""
-    import inspect
-
-    from pyogrio_spark.errors import NoDistributedScan
-    from pyogrio_spark.io.reader import read_table
-
-    if not path.lower().endswith((".geojsonl", ".geojsons")):
-        raise NoDistributedScan(
-            "GeoJSON FeatureCollection has no distributed scan (one JSON "
-            "document); convert to GeoJSONSeq (.geojsonl) for the scale path"
-        )
-    params = inspect.signature(read_table).parameters
-    given = []
-    for k, v in sorted(read_table_kwargs.items()):
-        default = params[k].default if k in params else object()
-        if not (v is default or (type(v) is type(default) and v == default)):
-            given.append(k)
-    if given:
-        raise NoDistributedScan(
-            f"the distributed GeoJSONSeq scan returns raw properties_json and would ignore {', '.join(given)}"
-        )
 
 
 def _check_exists(path: str) -> None:
@@ -285,19 +250,9 @@ def dataset_layers(path: str) -> list[list[str]]:
 
         return osm_layers(path)
     if fmt == "geojson":
-        from pyogrio_spark.geometry import wkb as W
-        from pyogrio_spark.io.geojson import read_geojson_pdf
+        from pyogrio_spark.io.geojson import list_layers as geojson_layers
 
-        pdf = read_geojson_pdf(path)
-        seen = {W.geom_type_name(b) for b in pdf.geometry_wkb if b is not None}
-        name = os.path.splitext(os.path.basename(path))[0]
-        if len(seen) == 1:
-            t = next(iter(seen))
-        elif seen <= {"Polygon", "MultiPolygon"}:
-            t = "MultiPolygon"
-        else:
-            t = "Unknown"
-        return [[name, t]]
+        return geojson_layers(path)
     raise ValueError(f"dataset_layers needs a file-based source, got {path}")
 
 
@@ -315,61 +270,38 @@ def convert_dataset(
     (columns/where/bbox/mask/fids/skip/max) with format codecs.
 
     ``distributed=True`` keeps BOTH halves on executors where the
-    formats allow it: the format's one chunk decoder runs one task per
-    chunk (shapefile .shx ranges, GPKG pk ranges, FGB R-tree leaves;
-    ``distributed`` chooses where that decoder runs, not which one),
-    feeding distributed single-file sinks (FGB / shapefile part-encode +
-    driver byte-stitch) — the multi-GB conversion never materializes
-    the dataset on the driver. A FlatGeobuf, shapefile or GeoPackage
-    source into a shapefile or unindexed FlatGeobuf sink is ONE Spark
-    job with one task per scan chunk and no shuffle: each task decodes
-    its chunk, applies the exact bbox/mask refine (without ``sql=``),
-    the ``where`` filter and the projection, and encodes its part file.
-    GeoJSON is read on the driver: a FeatureCollection has no
-    distributed scan, and the line-split GeoJSONSeq scan yields raw
-    ``properties_json`` instead of the attributes. Sinks without a
-    distributed half (GeoJSON, GPKG single-writer SQLite) use the
+    formats allow it: the source's one chunk decoder runs one task per
+    chunk (``distributed`` chooses where that decoder runs, not which
+    one), feeding a distributed single-file sink (Shapefile, FlatGeobuf
+    and GeoJSON: part encode per partition plus driver byte stitch), so
+    the conversion never materializes the dataset on the driver. A
+    file source into a shapefile, unindexed FlatGeobuf or GeoJSON sink
+    is ONE Spark job with one task per scan chunk and no shuffle: each
+    task decodes its chunk, applies the exact bbox/mask refine (without
+    ``sql=``), the ``where`` filter and the projection, and encodes its
+    part file. A GeoPackage sink (single-writer SQLite) uses the
     driver-side codec with a toPandas boundary, same as the reference's
     single-process write.
 
     ``crs=None`` carries the source CRS through (the ogr2ogr default);
     pass a crs to override.
     """
+    from pyogrio_spark.io.flatgeobuf import write_flatgeobuf_distributed
+    from pyogrio_spark.io.geojson import write_geojson_distributed
+    from pyogrio_spark.io.shapefile import write_shapefile_distributed
+
     if crs is None:
         try:
             crs = dataset_info(src, layer=layer).get("crs")
         except (ValueError, OSError, KeyError):
             crs = None
-
-    from pyogrio_spark.errors import NoDistributedScan
-
-    # the line-split GeoJSONSeq scan yields raw properties_json, not the
-    # attributes: a conversion reads GeoJSONSeq on the driver
-    scan_distributed = distributed and not str(src).lower().endswith((".geojsonl", ".geojsons"))
-    try:
-        df = open_table(spark, src, layer=layer, distributed=scan_distributed, **read_table_kwargs)
-    except NoDistributedScan:
-        # only this specific condition falls back (round-5 ADVICE):
-        # genuine argument/format ValueErrors propagate immediately
-        # instead of re-executing down the driver path to fail again
-        df = open_table(spark, src, layer=layer, distributed=False, **read_table_kwargs)
-
-    low = str(dst).lower()
-    fmt_dst = detect_format(dst)
-    if distributed and fmt_dst == "flatgeobuf":
-        from pyogrio_spark.io.flatgeobuf import write_flatgeobuf_distributed
-
-        write_flatgeobuf_distributed(df.drop("fid"), dst, crs=crs)
-    elif distributed and fmt_dst == "shapefile":
-        from pyogrio_spark.io.shapefile import write_shapefile_distributed
-
-        write_shapefile_distributed(df.drop("fid"), dst, crs=crs)
+    df = open_table(spark, src, layer=layer, distributed=distributed, **read_table_kwargs)
+    sinks = {"flatgeobuf": write_flatgeobuf_distributed, "geojson": write_geojson_distributed,
+             "shapefile": write_shapefile_distributed}
+    sink = sinks.get(detect_format(dst)) if distributed else None
+    if sink is not None:
+        sink(df.drop("fid"), dst, crs=crs)
     else:
-        # GeoJSON(-Seq single file), GPKG: driver-side codecs by nature
-        # (one JSON document / single-writer SQLite). A directory of
-        # distributed GeoJSONSeq part files is available directly via
-        # ``write_geojson_seq_distributed`` when a single file is not
-        # required.
         from pyogrio_spark.compat import write_dataframe
 
         pdf = df.toPandas()

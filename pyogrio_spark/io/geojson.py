@@ -1,141 +1,277 @@
-"""GeoJSON source + sink (RFC 7946, stdlib json — no GDAL).
+"""GeoJSON (``.geojson``: a FeatureCollection, a Feature or a bare
+geometry) and GeoJSONSeq (``.geojsonl``/``.geojsons``: one feature per
+line) source and sink, RFC 7946 with stdlib json. Geometries are the
+engine's ISO WKB; coordinates are (lon, lat[, z]).
 
-Covers both layouts the reference's driver matrix exercises
-(/root/reference/pyogrio/tests/conftest.py:28-30): ``.geojson``
-(FeatureCollection) and ``.geojsonl``/``.geojsons`` (GeoJSONSeq — one
-feature per line, the streaming-friendly form). Geometries convert
-to/from the engine's ISO WKB; coordinates are (lon, lat[, z]).
-
-Scale note: a FeatureCollection must be parsed whole (driver-side,
-dimension-sized inputs); GeoJSONSeq is line-splittable — a large
-.geojsonl reads distributed via ``spark.read.text`` + a mapInPandas
-feature parser (``read_geojson_seq_distributed``).
-"""
+One decoder reads a chunk: a line-aligned byte range of a GeoJSONSeq file
+or a whole FeatureCollection. JSON declares no schema, so a header pass
+on the driver reads every feature once, as OGR's GeoJSON driver does, to
+cut the chunks and type the properties with ``property_types``, the one
+typing rule over Arrow types. The writers mirror it: one part encoder
+typed by the same rule, and one stitch (``io/sink.py``)."""
 
 from __future__ import annotations
 
+import base64
+import datetime
+import itertools
 import json
+import os
 import re
+import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyogrio_spark.geometry import wkb as W
+from pyogrio_spark.io.reader import NUMPY_DTYPE, chunk_frame
+
+# bytes of a GeoJSONSeq file per chunk, cut at the next line end
+CHUNK_BYTES = 32 << 20
+SEQ_EXTS = (".geojsonl", ".geojsons")
+# the inferred type of a value only JSON text holds: an object, or a list
+# holding a null, a nested value or values of two types
+_JSON = pa.struct([])
+_SCALARS = {type(None): pa.null(), bool: pa.bool_(), int: pa.int64(), float: pa.float64(), str: pa.string()}
+
+
+def _is_seq(path: str) -> bool:
+    return path.lower().endswith(SEQ_EXTS)
 
 
 def _crs_member(doc) -> str:
-    """GeoJSON 'crs' member (2008 spec, still emitted by GDAL for
-    non-WGS84 data) -> 'EPSG:<code>'; RFC 7946 files have none and are
-    WGS84 by definition."""
+    """The 2008-spec 'crs' member GDAL writes for non-WGS84 data ->
+    'EPSG:<code>'; RFC 7946 data is WGS84 by definition."""
     c = doc.get("crs") if isinstance(doc, dict) else None
-    if isinstance(c, dict):
-        name = (c.get("properties") or {}).get("name", "") or ""
-        m = re.search(r"EPSG:{1,2}(\d+)", name)
-        if m:
-            return f"EPSG:{m.group(1)}"
-    return "EPSG:4326"
+    name = str((c.get("properties") or {}).get("name") or "") if isinstance(c, dict) else ""
+    m = re.search(r"EPSG:{1,2}(\d+)", name)
+    return f"EPSG:{m.group(1)}" if m else "EPSG:4326"
 
 
-def _list_dtype(vals: list) -> str | None:
-    """Element-type a column whose non-null values are ALL lists,
-    mirroring GDAL's OGR list typing for GeoJSON (reference
-    tests/test_geopandas_io.py:390-509): uniform int lists ->
-    Integer64List, numeric -> RealList, strings -> StringList; a null
-    INSIDE any list degrades the whole column to a JSON column (the
-    reference's OFSTJSON behavior for .geojson,
-    tests/test_geopandas_io.py:432-441). Returns a reference dtype
-    string ('list(int64)'/'list(float64)'/'list(str)'/'list(bool)',
-    _io.pyx:48-63) or 'json', or None when the values are not
-    uniformly lists."""
-    if not vals or not all(isinstance(v, list) for v in vals):
-        return None
-    elems = [e for v in vals for e in v]
-    if any(e is None for e in elems):
-        return "json"
-    if elems and all(isinstance(e, bool) for e in elems):
-        return "list(bool)"
-    if elems and all(isinstance(e, int) and not isinstance(e, bool) for e in elems):
-        return "list(int64)"
-    if elems and all(isinstance(e, (int, float)) and not isinstance(e, bool) for e in elems):
-        return "list(float64)"
-    if all(isinstance(e, str) for e in elems):  # incl. only-empty-lists
-        return "list(str)"
-    return "json"
+def _scalar(t: pa.DataType) -> str | None:
+    if pa.types.is_boolean(t) or pa.types.is_integer(t) or pa.types.is_floating(t):
+        return "boolean" if pa.types.is_boolean(t) else "bigint" if pa.types.is_integer(t) else "double"
+    return "string" if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_null(t) else None
 
 
-def _json_safe(v):
-    """Property value -> JSON-serializable: numpy scalars unwrap,
-    numpy arrays / lists (how Spark ``toPandas`` delivers ``array<T>``
-    columns) become plain lists recursively, NaN/±Inf/None -> null
-    (json.dumps would otherwise emit non-RFC tokens for them)."""
-    if v is None or (isinstance(v, float) and not np.isfinite(v)):
-        return None
-    if isinstance(v, np.ndarray):
-        return [_json_safe(e) for e in v.tolist()]
-    if isinstance(v, (list, tuple)):
-        return [_json_safe(e) for e in v]
-    if isinstance(v, np.generic):
-        return v.item()
-    return v
-
-
-def _infer_dtypes(pdf: pd.DataFrame, cols: list[str]) -> list[str]:
-    """JSON carries no declarations; type each column from its non-null
-    values (bool before int: Python bool is an int subclass). List
-    values type per _list_dtype."""
+def property_types(schema: pa.Schema) -> list[tuple[str, str]]:
+    """The one GeoJSON typing rule, over the Arrow types of the
+    properties -> (name, Spark type) each: integers bigint, floats
+    double, a list of scalars an array of them (of strings when empty),
+    objects, other lists and a field tagged ``ogr_subtype=OFSTJSON``
+    "json" (JSON text, GDAL's OFSTJSON), anything else string."""
     out = []
-    for c in cols:
-        vals = [v for v in pdf[c] if v is not None and not (isinstance(v, float) and np.isnan(v))]
-        ld = _list_dtype(vals)
-        if ld is not None:
-            out.append(ld)
-        elif vals and all(isinstance(v, bool) for v in vals):
-            out.append("bool")
-        elif vals and all(isinstance(v, int) and not isinstance(v, bool) for v in vals):
-            out.append("int64")
-        elif vals and all(isinstance(v, (int, float)) and not isinstance(v, bool) for v in vals):
-            out.append("float64")
+    for f in schema:
+        t = f.type
+        if (f.metadata or {}).get(b"ogr_subtype") == b"OFSTJSON":
+            spark = "json"
+        elif pa.types.is_list(t) or pa.types.is_large_list(t):
+            spark = f"array<{_scalar(t.value_type)}>" if _scalar(t.value_type) else "json"
         else:
-            out.append("object")
+            spark = "json" if pa.types.is_nested(t) else _scalar(t) or "string"
+        out.append((f.name, spark))
     return out
 
 
-def geojson_info(path: str, force_total_bounds: bool = False) -> dict:
-    """read_info fields for GeoJSON sources. A FeatureCollection is one
-    JSON document (driver-parsed by definition), so its info comes from
-    the parse; GeoJSONSeq reports total_bounds None unless forced — the
-    reference's capability split (fast_total_bounds False for seq,
-    tests/test_core.py:698-706)."""
-    import os
+def _unify(a: pa.DataType, b: pa.DataType, mixed: pa.DataType = pa.string()) -> pa.DataType:
+    """The type of values of types ``a`` and ``b``: int and float are double,
+    lists unify their items, a list or object mix JSON, other mixes ``mixed``."""
+    if a == b or b == pa.null():
+        return a
+    if a == pa.null():
+        return b
+    if {a, b} == {pa.int64(), pa.float64()}:
+        return pa.float64()
+    if pa.types.is_list(a) and pa.types.is_list(b):
+        item = _unify(a.value_type, b.value_type, _JSON)
+        return _JSON if item == _JSON else pa.list_(item)
+    return _JSON if pa.types.is_nested(a) or pa.types.is_nested(b) else mixed
 
-    seq = path.endswith((".geojsonl", ".geojsons"))
-    pdf = read_geojson_pdf(path)
-    if seq:
-        crs = "EPSG:4326"
-    else:
-        with open(path) as f:
-            crs = _crs_member(json.load(f))
-    cols = [c for c in pdf.columns if c not in ("fid", "geometry_wkb")]
+
+def _json_type(v) -> pa.DataType:
+    """One parsed JSON value -> its Arrow type (an integer beyond int64
+    is a double)."""
+    if not isinstance(v, list):
+        big = type(v) is int and not -(1 << 63) <= v < 1 << 63
+        return pa.float64() if big else _SCALARS.get(type(v), _JSON)
+    item = pa.null()
+    for t in map(_json_type, v):
+        if t == pa.null() or pa.types.is_nested(t):
+            return _JSON
+        item = _unify(item, t, _JSON)
+    return _JSON if item == _JSON else pa.list_(item)
+
+
+_ENCODE = {"Point": lambda c: W.encode_point(*c[:3]), "LineString": W.encode_linestring,
+           "Polygon": W.encode_polygon, "MultiPoint": W.encode_multipoint,
+           "MultiLineString": W.encode_multilinestring, "MultiPolygon": W.encode_multipolygon}
+
+
+def _coords_to_geom(gj: dict) -> bytes | None:
+    if gj is None:
+        return None
+    if gj["type"] == "GeometryCollection":
+        return W.encode_collection([_coords_to_geom(g) for g in gj["geometries"]])
+    if gj["type"] not in _ENCODE:
+        raise ValueError(f"unsupported GeoJSON geometry type {gj['type']}")
+    return _ENCODE[gj["type"]](gj["coordinates"])
+
+
+def _type_name(gj) -> str | None:
+    """A GeoJSON geometry's type as ``W.geom_type_name`` names its WKB."""
+    if gj is None:
+        return None
+    c = gj.get("coordinates")
+    while isinstance(c, list) and c and isinstance(c[0], list):
+        c = c[0]
+    return gj["type"] + (" Z" if isinstance(c, list) and len(c) > 2 else "")
+
+
+def _at(fid: int, line: int | None, exc: Exception) -> ValueError:
+    return ValueError(f"feature {fid}{'' if line is None else f' (line {line})'}: {type(exc).__name__}: {exc}")
+
+
+def _features(data: bytes, seq: bool, fid: int, line: int):
+    """One chunk's bytes -> (CRS, iterator of (fid, line, feature)): the
+    non-blank lines of a GeoJSONSeq range from ``fid`` and ``line`` (a
+    line that does not parse raises ValueError naming it), or the
+    features of a FeatureCollection, Feature or bare geometry."""
+    if not seq:
+        doc = json.loads(data)
+        kind = doc.get("type")
+        feats = (doc["features"] if kind == "FeatureCollection" else [doc] if kind == "Feature"
+                 else [{"type": "Feature", "properties": {}, "geometry": doc}])
+        return _crs_member(doc), ((i, None, feat) for i, feat in enumerate(feats))
+
+    def lines(fid, line):
+        for text in data.split(b"\n"):
+            if text := text.strip():
+                try:
+                    feat = json.loads(text)
+                except ValueError as exc:
+                    raise _at(fid, line, exc) from exc
+                yield fid, line, feat
+                fid += 1
+            line += 1
+
+    return "EPSG:4326", lines(fid, line)
+
+
+def _read(path: str, lo: int, hi: int) -> bytes:
+    with open(path, "rb") as f:
+        f.seek(lo)
+        return f.read(hi - lo)
+
+
+def _layout(path: str) -> tuple[list, list, int, str, str]:
+    """The header pass, every feature once on the driver -> ((name,
+    Spark type) fields, chunks ``(byte_lo, byte_hi, first fid, first
+    line)`` of about ``CHUNK_BYTES``, feature count, layer geometry type
+    (the one type; MultiPolygon for a Polygon/MultiPolygon mix; else
+    Unknown), CRS). A feature that does not parse raises FeatureError
+    naming the path, the chunk's byte range and the feature."""
+    from pyogrio_spark.errors import FeatureError
+
+    seq, size = _is_seq(path), os.path.getsize(path)
+    cuts = [0]
+    with open(path, "rb") as f:
+        while seq and cuts[-1] + CHUNK_BYTES < size:
+            f.seek(cuts[-1] + CHUNK_BYTES)
+            f.readline()
+            cuts.append(f.tell())
+    cuts += [size] if cuts[-1] < size or not seq else []
+    types, gtypes, chunks, n, line, crs = {}, set(), [], 0, 1, "EPSG:4326"
+    for lo, hi in zip(cuts, cuts[1:]):
+        data = _read(path, lo, hi)
+        chunks.append((lo, hi, n, line if seq else None))
+        try:
+            crs, feats = _features(data, seq, n, line)
+            for fid, ln, feat in feats:
+                try:
+                    for k, v in (feat.get("properties") or {}).items():
+                        types[k] = _unify(types.get(k, pa.null()), _json_type(v))
+                    gtypes.add(_type_name(feat.get("geometry")))
+                except Exception as exc:
+                    raise _at(fid, ln, exc) from exc
+                n += 1
+        except Exception as exc:
+            raise FeatureError(f"{path}: cannot decode bytes [{lo}, {hi}): {type(exc).__name__}: {exc}") from exc
+        line += data.count(b"\n")
+    gtypes.discard(None)
+    gtype = (gtypes.pop() if len(gtypes) == 1
+             else "MultiPolygon" if gtypes and gtypes <= {"Polygon", "MultiPolygon"} else "Unknown")
+    return property_types(pa.schema(list(types.items()))), chunks, n, gtype, crs
+
+
+def _spark_fields(fields: list) -> list[tuple[str, str]]:
+    return [(n, "string" if t == "json" else t) for n, t in fields]
+
+
+def _decoder(path: str, fields: list):
+    """The one GeoJSON decoder: ``decode(chunk)`` reads only the chunk's
+    bytes -> a ``chunk_frame``; json values, and non-string values in a
+    string column (mixed scalars), become JSON text."""
+    def decode(chunk) -> pd.DataFrame:
+        fids, props, geoms = [], [], []
+        for fid, line, feat in _features(_read(path, chunk[0], chunk[1]), _is_seq(path), chunk[2], chunk[3])[1]:
+            try:
+                geoms.append(_coords_to_geom(feat.get("geometry")))
+            except Exception as exc:
+                raise _at(fid, line, exc) from exc
+            props.append(feat.get("properties") or {})
+            fids.append(fid)
+        values = [[json.dumps(v) if v is not None and (t == "json" or t == "string" and not isinstance(v, str))
+                   else v for v in (p.get(name) for p in props)] for name, t in fields]
+        return chunk_frame(fids, _spark_fields(fields), values, geoms)
+
+    return decode
+
+
+def read_geojson(spark, path: str, distributed: bool = False, **read_table_kwargs):
+    """GeoJSON(Seq) -> engine DataFrame (fid, properties, geometry_wkb)
+    with every read_table filter. ``distributed`` places the decode
+    (``reader.scan_chunks``): one Spark task per chunk, or the driver.
+    JSON columns are tagged ``ogr_subtype=OFSTJSON`` for the facade."""
+    from pyspark.sql import functions as F
+
+    from pyogrio_spark.io.reader import chunk_schema, scan_chunks
+
+    fields, chunks = _layout(path)[:2]
+    df = scan_chunks(spark, path, chunks, _decoder(path, fields), chunk_schema(_spark_fields(fields)),
+                     distributed=distributed, **read_table_kwargs)
+    json_cols = {n for n, t in fields if t == "json"}
+    if not json_cols & set(df.columns):
+        return df
+    return df.select(*[F.col(f"`{c}`").alias(c, metadata={"ogr_subtype": "OFSTJSON"}) if c in json_cols
+                       else F.col(f"`{c}`") for c in df.columns])
+
+
+def read_geojson_pdf(path: str) -> pd.DataFrame:
+    """The whole file through the one decoder -> pandas frame in numpy
+    dtypes (JSON columns hold JSON text)."""
+    from pyogrio_spark.io.reader import numpy_dtypes
+
+    return numpy_dtypes(_decoder(path, _layout(path)[0])((0, os.path.getsize(path), 0, 1)))
+
+
+def geojson_info(path: str, force_total_bounds: bool = False) -> dict:
+    """read_info fields from the header pass; GeoJSONSeq total bounds are
+    None unless forced, as in the reference (its test_core.py:698-706)."""
+    fields, _, count, gtype, crs = _layout(path)
     total_bounds = None
-    if not seq or force_total_bounds:
-        bs = W.bounds_many([None if b is None else bytes(b) for b in pdf.geometry_wkb])
+    if force_total_bounds or not _is_seq(path):
+        bs = W.bounds_many(list(_decoder(path, fields)((0, os.path.getsize(path), 0, 1))["geometry_wkb"]))
         if len(bs) and np.isfinite(bs).any():
-            total_bounds = (
-                float(np.nanmin(bs[:, 0])), float(np.nanmin(bs[:, 1])),
-                float(np.nanmax(bs[:, 2])), float(np.nanmax(bs[:, 3])),
-            )
-    seen = {W.geom_type_name(b) for b in pdf.geometry_wkb if b is not None}
-    if len(seen) == 1:
-        gtype = next(iter(seen))
-    elif seen <= {"Polygon", "MultiPolygon"} and seen:
-        gtype = "MultiPolygon"
-    else:
-        gtype = "Unknown"
+            total_bounds = (float(np.nanmin(bs[:, 0])), float(np.nanmin(bs[:, 1])),
+                            float(np.nanmax(bs[:, 2])), float(np.nanmax(bs[:, 3])))
+    lists = {"boolean": "bool", "bigint": "int64", "double": "float64", "string": "str"}
     return {
         "layer_name": os.path.splitext(os.path.basename(path))[0],
-        "features": len(pdf),
-        "fields": cols,
-        "dtypes": _infer_dtypes(pdf, cols),
+        "features": count,
+        "fields": [n for n, _ in fields],
+        "dtypes": [f"list({lists[t[6:-1]]})" if t.startswith("array<") else NUMPY_DTYPE.get(t, t)
+                   for _, t in fields],
         "total_bounds": total_bounds,
         "geometry_type": gtype,
         "crs": crs,
@@ -143,255 +279,115 @@ def geojson_info(path: str, force_total_bounds: bool = False) -> dict:
     }
 
 
-def _coords_to_geom(gj: dict) -> bytes | None:
-    if gj is None:
-        return None
-    t = gj["type"]
-    c = gj.get("coordinates")
-    if t == "Point":
-        return W.encode_point(*c[:3]) if len(c) > 2 else W.encode_point(c[0], c[1])
-    if t == "LineString":
-        return W.encode_linestring(np.asarray(c, dtype=np.float64))
-    if t == "Polygon":
-        return W.encode_polygon([np.asarray(r, dtype=np.float64) for r in c])
-    if t == "MultiPoint":
-        return W.encode_multipoint(np.asarray(c, dtype=np.float64)[:, :2])
-    if t == "MultiLineString":
-        return W.encode_multilinestring([np.asarray(l, dtype=np.float64) for l in c])
-    if t == "MultiPolygon":
-        return W.encode_multipolygon([[np.asarray(r, dtype=np.float64) for r in p] for p in c])
-    if t == "GeometryCollection":
-        return W.encode_collection([_coords_to_geom(g) for g in gj["geometries"]])
-    raise ValueError(f"unsupported GeoJSON geometry type {t}")
+def list_layers(path: str) -> list[list[str]]:
+    return [[os.path.splitext(os.path.basename(path))[0], _layout(path)[3]]]
 
 
 def _geom_to_coords(g) -> dict:
-    def pt(p):
-        return [float(v) for v in p]
-
-    if g.type == "Point":
-        return {"type": "Point", "coordinates": pt(g.coords)}
-    if g.type == "LineString":
-        return {"type": "LineString", "coordinates": [pt(p) for p in g.coords]}
-    if g.type == "Polygon":
-        return {"type": "Polygon", "coordinates": [[pt(p) for p in r] for r in g.coords]}
-    if g.type == "MultiPoint":
-        return {"type": "MultiPoint", "coordinates": [pt(p.coords) for p in g.coords]}
-    if g.type == "MultiLineString":
-        return {"type": "MultiLineString", "coordinates": [[pt(p) for p in l.coords] for l in g.coords]}
-    if g.type == "MultiPolygon":
-        return {"type": "MultiPolygon", "coordinates": [[[pt(p) for p in r] for r in poly.coords] for poly in g.coords]}
     if g.type == "GeometryCollection":
-        return {"type": "GeometryCollection", "geometries": [_geom_to_coords(p) for p in g.coords]}
-    raise ValueError(f"cannot write geometry type {g.type}")
+        return {"type": g.type, "geometries": [_geom_to_coords(p) for p in g.coords]}
+    c = (g.coords.tolist() if g.type in ("Point", "LineString") else [r.tolist() for r in g.coords]
+         if g.type == "Polygon" else [_geom_to_coords(p)["coordinates"] for p in g.coords])
+    return {"type": g.type, "coordinates": c}
 
 
-def _features_to_pdf(features: list[dict]) -> pd.DataFrame:
-    rows, geoms = [], []
-    for f in features:
-        rows.append(f.get("properties") or {})
-        geoms.append(_coords_to_geom(f.get("geometry")))
-    pdf = pd.DataFrame(rows)
-    pdf.insert(0, "fid", np.arange(len(rows), dtype=np.int64))
-    pdf["geometry_wkb"] = geoms
-    return pdf
+def _json_safe(v, t: str = ""):
+    """A value of a column of Spark type ``t`` -> JSON: arrays become
+    lists, NaN/±Inf/None/NA null (not non-RFC tokens), a bigint an int
+    (Spark hands a nullable one over as float), JSON text its value,
+    dates ISO 8601 and binary base64 text, as GDAL writes them."""
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return [_json_safe(e) for e in v]
+    if isinstance(v, np.generic):
+        v = v.item()
+    if v is None or v is pd.NA or v is pd.NaT or (isinstance(v, float) and not np.isfinite(v)):
+        return None
+    if t == "bigint":
+        return int(v)
+    if t == "json" and isinstance(v, str):
+        return json.loads(v)
+    if isinstance(v, datetime.date):
+        return v.isoformat()
+    if isinstance(v, (bytes, bytearray)):
+        return base64.b64encode(v).decode("ascii")
+    return v
 
 
-def read_geojson_pdf(path: str) -> pd.DataFrame:
-    """.geojson (FeatureCollection / single Feature / bare geometry) or
-    .geojsonl/.geojsons (one feature per line) -> pandas frame."""
-    if path.endswith((".geojsonl", ".geojsons")):
-        with open(path) as f:
-            feats = [json.loads(line) for line in f if line.strip()]
-        return _features_to_pdf(feats)
-    with open(path) as f:
-        doc = json.load(f)
-    if doc.get("type") == "FeatureCollection":
-        return _features_to_pdf(doc["features"])
-    if doc.get("type") == "Feature":
-        return _features_to_pdf([doc])
-    return _features_to_pdf([{"type": "Feature", "properties": {}, "geometry": doc}])
+def _encode_part(frames, part: str, geom_col: str, cols: list[str], types: list[str]) -> dict:
+    """The one GeoJSON part encoder: ``frames`` -> ``part``, one Feature
+    per line (json.dumps writes repr-exact floats)."""
+    n = 0
+    with open(part, "w") as f:
+        for pdf in frames:
+            rows = zip(*(pdf[c].tolist() for c in cols)) if cols else itertools.repeat(())
+            for b, values in zip(pdf[geom_col].tolist(), rows):
+                props = {c: _json_safe(v, t) for c, t, v in zip(cols, types, values)}
+                geom = None if b is None else _geom_to_coords(W.parse_wkb(bytes(b)))
+                f.write(json.dumps({"type": "Feature", "properties": props, "geometry": geom}) + "\n")
+                n += 1
+    return {"n": n}
 
 
-def read_geojson(spark, path: str, **read_table_kwargs):
-    """GeoJSON -> engine DataFrame, composable with read_table filters."""
-    from pyogrio_spark.io.reader import read_table
-
-    pdf = read_geojson_pdf(path)
-    _SPARK_LIST = {
-        "list(bool)": "array<boolean>",
-        "list(int64)": "array<bigint>",
-        "list(float64)": "array<double>",
-        "list(str)": "array<string>",
-    }
-    fields = []
-    json_cols = set()
-    for c in pdf.columns:
-        if c == "geometry_wkb":
-            fields.append(f"`{c}` binary")
-        elif pd.api.types.is_integer_dtype(pdf[c]):
-            fields.append(f"`{c}` bigint")
-        elif pd.api.types.is_float_dtype(pdf[c]):
-            fields.append(f"`{c}` double")
-        elif pd.api.types.is_bool_dtype(pdf[c]):
-            fields.append(f"`{c}` boolean")
-        else:
-            vals = [
-                v for v in pdf[c]
-                if v is not None and not (isinstance(v, float) and np.isnan(v))
-            ]
-            ld = _list_dtype(vals)
-            if ld in _SPARK_LIST:
-                if ld == "list(float64)":  # uniform numeric: ints ride along
-                    pdf[c] = pdf[c].map(
-                        lambda v: None if not isinstance(v, list) else [float(e) for e in v]
-                    )
-                fields.append(f"`{c}` {_SPARK_LIST[ld]}")
-            elif ld == "json" or any(isinstance(v, (list, dict)) for v in vals):
-                # irregular lists / objects -> JSON string column (the
-                # reference's OFSTJSON degradation for .geojson files);
-                # tagged with column metadata so the pandas facade can
-                # parse values back to Python objects (reference
-                # behavior: OFSTJSON arrays read back as lists). Every
-                # non-null value is json.dumps'd — scalars included —
-                # so the facade's json.loads round-trips a mixed
-                # scalar/list column losslessly instead of crashing on
-                # a bare string.
-                pdf[c] = pdf[c].map(
-                    lambda v: None
-                    if v is None or (isinstance(v, float) and np.isnan(v))
-                    else json.dumps(v)
-                )
-                fields.append(f"`{c}` string")
-                json_cols.add(c)
-            else:
-                fields.append(f"`{c}` string")
-    df = spark.createDataFrame(pdf, schema=", ".join(fields))
-    if json_cols:
-        from pyspark.sql import functions as F
-
-        df = df.select(
-            *[
-                F.col(f"`{c}`").alias(c, metadata={"ogr_subtype": "OFSTJSON"})
-                if c in json_cols
-                else F.col(f"`{c}`")
-                for c in df.columns
-            ]
-        )
-    return read_table(spark, df, **read_table_kwargs)
-
-
-def read_geojson_seq_distributed(spark, path: str):
-    """Scale path for GeoJSONSeq: the file splits by line, each executor
-    parses its share — no driver bottleneck."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import functions as F
-
-    lines = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-
-    @pandas_udf("binary")
-    def to_wkb(s: pd.Series) -> pd.Series:
-        return pd.Series([_coords_to_geom(json.loads(v).get("geometry")) for v in s])
-
-    @pandas_udf("string")
-    def props(s: pd.Series) -> pd.Series:
-        return pd.Series([json.dumps(json.loads(v).get("properties") or {}, sort_keys=True) for v in s])
-
-    return lines.select(props("value").alias("properties_json"), to_wkb("value").alias("geometry_wkb"))
-
-
-def write_geojson(
-    pdf: pd.DataFrame, path: str, geom_col: str = "geometry_wkb", crs=None,
-    append: bool = False,
-) -> None:
-    """Frame with WKB geometry -> .geojson FeatureCollection or
-    .geojsonl sequence (by extension). Round-trips through
-    read_geojson_pdf with coordinate identity (repr-exact floats).
-
-    RFC 7946 GeoJSON is WGS84 by definition; a non-4326 ``crs`` is
-    persisted as the 2008-spec 'crs' member (the same convention GDAL
-    uses for non-WGS84 data), FeatureCollection layout only.
-
-    ``append=True``: GeoJSONSeq appends lines in place (O(new data) —
-    the layout exists for exactly this); a FeatureCollection is one
-    JSON document, so append re-serializes existing + new features
-    (the same cost GDAL pays)."""
-    import os
-
-    from pyogrio_spark.crs import crs_to_epsg
-
-    epsg = crs_to_epsg(crs) if crs is not None else None
-    if epsg is not None and epsg != 4326 and path.endswith((".geojsonl", ".geojsons")):
-        raise ValueError("GeoJSONSeq has no 'crs' member; data must be EPSG:4326")
-    if append and not os.path.exists(path):
-        raise ValueError(f"append=True but {path} does not exist")
-    feats = []
-    for i in range(len(pdf)):
-        row = {c: pdf[c].iloc[i] for c in pdf.columns}
-        props = {
-            k: _json_safe(v) for k, v in row.items() if k not in (geom_col, "fid")
-        }
-        g = row[geom_col]
-        feats.append(
-            {
-                "type": "Feature",
-                "properties": props,
-                "geometry": None if g is None else _geom_to_coords(W.parse_wkb(bytes(g))),
-            }
-        )
-    if path.endswith((".geojsonl", ".geojsons")):
-        with open(path, "a" if append else "w") as f:
-            for feat in feats:
-                f.write(json.dumps(feat) + "\n")
+def _stitch(path: str, metas: list[dict], epsg, append: bool) -> None:
+    """The one GeoJSON stitch: GeoJSONSeq concatenates the parts' lines;
+    a FeatureCollection wraps them (after the old features on append)
+    with a 2008-spec ``crs`` member for a non-4326 CRS."""
+    if _is_seq(path):
+        with open(path, "ab" if append else "wb") as out:
+            for m in metas:
+                with open(m["part"], "rb") as f:
+                    shutil.copyfileobj(f, out, 1 << 20)
         return
+    head, lines = {"type": "FeatureCollection"}, []
     if append:
         with open(path) as f:
             doc = json.load(f)
         if doc.get("type") != "FeatureCollection":
             raise ValueError(f"append=True needs a FeatureCollection in {path}")
-        doc["features"].extend(feats)
-    else:
-        doc = {"type": "FeatureCollection", "features": feats}
-        if epsg is not None and epsg != 4326:
-            doc = {
-                "type": "FeatureCollection",
-                "crs": {
-                    "type": "name",
-                    "properties": {"name": f"urn:ogc:def:crs:EPSG::{epsg}"},
-                },
-                "features": feats,
-            }
-    with open(path, "w") as f:
-        json.dump(doc, f)
+        head = {k: v for k, v in doc.items() if k != "features"}
+        lines = [json.dumps(feat) for feat in doc["features"]]
+    elif epsg is not None and epsg != 4326:
+        head["crs"] = {"type": "name", "properties": {"name": f"urn:ogc:def:crs:EPSG::{epsg}"}}
+
+    def encoded():
+        for m in metas:
+            with open(m["part"]) as f:
+                yield from (line.rstrip("\n") for line in f)
+
+    with open(path, "w") as out:
+        out.write(json.dumps(head)[:-1] + ', "features": [')
+        for i, line in enumerate(itertools.chain(lines, encoded())):
+            out.write((", " if i else "") + line)
+        out.write("]}")
 
 
-def write_geojson_seq_distributed(df, out_dir: str, geom_col: str = "geometry_wkb") -> None:
-    """Distributed GeoJSONSeq sink: every partition serializes its own
-    rows to feature-per-line JSON (the same encoding as
-    ``write_geojson``'s .geojsonl branch, repr-exact floats) and Spark's
-    text writer emits one part file per partition — the write-side
-    mirror of ``read_geojson_seq_distributed``, and the engine's first
-    distributed non-parquet sink. Read the directory back with
-    ``read_geojson_seq_distributed(spark, f"{out_dir}/part-*")``.
+def write_geojson(pdf, path: str, geom_col: str = "geometry_wkb", crs=None, append: bool = False) -> None:
+    """Frame with WKB geometry -> FeatureCollection or GeoJSONSeq (by
+    extension); a pandas frame is one part, encoded in process without
+    Spark. Floats are repr-exact. A non-4326 ``crs`` becomes the 2008-spec
+    'crs' member, as GDAL writes it; GeoJSONSeq refuses one. ``append``
+    adds GeoJSONSeq lines in place and rewrites a FeatureCollection."""
+    from pyogrio_spark.crs import crs_to_epsg
+    from pyogrio_spark.io.sink import attribute_schema, encoded_parts
 
-    Driver does no per-row work; the encode runs in an Arrow-batched
-    mapInPandas stage (format sinks are Python-side by nature — the
-    same boundary as every other codec here)."""
-    cols = [c for c in df.columns if c not in (geom_col, "fid")]
+    epsg = crs_to_epsg(crs) if crs is not None else None
+    if epsg is not None and epsg != 4326 and _is_seq(path):
+        raise ValueError("GeoJSONSeq has no 'crs' member; data must be EPSG:4326")
+    if append and not os.path.exists(path):
+        raise ValueError(f"append=True but {path} does not exist")
+    # a ``fid`` column is the engine's row-id convention, not a property
+    cols = [c for c in pdf.columns if c not in (geom_col, "fid")]
+    types = [t for _, t in property_types(attribute_schema(pdf, cols))]
 
-    def enc(pdfs):
-        for pdf in pdfs:
-            lines = []
-            for row in pdf.itertuples(index=False):
-                d = row._asdict()
-                g = d.get(geom_col)
-                props = {k: _json_safe(v) for k, v in d.items() if k in cols}
-                feat = {
-                    "type": "Feature",
-                    "properties": props,
-                    "geometry": None if g is None else _geom_to_coords(W.parse_wkb(bytes(g))),
-                }
-                lines.append(json.dumps(feat))
-            yield pd.DataFrame({"value": lines})
+    def encode(frames, part):
+        return _encode_part(frames, part, geom_col, cols, types)
 
-    df.mapInPandas(enc, schema="value string").write.mode("overwrite").text(out_dir)
+    with encoded_parts(pdf, path, encode, "n long") as metas:
+        _stitch(path, metas, epsg, append)
+
+
+def write_geojson_distributed(df, path: str, geom_col: str = "geometry_wkb", crs=None) -> None:
+    """``write_geojson`` for a Spark DataFrame in one job with no
+    exchange: one part per partition (executors must see ``path``'s
+    directory), one file; one partition gives the same bytes."""
+    write_geojson(df, path, geom_col, crs)

@@ -313,12 +313,13 @@ def write_geopackage(
     returns the same rows, and external GPKG readers see a conformant
     file.
 
-    ``crs`` (int EPSG / 'EPSG:<n>' / WKT, default EPSG:4326) is
-    registered in ``gpkg_spatial_ref_sys`` and referenced by the layer
-    — the reference persists the caller's CRS (_io.pyx:2810-2816). A
-    WKT that doesn't identify to an EPSG code registers as a custom SRS
-    (organization NONE, srs_id 100000). ``srs_id`` remains as a
-    back-compat alias for an EPSG code.
+    ``crs`` (int EPSG / 'EPSG:<n>' / WKT) is registered in
+    ``gpkg_spatial_ref_sys`` and referenced by the layer — the reference
+    persists the caller's CRS (_io.pyx:2810-2816). A WKT that doesn't
+    identify to an EPSG code registers as a custom SRS (organization
+    NONE, srs_id 100000). ``srs_id`` remains as a back-compat alias for
+    an EPSG code. With neither, the layer references the spec's
+    undefined cartesian SRS (srs_id -1) and reads back with no CRS.
 
     ``append=True`` INSERTs into the existing layer table (schema must
     match) and widens the gpkg_contents bounds — the reference's
@@ -343,10 +344,10 @@ def write_geopackage(
         return _append_geopackage(pdf, path, layer=layer, geom_col=geom_col)
     from pyogrio_spark.crs import crs_to_epsg, crs_to_wkt
 
+    crs = srs_id if crs is None else crs
     if crs is None:
-        crs = srs_id if srs_id is not None else 4326
-    epsg = crs_to_epsg(crs)
-    if epsg is not None:
+        srs_id, srs_row = -1, ("Undefined cartesian SRS", -1, "NONE", -1, "undefined")
+    elif (epsg := crs_to_epsg(crs)) is not None:
         srs_id = epsg
         srs_row = (f"EPSG:{epsg}", epsg, "EPSG", epsg, crs_to_wkt(epsg))
     else:  # unidentifiable WKT: custom SRS entry carrying the definition

@@ -25,13 +25,17 @@ import pyarrow as pa
 def attribute_schema(data, cols: list[str]) -> pa.Schema:
     """Arrow schema of the attribute columns ``cols`` of a pandas frame
     (``pa.Schema.from_pandas``) or of a Spark DataFrame (Spark's own
-    Arrow mapping). A pandas object column that Arrow cannot type (mixed
-    values) is a string column, as its values are written with ``str``."""
+    Arrow mapping, keeping each column's metadata, such as an
+    ``ogr_subtype`` tag). A pandas object column that Arrow cannot type
+    (mixed values) is a string column, as its values are written with
+    ``str``."""
     if not isinstance(data, pd.DataFrame):
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import StructType
 
-        return to_arrow_schema(StructType([data.schema[c] for c in cols]))
+        schema = to_arrow_schema(StructType([data.schema[c] for c in cols]))
+        return pa.schema([f.with_metadata({k: str(v) for k, v in data.schema[f.name].metadata.items()})
+                          for f in schema])
     fields = []
     for c in cols:
         try:

@@ -70,6 +70,26 @@ def test_crs_roundtrip_all_binary_formats(tmp_path, crs):
         assert read_info(path)["crs"] == want, ext
 
 
+def test_no_crs_reads_back_none_all_binary_formats(spark, tmp_path):
+    """A frame written with no CRS reads back with none: a GeoPackage
+    layer references the spec's undefined cartesian SRS (srs_id -1),
+    as a shapefile has no .prj and a FlatGeobuf no Crs table; so does
+    the GeoPackage a no-CRS shapefile converts to."""
+    from pyogrio_spark.compat import read_info, write_dataframe
+    from pyogrio_spark.io.dispatch import convert_dataset
+
+    pdf = pd.DataFrame({"v": [1, 2], "geometry": [W.encode_point(0.0, 0.0), W.encode_point(1.0, 1.0)]})
+    for ext in (".shp", ".gpkg", ".fgb"):
+        path = str(tmp_path / f"none{ext}")
+        write_dataframe(pdf, path)
+        assert read_info(path)["crs"] is None, ext
+    dst = str(tmp_path / "converted.gpkg")
+    assert convert_dataset(spark, str(tmp_path / "none.shp"), dst)["crs"] is None
+    con = sqlite3.connect(dst)
+    assert con.execute("SELECT srs_id FROM gpkg_geometry_columns").fetchone()[0] == -1
+    con.close()
+
+
 def test_geojson_crs_member_roundtrip(tmp_path):
     from pyogrio_spark.compat import read_info, write_dataframe
 

@@ -78,7 +78,7 @@ def test_write_read_roundtrip(tmp_path):
     write_geopackage(pdf, out, layer="pts")
     back, info = read_geopackage_pdf(out)
     assert info["layer_name"] == "pts" and info["features"] == 5
-    assert info["geometry_type"] == "Point" and info["crs"] == "EPSG:4326"
+    assert info["geometry_type"] == "Point" and info["crs"] is None  # written with no CRS
     assert [bytes(b) for b in back.geometry_wkb] == pts  # WKB byte-identical round trip
     assert back.name.tolist() == pdf.name.tolist()
     assert back["count"].tolist() == [0, 1, 2, 3, 4]

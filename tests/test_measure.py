@@ -261,7 +261,7 @@ def test_crs_reproject_end_to_end(spark, tmp_path):
             "geometry": [W.encode_point(10.0, 50.0), W.encode_point(-45.0, -20.0)],
         }
     )
-    write_dataframe(pdf, src)  # EPSG:4326 default
+    write_dataframe(pdf, src, crs="EPSG:4326")
     assert read_info(src)["crs"] == "EPSG:4326"
 
     df = open_table(spark, src)

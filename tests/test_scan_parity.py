@@ -3,24 +3,29 @@
 executors, so they must give the same schema and the same rows by fid,
 with and without bbox/where/columns. The inputs are built here from
 ``fixtures.make_zones()`` through the engine's own writers, with a
-nullable integer column, a zero-feature file and a deleted DBF record."""
+nullable integer column, a zero-feature file and a deleted DBF record.
+GeoJSON has no chunk-size argument: its tests shrink the module's
+``CHUNK_BYTES`` so a GeoJSONSeq file splits into several chunks."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from pyogrio_spark.fixtures import make_zones
+from pyogrio_spark.io import geojson
 from pyogrio_spark.io.dispatch import convert_dataset, open_table
 from pyogrio_spark.io.flatgeobuf import write_flatgeobuf
 from pyogrio_spark.io.geopackage import write_geopackage
 from pyogrio_spark.io.shapefile import write_shapefile
 
-# format -> (writer, the reader's chunk-size argument)
+# format -> (writer, the reader's chunk-size argument or None)
 FORMATS = {
     "shp": (lambda pdf, p: write_shapefile(pdf, p), "chunk_records"),
     "gpkg": (lambda pdf, p: write_geopackage(pdf, p, layer="zones"), "chunk_rows"),
     # indexed, so a bbox also prunes storage in both placements
     "fgb": (lambda pdf, p: write_flatgeobuf(pdf, p, index_node_size=16), "chunk_features"),
+    "geojson": (geojson.write_geojson, None),
+    "geojsonl": (geojson.write_geojson, None),
 }
 
 CASES = {
@@ -45,6 +50,14 @@ def _write(tmp_path, fmt: str, pdf: pd.DataFrame, stem: str) -> str:
     return p
 
 
+def _chunked(monkeypatch, fmt: str) -> dict:
+    """The read arguments that cut the 177 zones into about 4 chunks."""
+    if FORMATS[fmt][1] is None:
+        monkeypatch.setattr(geojson, "CHUNK_BYTES", 40 << 10)
+        return {}
+    return {FORMATS[fmt][1]: 50}
+
+
 def _by_fid(df) -> dict:
     return {r["fid"]: tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r) for r in df.collect()}
 
@@ -60,9 +73,9 @@ def _assert_same(spark, path: str, **kw) -> tuple:
 
 @pytest.mark.parametrize("case", list(CASES))
 @pytest.mark.parametrize("fmt", list(FORMATS))
-def test_placements_agree(spark, tmp_path, fmt, case):
+def test_placements_agree(spark, tmp_path, monkeypatch, fmt, case):
     path = _write(tmp_path, fmt, _zones(), "zones")
-    kw = dict(CASES[case], **{FORMATS[fmt][1]: 50})  # 177 features -> 4 chunks
+    kw = dict(CASES[case], **_chunked(monkeypatch, fmt))  # 177 features -> 4 chunks
     df, rows = _assert_same(spark, path, **kw)
     assert dict(df.dtypes)["rank"] == "bigint"
     want = _zones()
@@ -75,15 +88,19 @@ def test_placements_agree(spark, tmp_path, fmt, case):
 
 
 @pytest.mark.parametrize("fmt", list(FORMATS))
-def test_zero_feature_file(spark, tmp_path, fmt):
+def test_zero_feature_file(spark, tmp_path, monkeypatch, fmt):
     path = _write(tmp_path, fmt, _zones(0), "empty")
-    df, rows = _assert_same(spark, path, **{FORMATS[fmt][1]: 50})
+    df, rows = _assert_same(spark, path, **_chunked(monkeypatch, fmt))
     assert rows == {}
-    types = dict(df.dtypes)
-    assert types["rank"] == "bigint" and types["name"] == "string" and types["pop_est"] == "double"
     dst = str(tmp_path / f"empty_{fmt}_out.shp")
     info = convert_dataset(spark, path, dst)
-    assert info["features"] == 0 and "name" in info["fields"]
+    assert info["features"] == 0
+    if fmt.startswith("geojson"):  # JSON declares no fields: none without a feature
+        assert df.columns == ["fid", "geometry_wkb"] and info["fields"] == []
+        return
+    types = dict(df.dtypes)
+    assert types["rank"] == "bigint" and types["name"] == "string" and types["pop_est"] == "double"
+    assert "name" in info["fields"]
 
 
 def _delete_record(path: str, rec: int) -> None:

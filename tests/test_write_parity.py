@@ -16,6 +16,7 @@ import pytest
 
 from pyogrio_spark.fixtures import make_zones
 from pyogrio_spark.io.flatgeobuf import read_flatgeobuf_pdf, write_flatgeobuf, write_flatgeobuf_distributed
+from pyogrio_spark.io.geojson import geojson_info, read_geojson_pdf, write_geojson, write_geojson_distributed
 from pyogrio_spark.io.shapefile import (
     _read_dbf_header,
     read_shapefile_pdf,
@@ -23,7 +24,12 @@ from pyogrio_spark.io.shapefile import (
     write_shapefile_distributed,
 )
 
-# format -> (pandas writer, distributed sink, pandas reader, sidecar extensions)
+
+def _read_geojson(path: str):
+    return read_geojson_pdf(path), geojson_info(path)
+
+
+# format -> (pandas writer, distributed sink, pandas reader, file extensions, main first)
 FORMATS = {
     "shp": (write_shapefile, write_shapefile_distributed, read_shapefile_pdf, (".shp", ".shx", ".dbf", ".prj", ".cpg")),
     "fgb": (write_flatgeobuf, write_flatgeobuf_distributed, read_flatgeobuf_pdf, (".fgb",)),
@@ -33,6 +39,8 @@ FORMATS = {
         read_flatgeobuf_pdf,
         (".fgb",),
     ),
+    "geojson": (write_geojson, write_geojson_distributed, _read_geojson, (".geojson",)),
+    "geojsonl": (write_geojson, write_geojson_distributed, _read_geojson, (".geojsonl",)),
 }
 
 # column -> (Spark type, values for row i of n); shapefiles have no binary field
@@ -71,7 +79,7 @@ def _out(tmp_path, fmt: str, sub: str) -> str:
     """One output path per writer, same file name (a FlatGeobuf header
     carries the layer name, the file stem by default)."""
     (tmp_path / sub).mkdir()
-    return str(tmp_path / sub / f"zones.{'shp' if fmt == 'shp' else 'fgb'}")
+    return str(tmp_path / sub / f"zones{FORMATS[fmt][3][0]}")
 
 
 @pytest.mark.parametrize("col", list(DTYPES))

@@ -73,11 +73,10 @@ def test_multi_dataset_zip_rejected(tmp_path):
 
 def test_open_table_distributed_routing(spark, tmp_path):
     """open_table(distributed=True) must route every format to its
-    byte-range scan with identical rows, and refuse the one layout with
-    no distributed variant (GeoJSON FeatureCollection)."""
+    chunk scan with identical rows; a GeoJSON FeatureCollection is one
+    chunk."""
     import numpy as np
     import pandas as pd
-    import pytest as _pytest
 
     from pyogrio_spark.geometry import wkb as W
     from pyogrio_spark.io.dispatch import open_table
@@ -98,10 +97,12 @@ def test_open_table_distributed_routing(spark, tmp_path):
         "shp": str(tmp_path / "d.shp"),
         "gpkg": str(tmp_path / "d.gpkg"),
         "fgb": str(tmp_path / "d.fgb"),
+        "geojson": str(tmp_path / "d.geojson"),
     }
     write_shapefile(pdf, paths["shp"])
     write_geopackage(pdf, paths["gpkg"])
     write_flatgeobuf(pdf, paths["fgb"])
+    write_geojson(pdf, paths["geojson"])
     for fmt, p in paths.items():
         a = open_table(spark, p).toPandas().sort_values("name").reset_index(drop=True)
         b = (
@@ -112,7 +113,3 @@ def test_open_table_distributed_routing(spark, tmp_path):
         )
         assert a.name.tolist() == b.name.tolist(), fmt
         assert [bytes(x) for x in a.geometry_wkb] == [bytes(x) for x in b.geometry_wkb], fmt
-    fc = str(tmp_path / "d.geojson")
-    write_geojson(pdf, fc)
-    with _pytest.raises(ValueError, match="no distributed scan"):
-        open_table(spark, fc, distributed=True)
