@@ -864,6 +864,7 @@ def write_dataframe(
     ):
         from pyogrio_spark.io.geojson import write_geojson
 
-        write_geojson(pdf, path, crs=crs, append=append)
+        # the driver picks the layout; without one the extension does
+        write_geojson(pdf, path, crs=crs, append=append, seq=drv == "geojsonseq" if drv else None)
     else:
         raise ValueError(f"cannot infer driver for {path!r} (driver={driver!r})")

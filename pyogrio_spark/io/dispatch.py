@@ -214,10 +214,10 @@ def dataset_info(path: str, layer=None, force_total_bounds: bool = False) -> dic
 
         info = flatgeobuf_info(path)
     elif fmt == "geojson":
-        from pyogrio_spark.io.geojson import geojson_info
+        from pyogrio_spark.io.geojson import geojson_info, holds_seq
 
         info = geojson_info(path, force_total_bounds=force_total_bounds)
-        if path.lower().endswith((".geojsonl", ".geojsons")):
+        if holds_seq(path):
             fmt = "geojsonseq"
     else:
         raise ValueError(f"dataset_info needs a file-based source, got {path}")

@@ -1,6 +1,7 @@
 """GeoJSON (``.geojson``: a FeatureCollection, a Feature or a bare
 geometry) and GeoJSONSeq (``.geojsonl``/``.geojsons``: one feature per
-line) source and sink, RFC 7946 with stdlib json. Geometries are the
+line; readers tell the two apart by content, writers by the driver or
+extension) source and sink, RFC 7946 with stdlib json. Geometries are the
 engine's ISO WKB; coordinates are (lon, lat[, z]).
 
 One decoder reads a chunk: a line-aligned byte range of a GeoJSONSeq file
@@ -38,6 +39,22 @@ _SCALARS = {type(None): pa.null(), bool: pa.bool_(), int: pa.int64(), float: pa.
 
 def _is_seq(path: str) -> bool:
     return path.lower().endswith(SEQ_EXTS)
+
+
+def holds_seq(path: str) -> bool:
+    """Whether a file reads as GeoJSONSeq, by content as OGR decides it:
+    a first line that is a whole Feature with more text after it. A file
+    of one line is one JSON text; a first line that is no JSON text (a
+    pretty-printed document, a blank line) leaves it to the extension."""
+    with open(path, "rb") as f:
+        first = f.readline()
+        if first.strip() and not f.read(1 << 16).strip():
+            return False
+    try:
+        doc = json.loads(first)
+    except ValueError:
+        return _is_seq(path)
+    return isinstance(doc, dict) and doc.get("type") == "Feature"
 
 
 def _crs_member(doc) -> str:
@@ -128,6 +145,28 @@ def _type_name(gj) -> str | None:
     return gj["type"] + (" Z" if isinstance(c, list) and len(c) > 2 else "")
 
 
+def _position_lists(gj):
+    """A GeoJSON geometry's positions as non-empty lists of them (a ring,
+    a line, a Point's one), none for a null or empty geometry."""
+    if gj is None:
+        return
+    if gj["type"] == "GeometryCollection":
+        for g in gj["geometries"]:
+            yield from _position_lists(g)
+        return
+    stack = [gj["coordinates"]]
+    while stack:
+        c = stack.pop()
+        if not c:
+            continue
+        if not isinstance(c[0], list):
+            yield [c]
+        elif c[0] and not isinstance(c[0][0], list):
+            yield c
+        else:
+            stack.extend(c)
+
+
 def _at(fid: int, line: int | None, exc: Exception) -> ValueError:
     return ValueError(f"feature {fid}{'' if line is None else f' (line {line})'}: {type(exc).__name__}: {exc}")
 
@@ -164,16 +203,19 @@ def _read(path: str, lo: int, hi: int) -> bytes:
         return f.read(hi - lo)
 
 
-def _layout(path: str) -> tuple[list, list, int, str, str]:
+def _layout(path: str, bounds: bool = False) -> tuple[list, list, int, str, str, tuple | None]:
     """The header pass, every feature once on the driver -> ((name,
     Spark type) fields, chunks ``(byte_lo, byte_hi, first fid, first
     line)`` of about ``CHUNK_BYTES``, feature count, layer geometry type
     (the one type; MultiPolygon for a Polygon/MultiPolygon mix; else
-    Unknown), CRS). A feature that does not parse raises FeatureError
-    naming the path, the chunk's byte range and the feature."""
+    Unknown), CRS, and with ``bounds`` the (xmin, ymin, xmax, ymax) of
+    every position, else or with none None). The first line is None for
+    a FeatureCollection, whatever the extension (``holds_seq``). A
+    feature that does not parse raises FeatureError naming the path, the
+    chunk's byte range and the feature."""
     from pyogrio_spark.errors import FeatureError
 
-    seq, size = _is_seq(path), os.path.getsize(path)
+    seq, size = holds_seq(path), os.path.getsize(path)
     cuts = [0]
     with open(path, "rb") as f:
         while seq and cuts[-1] + CHUNK_BYTES < size:
@@ -182,6 +224,8 @@ def _layout(path: str) -> tuple[list, list, int, str, str]:
             cuts.append(f.tell())
     cuts += [size] if cuts[-1] < size or not seq else []
     types, gtypes, chunks, n, line, crs = {}, set(), [], 0, 1, "EPSG:4326"
+    x0 = y0 = np.inf
+    x1 = y1 = -np.inf
     for lo, hi in zip(cuts, cuts[1:]):
         data = _read(path, lo, hi)
         chunks.append((lo, hi, n, line if seq else None))
@@ -192,6 +236,9 @@ def _layout(path: str) -> tuple[list, list, int, str, str]:
                     for k, v in (feat.get("properties") or {}).items():
                         types[k] = _unify(types.get(k, pa.null()), _json_type(v))
                     gtypes.add(_type_name(feat.get("geometry")))
+                    for ps in _position_lists(feat.get("geometry")) if bounds else ():
+                        xs, ys = tuple(zip(*ps))[:2]
+                        x0, y0, x1, y1 = min(x0, min(xs)), min(y0, min(ys)), max(x1, max(xs)), max(y1, max(ys))
                 except Exception as exc:
                     raise _at(fid, ln, exc) from exc
                 n += 1
@@ -201,7 +248,8 @@ def _layout(path: str) -> tuple[list, list, int, str, str]:
     gtypes.discard(None)
     gtype = (gtypes.pop() if len(gtypes) == 1
              else "MultiPolygon" if gtypes and gtypes <= {"Polygon", "MultiPolygon"} else "Unknown")
-    return property_types(pa.schema(list(types.items()))), chunks, n, gtype, crs
+    total_bounds = (float(x0), float(y0), float(x1), float(y1)) if x0 <= x1 else None
+    return property_types(pa.schema(list(types.items()))), chunks, n, gtype, crs, total_bounds
 
 
 def _spark_fields(fields: list) -> list[tuple[str, str]]:
@@ -214,7 +262,7 @@ def _decoder(path: str, fields: list):
     string column (mixed scalars), become JSON text."""
     def decode(chunk) -> pd.DataFrame:
         fids, props, geoms = [], [], []
-        for fid, line, feat in _features(_read(path, chunk[0], chunk[1]), _is_seq(path), chunk[2], chunk[3])[1]:
+        for fid, line, feat in _features(_read(path, chunk[0], chunk[1]), chunk[3] is not None, *chunk[2:])[1]:
             try:
                 geoms.append(_coords_to_geom(feat.get("geometry")))
             except Exception as exc:
@@ -252,19 +300,14 @@ def read_geojson_pdf(path: str) -> pd.DataFrame:
     dtypes (JSON columns hold JSON text)."""
     from pyogrio_spark.io.reader import numpy_dtypes
 
-    return numpy_dtypes(_decoder(path, _layout(path)[0])((0, os.path.getsize(path), 0, 1)))
+    whole = (0, os.path.getsize(path), 0, 1 if holds_seq(path) else None)
+    return numpy_dtypes(_decoder(path, _layout(path)[0])(whole))
 
 
 def geojson_info(path: str, force_total_bounds: bool = False) -> dict:
     """read_info fields from the header pass; GeoJSONSeq total bounds are
     None unless forced, as in the reference (its test_core.py:698-706)."""
-    fields, _, count, gtype, crs = _layout(path)
-    total_bounds = None
-    if force_total_bounds or not _is_seq(path):
-        bs = W.bounds_many(list(_decoder(path, fields)((0, os.path.getsize(path), 0, 1))["geometry_wkb"]))
-        if len(bs) and np.isfinite(bs).any():
-            total_bounds = (float(np.nanmin(bs[:, 0])), float(np.nanmin(bs[:, 1])),
-                            float(np.nanmax(bs[:, 2])), float(np.nanmax(bs[:, 3])))
+    fields, _, count, gtype, crs, total_bounds = _layout(path, bounds=force_total_bounds or not holds_seq(path))
     lists = {"boolean": "bool", "bigint": "int64", "double": "float64", "string": "str"}
     return {
         "layer_name": os.path.splitext(os.path.basename(path))[0],
@@ -328,11 +371,11 @@ def _encode_part(frames, part: str, geom_col: str, cols: list[str], types: list[
     return {"n": n}
 
 
-def _stitch(path: str, metas: list[dict], epsg, append: bool) -> None:
+def _stitch(path: str, metas: list[dict], epsg, append: bool, seq: bool) -> None:
     """The one GeoJSON stitch: GeoJSONSeq concatenates the parts' lines;
     a FeatureCollection wraps them (after the old features on append)
     with a 2008-spec ``crs`` member for a non-4326 CRS."""
-    if _is_seq(path):
+    if seq:
         with open(path, "ab" if append else "wb") as out:
             for m in metas:
                 with open(m["part"], "rb") as f:
@@ -361,9 +404,11 @@ def _stitch(path: str, metas: list[dict], epsg, append: bool) -> None:
         out.write("]}")
 
 
-def write_geojson(pdf, path: str, geom_col: str = "geometry_wkb", crs=None, append: bool = False) -> None:
-    """Frame with WKB geometry -> FeatureCollection or GeoJSONSeq (by
-    extension); a pandas frame is one part, encoded in process without
+def write_geojson(pdf, path: str, geom_col: str = "geometry_wkb", crs=None, append: bool = False,
+                  seq: bool | None = None) -> None:
+    """Frame with WKB geometry -> FeatureCollection or GeoJSONSeq (``seq``,
+    or by extension when None, as the facade's ``driver`` picks it); a
+    pandas frame is one part, encoded in process without
     Spark. Floats are repr-exact. A non-4326 ``crs`` becomes the 2008-spec
     'crs' member, as GDAL writes it; GeoJSONSeq refuses one. ``append``
     adds GeoJSONSeq lines in place and rewrites a FeatureCollection."""
@@ -371,7 +416,8 @@ def write_geojson(pdf, path: str, geom_col: str = "geometry_wkb", crs=None, appe
     from pyogrio_spark.io.sink import attribute_schema, encoded_parts
 
     epsg = crs_to_epsg(crs) if crs is not None else None
-    if epsg is not None and epsg != 4326 and _is_seq(path):
+    seq = _is_seq(path) if seq is None else seq
+    if epsg is not None and epsg != 4326 and seq:
         raise ValueError("GeoJSONSeq has no 'crs' member; data must be EPSG:4326")
     if append and not os.path.exists(path):
         raise ValueError(f"append=True but {path} does not exist")
@@ -383,7 +429,7 @@ def write_geojson(pdf, path: str, geom_col: str = "geometry_wkb", crs=None, appe
         return _encode_part(frames, part, geom_col, cols, types)
 
     with encoded_parts(pdf, path, encode, "n long") as metas:
-        _stitch(path, metas, epsg, append)
+        _stitch(path, metas, epsg, append, seq)
 
 
 def write_geojson_distributed(df, path: str, geom_col: str = "geometry_wkb", crs=None) -> None:

@@ -181,16 +181,17 @@ def storage_path(path: str | Path) -> tuple[str, str | None]:
 _VSIMEM_ROOT: str | None = None
 
 
-def process_temp_dir(prefix: str) -> str:
-    """A new temp directory that is removed when this interpreter exits.
-    Only the creating process removes it: a forked child inherits the
-    exit hook, and its exit must not delete the parent's files."""
+def process_temp_dir(prefix: str, dir: str | None = None) -> str:
+    """A new temp directory (mode 0700, under ``dir`` or the system temp
+    dir) that is removed when this interpreter exits. Only the creating
+    process removes it: a forked child inherits the exit hook, and its
+    exit must not delete the parent's files."""
     import atexit
     import os
     import shutil
     import tempfile
 
-    path, owner = tempfile.mkdtemp(prefix=prefix), os.getpid()
+    path, owner = tempfile.mkdtemp(prefix=prefix, dir=dir), os.getpid()
 
     def _remove() -> None:
         if os.getpid() == owner:

@@ -247,3 +247,57 @@ def test_empty_feature_collection_layer_type(tmp_path):
     write_geojson(pd.DataFrame({"geometry_wkb": []}), p)
     assert ps.dataset_layers(p) == [["empty", "Unknown"]]
     assert read_info(p)["geometry_type"] == "Unknown"
+
+
+def test_info_bounds_come_from_the_header_pass(tmp_path, monkeypatch):
+    """read_info of a FeatureCollection takes total_bounds from the one
+    header pass: the same envelope as the decoded WKB, no second parse."""
+    from pyogrio_spark.compat import read_info
+
+    z = make_zones()
+    p = str(tmp_path / "z.geojson")
+    write_geojson(z, p)
+    bs = W.bounds_many(list(z.geometry_wkb))
+    expected = (np.nanmin(bs[:, 0]), np.nanmin(bs[:, 1]), np.nanmax(bs[:, 2]), np.nanmax(bs[:, 3]))
+    calls = []
+    decoder = G._decoder
+    monkeypatch.setattr(G, "_decoder", lambda *a: calls.append(a) or decoder(*a))
+    assert read_info(p)["total_bounds"] == pytest.approx(expected, rel=0, abs=0)
+    assert read_info(p)["features"] == 177
+    assert calls == []
+
+
+@pytest.mark.parametrize("driver,ext,seq", [("GeoJSONSeq", ".json", True), ("GeoJSON", ".geojsonl", False)])
+def test_driver_decides_the_layout(tmp_path, driver, ext, seq):
+    """write_dataframe's driver, not the extension, picks the layout, and
+    the file reads back as written, whatever its extension."""
+    from pyogrio_spark.compat import read_dataframe, read_info, write_dataframe
+
+    pdf = pd.DataFrame({"geometry_wkb": [W.encode_point(1.5, 2.0), W.encode_point(-3.0, 4.25)],
+                        "name": ["a", "b"]})
+    p = str(tmp_path / f"x{ext}")
+    write_dataframe(pdf, p, driver=driver)
+    lines = open(p).read().splitlines()
+    if seq:
+        assert [json.loads(line)["type"] for line in lines] == ["Feature", "Feature"]
+    else:
+        assert len(lines) == 1 and json.loads(lines[0])["type"] == "FeatureCollection"
+    assert G.holds_seq(p) is seq
+    back = read_dataframe(p)
+    assert back["name"].tolist() == ["a", "b"]
+    assert [bytes(b) for b in back.geometry] == list(pdf.geometry_wkb)
+    assert read_info(p)["driver"] == driver
+
+
+def test_holds_seq_by_content(tmp_path):
+    def holds(name, text):
+        p = tmp_path / name
+        p.write_text(text)
+        return G.holds_seq(str(p))
+
+    feat = json.dumps({"type": "Feature", "properties": {}, "geometry": None})
+    assert holds("a.json", f"{feat}\n{feat}\n")
+    assert not holds("b.geojsonl", f"{feat}\n")  # one JSON text reads either way
+    assert not holds("c.json", '{\n"type": "FeatureCollection",\n"features": []\n}\n')
+    assert holds("d.geojsonl", f"{feat[:-1]}\n{feat}\n")  # a broken first line: the extension decides
+    assert holds("e.geojsonl", "") and not holds("e.geojson", "")
