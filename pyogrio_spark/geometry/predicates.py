@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from pyogrio_spark.geometry import wkb as W
 from pyogrio_spark.geometry.wkb import Geom, parse_wkb
 
 
@@ -142,64 +143,20 @@ def segs_intersect_segs(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1) -> bool:
 
 
 def _flatten_batch(geoms):
-    """Parse a batch of WKB once and flatten into contiguous arrays.
-
-    Returns (vert_xy, vert_row, edge_arr, edge_row, poly_edge_arr,
+    """The batch's flat layout (``wkb.flat_from_wkb``) as predicate
+    arrays: (vert_xy, vert_row, edge_arr, edge_row, poly_edge_arr,
     poly_edge_row, is_valid) where ``edge_arr``/``poly_edge_arr`` are
-    (m, 4) float64 [x0, y0, x1, y1]. ``poly_edge_*`` is the subset of
-    edges that belong to polygon rings (used for point-in-candidate
-    parity tests); rows with None/empty WKB are marked invalid.
+    (m, 4) float64 [x0, y0, x1, y1] of consecutive vertices of one ring.
+    ``poly_edge_*`` is the subset of edges that belong to polygon rings
+    (used for point-in-candidate parity tests); null rows are invalid.
     """
-    verts, vrows = [], []
-    edges, erows = [], []
-    pedges, prows = [], []
-    valid = np.zeros(len(geoms), dtype=bool)
-
-    def visit(g: Geom, i: int):
-        if g.type == "Point":
-            verts.append(g.coords[None, :2])
-            vrows.append(np.full(1, i, dtype=np.int64))
-        elif g.type == "LineString":
-            pts = g.coords
-            if len(pts):
-                verts.append(pts[:, :2])
-                vrows.append(np.full(len(pts), i, dtype=np.int64))
-            if len(pts) > 1:
-                e = np.concatenate([pts[:-1, :2], pts[1:, :2]], axis=1)
-                edges.append(e)
-                erows.append(np.full(len(e), i, dtype=np.int64))
-        elif g.type == "Polygon":
-            for ring in g.coords:
-                if len(ring) == 0:
-                    continue
-                verts.append(ring[:, :2])
-                vrows.append(np.full(len(ring), i, dtype=np.int64))
-                if len(ring) > 1:
-                    e = np.concatenate([ring[:-1, :2], ring[1:, :2]], axis=1)
-                    edges.append(e)
-                    erows.append(np.full(len(e), i, dtype=np.int64))
-                    pedges.append(e)
-                    prows.append(np.full(len(e), i, dtype=np.int64))
-        else:  # Multi* / GeometryCollection
-            for part in g.coords:
-                visit(part, i)
-
-    for i, b in enumerate(geoms):
-        if b is None:
-            continue
-        g = parse_wkb(bytes(b), force_2d=True)
-        valid[i] = True
-        visit(g, i)
-
-    def cat(parts, rows, width):
-        if not parts:
-            return np.empty((0, width), dtype=np.float64), np.empty(0, dtype=np.int64)
-        return np.concatenate(parts, axis=0), np.concatenate(rows)
-
-    vert_xy, vert_row = cat(verts, vrows, 2)
-    edge_arr, edge_row = cat(edges, erows, 4)
-    poly_edge_arr, poly_edge_row = cat(pedges, prows, 4)
-    return vert_xy, vert_row, edge_arr, edge_row, poly_edge_arr, poly_edge_row, valid
+    f = W.flat_from_wkb(geoms)
+    xy, vring, vert_row = f.xy, f.ring_of_vertex(), f.geom_of_vertex()
+    same = vring[:-1] == vring[1:]
+    edges = np.concatenate([xy[:-1], xy[1:]], axis=1)
+    poly = (f.part_type[f.part_of_ring()] % 1000 == 3)[vring[:-1]] & same
+    return (xy, vert_row, edges[same], vert_row[:-1][same], edges[poly], vert_row[:-1][poly],
+            f.geom_type > 0)
 
 
 def point_in_flat_rings(tx, ty, e, erow, nrows) -> np.ndarray:

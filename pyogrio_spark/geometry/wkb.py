@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import struct
 import warnings
+from typing import NamedTuple
 
 import numpy as np
 
@@ -571,44 +572,256 @@ def encode_circularstrings(x0, y0, x1, y1, x2, y2) -> np.ndarray:
     return np.array([raw[i * 57 : (i + 1) * 57] for i in range(n)], dtype=object)
 
 
-# ---------------------------------------------------------------- bounds
+# ----------------------------------------------------------- flat layout
 
-def _geom_bounds(g: Geom) -> tuple[float, float, float, float]:
-    if g.type == "Point":
-        x, y = float(g.coords[0]), float(g.coords[1])
-        return x, y, x, y
-    if g.type == "LineString":
-        c = g.coords
-        return float(c[:, 0].min()), float(c[:, 1].min()), float(c[:, 0].max()), float(c[:, 1].max())
-    if g.type == "Polygon":
-        ext = g.coords[0]
-        return float(ext[:, 0].min()), float(ext[:, 1].min()), float(ext[:, 0].max()), float(ext[:, 1].max())
-    # multi / collection
-    bs = [_geom_bounds(p) for p in g.coords]
-    if not bs:
-        return np.nan, np.nan, np.nan, np.nan
-    a = np.array(bs)
-    return float(a[:, 0].min()), float(a[:, 1].min()), float(a[:, 2].max()), float(a[:, 3].max())
+
+class Flat(NamedTuple):
+    """A batch of geometries in one flat coordinate layout: the vertices
+    in ``xy`` (and ``z``, 0.0 where a part has no Z) and three offset
+    levels. Geometry ``g`` owns parts ``geom_off[g]:geom_off[g + 1]``,
+    part ``p`` owns rings ``part_off[p]:part_off[p + 1]`` and ring ``r``
+    owns vertices ``ring_off[r]:ring_off[r + 1]``. A part is a simple
+    geometry: a Point or LineString part is one ring (vertex run), a
+    Polygon part one ring per polygon ring. ``part_type`` is each part's
+    ISO code (1, 2 or 3, plus 1000 with Z); ``geom_type`` is each
+    geometry's base code 1..7, 0 for null. Parse flattens the members of
+    a nested collection into its parts."""
+
+    xy: np.ndarray
+    z: np.ndarray
+    ring_off: np.ndarray
+    part_off: np.ndarray
+    geom_off: np.ndarray
+    part_type: np.ndarray
+    geom_type: np.ndarray
+
+    def ring_of_vertex(self) -> np.ndarray:
+        return np.repeat(np.arange(len(self.ring_off) - 1), np.diff(self.ring_off))
+
+    def part_of_ring(self) -> np.ndarray:
+        return np.repeat(np.arange(len(self.part_off) - 1), np.diff(self.part_off))
+
+    def geom_vertex_off(self) -> np.ndarray:
+        """(ng + 1,) vertex offsets of the geometries."""
+        return self.ring_off[self.part_off[self.geom_off]]
+
+    def geom_of_vertex(self) -> np.ndarray:
+        return np.repeat(np.arange(len(self.geom_type)), np.diff(self.geom_vertex_off()))
+
+
+class _Curve(Exception):
+    """A curve type inside a WKB row: the row is linearized and walked again."""
+
+
+def _walk(mv, off: int, end: int, rings: list, parts: list) -> int:
+    """Append the parts and rings of the WKB geometry at ``off`` of
+    ``mv``: a ring is (coordinate byte offset, vertex count, bytes per
+    vertex, big-endian, has Z), a part (ISO code, ring count). Only
+    headers are read (``struct``); returns the offset past the geometry."""
+    if end - off < 5:
+        raise WKBError("truncated WKB header")
+    be = mv[off] == 0
+    bo = ">" if be else "<"
+    (raw,) = struct.unpack_from(bo + "I", mv, off + 1)
+    base, has_z, has_m = _base_type(raw)
+    off += 5
+    if base in CURVE_TYPE_DOWNGRADE:
+        raise _Curve
+    if base not in GEOM_TYPE_NAMES:
+        raise WKBError(f"unsupported WKB type code {raw}")
+    if base >= 4:
+        (n,) = struct.unpack_from(bo + "I", mv, off)
+        off += 4
+        for _ in range(n):
+            off = _walk(mv, off, end, rings, parts)
+        return off
+    step = 8 * (2 + has_z + has_m)
+    if base == 3:
+        (n,) = struct.unpack_from(bo + "I", mv, off)
+        parts.append((3 + 1000 * has_z, n))
+        off += 4
+        for _ in range(n):
+            (k,) = struct.unpack_from(bo + "I", mv, off)
+            rings.append((off + 4, k, step, be, has_z))
+            off += 4 + k * step
+            if off > end:
+                raise WKBError("truncated WKB coordinates")
+    elif base == 2:
+        (k,) = struct.unpack_from(bo + "I", mv, off)
+        parts.append((2 + 1000 * has_z, 1))
+        rings.append((off + 4, k, step, be, has_z))
+        off += 4 + k * step
+    else:
+        parts.append((1 + 1000 * has_z, 1))
+        rings.append((off, 1, step, be, has_z))
+        off += step
+    if off > end:
+        raise WKBError("truncated WKB coordinates")
+    return off
+
+
+def offsets(counts) -> np.ndarray:
+    """(n,) counts -> (n + 1,) int64 offsets starting at 0."""
+    out = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=out[1:])
+    return out
+
+
+def f8_at(buf, big_endian: bool = False) -> np.ndarray:
+    """float64 view of ``buf`` at every byte offset (stride 1), for
+    gathering coordinates at unaligned positions."""
+    return np.ndarray((max(len(buf) - 7, 0),), dtype=">f8" if big_endian else "<f8", buffer=buf, strides=(1,))
+
+
+def gather_coords(buf, pos: np.ndarray, zpos: np.ndarray | None = None, be: np.ndarray | None = None):
+    """The one coordinate move of the flat layout: x at byte ``pos`` of
+    ``buf``, y at ``pos + 8`` and z at ``zpos`` (-1: no Z, z is 0.0),
+    little-endian unless ``be`` -> ((n, 2) xy, (n,) z)."""
+    le = f8_at(buf)
+    xy = np.empty((len(pos), 2))
+    z = np.zeros(len(pos))
+    has_z = zpos is not None and (zpos >= 0).any()
+    if be is not None and be.any():
+        big = f8_at(buf, big_endian=True)
+        for src, sel in ((le, ~be), (big, be)):
+            p = pos[sel]
+            xy[sel, 0], xy[sel, 1] = src[p], src[p + 8]
+            if has_z:
+                zs = sel & (zpos >= 0)
+                z[zs] = src[zpos[zs]]
+        return xy, z
+    xy[:, 0], xy[:, 1] = le[pos], le[pos + 8]
+    if has_z:
+        zs = zpos >= 0
+        z[zs] = le[zpos[zs]]
+    return xy, z
+
+
+def flat_from_wkb(wkbs) -> Flat:
+    """Parse a batch of WKB (None for null) into the flat layout: one
+    ``struct`` walk over the headers of each row, then one gather of all
+    coordinates. M is dropped; curve rows are linearized first
+    (``linearize_wkb``). Raises WKBError on truncated or unknown WKB."""
+    rows = list(wkbs)
+    while True:
+        blob = b"".join(b for b in rows if b is not None)
+        mv = memoryview(blob)
+        rings: list = []
+        parts: list = []
+        gtype, gparts, curved = [], [], []
+        start = 0
+        for i, b in enumerate(rows):
+            if b is None:
+                gtype.append(0)
+                gparts.append(0)
+                continue
+            end = start + len(b)
+            np0, nr0 = len(parts), len(rings)
+            try:
+                _walk(mv, start, end, rings, parts)
+            except _Curve:
+                curved.append(i)
+                del parts[np0:], rings[nr0:]
+            bo = ">" if mv[start] == 0 else "<"
+            gtype.append(_base_type(struct.unpack_from(bo + "I", mv, start + 1)[0])[0])
+            gparts.append(len(parts) - np0)
+            start = end
+        if not curved:
+            break
+        for i in curved:
+            rows[i] = linearize_wkb(rows[i])
+    ring = np.array(rings, dtype=np.int64).reshape(-1, 5)
+    part = np.array(parts, dtype=np.int64).reshape(-1, 2)
+    ring_off = offsets(ring[:, 1])
+    vring = np.repeat(np.arange(len(ring)), ring[:, 1])
+    pos = ring[vring, 0] + (np.arange(len(vring)) - ring_off[vring]) * ring[vring, 2]
+    zpos = np.where(ring[vring, 4] == 1, pos + 16, -1)
+    xy, z = gather_coords(blob, pos, zpos, ring[vring, 3] == 1)
+    return Flat(xy, z, ring_off, offsets(part[:, 1]), offsets(gparts), part[:, 0], np.array(gtype, dtype=np.int64))
+
+
+def flat_to_wkb(flat: Flat) -> list:
+    """Encode the flat layout as little-endian ISO WKB, one bytes object
+    per geometry (None for null): the coordinates become one byte string
+    (xy, or xyz for Z parts) and ``struct`` writes the headers between
+    its slices. A Multi* header carries Z when any part does; a
+    GeometryCollection header never does."""
+    nv = len(flat.xy)
+    vz = np.repeat(flat.part_type >= 1000, np.diff(flat.ring_off[flat.part_off]))
+    if vz.any():
+        xyz = np.empty((nv, 3), dtype="<f8")
+        xyz[:, :2], xyz[:, 2] = flat.xy, flat.z
+        keep = np.ones((nv, 24), dtype=bool)
+        keep[~vz, 16:] = False
+        coords = xyz.view(np.uint8).reshape(nv, 24)[keep].tobytes()
+        cb = offsets(np.where(vz, 24, 16))[flat.ring_off].tolist()
+    else:
+        coords = np.ascontiguousarray(flat.xy, dtype="<f8").tobytes()
+        cb = (flat.ring_off * 16).tolist()
+    mv = memoryview(coords)
+    ro, po, go = flat.ring_off.tolist(), flat.part_off.tolist(), flat.geom_off.tolist()
+    ptype = flat.part_type.tolist()
+    pack = struct.pack
+    out = []
+    for g, t in enumerate(flat.geom_type.tolist()):
+        if not t:
+            out.append(None)
+            continue
+        p0, p1 = go[g], go[g + 1]
+        pieces = []
+        if t >= 4:
+            z = t != 7 and any(c >= 1000 for c in ptype[p0:p1])
+            pieces.append(pack("<BII", 1, t + 1000 * z, p1 - p0))
+        for p in range(p0, p1):
+            code, r0, r1 = ptype[p], po[p], po[p + 1]
+            if code % 1000 == 1:
+                pieces += (pack("<BI", 1, code), mv[cb[r0] : cb[r0 + 1]])
+            elif code % 1000 == 2:
+                pieces += (pack("<BII", 1, code, ro[r0 + 1] - ro[r0]), mv[cb[r0] : cb[r0 + 1]])
+            else:
+                pieces.append(pack("<BII", 1, code, r1 - r0))
+                for r in range(r0, r1):
+                    pieces += (pack("<I", ro[r + 1] - ro[r]), mv[cb[r] : cb[r + 1]])
+        out.append(b"".join(pieces))
+    return out
+
+
+def flat_bounds(flat: Flat, exterior_only: bool = False) -> np.ndarray:
+    """(ng, 4) envelope per geometry, NaN for null or empty; NaN
+    coordinates propagate. ``exterior_only``: a polygon part counts its
+    first ring only (the ``bounds`` convention)."""
+    ng = len(flat.geom_type)
+    out = np.full((ng, 4), np.nan)
+    vgeom = flat.geom_of_vertex()
+    xy = flat.xy
+    if exterior_only:
+        pring = flat.part_of_ring()
+        hole = (flat.part_type[pring] % 1000 == 3) & (np.arange(len(pring)) > flat.part_off[pring])
+        if hole.any():
+            keep = ~hole[flat.ring_of_vertex()]
+            xy, vgeom = xy[keep], vgeom[keep]
+    counts = np.bincount(vgeom, minlength=ng)
+    has = counts > 0
+    if has.any():
+        starts = offsets(counts)[:-1][has]
+        out[has, :2] = np.minimum.reduceat(xy, starts, axis=0)
+        out[has, 2:] = np.maximum.reduceat(xy, starts, axis=0)
+    return out
 
 
 def bounds(buf: bytes | None) -> tuple[float, float, float, float]:
     """Envelope of one WKB geometry — the ``read_bounds`` kernel
     (/root/reference/pyogrio/_io.pyx:1561-1605 ``OGR_G_GetEnvelope``)."""
-    if buf is None:
-        return np.nan, np.nan, np.nan, np.nan
-    return _geom_bounds(parse_wkb(buf))
+    return tuple(float(v) for v in bounds_many([buf])[0])
 
 
 def bounds_many(wkbs) -> np.ndarray:
-    """(n, 4) envelope array; vectorized fast path for point batches."""
+    """(n, 4) envelope array (NaN for null or empty; a polygon's from its
+    exterior ring); vectorized fast path for point batches."""
     items = list(wkbs)
-    n = len(items)
     arr = _uniform_point_matrix(items)
     if arr is not None:
         lon = arr[:, 5:13].copy().view("<f8").ravel()
         lat = arr[:, 13:21].copy().view("<f8").ravel()
         return np.stack([lon, lat, lon, lat], axis=1)
-    out = np.empty((n, 4))
-    for i, b in enumerate(items):
-        out[i] = bounds(bytes(b)) if b is not None else (np.nan,) * 4
-    return out
+    return flat_bounds(flat_from_wkb(items), exterior_only=True)

@@ -156,6 +156,25 @@ class Builder:
 # ------------------------------------------------------------- accessor
 
 
+def field_positions(buf, pos: int, n: int) -> list[int]:
+    """Absolute positions of slots 0..n-1 of the table at ``pos`` (0 when
+    a slot is absent), from one read of its vtable."""
+    (soff,) = struct.unpack_from("<i", buf, pos)
+    vt = pos - soff
+    (vt_size,) = struct.unpack_from("<H", buf, vt)
+    k = max(0, min(n, (vt_size - 4) // 2))
+    return [pos + o if o else 0 for o in struct.unpack_from(f"<{k}H", buf, vt + 4)] + [0] * (n - k)
+
+
+def vector_at(buf, p: int) -> tuple[int, int]:
+    """The vector whose offset field sits at ``p`` (0: absent) -> (elements
+    start, count); (0, 0) if absent."""
+    if not p:
+        return 0, 0
+    t = p + struct.unpack_from("<I", buf, p)[0]
+    return t + 4, struct.unpack_from("<I", buf, t)[0]
+
+
 class Table:
     """Read-side accessor over a (memoryview of a) flatbuffer."""
 

@@ -35,7 +35,7 @@ import numpy as np
 import pandas as pd
 
 from pyogrio_spark.geometry import wkb as W
-from pyogrio_spark.io.flatbuf import Builder, Table
+from pyogrio_spark.io.flatbuf import Builder, Table, field_positions, vector_at
 
 MAGIC = b"fgb\x03fgb\x01"
 
@@ -233,60 +233,91 @@ def _build_geometry(b: Builder, g: "W.Geom", write_type: bool = True) -> int:
     return b.end_table()
 
 
-def _read_coords(t: Table) -> np.ndarray:
-    start, n2 = t.vector(1)  # xy
-    xy = np.frombuffer(t.buf, dtype="<f8", count=n2, offset=start).reshape(-1, 2)
-    zs, nz = t.vector(2)
-    if nz:
-        z = np.frombuffer(t.buf, dtype="<f8", count=nz, offset=zs)
-        return np.column_stack([xy, z])
-    return np.array(xy)  # copy out of the file buffer
+def _simple_parts(buf, f: list[int], code: int, runs: list, rings: list, parts: list) -> None:
+    """Append the flat-layout parts and rings of a Geometry table that
+    holds its own coordinates (``f``: its slot positions) and its one
+    coordinate run (xy start, z start or -1, vertex count)."""
+    xs, n2 = vector_at(buf, f[1])
+    zs, nz = vector_at(buf, f[2])
+    n = n2 // 2
+    es, ne = vector_at(buf, f[0])
+    ends = struct.unpack_from(f"<{ne}I", buf, es) if ne else ()
+    z = 1000 * (nz > 0)
+    if code == 1:
+        if not n:
+            raise ValueError("FlatGeobuf Point without coordinates")
+        n = 1
+        rings.append(1)
+        parts.append((1 + z, 1))
+    elif code == 4:
+        rings += [1] * n
+        parts += [(1 + z, 1)] * n
+    else:
+        sizes = np.diff(ends, prepend=0).tolist() if ends else [n]
+        if ends:
+            if ends[-1] > n:
+                raise ValueError(f"FlatGeobuf ring ends {ends[-1]} past {n} vertices")
+            n = ends[-1]
+        rings += sizes
+        parts += [(3 + z, len(sizes))] if code in (3, 6) else [(2 + z, 1)] * len(sizes)
+    if nz and nz < n:
+        raise ValueError(f"FlatGeobuf z vector holds {nz} of {n} values")
+    runs.append((xs, zs if nz else -1, n))
 
 
-def _split_ends(t: Table, coords: np.ndarray) -> list[np.ndarray]:
-    ends = t.scalar_vector(0, "I")
-    if not ends:
-        return [coords]
-    out, prev = [], 0
-    for e in ends:
-        out.append(coords[prev:e])
-        prev = e
-    return out
-
-
-def _parse_geometry(t: Table, type_code: int) -> "W.Geom":
-    code = t.scalar(6, "<B", 0) or type_code
-    name = GEOM_CODE_TO_NAME.get(code)
-    if name == "Point":
-        c = _read_coords(t)
-        return W.Geom("Point", c[0], c.shape[1] > 2)
-    if name == "LineString":
-        c = _read_coords(t)
-        return W.Geom("LineString", c, c.shape[1] > 2)
-    if name == "Polygon":
-        c = _read_coords(t)
-        return W.Geom("Polygon", _split_ends(t, c), c.shape[1] > 2)
-    if name == "MultiPoint":
-        c = _read_coords(t)
-        has_z = c.shape[1] > 2
-        return W.Geom("MultiPoint", [W.Geom("Point", p, has_z) for p in c], has_z)
-    if name == "MultiLineString":
-        c = _read_coords(t)
-        has_z = c.shape[1] > 2
-        parts = [W.Geom("LineString", p, has_z) for p in _split_ends(t, c)]
-        return W.Geom("MultiLineString", parts, has_z)
-    if name == "MultiPolygon":
-        parts = t.table_vector(7)
-        if parts:
-            polys = [_parse_geometry(p, GEOM_NAME_TO_CODE["Polygon"]) for p in parts]
-        else:  # single-polygon shorthand some writers emit
-            c = _read_coords(t)
-            polys = [W.Geom("Polygon", _split_ends(t, c), c.shape[1] > 2)]
-        return W.Geom("MultiPolygon", polys, any(p.has_z for p in polys))
-    if name == "GeometryCollection":
-        parts = [_parse_geometry(p, 0) for p in t.table_vector(7)]
-        return W.Geom("GeometryCollection", parts, any(p.has_z for p in parts))
-    raise ValueError(f"unsupported FlatGeobuf geometry type code {code}")
+def _geometries_wkb(buf, tables: list, layer_code: int) -> list:
+    """FlatGeobuf Geometry tables (positions in ``buf``, None for a feature
+    without geometry) -> WKB per table. A Geometry's ``xy``/``z`` vectors
+    and ring ``ends`` (MultiPolygon/GeometryCollection nest through
+    ``parts``) are already the flat layout: one walk of the tables'
+    vtables lists the coordinate runs, parts and rings, one gather moves
+    the coordinates and ``wkb.flat_to_wkb`` writes the WKB. A
+    GeometryCollection's members are geometries of the same batch, joined
+    under its header after the encode. A table without a type takes
+    ``layer_code``."""
+    queue = [(t, layer_code) for t in tables]
+    runs: list = []
+    rings: list = []
+    parts: list = []
+    gtype, gparts, members = [], [], {}
+    for g, (pos, default) in enumerate(queue):  # grows by collection members
+        if pos is None:
+            gtype.append(0)
+            gparts.append(0)
+            continue
+        f = field_positions(buf, pos, 8)
+        code = (buf[f[6]] if f[6] else 0) or default
+        np0 = len(parts)
+        ps, nparts = vector_at(buf, f[7]) if code in (6, 7) else (0, 0)
+        subs = [ps + 4 * i + struct.unpack_from("<I", buf, ps + 4 * i)[0] for i in range(nparts)]
+        if code == 7:
+            members[g] = range(len(queue), len(queue) + len(subs))
+            queue += [(t, 0) for t in subs]
+        elif subs:  # MultiPolygon parts: Polygon tables
+            for t in subs:
+                sf = field_positions(buf, t, 8)
+                sub_code = (buf[sf[6]] if sf[6] else 0) or 3
+                if sub_code > 5:
+                    raise ValueError(f"FlatGeobuf MultiPolygon part of type {sub_code}")
+                _simple_parts(buf, sf, sub_code, runs, rings, parts)
+        elif 1 <= code <= 6:  # a MultiPolygon without parts is one polygon
+            _simple_parts(buf, f, code, runs, rings, parts)
+        else:
+            raise ValueError(f"unsupported FlatGeobuf geometry type code {code}")
+        gtype.append(code)
+        gparts.append(len(parts) - np0)
+    run = np.array(runs, dtype=np.int64).reshape(-1, 3)
+    part = np.array(parts, dtype=np.int64).reshape(-1, 2)
+    run_off = W.offsets(run[:, 2])
+    vrun = np.repeat(np.arange(len(run)), run[:, 2])
+    k = np.arange(len(vrun)) - run_off[vrun]
+    zpos = np.where(run[vrun, 1] >= 0, run[vrun, 1] + 8 * k, -1)
+    xy, z = W.gather_coords(buf, run[vrun, 0] + 16 * k, zpos)
+    out = W.flat_to_wkb(W.Flat(xy, z, W.offsets(rings), W.offsets(part[:, 1]), W.offsets(gparts),
+                               part[:, 0], np.array(gtype, dtype=np.int64)))
+    for g in sorted(members, reverse=True):  # members come after their collection
+        out[g] = struct.pack("<BII", 1, 7, len(members[g])) + b"".join(out[m] for m in members[g])
+    return out[: len(tables)]
 
 
 # ----------------------------------------------------------- properties
@@ -338,25 +369,26 @@ def _encode_properties(values, spec: list[tuple[str, int]]) -> bytes:
     return bytes(out)
 
 
-def _decode_properties(buf, spec: list[tuple[str, int]]) -> dict:
-    vals: dict = {}
-    off, end = 0, len(buf)
+def _decode_properties(buf, off: int, end: int, readers: list, row: list) -> None:
+    """One feature's properties ``buf[off:end]`` -> ``row`` (one slot per
+    column; a null is an omitted slot). ``readers``: per column, the
+    unpacker and size of a scalar type, or None and the ColumnType of a
+    length-prefixed one."""
     while off + 2 <= end:
-        (i,) = struct.unpack_from("<H", buf, off)
+        (i,) = _U16(buf, off)
+        unpack, size = readers[i]
         off += 2
-        name, ctype = spec[i]
-        if ctype in _SCALAR_COL_FMT:
-            fmt = _SCALAR_COL_FMT[ctype]
-            (v,) = struct.unpack_from(fmt, buf, off)
-            off += struct.calcsize(fmt)
-            vals[name] = bool(v) if ctype == COL_BOOL else v
+        if unpack is not None:
+            (row[i],) = unpack(buf, off)
+            off += size
         else:
-            (ln,) = struct.unpack_from("<I", buf, off)
-            off += 4
-            raw = bytes(buf[off : off + ln])
-            off += ln
-            vals[name] = raw if ctype == COL_BINARY else raw.decode("utf-8")
-    return vals
+            (ln,) = _U32(buf, off)
+            raw = buf[off + 4 : off + 4 + ln]
+            off += 4 + ln
+            row[i] = raw if size == COL_BINARY else raw.decode("utf-8")
+
+
+_U16, _U32 = struct.Struct("<H").unpack_from, struct.Struct("<I").unpack_from
 
 
 # ----------------------------------------------------------------- write
@@ -432,14 +464,14 @@ def _encode_part(frames, part: str, geom_col: str, cols: list[str], spec, leaves
     with open(part, "wb") as f, (open(part + ".leaf", "wb") if leaves else contextlib.nullcontext()) as leaf:
         for pdf in frames:
             rows = zip(*(pdf[c].tolist() for c in cols)) if cols else itertools.repeat(())
-            for b, values in zip(pdf[geom_col].tolist(), rows):
+            geoms = pdf[geom_col].tolist()
+            for b, (x0, y0, x1, y1), values in zip(geoms, W.bounds_many(geoms).tolist(), rows):
                 fb = Builder()
                 geom_off = None
                 if b is not None:
                     g = W.parse_wkb(bytes(b))
                     gtypes.add(g.type)
                     has_z = has_z or g.has_z
-                    x0, y0, x1, y1 = W._geom_bounds(g)
                     env = [min(env[0], x0), min(env[1], y0), max(env[2], x1), max(env[3], y1)]
                     geom_off = _build_geometry(fb, g)
                 elif leaves:
@@ -510,7 +542,8 @@ def _write(data, path: str, geom_col: str, layer_name, crs, index_node_size: int
     # attribute: FIDs are driver-assigned on read, as in the reference
     cols = [c for c in data.columns if c not in (geom_col, "fid")]
     spec = _fgb_columns(attribute_schema(data, cols))
-    meta = "n long, minx double, miny double, maxx double, maxy double, gtypes array<string>, has_z boolean"
+    meta = [("n", "bigint"), ("minx", "double"), ("miny", "double"), ("maxx", "double"), ("maxy", "double"),
+            ("gtypes", "array<string>"), ("has_z", "boolean")]
 
     def encode(frames, part):
         return _encode_part(frames, part, geom_col, cols, spec, index_node_size > 0)
@@ -666,19 +699,24 @@ def flatgeobuf_info(path: str) -> dict:
     }
 
 
-def _decode_frames(buf: bytes, spec, layer_code: int) -> tuple[list, list[dict]]:
+def _decode_frames(buf: bytes, spec, layer_code: int) -> tuple[list, list[list]]:
     """Size-prefixed feature frames filling ``buf`` -> (WKB per feature,
-    property dict per feature)."""
-    geoms, prop_rows, off = [], [], 0
+    values per column of ``spec``, None for null)."""
+    readers = [(None, ct) if ct not in _SCALAR_COL_FMT else
+               (struct.Struct("<?" if ct == COL_BOOL else _SCALAR_COL_FMT[ct]).unpack_from,
+                struct.calcsize(_SCALAR_COL_FMT[ct])) for _, ct in spec]
+    tables, rows, off = [], [], 0
     while off + 4 <= len(buf):
-        (fsize,) = struct.unpack_from("<I", buf, off)
-        feat = Table.root(buf, off + 4)
+        (fsize,) = _U32(buf, off)
+        root = off + 4 + _U32(buf, off + 4)[0]
         off += 4 + fsize
-        gt = feat._indirect(0)
-        geoms.append(None if gt is None else W.encode_geom(_parse_geometry(Table(buf, gt), layer_code)))
-        ps, pn = feat.vector(1)
-        prop_rows.append(_decode_properties(buf[ps : ps + pn], spec) if pn else {})
-    return geoms, prop_rows
+        geom, props = field_positions(buf, root, 2)
+        tables.append(geom + _U32(buf, geom)[0] if geom else None)
+        ps, pn = vector_at(buf, props)
+        row = [None] * len(spec)
+        _decode_properties(buf, ps, ps + pn, readers, row)
+        rows.append(row)
+    return _geometries_wkb(buf, tables, layer_code), [list(c) for c in zip(*rows)] or [[] for _ in spec]
 
 
 def _spark_type(ctype: int) -> str:
@@ -708,8 +746,7 @@ def _decoder(path: str, layer_code: int, spec):
         with open(path, "rb") as f:
             f.seek(byte_lo)
             buf = f.read(byte_hi - byte_lo)
-        geoms, prop_rows = _decode_frames(buf, spec, layer_code)
-        values = [[r.get(name) for r in prop_rows] for name, _ in spec]
+        geoms, values = _decode_frames(buf, spec, layer_code)
         return chunk_frame(np.arange(fid_lo, fid_lo + len(geoms)), fields, values, geoms)
 
     return fields, decode

@@ -428,7 +428,7 @@ def write_geojson(pdf, path: str, geom_col: str = "geometry_wkb", crs=None, appe
     def encode(frames, part):
         return _encode_part(frames, part, geom_col, cols, types)
 
-    with encoded_parts(pdf, path, encode, "n long") as metas:
+    with encoded_parts(pdf, path, encode, [("n", "bigint")]) as metas:
         _stitch(path, metas, epsg, append, seq)
 
 

@@ -37,6 +37,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from pyogrio_spark.geometry import wkb as W
 from pyogrio_spark.geometry.predicates import PreparedPolygon, batch_intersects, batch_intersects_box
@@ -155,7 +168,7 @@ def _check_filters(where=None, bbox=None, mask=None, fids=None, skip_features=0,
         raise ValueError("'fids' may not be combined with other filters or ranges")
 
 
-def scan_chunks(spark: SparkSession, path: str, chunks: list, decode, schema: str,
+def scan_chunks(spark: SparkSession, path: str, chunks: list, decode, schema: StructType,
                 unit: str = "bytes", distributed: bool = True, **read_table_kwargs) -> DataFrame:
     """The one Spark read of a chunked file format. ``chunks`` are tuples
     whose first three fields are the chunk's range ``lo``, ``hi`` (in
@@ -215,10 +228,23 @@ NUMPY_DTYPE = {"bigint": "int64", "float": "float32", "double": "float64", "bool
                "string": "object", "binary": "object"}
 
 
-def chunk_schema(fields: list[tuple[str, str]]) -> str:
-    """DDL of a chunk decoder's frame: ``fid``, the (name, Spark type)
+_SPARK_TYPES = {"bigint": LongType(), "int": IntegerType(), "float": FloatType(), "double": DoubleType(),
+                "boolean": BooleanType(), "string": StringType(), "binary": BinaryType()}
+
+
+def spark_schema(fields: list[tuple[str, str]]) -> StructType:
+    """(name, Spark SQL type name) pairs -> their nullable StructType, built
+    in Python: a DDL string would cost each ``mapInPandas`` a JVM parse."""
+    def dtype(t: str) -> DataType:
+        return ArrayType(dtype(t[6:-1])) if t.startswith("array<") else _SPARK_TYPES[t]
+
+    return StructType([StructField(n, dtype(t)) for n, t in fields])
+
+
+def chunk_schema(fields: list[tuple[str, str]]) -> StructType:
+    """Schema of a chunk decoder's frame: ``fid``, the (name, Spark type)
     attribute ``fields`` in file order, then the geometry."""
-    return ", ".join(["`fid` bigint", *(f"`{n}` {t}" for n, t in fields), f"`{GEOMETRY_COL}` binary"])
+    return spark_schema([("fid", "bigint"), *fields, (GEOMETRY_COL, "binary")])
 
 
 def chunk_frame(fids, fields: list[tuple[str, str]], values: list[list], geoms: list) -> pd.DataFrame:
@@ -287,15 +313,23 @@ def _refine_fn(bbox, mask):
 
 def _box_keep(box, vals) -> np.ndarray:
     xmin, ymin, xmax, ymax = box
-    # point fast path: skip the parse loop for uniform 2-D point batches
+    # point fast path: skip the parse for uniform 2-D point batches
     if all(isinstance(b, (bytes, bytearray)) and len(b) == 21 for b in vals):
         lon, lat = W.decode_points(vals, on_invalid="ignore")
         return (lon >= xmin) & (lon <= xmax) & (lat >= ymin) & (lat <= ymax)
-    # generic path: vectorized CLOSED-interval box intersects — point
-    # rows get the identical closed test as the fast path (result no
-    # longer depends on the batch's composition), non-points are
-    # boundary-inclusive like GEOS intersects
-    return batch_intersects_box(xmin, ymin, xmax, ymax, vals)
+    # envelopes decide first: one inside the (closed) box keeps the row,
+    # one disjoint from it drops it, and no vertex drops an empty or null
+    # row. Only rows whose envelope straddles the box edge (or holds NaN)
+    # reach the exact closed-interval intersects, which is
+    # boundary-inclusive like GEOS
+    flat = W.flat_from_wkb(vals)
+    env = W.flat_bounds(flat)
+    keep = (env[:, 0] >= xmin) & (env[:, 2] <= xmax) & (env[:, 1] >= ymin) & (env[:, 3] <= ymax)
+    disjoint = (env[:, 0] > xmax) | (env[:, 2] < xmin) | (env[:, 1] > ymax) | (env[:, 3] < ymin)
+    edge = np.flatnonzero(~keep & ~disjoint & (np.diff(flat.geom_vertex_off()) > 0))
+    if len(edge):
+        keep[edge] = batch_intersects_box(xmin, ymin, xmax, ymax, [vals[i] for i in edge])
+    return keep
 
 
 def _mask_keep(prep: PreparedPolygon, vals) -> np.ndarray:

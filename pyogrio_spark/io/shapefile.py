@@ -342,81 +342,105 @@ def read_shapefile_pdf(path: str) -> tuple[pd.DataFrame, dict]:
 _M_NODATA = -1e39  # spec: M < -1e38 means "no data"
 
 
-def _z_block(z: np.ndarray) -> bytes:
-    """[zmin, zmax] + z values, followed by a no-data M block (the spec
-    requires the M section in Z records; GDAL writes no-data there when
-    the source has no M)."""
-    return (
-        struct.pack("<2d", float(z.min()), float(z.max()))
-        + np.ascontiguousarray(z, dtype="<f8").tobytes()
-        + struct.pack("<2d", _M_NODATA, _M_NODATA)
-        + np.full(len(z), _M_NODATA, dtype="<f8").tobytes()
+# WKB base type -> shapefile shape type (+10 with Z); a Polygon and a
+# MultiPolygon are both one Polygon record, a LineString one PolyLine part
+_SHAPE_TYPE = np.array([0, 1, 3, 5, 8, 3, 5, -1])
+
+
+def _shp_records(flat: W.Flat) -> tuple[bytes, np.ndarray]:
+    """The flat layout of a batch -> (its .shp records, numbered 0; shape
+    type per row). Polygon rings are emitted outer-CW / holes-CCW per the
+    spec (the sign of each ring's shoelace area, one ``np.add.reduceat``
+    over the batch), and a MultiPolygon's rings make one Polygon record.
+    Z geometries get the Z record types (11/13/15/18) with a no-data M
+    section. Every field lands in one preallocated buffer by whole-batch
+    scatters."""
+    gt = flat.geom_type
+    ng = len(gt)
+    gvo = flat.geom_vertex_off()
+    nverts = np.diff(gvo)
+    if (gt == 7).any():
+        raise ValueError("cannot write geometry type GeometryCollection to shapefile")
+    if ((gt > 0) & (nverts == 0)).any():
+        raise ValueError("cannot write an empty geometry to shapefile")
+    pgeom = np.repeat(np.arange(ng), np.diff(flat.geom_off))
+    has_z = np.bincount(pgeom[flat.part_type >= 1000], minlength=ng) > 0
+    st = _SHAPE_TYPE[gt] + 10 * has_z
+    nrings = np.diff(flat.part_off[flat.geom_off])
+
+    # ring orientation: the shoelace sum of each ring's own edges
+    x, y = flat.xy[:, 0], flat.xy[:, 1]
+    vring = flat.ring_of_vertex()
+    ro = flat.ring_off
+    terms = np.zeros(len(x))
+    terms[:-1] = x[:-1] * y[1:] - x[1:] * y[:-1]
+    terms[ro[1:-1] - 1] = 0.0  # the step from one ring to the next
+    area = np.zeros(len(ro) - 1)
+    full = ro[1:] > ro[:-1]
+    if full.any():
+        area[full] = np.add.reduceat(terms, ro[:-1][full]) / 2.0
+    pring = flat.part_of_ring()
+    first = np.arange(len(area)) == flat.part_off[pring]
+    flip = (flat.part_type[pring] % 1000 == 3) & np.where(first, area > 0, area < 0)
+    order = np.arange(len(x))
+    rv = flip[vring]
+    order[rv] = (ro[vring] + ro[vring + 1] - 1 - order)[rv]
+    xy, z = flat.xy[order], flat.z[order]
+
+    point = (st % 10 == 1)
+    multi = (st % 10 == 8)
+    poly = (st % 10 == 3) | (st % 10 == 5)
+    zb = 16 + 8 * nverts  # [zmin, zmax] + z values, as long again for M
+    body = np.select(
+        [gt == 0, point, multi],
+        [4, 20 + 16 * has_z, 40 + 16 * nverts + 2 * zb * has_z],
+        44 + 4 * nrings + 16 * nverts + 2 * zb * has_z,
     )
+    rec = W.offsets(8 + body)
+    out = np.zeros(rec[-1], dtype=np.uint8)
+    f8 = W.f8_at(out)
+    i4 = np.ndarray((max(len(out) - 3, 0),), dtype="<i4", buffer=out, strides=(1,))
+    np.ndarray((max(len(out) - 3, 0),), dtype=">i4", buffer=out, strides=(1,))[rec[:-1] + 4] = body // 2
+    at = rec[:-1] + 8  # body of each record
+    i4[at] = st * (gt > 0)
 
+    shaped = multi | poly
+    rows = np.flatnonzero(shaped)
+    if len(rows):
+        starts = gvo[:-1][shaped]
+        f8[at[rows] + 4] = np.minimum.reduceat(xy[:, 0], starts)
+        f8[at[rows] + 12] = np.minimum.reduceat(xy[:, 1], starts)
+        f8[at[rows] + 20] = np.maximum.reduceat(xy[:, 0], starts)
+        f8[at[rows] + 28] = np.maximum.reduceat(xy[:, 1], starts)
+    i4[at[multi] + 36] = nverts[multi]
+    i4[at[poly] + 36] = nrings[poly]
+    i4[at[poly] + 40] = nverts[poly]
+    # part starts of PolyLine/Polygon records: each ring's first vertex
+    rgeom = pgeom[pring]
+    rpoly = poly[rgeom]
+    rk = np.arange(len(area)) - flat.part_off[flat.geom_off][rgeom]
+    i4[(at[rgeom] + 44 + 4 * rk)[rpoly]] = (ro[:-1] - gvo[rgeom])[rpoly]
 
-def _geom_to_shp_record(g) -> tuple[int, bytes]:
-    """Parsed Geom -> (shape_type, record body). Polygon rings are emitted
-    outer-CW / holes-CCW per the spec; multipolygons flatten their ring
-    lists into one Polygon record (how shapefiles represent them). Z
-    geometries emit the Z record types (11/13/15/18) with a no-data M
-    section."""
-    if g.type == "Point":
-        if g.has_z:
-            return 11, struct.pack("<i", 11) + struct.pack(
-                "<4d", float(g.coords[0]), float(g.coords[1]), float(g.coords[2]), _M_NODATA
-            )
-        return 1, struct.pack("<i", 1) + struct.pack("<dd", float(g.coords[0]), float(g.coords[1]))
-    if g.type == "MultiPoint":
-        dims = 3 if g.has_z else 2
-        pts = np.array([p.coords[:dims] for p in g.coords], dtype="<f8")
-        xy = np.ascontiguousarray(pts[:, :2])
-        st = 18 if g.has_z else 8
-        body = struct.pack("<i", st) + struct.pack("<4d", *_bbox_of(xy)) + struct.pack("<i", len(pts)) + xy.tobytes()
-        if g.has_z:
-            body += _z_block(pts[:, 2])
-        return st, body
-    if g.type in ("LineString", "MultiLineString"):
-        parts = [g.coords] if g.type == "LineString" else [p.coords for p in g.coords]
-        st = 13 if g.has_z else 3
-        dims = 3 if g.has_z else 2
-        return st, _poly_body(st, [np.asarray(p[:, :dims], dtype="<f8") for p in parts])
-    if g.type in ("Polygon", "MultiPolygon"):
-        groups = [g.coords] if g.type == "Polygon" else [p.coords for p in g.coords]
-        dims = 3 if g.has_z else 2
-        rings = []
-        for grp in groups:
-            for i, ring in enumerate(grp):
-                r = np.asarray(ring[:, :dims], dtype="<f8")
-                area = _ring_signed_area(r)
-                # outer ring (i == 0) must be CW (area <= 0), holes CCW
-                if (i == 0 and area > 0) or (i > 0 and area < 0):
-                    r = r[::-1].copy()
-                rings.append(r)
-        st = 15 if g.has_z else 5
-        return st, _poly_body(st, rings)
-    raise ValueError(f"cannot write geometry type {g.type} to shapefile")
-
-
-def _bbox_of(pts: np.ndarray):
-    return float(pts[:, 0].min()), float(pts[:, 1].min()), float(pts[:, 0].max()), float(pts[:, 1].max())
-
-
-def _poly_body(stype: int, parts: list[np.ndarray]) -> bytes:
-    allpts = np.concatenate(parts, axis=0)
-    offs, total = [], 0
-    for p in parts:
-        offs.append(total)
-        total += len(p)
-    body = (
-        struct.pack("<i", stype)
-        + struct.pack("<4d", *_bbox_of(allpts))
-        + struct.pack("<ii", len(parts), total)
-        + np.array(offs, dtype="<i4").tobytes()
-        + np.ascontiguousarray(allpts[:, :2], dtype="<f8").tobytes()
-    )
-    if allpts.shape[1] == 3:  # Z record types: z block + no-data M block
-        body += _z_block(allpts[:, 2])
-    return body
+    vgeom = rgeom[vring]
+    k = np.arange(len(xy)) - gvo[vgeom]
+    xy_at = np.select([point, multi], [at + 4, at + 40], at + 44 + 4 * nrings)
+    v_at = xy_at[vgeom] + 16 * k
+    f8[v_at], f8[v_at + 8] = xy[:, 0], xy[:, 1]
+    zrows = np.flatnonzero(has_z & shaped)
+    if len(zrows):
+        z_at = xy_at + 16 * nverts  # [zmin, zmax], z values, then the M block
+        zstarts = gvo[:-1][zrows]
+        f8[z_at[zrows]] = np.minimum.reduceat(z, zstarts)
+        f8[z_at[zrows] + 8] = np.maximum.reduceat(z, zstarts)
+        zv = has_z[vgeom] & shaped[vgeom]
+        f8[(z_at[vgeom] + 16 + 8 * k)[zv]] = z[zv]
+        m_at = z_at + zb
+        f8[m_at[zrows]] = f8[m_at[zrows] + 8] = _M_NODATA
+        f8[(m_at[vgeom] + 16 + 8 * k)[zv]] = _M_NODATA
+    zpt = np.flatnonzero(point & has_z)
+    f8[at[zpt] + 20] = z[gvo[zpt]]
+    f8[at[zpt] + 28] = _M_NODATA
+    return out.tobytes(), st
 
 
 def _shp_header(total_words: int, layer_type: int, bbox) -> bytes:
@@ -483,28 +507,42 @@ def _dbf_fields(schema) -> list[tuple[str, str, int, int]]:
     return fdefs
 
 
-def _isnull(v) -> bool:
-    return v is None or v is pd.NA or v is pd.NaT or (isinstance(v, float) and v != v)
+def _text_matrix(texts: list[bytes], width: int) -> np.ndarray:
+    """Byte strings -> (n, width) cells, each cut to ``width`` bytes and
+    space-padded on the right."""
+    lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+    mat = np.array(texts, dtype=f"S{width}").view(np.uint8).reshape(len(texts), width).copy()
+    mat[np.arange(width) >= lens[:, None]] = ord(" ")
+    return mat
 
 
-def _c_width(values) -> int:
-    """DBF C field width: the longest non-null value in UTF-8 bytes,
-    clamped to 1..254 (an all-null column gets width 1)."""
-    return max(1, min(254, max((len(str(v).encode("utf-8")) for v in values if not _isnull(v)), default=0)))
-
-
-def _dbf_cell(v, ftype: str, flen: int, fdec: int) -> bytes:
-    if _isnull(v):
-        return b"?" if ftype == "L" else b" " * flen
+def _dbf_cells(col: pd.Series, ftype: str, flen: int, fdec: int) -> np.ndarray:
+    """One attribute column -> its (n, width) DBF cells, built per column:
+    C at the longest UTF-8 value clamped to 1..254 (an all-null column
+    gets width 1), numbers right-aligned at ``flen`` (cut to it), L as
+    T/F, D as YYYYMMDD; a null is blank (``?`` for L)."""
+    null = col.isna().to_numpy()
+    vals = col.to_numpy(dtype=object)[~null]
     if ftype == "C":
-        return str(v).encode("utf-8")[:flen].ljust(flen, b" ")
-    if ftype == "L":
-        return b"T" if v else b"F"
-    if ftype == "D":
-        return f"{v:%Y%m%d}".encode("ascii")
-    if fdec:
-        return f"{float(v):>{flen}.{fdec}f}".encode("ascii")[:flen]
-    return f"{int(v):>{flen}d}".encode("ascii")[:flen]
+        texts = [v.encode("utf-8") if type(v) is str else str(v).encode("utf-8") for v in vals]
+        flen = max(1, min(254, max(map(len, texts), default=0)))
+    out = np.full((len(col), flen), ord("?" if ftype == "L" else " "), dtype=np.uint8)
+    if not len(vals):
+        return out
+    if ftype == "C":
+        out[~null] = _text_matrix(texts, flen)
+    elif ftype == "L":
+        out[~null, 0] = np.where(vals.astype(bool), ord("T"), ord("F"))
+    elif ftype == "D":
+        days = np.datetime_as_string(np.array(vals, dtype="datetime64[D]")).astype("S10")
+        out[~null] = days.view(np.uint8).reshape(-1, 10)[:, [0, 1, 2, 3, 5, 6, 8, 9]]
+    elif fdec:
+        out[~null] = np.char.mod(f"%{flen}.{fdec}f", vals.astype(float)).astype(f"S{flen}").view(np.uint8).reshape(-1, flen)
+    else:
+        ints = (vals.astype(np.uint64 if col.dtype.kind == "u" else np.int64) if col.dtype.kind in "iu"
+                else np.array([int(v) for v in vals], dtype=object))
+        out[~null] = np.char.rjust(ints.astype(str), flen).astype(f"S{flen}").view(np.uint8).reshape(-1, flen)
+    return out
 
 
 def _dbf_relayout(src, dst, n: int, part_widths, widths) -> None:
@@ -527,35 +565,32 @@ def _dbf_relayout(src, dst, n: int, part_widths, widths) -> None:
 def _encode_part(frames, part: str, geom_col: str, attrs: list[str], fdefs) -> dict:
     """The one Shapefile part encoder: ``frames`` -> ``part.shp`` (records
     numbered 0; the stitch patches the numbers) and ``part.dbf`` (rows
-    with each C field at this part's longest value). Holds the part's
-    attribute columns, not its geometries, until the part ends, to know
-    those widths. Returns the part's record count, bbox, shape types and
-    field widths."""
+    with each C field at this part's longest value). Each frame's
+    geometries go through one flat parse (``wkb.flat_from_wkb``) and one
+    batch record encoder; the part's attribute columns, not its
+    geometries, are held until the part ends, to know those widths.
+    Returns the part's record count, bbox, shape types and field widths."""
     x0 = y0 = np.inf
     x1 = y1 = -np.inf
     stypes: set[int] = set()
     attr_frames = []
     with open(part + ".shp", "wb") as f:
         for pdf in frames:
-            for b in pdf[geom_col].tolist():
-                if b is None:
-                    body = struct.pack("<i", 0)
-                else:
-                    g = W.parse_wkb(bytes(b))
-                    st, body = _geom_to_shp_record(g)
-                    stypes.add(st)
-                    gx0, gy0, gx1, gy1 = W._geom_bounds(g)
-                    x0, y0, x1, y1 = min(x0, gx0), min(y0, gy0), max(x1, gx1), max(y1, gy1)
-                f.write(struct.pack(">ii", 0, len(body) // 2) + body)
+            flat = W.flat_from_wkb(pdf[geom_col].tolist())
+            records, st = _shp_records(flat)
+            f.write(records)
+            stypes.update(st[flat.geom_type > 0].tolist())
+            b = W.flat_bounds(flat, exterior_only=True)  # NaN rows leave the bbox as is
+            x0, y0 = float(np.fmin.reduce(b[:, 0], initial=x0)), float(np.fmin.reduce(b[:, 1], initial=y0))
+            x1, y1 = float(np.fmax.reduce(b[:, 2], initial=x1)), float(np.fmax.reduce(b[:, 3], initial=y1))
             attr_frames.append(pdf[attrs])
     rows = pd.concat(attr_frames, ignore_index=True) if attr_frames else pd.DataFrame(columns=attrs)
-    cols = [rows[c].tolist() for c in attrs]
-    fdefs = [(name, ft, _c_width(vals) if ft == "C" else fl, fd) for vals, (name, ft, fl, fd) in zip(cols, fdefs)]
-    cells = [[_dbf_cell(v, ft, fl, fd) for v in vals] for vals, (_, ft, fl, fd) in zip(cols, fdefs)]
+    cells = [np.full((len(rows), 1), ord(" "), dtype=np.uint8)]  # the deletion flag
+    cells += [_dbf_cells(rows[c], ft, fl, fd) for c, (_, ft, fl, fd) in zip(attrs, fdefs)]
     with open(part + ".dbf", "wb") as f:
-        f.write(b"".join(b" " + b"".join(row) for row in zip(*cells)) if cells else b" " * len(rows))
+        f.write(np.hstack(cells).tobytes())
     return {"n": len(rows), "minx": x0, "miny": y0, "maxx": x1, "maxy": y1,
-            "stypes": sorted(stypes), "widths": [fl for _, _, fl, _ in fdefs]}
+            "stypes": sorted(stypes), "widths": [c.shape[1] for c in cells[1:]]}
 
 
 def _stitch(path: str, metas: list[dict], fdefs, crs) -> None:
@@ -620,7 +655,8 @@ def _write(data, path: str, geom_col: str, crs) -> None:
 
     attrs = [c for c in data.columns if c not in (geom_col, "fid")]
     fdefs = _dbf_fields(attribute_schema(data, attrs))
-    meta = "n long, minx double, miny double, maxx double, maxy double, stypes array<int>, widths array<int>"
+    meta = [("n", "bigint"), ("minx", "double"), ("miny", "double"), ("maxx", "double"), ("maxy", "double"),
+            ("stypes", "array<int>"), ("widths", "array<int>")]
 
     def encode(frames, part):
         return _encode_part(frames, part, geom_col, attrs, fdefs)

@@ -46,12 +46,13 @@ def attribute_schema(data, cols: list[str]) -> pa.Schema:
 
 
 @contextlib.contextmanager
-def encoded_parts(data, path: str, encode, meta_schema: str):
+def encoded_parts(data, path: str, encode, meta_fields: list[tuple[str, str]]):
     """Run ``encode(frames, part) -> dict`` once per part of ``data`` and
     yield the parts' metadata dicts in part order, each with its ``part``
     path. A pandas frame is one part encoded in process; a Spark
     DataFrame is one part per partition, encoded by its task inside one
-    ``mapInPandas`` (``meta_schema`` is the DDL of ``encode``'s dict).
+    ``mapInPandas`` (``meta_fields``: the (name, Spark type) pairs of
+    ``encode``'s dict, handed to it as a ``StructType``).
     The parts directory sits next to ``path`` (executors must see it) and
     is removed on exit."""
     parts_dir = f"{path}.parts-{uuid.uuid4().hex[:8]}"
@@ -69,7 +70,10 @@ def encoded_parts(data, path: str, encode, meta_schema: str):
             part = os.path.join(parts_dir, f"part-{pid:05d}")
             yield pd.DataFrame([{"pid": pid, "part": part, **encode(frames, part)}])
 
-        rows = data.mapInPandas(task, schema=f"pid int, part string, {meta_schema}").collect()
+        from pyogrio_spark.io.reader import spark_schema
+
+        schema = spark_schema([("pid", "int"), ("part", "string"), *meta_fields])
+        rows = data.mapInPandas(task, schema=schema).collect()
         yield [r.asDict() for r in sorted(rows, key=lambda r: r["pid"])]
     finally:
         shutil.rmtree(parts_dir, ignore_errors=True)

@@ -31,8 +31,11 @@ _UDS_ENABLED = "spark.python.unix.domain.socket.enabled"
 _UDS_DIR = "spark.python.unix.domain.socket.dir"
 _UDS_PREFIX = "pyogrio_spark_uds_"
 # Spark names each socket <dir>/.<uuid4>.sock (43 bytes after the dir) and
-# Linux's sun_path holds 107 bytes plus the NUL, so the dir gets 64 bytes.
-_MAX_UDS_DIR = 107 - 43
+# Linux's sun_path holds 107 bytes plus the NUL, so the dir gets 64 bytes;
+# Spark 4.1 also rejects a dir of more than 61 characters (its conf check).
+# A path's UTF-8 bytes are never fewer than its Java characters, so 61
+# bytes meets both rules.
+_MAX_UDS_DIR = min(107 - 43, 61)
 
 
 def socket_conf(master: str, extra_conf: dict | None = None) -> dict:

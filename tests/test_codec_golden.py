@@ -235,3 +235,25 @@ def _record(tmp_path):  # pragma: no cover - regenerates the digests above
     print("FGB_DIGESTS =", [None if b is None else _sha(b) for b in read_flatgeobuf_pdf(str(tmp_path / "m.fgb"))[0]["geometry_wkb"]])
     _hand_built_fgb(str(tmp_path / "h.fgb"))
     print("FGB_HAND_DIGESTS =", [_sha(b) for b in read_flatgeobuf_pdf(str(tmp_path / "h.fgb"))[0]["geometry_wkb"]])
+
+
+def test_polygon_codecs_build_no_geometry_objects(monkeypatch, tmp_path):
+    """The FlatGeobuf decoder, the bbox refine and the Shapefile part
+    encoder run on the flat layout: on a Polygon/MultiPolygon batch they
+    never parse a WKB into a ``Geom`` or encode one back."""
+    from pyogrio_spark.io.reader import _box_keep
+
+    geoms = [MATRIX[n] for n in ("poly_hole_ccw_cw", "poly_hole_cw_ccw", "multipolygon", "poly_z",
+                                 "multipolygon_z")]
+    path = str(tmp_path / "polys.fgb")
+    write_flatgeobuf(_frame(geoms), path)
+
+    def per_geometry(*args, **kwargs):
+        raise AssertionError("per-geometry codec path")
+
+    monkeypatch.setattr(W, "parse_wkb", per_geometry)
+    monkeypatch.setattr(W, "encode_geom", per_geometry)
+    back, _ = read_flatgeobuf_pdf(path)
+    assert back["geometry_wkb"].tolist() == geoms
+    assert _box_keep((1.0, 1.0, 3.0, 3.0), back["geometry_wkb"].to_numpy()).tolist() == [True] * 5
+    write_shapefile(back.drop(columns=["fid"]), str(tmp_path / "polys.shp"))

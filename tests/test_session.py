@@ -13,6 +13,7 @@ import sys
 import tempfile
 import textwrap
 
+import pytest
 from pyspark import SparkContext
 
 from pyogrio_spark.session import socket_conf
@@ -85,8 +86,9 @@ _LONG_TMP_SCRIPT = textwrap.dedent(
     sock_dir = conf.get("spark.python.unix.domain.socket.dir")
     print("SOCK_DIR", sock_dir, flush=True)
     assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
-    assert spark._jvm.java.lang.System.getProperty("java.io.tmpdir") == os.environ["TMPDIR"]
-    assert len(os.fsencode(sock_dir)) <= 64 and stat.S_IMODE(os.stat(sock_dir).st_mode) == 0o700
+    if sys.argv[2] == "java_tmp":
+        assert spark._jvm.java.lang.System.getProperty("java.io.tmpdir") == os.environ["TMPDIR"]
+    assert len(os.fsencode(sock_dir)) <= 61 and stat.S_IMODE(os.stat(sock_dir).st_mode) == 0o700
 
     def double(batches):
         for pdf in batches:
@@ -101,6 +103,24 @@ _LONG_TMP_SCRIPT = textwrap.dedent(
 )
 
 
+def _drive_with_temp_dir(tmp_path, temp_dir: str, java_tmp: bool) -> None:
+    """Run _LONG_TMP_SCRIPT with TMPDIR (and, if ``java_tmp``,
+    java.io.tmpdir) set to ``temp_dir``; it leaves no socket directory."""
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS", "JAVA_TOOL_OPTIONS")}
+    env.update(TMPDIR=temp_dir)
+    if java_tmp:
+        env.update(JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={temp_dir}")
+    script = tmp_path / "drive.py"
+    script.write_text(_LONG_TMP_SCRIPT)
+    proc = subprocess.run([sys.executable, str(script), ROOT, "java_tmp" if java_tmp else "-"], cwd=tmp_path, env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    sock_dir = proc.stdout.split("SOCK_DIR ", 1)[1].split()[0]
+    assert "OK" in proc.stdout
+    assert not os.path.exists(sock_dir)
+    assert not [p for p in os.listdir(temp_dir) if p.startswith("pyogrio_spark_uds_")]
+
+
 def test_long_temp_dirs_keep_unix_sockets(tmp_path):
     """With TMPDIR and java.io.tmpdir too long for a socket path (Spark's
     own default dir would fail the session start) the session starts,
@@ -108,17 +128,20 @@ def test_long_temp_dirs_keep_unix_sockets(tmp_path):
     long_tmp = tmp_path / ("t" * max(1, 101 - len(str(tmp_path))))
     long_tmp.mkdir()
     assert len(str(long_tmp)) >= 100
-    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS")}
-    env.update(TMPDIR=str(long_tmp), JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={long_tmp}")
-    script = tmp_path / "drive.py"
-    script.write_text(_LONG_TMP_SCRIPT)
-    proc = subprocess.run([sys.executable, str(script), ROOT], cwd=tmp_path, env=env,
-                          capture_output=True, text=True, timeout=300)
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    sock_dir = proc.stdout.split("SOCK_DIR ", 1)[1].split()[0]
-    assert "OK" in proc.stdout
-    assert not os.path.exists(sock_dir)
-    assert not [p for p in os.listdir(long_tmp) if p.startswith("pyogrio_spark_uds_")]
+    _drive_with_temp_dir(tmp_path, str(long_tmp), java_tmp=True)
+
+
+def test_mid_length_temp_dir_keeps_unix_sockets(tmp_path):
+    """A 36-byte TMPDIR leaves room for a socket path under it, but a
+    socket dir there would pass Spark's 61-character limit (the session
+    would start and its first collect fail): the dir goes under /tmp and
+    Python jobs and collects run."""
+    mid = tempfile.mkdtemp(prefix="p" * (36 - len("/tmp/") - 8), dir="/tmp")
+    try:
+        assert len(mid) == 36
+        _drive_with_temp_dir(tmp_path, mid, java_tmp=False)
+    finally:
+        shutil.rmtree(mid)
 
 
 def test_socket_conf(tmp_path, monkeypatch):
@@ -136,7 +159,23 @@ def test_socket_conf(tmp_path, monkeypatch):
         d = conf.pop("spark.python.unix.domain.socket.dir")
         try:
             assert conf == {"spark.python.unix.domain.socket.enabled": "true"}
-            assert os.path.dirname(d) == "/tmp" and len(os.fsencode(d)) <= 64
+            assert os.path.dirname(d) == "/tmp" and len(os.fsencode(d)) <= 61
             assert stat.S_IMODE(os.stat(d).st_mode) == 0o700
         finally:
             shutil.rmtree(d)
+
+
+@pytest.mark.parametrize("nbytes", [35, 36, 37])
+def test_socket_conf_bounds_dir_by_sparks_limit(monkeypatch, nbytes):
+    """A 35-37-byte temp dir fits a socket path but not Spark's 61-character
+    socket dir limit: the dir goes under /tmp, within both bounds."""
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    mid = tempfile.mkdtemp(prefix="p" * (nbytes - len("/tmp/") - 8), dir="/tmp")
+    monkeypatch.setattr(tempfile, "tempdir", mid)
+    try:
+        assert len(mid) == nbytes
+        d = socket_conf("local[2]")["spark.python.unix.domain.socket.dir"]
+        shutil.rmtree(d)
+        assert os.path.dirname(d) == "/tmp" and len(d) <= 61
+    finally:
+        shutil.rmtree(mid)

@@ -101,3 +101,35 @@ def test_rect_mask():
     quad = W.encode_polygon([ring])
     m = W.rect_mask([bytes(rects[0]), point, quad, None])
     assert m.tolist() == [True, False, False, False]
+
+
+def test_flat_layout_round_trips_the_linear_types():
+    """WKB -> flat layout -> WKB gives what parse + encode give, for 2-D,
+    Z, M (dropped), big-endian, Multi*, simple collections and null."""
+    import struct
+
+    sq = np.array([(0.0, 0.0), (1, 0), (1, 1), (0, 1), (0, 0)])
+    sqz = np.column_stack([sq, np.arange(5.0)])
+    be_line = b"\x00" + struct.pack(">II", 2, 2) + np.array([[1, 2], [3, 4]], dtype=">f8").tobytes()
+    line_m = b"\x01" + struct.pack("<II", 2002, 2) + np.array([[1, 2, 9], [3, 4, 9]], dtype="<f8").tobytes()
+    geoms = [
+        W.encode_point(1.0, 2.0), W.encode_point(1.0, 2.0, 3.0), None, be_line, line_m,
+        W.encode_polygon([sq, sq * 0.5]), W.encode_polygon([sqz]), b"\x01\x03\x00\x00\x00\x00\x00\x00\x00",
+        W.encode_multipoint([(0.0, 0.0, 1.0), (2.0, 2.0, 2.0)]), W.encode_multilinestring([sq[:2], sq[2:]]),
+        W.encode_multipolygon([[sq], [sqz + 5.0]]), W.encode_collection([W.encode_point(5.0, 5.0), be_line]),
+    ]
+    f = W.flat_from_wkb(geoms)
+    assert f.geom_type.tolist() == [1, 1, 0, 2, 2, 3, 3, 3, 4, 5, 6, 7]
+    assert W.flat_to_wkb(f) == [None if g is None else W.encode_geom(W.parse_wkb(g)) for g in geoms]
+    b = W.flat_bounds(f)
+    assert b[5].tolist() == [0, 0, 1, 1] and b[10].tolist() == [0, 0, 6, 6] and np.isnan(b[[2, 7]]).all()
+
+
+def test_flat_layout_rejects_truncated_wkb():
+    good = W.encode_polygon([np.array([(0.0, 0.0), (1, 0), (1, 1), (0, 0)])])
+    with pytest.raises(W.WKBError):
+        W.flat_from_wkb([good, good[:-8]])
+    with pytest.raises(W.WKBError):
+        W.flat_from_wkb([b"\x01\x01\x00"])
+    with pytest.raises(W.WKBError):
+        W.flat_from_wkb([b"\x01" + (99).to_bytes(4, "little")])
