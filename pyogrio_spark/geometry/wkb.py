@@ -673,27 +673,19 @@ def f8_at(buf, big_endian: bool = False) -> np.ndarray:
     return np.ndarray((max(len(buf) - 7, 0),), dtype=">f8" if big_endian else "<f8", buffer=buf, strides=(1,))
 
 
-def gather_coords(buf, pos: np.ndarray, zpos: np.ndarray | None = None, be: np.ndarray | None = None):
+def gather_coords(buf, pos: np.ndarray, zpos: np.ndarray, be: np.ndarray | None = None):
     """The one coordinate move of the flat layout: x at byte ``pos`` of
     ``buf``, y at ``pos + 8`` and z at ``zpos`` (-1: no Z, z is 0.0),
-    little-endian unless ``be`` -> ((n, 2) xy, (n,) z)."""
-    le = f8_at(buf)
+    little-endian except where ``be`` -> ((n, 2) xy, (n,) z)."""
     xy = np.empty((len(pos), 2))
     z = np.zeros(len(pos))
-    has_z = zpos is not None and (zpos >= 0).any()
-    if be is not None and be.any():
-        big = f8_at(buf, big_endian=True)
-        for src, sel in ((le, ~be), (big, be)):
+    le = np.ones(len(pos), dtype=bool) if be is None else ~be
+    for src, sel in ((f8_at(buf), le), (f8_at(buf, big_endian=True), ~le)):
+        if sel.any():
             p = pos[sel]
             xy[sel, 0], xy[sel, 1] = src[p], src[p + 8]
-            if has_z:
-                zs = sel & (zpos >= 0)
-                z[zs] = src[zpos[zs]]
-        return xy, z
-    xy[:, 0], xy[:, 1] = le[pos], le[pos + 8]
-    if has_z:
-        zs = zpos >= 0
-        z[zs] = le[zpos[zs]]
+            zs = sel & (zpos >= 0)
+            z[zs] = src[zpos[zs]]
     return xy, z
 
 

@@ -190,14 +190,7 @@ class Table:
         return cls(buf, base + o)
 
     def _field(self, slot: int) -> int | None:
-        (soff,) = struct.unpack_from("<i", self.buf, self.pos)
-        vt = self.pos - soff
-        (vt_size,) = struct.unpack_from("<H", self.buf, vt)
-        fo = 4 + 2 * slot
-        if fo + 2 > vt_size:
-            return None
-        (off,) = struct.unpack_from("<H", self.buf, vt + fo)
-        return self.pos + off if off else None
+        return field_positions(self.buf, self.pos, slot + 1)[slot] or None
 
     def scalar(self, slot: int, fmt: str, default=None):
         p = self._field(slot)
@@ -218,11 +211,7 @@ class Table:
 
     def vector(self, slot: int) -> tuple[int, int]:
         """-> (elements start, count); (0, 0) if absent."""
-        t = self._indirect(slot)
-        if t is None:
-            return 0, 0
-        (n,) = struct.unpack_from("<I", self.buf, t)
-        return t + 4, n
+        return vector_at(self.buf, self._field(slot) or 0)
 
     def scalar_vector(self, slot: int, fmt_char: str) -> list:
         start, n = self.vector(slot)

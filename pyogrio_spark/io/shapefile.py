@@ -404,14 +404,16 @@ def _shp_records(flat: W.Flat) -> tuple[bytes, np.ndarray]:
     at = rec[:-1] + 8  # body of each record
     i4[at] = st * (gt > 0)
 
+    # bbox (and z range) of every non-null row: their vertex runs tile the batch
+    live = np.flatnonzero(gt > 0)
+    lo, hi = np.zeros((ng, 3)), np.zeros((ng, 3))
+    if len(live):
+        xyz = np.column_stack([xy, z])
+        lo[live] = np.minimum.reduceat(xyz, gvo[:-1][live])
+        hi[live] = np.maximum.reduceat(xyz, gvo[:-1][live])
     shaped = multi | poly
-    rows = np.flatnonzero(shaped)
-    if len(rows):
-        starts = gvo[:-1][shaped]
-        f8[at[rows] + 4] = np.minimum.reduceat(xy[:, 0], starts)
-        f8[at[rows] + 12] = np.minimum.reduceat(xy[:, 1], starts)
-        f8[at[rows] + 20] = np.maximum.reduceat(xy[:, 0], starts)
-        f8[at[rows] + 28] = np.maximum.reduceat(xy[:, 1], starts)
+    for j, v in enumerate((lo[:, 0], lo[:, 1], hi[:, 0], hi[:, 1])):
+        f8[at[shaped] + 4 + 8 * j] = v[shaped]
     i4[at[multi] + 36] = nverts[multi]
     i4[at[poly] + 36] = nrings[poly]
     i4[at[poly] + 40] = nverts[poly]
@@ -429,9 +431,7 @@ def _shp_records(flat: W.Flat) -> tuple[bytes, np.ndarray]:
     zrows = np.flatnonzero(has_z & shaped)
     if len(zrows):
         z_at = xy_at + 16 * nverts  # [zmin, zmax], z values, then the M block
-        zstarts = gvo[:-1][zrows]
-        f8[z_at[zrows]] = np.minimum.reduceat(z, zstarts)
-        f8[z_at[zrows] + 8] = np.maximum.reduceat(z, zstarts)
+        f8[z_at[zrows]], f8[z_at[zrows] + 8] = lo[zrows, 2], hi[zrows, 2]
         zv = has_z[vgeom] & shaped[vgeom]
         f8[(z_at[vgeom] + 16 + 8 * k)[zv]] = z[zv]
         m_at = z_at + zb

@@ -150,6 +150,18 @@ def test_shapefile_bytes_whole_matrix(tmp_path):
     assert _shp_digests(tmp_path, "matrix", list(MATRIX.values())) == SHP_ALL_DIGESTS
 
 
+# points and nulls between the multi-vertex records, Z rows between 2-D ones
+INTERLEAVED = ["multipoint_z", "point", "poly_z", "null", "point_zm", "multiline", "point_z",
+               "multipolygon_z", "line_m", "point", "poly_big_endian", "null", "poly_hole_ccw_cw"]
+SHP_INTERLEAVED_DIGESTS = ("743e574b2ecd02a89eb199cbfbce383dd58455af141dc2fba960d8bc65a9eea4",
+                           "7123c03743c8734582baaaae600ef99fb8cc275613a89af6548794f2a004ee4a",
+                           "cc200e71944f5e1f51867aa1c13c243521af4e8bbd5d001d614d815865858813")
+
+
+def test_shapefile_bytes_interleaved_types(tmp_path):
+    assert _shp_digests(tmp_path, "mixed", [MATRIX[n] for n in INTERLEAVED]) == SHP_INTERLEAVED_DIGESTS
+
+
 @pytest.mark.parametrize("geom", [b"\x01\x03\x00\x00\x00\x00\x00\x00\x00",  # POLYGON EMPTY
                                   W.encode_linestring(np.empty((0, 2))),
                                   COLLECTIONS["collection"]])
