@@ -29,8 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyogrio_spark.geometry import wkb as W
-from pyogrio_spark.geometry.wkb import Geom, parse_wkb
+from pyogrio_spark.geometry.wkb import Geom, flat_from_wkb, parse_wkb
 
 
 def points_on_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -150,7 +149,7 @@ def _flatten_batch(geoms):
     ``poly_edge_*`` is the subset of edges that belong to polygon rings
     (used for point-in-candidate parity tests); null rows are invalid.
     """
-    f = W.flat_from_wkb(geoms)
+    f = flat_from_wkb(geoms)
     xy, vring, vert_row = f.xy, f.ring_of_vertex(), f.geom_of_vertex()
     same = vring[:-1] == vring[1:]
     edges = np.concatenate([xy[:-1], xy[1:]], axis=1)
