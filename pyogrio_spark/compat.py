@@ -32,6 +32,7 @@ Declared divergences (documented, not silent):
 from __future__ import annotations
 
 import os
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -146,10 +147,12 @@ def read_dataframe(
     # surface the layer CRS the way a frame without a geo accessor can:
     # pandas .attrs (geopandas users re-wrap with gpd.GeoSeries.from_wkb
     # + this value)
-    try:
-        from pyogrio_spark.io.dispatch import dataset_info
+    from pyogrio_spark.io.dispatch import dataset_info
 
-        pdf.attrs["crs"] = dataset_info(path_or_buffer, layer=layer).get("crs")
+    try:
+        with warnings.catch_warnings():  # open_table warned of a defaulted layer
+            warnings.simplefilter("ignore")
+            pdf.attrs["crs"] = dataset_info(path_or_buffer, layer=layer).get("crs")
     except (ValueError, OSError, TypeError):
         pass  # committed tables / non-file sources carry no layer CRS here
     return pdf
@@ -174,26 +177,16 @@ def read(path_or_buffer, /, return_fids=False, read_geometry=True, **kwargs):
     try:
         info = dataset_info(path, layer=kwargs.get("layer"))
     except ValueError:
-        # sources without header metadata (OSM layers, committed
-        # tables): meta derives from the materialized result below
-        info = None
+        # sources without header metadata (committed tables): meta
+        # derives from the materialized result below
+        info = {"crs": "EPSG:4326", "fields": [], "dtypes": [], "geometry_type": None}
     pdf = read_dataframe(
         path_or_buffer, read_geometry=read_geometry, _keep_fid=True, **kwargs
     )
-    if info is None:
-        attr = [c for c in pdf.columns if c not in ("fid", "geometry")]
+    if info["geometry_type"] is None:
         from pyogrio_spark.geometry import wkb as _W
 
-        seen = {
-            _W.geom_type_name(bytes(b)) for b in pdf.get("geometry", []) if b is not None
-        }
-        info = {
-            "crs": "EPSG:4326",
-            "fields": attr,
-            "dtypes": [str(pdf[c].dtype) for c in attr],
-            "encoding": "UTF-8",
-            "geometry_type": next(iter(seen)) if len(seen) == 1 else "Unknown",
-        }
+        info["geometry_type"] = _W.layer_type(map(_W.geom_type_name, pdf.get("geometry", [])))
     fids = None
     if "fid" in pdf.columns:
         fid_vals = pdf["fid"].to_numpy(dtype=np.int64)
@@ -207,14 +200,16 @@ def read(path_or_buffer, /, return_fids=False, read_geometry=True, **kwargs):
         )
         pdf = pdf.drop(columns=["geometry"])
     fields = list(pdf.columns)
-    dtype_of = dict(zip(info["fields"], info["dtypes"]))
+    # a field the header does not declare (OSM layers, tables) takes its
+    # frame dtype
+    dtype_of = {c: str(pdf[c].dtype) for c in fields} | dict(zip(info["fields"], info["dtypes"]))
     field_data = tuple(pdf[c].to_numpy() for c in fields)
     meta = {
         "crs": info.get("crs"),
         "fields": np.array(fields, dtype=object),
-        "dtypes": np.array([dtype_of.get(c, "object") for c in fields], dtype=object),
-        "ogr_types": [_OGR_TYPE.get(dtype_of.get(c, "object"), ("OFTString", "OFSTNone"))[0] for c in fields],
-        "ogr_subtypes": [_OGR_TYPE.get(dtype_of.get(c, "object"), ("OFTString", "OFSTNone"))[1] for c in fields],
+        "dtypes": np.array([dtype_of[c] for c in fields], dtype=object),
+        "ogr_types": [_OGR_TYPE.get(dtype_of[c], ("OFTString", "OFSTNone"))[0] for c in fields],
+        "ogr_subtypes": [_OGR_TYPE.get(dtype_of[c], ("OFTString", "OFSTNone"))[1] for c in fields],
         "encoding": info.get("encoding", "UTF-8"),
         "geometry_type": info["geometry_type"],
     }
@@ -252,71 +247,20 @@ def write(
     )
 
 
-# single source of truth for the engine's native drivers, mirroring the
-# reference's GDAL driver registry surface (_ogr.pyx:246-339):
-# access modes follow the reference's "r"+"a"+"w" composition order,
-# `append` tracks what write_dataframe(append=True) actually supports
-# (FlatGeobuf refuses — reference driver capability parity), extensions
-# are the GDAL DMD_EXTENSIONS lists, help URLs the GDAL doc pages the
-# reference derives from DMD_HELPTOPIC.
 _GDAL_URL = "https://gdal.org/en/stable"
-_DRIVER_REGISTRY = {
-    "ESRI Shapefile": {
-        "long_name": "ESRI Shapefile", "read": True, "append": True,
-        "write": True, "extensions": ["shp", "dbf", "shz", "shp.zip"],
-        "help_slug": "shapefile",
-    },
-    "GPKG": {
-        "long_name": "GeoPackage", "read": True, "append": True,
-        "write": True, "extensions": ["gpkg", "gpkg.zip"],
-        "help_slug": "gpkg",
-    },
-    "GeoJSON": {
-        "long_name": "GeoJSON", "read": True, "append": True,
-        "write": True, "extensions": ["json", "geojson"],
-        "help_slug": "geojson",
-    },
-    "GeoJSONSeq": {
-        "long_name": "GeoJSON Sequence", "read": True, "append": True,
-        "write": True, "extensions": ["geojsonl", "geojsons"],
-        "help_slug": "geojsonseq",
-    },
-    "FlatGeobuf": {
-        "long_name": "FlatGeobuf", "read": True, "append": False,
-        "write": True, "extensions": ["fgb"],
-        "help_slug": "flatgeobuf",
-    },
-    "OSM": {
-        "long_name": "OpenStreetMap XML and PBF", "read": True,
-        "append": False, "write": False, "extensions": ["osm", "pbf"],
-        "help_slug": "osm",
-    },
-}
-
-
-def _access_modes(d: dict) -> str:
-    modes = ""
-    if d["read"]:
-        modes += "r"
-    if d["append"]:
-        modes += "a"
-    if d["write"]:
-        modes += "w"
-    return modes
+# read_info capability keys, in the reference's order
+_CAPABILITIES = ("random_read", "fast_set_next_by_index", "fast_spatial_filter",
+                 "fast_feature_count", "fast_total_bounds")
 
 
 def list_drivers(read: bool = False, write: bool = False, append: bool = False) -> dict:
     """Reference: list_drivers (core.py:53-109) — {name: 'raw'|'rw'|'r'|...}
-    for the engine's native drivers; ``read=``/``write=``/``append=``
-    filter like the reference."""
-    drivers = {k: _access_modes(d) for k, d in _DRIVER_REGISTRY.items()}
-    if read:
-        drivers = {k: v for k, v in drivers.items() if "r" in v}
-    if write:
-        drivers = {k: v for k, v in drivers.items() if "w" in v}
-    if append:
-        drivers = {k: v for k, v in drivers.items() if "a" in v}
-    return drivers
+    for the engine's native drivers (the format table in io/dispatch.py);
+    ``read=``/``write=``/``append=`` filter like the reference."""
+    from pyogrio_spark.io.dispatch import _DRIVERS
+
+    want = "r" * read + "w" * write + "a" * append
+    return {name: d.modes for name, (d, _) in _DRIVERS.items() if all(m in d.modes for m in want)}
 
 
 def list_drivers_details() -> dict:
@@ -326,44 +270,31 @@ def list_drivers_details() -> dict:
     doc URLs. ``supports_vsi`` is True for every native driver: the
     engine's dispatch layer resolves zip chains and Hadoop URIs for all
     formats (io/dispatch.py resolve_archive)."""
+    from pyogrio_spark.io.dispatch import _DRIVERS
+
     return {
         name: {
-            "long_name": d["long_name"],
-            "read": d["read"],
-            "append": d["append"],
-            "write": d["write"],
+            "long_name": d.long_name,
+            "read": "r" in d.modes,
+            "append": "a" in d.modes,
+            "write": "w" in d.modes,
             "supports_vsi": True,
-            "help_topic_url": f"{_GDAL_URL}/drivers/vector/{d['help_slug']}.html",
-            "extensions": [f".{ext}" for ext in d["extensions"]],
+            "help_topic_url": f"{_GDAL_URL}/drivers/vector/{d.help_slug}.html",
+            "extensions": [f".{ext}" for ext in d.extensions],
         }
-        for name, d in _DRIVER_REGISTRY.items()
+        for name, (d, _) in _DRIVERS.items()
     }
-
-
-# extensions that embed a second extension before .zip, matched before
-# the bare .zip suffix (reference _ogr.pyx MULTI_EXTENSIONS handling)
-_MULTI_EXTENSIONS = (".shp.zip", ".gpkg.zip")
 
 
 def detect_write_driver(path) -> str:
     """Reference: detect_write_driver (core.py:112-149) — infer the
-    single WRITE-capable driver for a path by extension, with the
-    reference's exact zero-driver / multiple-driver error semantics."""
-    import os
+    single WRITE-capable driver for a path by its extension (the longest
+    in the format table, so .shp.zip before .zip), with the reference's
+    exact zero-driver / multiple-driver error semantics."""
+    from pyogrio_spark.io.dispatch import _DRIVERS, _match
 
-    low = str(path).lower()
-    parts = os.path.splitext(low)
-    ext = parts[1][1:] if len(parts) == 2 and len(parts[1]) > 1 else None
-    if ext == "zip":
-        for multi_ext in _MULTI_EXTENSIONS:
-            if low.endswith(multi_ext):
-                ext = multi_ext[1:]
-                break
-    drivers = [
-        name
-        for name, d in _DRIVER_REGISTRY.items()
-        if d["write"] and ext is not None and ext in d["extensions"]
-    ]
+    ext = _match(path)[0]
+    drivers = [name for name, (d, _) in _DRIVERS.items() if "w" in d.modes and ext in d.extensions]
     if len(drivers) == 0:
         raise ValueError(
             f"Could not infer driver from path: {path}; please specify driver "
@@ -376,28 +307,6 @@ def detect_write_driver(path) -> str:
             "specify driver explicitly."
         )
     return drivers[0]
-
-
-# per-format GDAL-style capability flags (reference read_info parity:
-# tests/test_core.py:546-552). fast_spatial_filter for FlatGeobuf is
-# resolved per-file (presence of the packed R-tree).
-_CAPABILITIES = {
-    "shapefile": {"random_read": True, "fast_set_next_by_index": True,
-                  "fast_spatial_filter": False, "fast_feature_count": True,
-                  "fast_total_bounds": True},
-    "geopackage": {"random_read": True, "fast_set_next_by_index": True,
-                   "fast_spatial_filter": False, "fast_feature_count": True,
-                   "fast_total_bounds": True},
-    "flatgeobuf": {"random_read": True, "fast_set_next_by_index": False,
-                   "fast_spatial_filter": False, "fast_feature_count": True,
-                   "fast_total_bounds": True},
-    "geojson": {"random_read": True, "fast_set_next_by_index": False,
-                "fast_spatial_filter": False, "fast_feature_count": False,
-                "fast_total_bounds": False},
-    "geojsonseq": {"random_read": False, "fast_set_next_by_index": False,
-                   "fast_spatial_filter": False, "fast_feature_count": False,
-                   "fast_total_bounds": False},
-}
 
 
 def read_info(
@@ -415,44 +324,17 @@ def read_info(
     headers, GPKG registry, FlatGeobuf header), no feature scan and no
     Spark job. Dtypes are derived from the format's declared column
     types (a nullable int64 column reports int64, never the post-pandas
-    float64). OSM layers report features=-1 unless forced, like the
-    reference's driver (test_core.py:676-688)."""
-    from pyogrio_spark.io.dispatch import dataset_info, detect_format
+    float64). A layer whose header holds no count (OSM) reports
+    features=-1 unless forced, like the reference's driver
+    (test_core.py:676-688); forcing counts a scan of it."""
+    from pyogrio_spark.io.dispatch import _DRIVERS, dataset_info, open_table
 
     path = str(path_or_buffer)
-    fmt = detect_format(path)
-    if fmt == "osm":
-        from pyogrio_spark.io.osm_pbf import osm_info
-
-        info = osm_info(
-            path, layer=layer, force_feature_count=force_feature_count,
-            spark=_spark(spark) if force_feature_count else None,
-        )
-        return {
-            "layer_name": info["layer_name"],
-            "crs": "EPSG:4326",
-            "encoding": "UTF-8",
-            "fields": np.array([], dtype=object),
-            "dtypes": np.array([], dtype=object),
-            "fid_column": "",
-            "geometry_name": "",
-            "geometry_type": info["geometry_type"],
-            "features": info["features"],
-            "total_bounds": None,
-            "driver": info["driver"],
-            "capabilities": {"random_read": False, "fast_set_next_by_index": False,
-                             "fast_spatial_filter": False, "fast_feature_count": False,
-                             "fast_total_bounds": False},
-            "layer_metadata": None,
-            "dataset_metadata": None,
-        }
     info = dataset_info(path, layer=layer, force_total_bounds=force_total_bounds)
-    caps = dict(_CAPABILITIES[info["format"]])
-    if info["format"] == "flatgeobuf":
-        caps["fast_spatial_filter"] = info.get("index_node_size", 0) > 0
-    elif info["format"] == "geopackage":
-        # per-file: true when the gpkg_rtree_index extension is present
-        caps["fast_spatial_filter"] = bool(info.get("has_spatial_index"))
+    if force_feature_count and info["features"] < 0:
+        info["features"] = open_table(_spark(spark), path, layer=info["layer_name"]).count()
+    caps = {c: c in _DRIVERS[info["driver"]][0].capabilities for c in _CAPABILITIES}
+    caps["fast_spatial_filter"] = bool(info.get("has_spatial_index"))
     return {
         "layer_name": info["layer_name"],
         "crs": info.get("crs"),
@@ -500,8 +382,6 @@ def read_bounds(
 
     path = str(path_or_buffer)
     if layer is None and len(dataset_layers(path)) > 1:
-        import warnings
-
         warnings.warn(
             f"More than one layer found in '{os.path.basename(path)}': using the first.",
             UserWarning,
@@ -714,8 +594,6 @@ def write_arrow(
     ``wkb_geometry`` / ``geometry``). Routes through
     :func:`write_dataframe`, so driver support, append capability, CRS
     persistence, and metadata validation are shared with it."""
-    import warnings
-
     import pyarrow as pa
 
     if not hasattr(arrow_obj, "__arrow_c_stream__"):
@@ -797,74 +675,45 @@ def write_dataframe(
     the file reads back with no CRS (GeoJSON: WGS84 by definition).
     ``append=True`` adds features to an existing dataset
     (raw.py:668); FlatGeobuf refuses, matching the reference driver's
-    missing append capability. ``metadata``/``layer_metadata``/
+    missing append capability. Zip archives are read but not written. ``metadata``/``layer_metadata``/
     ``dataset_metadata`` follow the reference's validation
     (raw.py:490-505) and persist for GPKG (the reference's
     metadata-bearing driver)."""
+    from pyogrio_spark.io.dispatch import _ARCHIVES, _DRIVERS
+    from pyogrio_spark.uri import vsimem_to_local
+
     if metadata is not None:
         if layer_metadata is not None:
             raise ValueError("Cannot pass both metadata and layer_metadata")
         layer_metadata = metadata
-    path = str(path)
-    if path.startswith("/vsimem/"):
-        # in-memory namespace (reference /vsimem/ writes, core.py:380+):
-        # backed by the engine's local vsimem root; format detection
-        # below still keys off the original extension
-        from pyogrio_spark.uri import vsimem_to_local
-
-        path = vsimem_to_local(path)
+    # the in-memory namespace (reference /vsimem/ writes, core.py:380+)
+    # is backed by the engine's local vsimem root; other paths pass
+    path = vsimem_to_local(str(path))
     pdf = df.copy()
     if geometry_column in pdf.columns and geometry_column != "geometry_wkb":
         pdf = pdf.rename(columns={geometry_column: "geometry_wkb"})
     if "geometry_wkb" not in pdf.columns:
         raise ValueError(f"no geometry column {geometry_column!r} in frame")
-    low = path.lower()
-    drv = (driver or "").lower()
-    _binary = (
-        drv in ("esri shapefile", "shapefile", "gpkg", "geopackage", "flatgeobuf")
-        or (not drv and low.endswith((".shp", ".gpkg", ".fgb")))
-    )
-    if _binary:
+    if path.lower().endswith(_ARCHIVES):
+        raise ValueError(f"{path}: zip archives are read, not written; write the dataset and zip it")
+    if driver is None:
+        drv, fmt = _DRIVERS[detect_write_driver(path)]
+    else:
+        drv, fmt = next(((d, f) for d, f in _DRIVERS.values() if driver.lower() in (d.name.lower(), f.name)),
+                        (None, None))
+        if drv is None or "w" not in drv.modes:
+            raise ValueError(f"cannot write {path!r} with driver={driver!r}")
+    if append and "a" not in drv.modes:
+        raise ValueError(f"append is not supported for {drv.name} (reference driver parity)")
+    if not fmt.list_fields:
         # List-type fields round-trip via GeoJSON (OGR list types) and
         # parquet only; the binary formats here have no list field type
         # (DBF/GPKG SQL/FGB scalar columns) — refuse with direction
         # rather than stringify silently.
-        import numpy as _np
-
         for c in pdf.columns:
-            if c == "geometry_wkb":
-                continue
-            if any(isinstance(v, (list, tuple, _np.ndarray)) for v in pdf[c]):
+            if c != "geometry_wkb" and any(isinstance(v, (list, tuple, np.ndarray)) for v in pdf[c]):
                 raise ValueError(
                     f"list-type field {c!r} is not supported by this driver; "
                     "write to GeoJSON (.geojson/.geojsonl) or parquet instead"
                 )
-    if drv in ("esri shapefile", "shapefile") or (not drv and low.endswith(".shp")):
-        from pyogrio_spark.io.shapefile import write_shapefile
-
-        write_shapefile(pdf, path, crs=crs, append=append)
-    elif drv in ("gpkg", "geopackage") or (not drv and low.endswith(".gpkg")):
-        from pyogrio_spark.io.geopackage import write_geopackage
-
-        write_geopackage(
-            pdf, path, layer=layer or "layer", crs=crs, append=append,
-            layer_metadata=layer_metadata, dataset_metadata=dataset_metadata,
-            **kwargs,
-        )
-    elif drv in ("flatgeobuf",) or (not drv and low.endswith(".fgb")):
-        from pyogrio_spark.io.flatgeobuf import write_flatgeobuf
-
-        if append:
-            raise ValueError(
-                "append is not supported for FlatGeobuf (reference driver parity)"
-            )
-        write_flatgeobuf(pdf, path, layer_name=layer, crs=crs, **kwargs)
-    elif drv in ("geojson", "geojsonseq") or (
-        not drv and low.endswith((".geojson", ".geojsonl", ".geojsons", ".json"))
-    ):
-        from pyogrio_spark.io.geojson import write_geojson
-
-        # the driver picks the layout; without one the extension does
-        write_geojson(pdf, path, crs=crs, append=append, seq=drv == "geojsonseq" if drv else None)
-    else:
-        raise ValueError(f"cannot infer driver for {path!r} (driver={driver!r})")
+    fmt.write(pdf, path, drv.name, layer, crs, append, layer_metadata, dataset_metadata, **kwargs)

@@ -335,6 +335,24 @@ def geom_type_name(buf: bytes | None) -> str | None:
     return name + (" Z" if has_z else "")
 
 
+def layer_type(names) -> str:
+    """The layer geometry type of features whose types are ``names``
+    (``geom_type_name`` spellings; None for a null is skipped). Base
+    types compare without " Z": one base type gives that type, a
+    Polygon/MultiPolygon mix gives MultiPolygon (the reference's
+    promotion, /root/reference/pyogrio/geopandas.py:700-740), anything
+    else, or no feature, is Unknown. " Z" is added to a known type when
+    any feature has Z."""
+    names = {n for n in names if n is not None}
+    bases = {n.removesuffix(" Z") for n in names}
+    if len(bases) == 1:
+        base = bases.pop()
+    else:
+        base = "MultiPolygon" if bases == {"Polygon", "MultiPolygon"} else "Unknown"
+    has_z = base != "Unknown" and any(n.endswith(" Z") for n in names)
+    return base + (" Z" if has_z else "")
+
+
 # ---------------------------------------------------------------- encode
 
 def encode_point(x: float, y: float, z: float | None = None) -> bytes:

@@ -493,24 +493,19 @@ def _encode_part(frames, part: str, geom_col: str, cols: list[str], spec, leaves
 
 def _stitch(path: str, metas: list[dict], spec, layer_name, crs, index_node_size: int) -> None:
     """The one FlatGeobuf stitch: the parts' metadata -> the header (count,
-    envelope, layer type: the one geometry type, MultiPolygon for a
-    Polygon/MultiPolygon mix, else Unknown), the packed R-tree built
-    from the parts' leaf files (their offsets shifted by each part's
-    base; parts come in Hilbert order), then the parts streamed into
-    ``path`` in order. The upper tree levels are built in memory, 40
-    bytes per feature. An empty file declares no index."""
+    envelope, layer type: ``W.layer_type`` of the parts' geometry types),
+    the packed R-tree built from the parts' leaf files (their offsets
+    shifted by each part's base; parts come in Hilbert order), then the
+    parts streamed into ``path`` in order. The upper tree levels are
+    built in memory, 40 bytes per feature. An empty file declares no
+    index."""
     total = sum(m["n"] for m in metas)
     env = [min((m["minx"] for m in metas), default=np.inf), min((m["miny"] for m in metas), default=np.inf),
            max((m["maxx"] for m in metas), default=-np.inf), max((m["maxy"] for m in metas), default=-np.inf)]
     if not np.isfinite(env[0]):
         env = [0.0, 0.0, 0.0, 0.0]
-    types = {t for m in metas for t in m["gtypes"]}
-    if len(types) == 1:
-        layer_code = GEOM_NAME_TO_CODE[next(iter(types))]
-    elif types and types <= {"Polygon", "MultiPolygon"}:
-        layer_code = GEOM_NAME_TO_CODE["MultiPolygon"]
-    else:
-        layer_code = 0  # Unknown: per-feature geometry types carry it
+    # Unknown: per-feature geometry types carry it
+    layer_code = GEOM_NAME_TO_CODE[W.layer_type(t for m in metas for t in m["gtypes"])]
     index_node_size = index_node_size if index_node_size > 0 and total else 0
     index_bytes = b""
     if index_node_size:
@@ -695,7 +690,7 @@ def flatgeobuf_info(path: str) -> dict:
         "geometry_type": gtype + (" Z" if has_z and gtype != "Unknown" else ""),
         "crs": _crs_from_header(hdr_buf, header),
         "encoding": "UTF-8",
-        "index_node_size": header.scalar(9, "<H", 16),
+        "has_spatial_index": header.scalar(9, "<H", 16) > 0,
     }
 
 
@@ -762,17 +757,11 @@ def read_flatgeobuf_pdf(path: str) -> tuple[pd.DataFrame, dict]:
     decode = _decoder(path, header.scalar(2, "<B", 0), spec)[1]
     pdf = numpy_dtypes(decode((feat0, os.path.getsize(path), 0)))
     info = flatgeobuf_info(path)
-    seen = {W.geom_type_name(b) for b in pdf["geometry_wkb"] if b is not None}
-    if info["geometry_type"] == "Unknown" and len(seen) == 1:
-        info["geometry_type"] = next(iter(seen))
+    if info["geometry_type"] == "Unknown":
+        info["geometry_type"] = W.layer_type(map(W.geom_type_name, pdf["geometry_wkb"]))
     info["features"] = len(pdf)
     info["dtypes"] = [str(pdf[name].dtype) for name, _ in spec]
     return pdf, info
-
-
-def list_layers(path: str) -> list[list[str]]:
-    _, info = read_flatgeobuf_pdf(path)
-    return [[info["layer_name"], info["geometry_type"]]]
 
 
 def _fgb_layout(path: str):

@@ -207,9 +207,8 @@ def _layout(path: str, bounds: bool = False) -> tuple[list, list, int, str, str,
     """The header pass, every feature once on the driver -> ((name,
     Spark type) fields, chunks ``(byte_lo, byte_hi, first fid, first
     line)`` of about ``CHUNK_BYTES``, feature count, layer geometry type
-    (the one type; MultiPolygon for a Polygon/MultiPolygon mix; else
-    Unknown), CRS, and with ``bounds`` the (xmin, ymin, xmax, ymax) of
-    every position, else or with none None). The first line is None for
+    (``W.layer_type``), CRS, and with ``bounds`` the (xmin, ymin, xmax,
+    ymax) of every position, else or with none None). The first line is None for
     a FeatureCollection, whatever the extension (``holds_seq``). A
     feature that does not parse raises FeatureError naming the path, the
     chunk's byte range and the feature."""
@@ -245,11 +244,8 @@ def _layout(path: str, bounds: bool = False) -> tuple[list, list, int, str, str,
         except Exception as exc:
             raise FeatureError(f"{path}: cannot decode bytes [{lo}, {hi}): {type(exc).__name__}: {exc}") from exc
         line += data.count(b"\n")
-    gtypes.discard(None)
-    gtype = (gtypes.pop() if len(gtypes) == 1
-             else "MultiPolygon" if gtypes and gtypes <= {"Polygon", "MultiPolygon"} else "Unknown")
     total_bounds = (float(x0), float(y0), float(x1), float(y1)) if x0 <= x1 else None
-    return property_types(pa.schema(list(types.items()))), chunks, n, gtype, crs, total_bounds
+    return property_types(pa.schema(list(types.items()))), chunks, n, W.layer_type(gtypes), crs, total_bounds
 
 
 def _spark_fields(fields: list) -> list[tuple[str, str]]:
@@ -305,9 +301,11 @@ def read_geojson_pdf(path: str) -> pd.DataFrame:
 
 
 def geojson_info(path: str, force_total_bounds: bool = False) -> dict:
-    """read_info fields from the header pass; GeoJSONSeq total bounds are
-    None unless forced, as in the reference (its test_core.py:698-706)."""
-    fields, _, count, gtype, crs, total_bounds = _layout(path, bounds=force_total_bounds or not holds_seq(path))
+    """read_info fields from the header pass; the driver is GeoJSONSeq
+    for a file that ``holds_seq``, whose total bounds are None unless
+    forced, as in the reference (its test_core.py:698-706)."""
+    seq = holds_seq(path)
+    fields, _, count, gtype, crs, total_bounds = _layout(path, bounds=force_total_bounds or not seq)
     lists = {"boolean": "bool", "bigint": "int64", "double": "float64", "string": "str"}
     return {
         "layer_name": os.path.splitext(os.path.basename(path))[0],
@@ -319,11 +317,8 @@ def geojson_info(path: str, force_total_bounds: bool = False) -> dict:
         "geometry_type": gtype,
         "crs": crs,
         "encoding": "UTF-8",
+        "driver": "GeoJSONSeq" if seq else "GeoJSON",
     }
-
-
-def list_layers(path: str) -> list[list[str]]:
-    return [[os.path.splitext(os.path.basename(path))[0], _layout(path)[3]]]
 
 
 def _geom_to_coords(g) -> dict:

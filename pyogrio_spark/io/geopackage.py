@@ -22,6 +22,7 @@ float32); null-free integer columns stay int64.
 from __future__ import annotations
 
 import sqlite3
+import struct
 
 import numpy as np
 import pandas as pd
@@ -265,13 +266,10 @@ def read_geopackage_pdf(path: str, layer: str | None = None) -> tuple[pd.DataFra
     pdf = numpy_dtypes(_decoder(path, layer, gcol, pk, attrs)[1]((lo, hi, lo)))
 
     # keep the " Z" suffix: the reference reports e.g. "LineString Z"
-    # for 3-D layers (test_core.py:304-310)
-    seen = {W.geom_type_name(g) for g in pdf["geometry_wkb"] if g is not None}
-    if len(seen) == 1:
-        inferred = next(iter(seen))
-    elif seen and seen <= {"Polygon", "MultiPolygon"}:
-        inferred = "MultiPolygon"
-    else:
+    # for 3-D layers (test_core.py:304-310); without one type the
+    # declared type stands
+    inferred = W.layer_type(map(W.geom_type_name, pdf["geometry_wkb"]))
+    if inferred == "Unknown":
         inferred = _GPKG_TYPE.get((gtype or "").upper(), "Unknown")
     info = {
         "layer_name": layer,
@@ -353,30 +351,15 @@ def write_geopackage(
     else:  # unidentifiable WKT: custom SRS entry carrying the definition
         srs_id = 100000
         srs_row = ("custom", 100000, "NONE", 100000, str(crs))
-    geoms = list(pdf[geom_col])
     if geometry_type is None:
-        seen = {W.geom_type_name(g) for g in geoms if g is not None}
+        # GPKG requires every feature to match the declared type, so a
+        # mix (even Polygon/MultiPolygon) declares GEOMETRY
+        seen = {W.geom_type_name(g) for g in pdf[geom_col] if g is not None}
         geometry_type = next(iter(seen)).split(" ")[0].upper() if len(seen) == 1 else "GEOMETRY"
-
-    bounds = [W.bounds(g) for g in geoms if g is not None]
-    if bounds:
-        arr = np.array(bounds)
-        minx, miny = float(arr[:, 0].min()), float(arr[:, 1].min())
-        maxx, maxy = float(arr[:, 2].max()), float(arr[:, 3].max())
-    else:
-        minx = miny = maxx = maxy = 0.0
-
-    import struct as _s
-
-    def to_blob(wkb: bytes | None) -> bytes | None:
-        if wkb is None:
-            return None
-        x0, y0, x1, y1 = W.bounds(wkb)
-        # flags 0x03: little-endian header, envelope indicator 1 (xy)
-        return b"GP\x00\x03" + _s.pack("<i", srs_id) + _s.pack("<4d", x0, x1, y0, y1) + wkb
-
-    attrs = [c for c in pdf.columns if c != geom_col]
-    cols_sql = ", ".join(f'"{c}" {_DTYPE_TO_GPKG.get(str(pdf[c].dtype), "TEXT")}' for c in attrs if c != "fid")
+    data_cols = [c for c in pdf.columns if c not in (geom_col, "fid")]
+    rows, entries, bounds = _encode_features(pdf, geom_col, data_cols, srs_id, start_fid=1)
+    minx, miny, maxx, maxy = bounds if bounds is not None else (0.0, 0.0, 0.0, 0.0)
+    cols_sql = ", ".join(f'"{c}" {_DTYPE_TO_GPKG.get(str(pdf[c].dtype), "TEXT")}' for c in data_cols)
 
     con = sqlite3.connect(path)
     try:
@@ -422,23 +405,53 @@ def write_geopackage(
             "INSERT INTO gpkg_geometry_columns VALUES (?, ?, ?, ?, 0, 0)",
             (layer, geom_col, geometry_type, srs_id),
         )
-        data_cols = [c for c in attrs if c != "fid"]
-        ph = ", ".join(["?"] * (1 + len(data_cols)))
-        col_names = f'"{geom_col}"' + ("".join(f', "{c}"' for c in data_cols))
-        rows = [
-            (to_blob(g), *[None if pd.isna(v) else (int(v) if isinstance(v, (bool, np.bool_)) else v.item() if isinstance(v, np.generic) else v) for v in vals])
-            for g, vals in zip(geoms, pdf[data_cols].itertuples(index=False, name=None) if data_cols else [()] * len(geoms))
-        ]
-        cur.executemany(f'INSERT INTO "{layer}" ({col_names}) VALUES ({ph})', rows)
+        _insert(cur, layer, geom_col, data_cols, rows)
         if spatial_index:
-            _write_rtree(cur, layer, geom_col, start_fid=1, geoms=geoms)
+            _write_rtree(cur, layer, geom_col, entries)
         _write_metadata(cur, layer, layer_metadata, dataset_metadata)
         con.commit()
     finally:
         con.close()
 
 
-def _write_rtree(cur, layer: str, geom_col: str, start_fid: int, geoms) -> None:
+def _sql_value(v):
+    """A frame cell -> the value sqlite3 binds (None for a null)."""
+    if pd.isna(v):
+        return None
+    if isinstance(v, (bool, np.bool_)):
+        return int(v)
+    return v.item() if isinstance(v, np.generic) else v
+
+
+def _encode_features(pdf: pd.DataFrame, geom_col: str, cols: list[str], srs_id: int, start_fid: int):
+    """The one feature encoder of the fresh write and the append, fed by
+    one ``W.bounds_many`` pass -> (INSERT rows: the GP blob, then the
+    values of ``cols``; R-tree entries (fid from ``start_fid``, minx,
+    maxx, miny, maxy) of the non-null geometries; their (minx, miny,
+    maxx, maxy), None when there is none). Blob flags 0x03: a
+    little-endian header with an xy envelope (indicator 1)."""
+    geoms = list(pdf[geom_col])
+    env = W.bounds_many(geoms)
+    head = b"GP\x00\x03" + struct.pack("<i", srs_id)
+    blobs = [None if g is None else head + struct.pack("<4d", x0, x1, y0, y1) + bytes(g)
+             for g, (x0, y0, x1, y1) in zip(geoms, env.tolist())]
+    values = pdf[cols].itertuples(index=False, name=None) if cols else [()] * len(geoms)
+    rows = [(b, *map(_sql_value, vals)) for b, vals in zip(blobs, values)]
+    have = np.flatnonzero([g is not None for g in geoms])
+    entries = [(start_fid + int(i), *env[i, [0, 2, 1, 3]].tolist()) for i in have]
+    if not len(have):
+        return rows, entries, None
+    # min/max, not nanmin: an empty geometry's NaN envelope carries over
+    return rows, entries, (*env[have, :2].min(axis=0).tolist(), *env[have, 2:].max(axis=0).tolist())
+
+
+def _insert(con, layer: str, gcol: str, cols: list[str], rows) -> None:
+    names = "".join(f', "{c}"' for c in cols)
+    marks = ", ".join("?" * (1 + len(cols)))
+    con.executemany(f'INSERT INTO "{layer}" ("{gcol}"{names}) VALUES ({marks})', rows)
+
+
+def _write_rtree(cur, layer: str, geom_col: str, entries) -> None:
     """gpkg_rtree_index extension: R*Tree virtual table over feature
     envelopes (ids = fids), registered in gpkg_extensions."""
     rt = f"rtree_{layer}_{geom_col}"
@@ -455,12 +468,6 @@ def _write_rtree(cur, layer: str, geom_col: str, start_fid: int, geoms) -> None:
         "'http://www.geopackage.org/spec120/#extension_rtree', 'write-only')",
         (layer, geom_col),
     )
-    entries = []
-    for i, g in enumerate(geoms):
-        if g is None:
-            continue
-        x0, y0, x1, y1 = W.bounds(g)
-        entries.append((start_fid + i, x0, x1, y0, y1))
     cur.executemany(f'INSERT INTO "{rt}" VALUES (?, ?, ?, ?, ?)', entries)
 
 
@@ -515,11 +522,9 @@ def _write_metadata(cur, layer: str, layer_metadata, dataset_metadata) -> None:
 def _append_geopackage(
     pdf: pd.DataFrame, path: str, layer: str = "layer", geom_col: str = "geometry_wkb"
 ) -> None:
-    """INSERT new features into an existing GPKG layer: same blob
-    encoding as the fresh write, layer srs_id reused, gpkg_contents
-    bounds widened to cover the union."""
-    import struct as _s
-
+    """INSERT new features into an existing GPKG layer: the fresh
+    write's feature encoder, layer srs_id reused, gpkg_contents bounds
+    widened to cover the union."""
     con = sqlite3.connect(path)
     try:
         row = con.execute(
@@ -537,38 +542,22 @@ def _append_geopackage(
             raise ValueError(
                 f"append=True: column mismatch — layer has {existing}, frame has {incoming}"
             )
-
-        geoms = list(pdf[geom_col])
-
-        def to_blob(wkb: bytes | None) -> bytes | None:
-            if wkb is None:
-                return None
-            x0, y0, x1, y1 = W.bounds(wkb)
-            return b"GP\x00\x03" + _s.pack("<i", srs_id) + _s.pack("<4d", x0, x1, y0, y1) + wkb
-
-        ph = ", ".join(["?"] * (1 + len(existing)))
-        col_names = f'"{gcol}"' + ("".join(f', "{c}"' for c in existing))
-        rows = [
-            (to_blob(g), *[None if pd.isna(v) else (int(v) if isinstance(v, (bool, np.bool_)) else v.item() if isinstance(v, np.generic) else v) for v in vals])
-            for g, vals in zip(geoms, pdf[existing].itertuples(index=False, name=None) if existing else [()] * len(geoms))
-        ]
+        # one transaction, so the appended fids are the consecutive
+        # range after prev_max
         prev_max = con.execute(f'SELECT COALESCE(MAX("{pk}"), 0) FROM "{layer}"').fetchone()[0]
-        con.executemany(f'INSERT INTO "{layer}" ({col_names}) VALUES ({ph})', rows)
-        # maintain the spatial index when present (one transaction, so
-        # the appended fids are the consecutive range after prev_max)
+        rows, entries, bounds = _encode_features(pdf, geom_col, existing, srs_id, int(prev_max) + 1)
+        _insert(con, layer, gcol, existing, rows)
+        # maintain the spatial index when present
         rt = f"rtree_{layer}_{gcol}"
         if con.execute(
             "SELECT 1 FROM sqlite_master WHERE type='table' AND name = ?", (rt,)
         ).fetchone():
-            _write_rtree(con.cursor(), layer, gcol, start_fid=int(prev_max) + 1, geoms=geoms)
-        bounds = [W.bounds(g) for g in geoms if g is not None]
-        if bounds:
-            arr = np.array(bounds)
+            _write_rtree(con.cursor(), layer, gcol, entries)
+        if bounds is not None:
             con.execute(
                 "UPDATE gpkg_contents SET min_x = min(min_x, ?), min_y = min(min_y, ?), "
                 "max_x = max(max_x, ?), max_y = max(max_y, ?) WHERE table_name = ?",
-                (float(arr[:, 0].min()), float(arr[:, 1].min()),
-                 float(arr[:, 2].max()), float(arr[:, 3].max()), layer),
+                (*bounds, layer),
             )
         con.commit()
     finally:

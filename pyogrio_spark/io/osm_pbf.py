@@ -800,7 +800,8 @@ def read_osm(spark, path: str, layer: str | None = None, **read_table_kwargs):
 
 def osm_info(path: str, layer: str | None = None, force_feature_count: bool = False, spark=None) -> dict:
     """read_info parity: feature count is -1 unless forced (GDAL cannot
-    count an OSM layer without scanning; neither can we)."""
+    count an OSM layer without scanning; neither can we); no declared
+    fields or bounds, WGS84 by definition."""
     if layer is None:
         import warnings
 
@@ -824,6 +825,11 @@ def osm_info(path: str, layer: str | None = None, force_feature_count: bool = Fa
         "geometry_type": _LAYER_GEOM[layer],
         "features": features,
         "driver": "OSM",
+        "crs": "EPSG:4326",
+        "encoding": "UTF-8",
+        "fields": [],
+        "dtypes": [],
+        "total_bounds": None,
     }
 
 

@@ -62,8 +62,14 @@ BOUNDS_COLS = ("xmin", "ymin", "xmax", "ymax")
 
 
 def _load(spark: SparkSession, source) -> DataFrame:
+    """A DataFrame as is; a committed table (a directory holding
+    ``_manifest.json``) through ``read_committed``; else Parquet."""
     if isinstance(source, DataFrame):
         return source
+    if os.path.exists(os.path.join(str(source), "_manifest.json")):
+        from pyogrio_spark.io.writer import read_committed
+
+        return read_committed(spark, str(source))
     return spark.read.parquet(str(source))
 
 

@@ -327,13 +327,8 @@ def read_shapefile_pdf(path: str) -> tuple[pd.DataFrame, dict]:
     # record-level refinement of the header type: the reference's
     # promote inference (geopandas.py:679-740) — a polygon layer whose
     # records are all plain Polygon reports Polygon
-    seen = {W.geom_type_name(b).split(" ")[0] for b in pdf["geometry_wkb"] if b is not None}
-    if seen <= {"Polygon", "MultiPolygon"} and "MultiPolygon" in seen:
-        info["geometry_type"] = "MultiPolygon"
-    elif len(seen) == 1:
-        info["geometry_type"] = next(iter(seen))
-    elif seen:
-        info["geometry_type"] = "Unknown"
+    if pdf["geometry_wkb"].notna().any():
+        info["geometry_type"] = W.layer_type(map(W.geom_type_name, pdf["geometry_wkb"]))
     info["features"] = len(pdf)
     info["total_bounds"] = _read_shp_header(base + ".shp")[1]
     return pdf, info

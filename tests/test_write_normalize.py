@@ -1,40 +1,34 @@
 import numpy as np
-import pandas as pd
-import pytest
 
 from pyogrio_spark.fixtures import make_datetimes, make_geom_zoo, make_list_fields, make_nulls_matrix
 from pyogrio_spark.functions.datetimes import parse_iso_datetime_utc, truncate_to_ms
-from pyogrio_spark.functions.geometry_write import infer_layer_geometry_type, promote_to_multi
 from pyogrio_spark.geometry import wkb as W
 
 
 SQ = np.array([(0.0, 0.0), (1, 0), (1, 1), (0, 1), (0, 0)])
 
 
-def test_infer_and_promote_mixed_polygons(spark):
-    rows = [
-        (1, W.encode_polygon([SQ])),
-        (2, W.encode_multipolygon([[SQ], [SQ + 5]])),
-        (3, None),
-    ]
-    df = spark.createDataFrame(rows, "id int, geometry_wkb binary")
-    gtype, promote = infer_layer_geometry_type(df)
-    assert gtype == "MultiPolygon" and promote
-    out = {r["id"]: r["geometry_wkb"] for r in promote_to_multi(df).collect()}
-    g1 = W.parse_wkb(bytes(out[1]))
-    assert g1.type == "MultiPolygon" and len(g1.coords) == 1
-    np.testing.assert_array_equal(g1.coords[0].coords[0], SQ)  # coordinates preserved
-    assert W.parse_wkb(bytes(out[2])).type == "MultiPolygon"  # already multi: untouched
-    assert out[3] is None
+def _types(*wkbs):
+    return W.layer_type(map(W.geom_type_name, wkbs))
 
 
-def test_infer_single_and_unknown(spark):
-    pts = [(1, W.encode_point(1, 2)), (2, W.encode_point(3, 4))]
-    df = spark.createDataFrame(pts, "id int, geometry_wkb binary")
-    assert infer_layer_geometry_type(df) == ("Point", False)
-    mixed = [(1, W.encode_point(1, 2)), (2, W.encode_polygon([SQ]))]
-    df2 = spark.createDataFrame(mixed, "id int, geometry_wkb binary")
-    assert infer_layer_geometry_type(df2) == ("Unknown", False)
+def test_layer_type_promotes_polygon_mix():
+    """A Polygon/MultiPolygon mix is a MultiPolygon layer; nulls do not
+    count (reference geopandas.py:700-740)."""
+    assert _types(W.encode_polygon([SQ]), W.encode_multipolygon([[SQ], [SQ + 5]]), None) == "MultiPolygon"
+    assert _types(W.encode_multipolygon([[SQ]]), W.encode_polygon([SQ])) == "MultiPolygon"
+
+
+def test_infer_single_and_unknown():
+    assert _types(W.encode_point(1, 2), W.encode_point(3, 4)) == "Point"
+    assert _types(W.encode_point(1, 2), W.encode_polygon([SQ])) == "Unknown"
+    assert _types() == _types(None) == "Unknown"
+    # Z compares as the base type and is added to a known type only
+    sqz = np.column_stack([SQ, np.ones(len(SQ))])
+    assert _types(W.encode_polygon([sqz]), W.encode_multipolygon([[SQ]])) == "MultiPolygon Z"
+    assert _types(W.encode_point(1, 2, 3), W.encode_point(1, 2)) == "Point Z"
+    assert _types(W.encode_point(1, 2, 3), W.encode_linestring(SQ)) == "Unknown"
+    assert _types(W.encode_linestring(SQ), W.encode_multilinestring([SQ])) == "Unknown"
 
 
 def test_geom_zoo_types_roundtrip(spark):
