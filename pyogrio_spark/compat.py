@@ -147,15 +147,21 @@ def read_dataframe(
     # surface the layer CRS the way a frame without a geo accessor can:
     # pandas .attrs (geopandas users re-wrap with gpd.GeoSeries.from_wkb
     # + this value)
-    from pyogrio_spark.io.dispatch import dataset_info
-
     try:
-        with warnings.catch_warnings():  # open_table warned of a defaulted layer
-            warnings.simplefilter("ignore")
-            pdf.attrs["crs"] = dataset_info(path_or_buffer, layer=layer).get("crs")
+        pdf.attrs["crs"] = _layer_info(path_or_buffer, layer).get("crs")
     except (ValueError, OSError, TypeError):
         pass  # committed tables / non-file sources carry no layer CRS here
     return pdf
+
+
+def _layer_info(path, layer) -> dict:
+    """``dataset_info`` for a read that also opens the layer: the open
+    warns of a defaulted layer (OSM), so this lookup does not repeat it."""
+    from pyogrio_spark.io.dispatch import dataset_info
+
+    with warnings.catch_warnings():
+        warnings.filterwarnings("ignore", "More than one layer found")
+        return dataset_info(str(path), layer=layer)
 
 
 def list_layers(path_or_buffer, /) -> np.ndarray:
@@ -171,11 +177,9 @@ def read(path_or_buffer, /, return_fids=False, read_geometry=True, **kwargs):
     (``return_fids``), geometry as an object ndarray of WKB bytes or
     None (``read_geometry=False``), and one ndarray per attribute
     field in source order. Same filter surface as ``read_dataframe``."""
-    from pyogrio_spark.io.dispatch import dataset_info
-
     path = str(path_or_buffer)
     try:
-        info = dataset_info(path, layer=kwargs.get("layer"))
+        info = _layer_info(path, kwargs.get("layer"))
     except ValueError:
         # sources without header metadata (committed tables): meta
         # derives from the materialized result below
@@ -446,10 +450,10 @@ def _open_arrow_impl(
 ):
     import pyarrow as pa
 
-    from pyogrio_spark.io.dispatch import dataset_info, open_table
+    from pyogrio_spark.io.dispatch import open_table
 
     path = str(path_or_buffer)
-    info = dataset_info(path, layer=layer)
+    info = _layer_info(path, layer)
     df = open_table(
         _spark(spark),
         path,
@@ -687,7 +691,7 @@ def write_dataframe(
             raise ValueError("Cannot pass both metadata and layer_metadata")
         layer_metadata = metadata
     # the in-memory namespace (reference /vsimem/ writes, core.py:380+)
-    # is backed by the engine's local vsimem root; other paths pass
+    # is backed by the engine's local vsimem root; others pass through
     path = vsimem_to_local(str(path))
     pdf = df.copy()
     if geometry_column in pdf.columns and geometry_column != "geometry_wkb":

@@ -504,7 +504,7 @@ def _stitch(path: str, metas: list[dict], spec, layer_name, crs, index_node_size
            max((m["maxx"] for m in metas), default=-np.inf), max((m["maxy"] for m in metas), default=-np.inf)]
     if not np.isfinite(env[0]):
         env = [0.0, 0.0, 0.0, 0.0]
-    # Unknown: per-feature geometry types carry it
+    # an Unknown layer (code 0) leaves the type to each feature's own
     layer_code = GEOM_NAME_TO_CODE[W.layer_type(t for m in metas for t in m["gtypes"])]
     index_node_size = index_node_size if index_node_size > 0 and total else 0
     index_bytes = b""

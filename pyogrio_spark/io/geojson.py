@@ -208,10 +208,10 @@ def _layout(path: str, bounds: bool = False) -> tuple[list, list, int, str, str,
     Spark type) fields, chunks ``(byte_lo, byte_hi, first fid, first
     line)`` of about ``CHUNK_BYTES``, feature count, layer geometry type
     (``W.layer_type``), CRS, and with ``bounds`` the (xmin, ymin, xmax,
-    ymax) of every position, else or with none None). The first line is None for
-    a FeatureCollection, whatever the extension (``holds_seq``). A
-    feature that does not parse raises FeatureError naming the path, the
-    chunk's byte range and the feature."""
+    ymax) of every position, else or with none None). The first line is
+    None for a FeatureCollection, whatever the extension (``holds_seq``).
+    A feature that does not parse raises FeatureError naming the path,
+    the chunk's byte range and the feature."""
     from pyogrio_spark.errors import FeatureError
 
     seq, size = holds_seq(path), os.path.getsize(path)

@@ -5,6 +5,7 @@ driver are written by ``write_dataframe``, and the drivers ``read_info``
 reports are the ones the listing names."""
 
 import os
+import warnings
 import zipfile
 
 import numpy as np
@@ -163,6 +164,12 @@ def test_osm_routes_reach_the_osm_reader(spark, tmp_path):
     assert compat.read_info(path, layer="lines", force_feature_count=True, spark=spark)["features"] == 1
     with pytest.warns(UserWarning, match="More than one layer found"):
         assert compat.read_info(path)["layer_name"] == "points"
+    # a read that defaults the layer warns once, not once per lookup
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        meta, _, geometry, _ = compat.read(path, spark=spark)
+    assert sum("More than one layer found" in str(w.message) for w in seen) == 1
+    assert meta["geometry_type"] == "Point" and len(geometry) == 1
 
 
 def test_geopackage_write_and_append_share_one_bounds_pass(tmp_path, monkeypatch):
